@@ -176,14 +176,23 @@ def run_concurrent_writes(thunks: list) -> None:
 
     Callers must pass thunks whose writes are independent (no thunk
     reads a path another thunk writes).  Exceptions propagate: all
-    thunks are awaited, the first failure re-raises."""
+    thunks are awaited, the first failure re-raises.
+
+    Each thunk runs under ``inheritable_thread_target``, so its jobs
+    keep the caller's job group, description and session tags (a plain
+    pool thread drops them, leaving the jobs untagged and
+    uncancellable)."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     if len(thunks) == 1:
         thunks[0]()
         return
+    active = SparkSession.getActiveSession()
+    inherit = inheritable_thread_target(active) if active is not None else inheritable_thread_target
     with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         errs = [f.exception() for f in futures]
     for e in errs:
         if e is not None:

@@ -30,6 +30,92 @@ from ..types import schema_to_struct
 logger = logging.getLogger(__name__)
 
 
+def _csv_files(spark: SparkSession, path: str):
+    """``(fs, statuses)`` of the data files Spark's CSV reader would scan
+    under ``path`` (a file, a flat directory or a glob), in the order its
+    header inference reads them: largest first, as ``FileSourceScanExec``
+    packs splits.  Names in a directory starting ``_`` or ``.`` are
+    skipped, as Spark's file index does.  ``None`` when the path does not
+    exist, names a hidden file itself or holds a subdirectory (partition
+    discovery): the caller leaves those to Spark."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    matched = fs.globStatus(hpath)
+    if not matched:
+        return None
+    files = []
+    for st in matched:
+        if st.getPath().getName()[:1] in ("_", "."):
+            return None
+        for s in fs.listStatus(st.getPath()) if st.isDirectory() else [st]:
+            if s.getPath().getName()[:1] in ("_", "."):
+                continue
+            if s.isDirectory():
+                return None
+            files.append(s)
+    files.sort(key=lambda s: s.getPath().toString())
+    files.sort(key=lambda s: -s.getLen())
+    return fs, files
+
+
+def _first_nonempty_line(spark: SparkSession, fs, status) -> str | None:
+    """First line of one file that is not empty after SQL ``trim`` (which
+    strips spaces only), the filter Spark's header inference applies;
+    read through Hadoop, so compressed files decode with its codecs."""
+    jvm = spark._jvm
+    hpath = status.getPath()
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+        spark._jsc.hadoopConfiguration()).getCodec(hpath)
+    stream = fs.open(hpath)
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(stream, jvm.java.nio.charset.StandardCharsets.UTF_8))
+        while True:
+            line = reader.readLine()
+            if line is None or line.strip(" "):
+                return line
+    finally:
+        stream.close()
+
+
+def _parse_csv_header(spark: SparkSession, line: str) -> list[str]:
+    """Column names from a header line, exactly as Spark's CSV header
+    inference makes them: its univocity parser under the default CSV
+    options, then ``CSVUtils.makeSafeHeader`` (an empty name becomes
+    ``_c<i>``; a duplicate, case-insensitive unless
+    ``spark.sql.caseSensitive``, becomes ``<name><i>``).  Both run in the
+    driver JVM."""
+    jvm = spark._jvm
+    csv_pkg = jvm.org.apache.spark.sql.execution.datasources.csv
+    opts_map = jvm.java.util.HashMap()
+    opts_map.put("header", "true")
+    opts = jvm.org.apache.spark.sql.catalyst.csv.CSVOptions(
+        jvm.org.apache.spark.api.python.PythonUtils.toScalaMap(opts_map),
+        True, spark.conf.get("spark.sql.session.timeZone"))
+    row = jvm.com.univocity.parsers.csv.CsvParser(opts.asParserSettings()).parseLine(line)
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false") == "true"
+    return list(csv_pkg.CSVUtils.makeSafeHeader(row, case_sensitive, opts))
+
+
+def read_csv_header(spark: SparkSession, path: str) -> list[str] | None:
+    """The column names ``spark.read.option("header", True).csv(path)``
+    infers, read on the driver without a Spark job.  ``None`` when the
+    path is missing or partitioned, so the caller defers to Spark (which
+    names the missing path in its error)."""
+    found = _csv_files(spark, path)
+    if found is None:
+        return None
+    fs, files = found
+    for status in files:
+        line = _first_nonempty_line(spark, fs, status)
+        if line is not None:
+            return _parse_csv_header(spark, line)
+    return []
+
+
 def read_csv_with_declared_schema(spark: SparkSession, path: str, struct: "T.StructType") -> DataFrame:
     """CSV scan binding the declared schema BY NAME via the header row.
 
@@ -39,8 +125,15 @@ def read_csv_with_declared_schema(spark: SparkSession, path: str, struct: "T.Str
     dtype overrides by name (app/main.py:381), so name-binding is the
     parity-correct semantics.  Declared-but-absent columns warn (the
     reference's drift warning, app/main.py:383-390); extra file columns
-    are kept as strings."""
-    raw = spark.read.option("header", True).csv(path)
+    are kept as strings.
+
+    The header is read on the driver (``read_csv_header``), so the scan
+    launches no Spark job; Spark's own header inference is a job."""
+    header = read_csv_header(spark, path)
+    reader = spark.read.option("header", True)
+    if header is not None:
+        reader = reader.schema(T.StructType([T.StructField(c, T.StringType()) for c in header]))
+    raw = reader.csv(path)
     declared = {f.name: f.dataType for f in struct.fields}
     missing = [c for c in declared if c not in raw.columns]
     if missing:

@@ -1,10 +1,16 @@
-"""Tests for application (sandboxed lambda UDF), bind (join semantics),
-fold/unfold (reshape) — the reference's trickiest parity points."""
+"""Tests for application (sandboxed lambda: compiled Column or pandas
+UDF), bind (join semantics), fold/unfold (reshape) — the reference's
+trickiest parity points."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
+from pyspark.sql import types as T
 
 from openetlagent_spark.model import (
     ApplicationOperation,
@@ -18,6 +24,10 @@ from openetlagent_spark.operators import (
     apply_fold,
     apply_unfold,
     compile_lambda,
+)
+from openetlagent_spark.operators.application import (
+    apply_application_udf,
+    compile_application,
 )
 
 # --- application -----------------------------------------------------------
@@ -63,6 +73,237 @@ def test_application_sandbox_allows_core_types(spark):
         return_type="string",
     )
     assert apply_application(df, op).collect()[0].n == "3"
+
+
+# --- application: compiled path against the UDF path ----------------------
+#
+# Every construct in the compiled subset runs both ways over generated
+# rows holding NULLs, NaN, ±0.0, int32/int64 extremes and empty and
+# non-ASCII strings; the rows must be equal, or both paths must raise.
+
+DIFF_SCHEMA = T.StructType([
+    T.StructField("s", T.StringType()),
+    T.StructField("i", T.IntegerType()),
+    T.StructField("l", T.LongType()),
+    T.StructField("d", T.DoubleType()),
+])
+
+# construct -> [(lambda, input_columns, return_type)]
+SUBSET_LAMBDAS = {
+    "column": [
+        ("lambda r: r['s']", ["s", "i"], "string"),
+        ("lambda r: r['l']", ["l"], "integer"),
+        ("lambda r: r['i']", ["i", "d"], "integer"),
+    ],
+    "literal": [
+        ("lambda r: -7", ["s"], "integer"),
+        ("lambda r: 'x'", ["d"], None),
+    ],
+    "replace": [
+        ("lambda r: r['s'].replace('$', '')", ["s"], "string"),
+        ("lambda r: r['s'].replace('a', 'é😀').replace('é', '')", ["s", "l"], None),
+    ],
+    "conditional": [
+        ("lambda r: 999 if r['i'] == 105 else r['l']", ["i", "l"], "integer"),
+        ("lambda r: r['s'] if r['d'] > 0.5 else 'low'", ["s", "d"], "string"),
+        ("lambda r: True if r['s'] == '' else r['l'] < 0", ["s", "l"], "boolean"),
+    ],
+    "equality": [
+        ("lambda r: r['l'] == 105", ["l"], "boolean"),
+        ("lambda r: r['i'] != -1", ["i", "s"], "boolean"),
+        ("lambda r: r['s'] == 'a'", ["s"], "boolean"),
+        ("lambda r: r['d'] == 0", ["d"], "boolean"),
+        ("lambda r: 0.5 != r['d']", ["d", "s"], "boolean"),
+    ],
+    "ordering": [
+        ("lambda r: r['l'] >= -3", ["l", "i"], "boolean"),
+        ("lambda r: r['d'] < 0.5", ["d"], "boolean"),
+        ("lambda r: r['d'] > -1", ["d", "i"], "boolean"),
+        ("lambda r: r['s'] <= 'b'", ["s"], "boolean"),
+        ("lambda r: 2.5 < r['i']", ["i"], "boolean"),
+    ],
+    "boolop": [
+        ("lambda r: r['i'] > 0 and r['s'] < 'm'", ["i", "s"], "boolean"),
+        ("lambda r: not (r['l'] == 0 or r['d'] != 1.5)", ["l", "d"], "boolean"),
+    ],
+}
+
+_TEXT = st.text(alphabet="$ab é日😀\t", max_size=5)
+_INT32 = st.sampled_from([0, -1, 1, 105, 2**31 - 1, -2**31]) | st.integers(-2**31, 2**31 - 1)
+_INT64 = (st.sampled_from([0, 105, 2**53 + 1, 2**63 - 1, -2**63])
+          | st.integers(-2**63, 2**63 - 1))
+_DOUBLE = (st.sampled_from([0.0, -0.0, math.nan, 0.5, 1.5, -1.0, math.inf])
+           | st.floats(allow_nan=True, allow_infinity=True))
+
+
+@st.composite
+def _diff_rows(draw):
+    nulls = draw(st.booleans())
+
+    def maybe(strategy):
+        return (st.none() | strategy) if nulls else strategy
+
+    row = st.tuples(maybe(_TEXT), maybe(_INT32), maybe(_INT64), maybe(_DOUBLE))
+    return draw(st.lists(row, max_size=8))
+
+
+def _outcome(df, op, path):
+    try:
+        return [r[op.output_column] for r in path(df, op).collect()], None
+    except Exception as exc:  # a raising lambda fails the action
+        return None, exc
+
+
+def _outcomes(df, ops, path):
+    """Each op's ``(values, None)`` or ``(None, error)``: all ops in one
+    job, each alone when that job raises."""
+    out = df
+    for op in ops:
+        out = path(out, op)
+    try:
+        rows = out.select(*[op.output_column for op in ops]).collect()
+    except Exception:
+        return [_outcome(df, op, path) for op in ops]
+    return [([r[i] for r in rows], None) for i in range(len(ops))]
+
+
+def _udf_reads_long_as_float(rows, cols) -> bool:
+    """pandas hands the UDF a 64-bit column as float64 when its batch
+    holds a NULL, and an all-numeric row as float64 when any column is;
+    a value beyond ±2^53 is then rounded (or leaves int64 and fails the
+    batch).  The compiled path keeps it exact."""
+    if "l" not in cols or not any(r[2] is not None and abs(r[2]) > 2**53 for r in rows):
+        return False
+    nulls = any(r[1] is None or r[2] is None for r in rows)
+    return nulls or ("s" not in cols and "d" in cols)
+
+
+@pytest.mark.parametrize("construct", sorted(SUBSET_LAMBDAS))
+@settings(max_examples=5, derandomize=True, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(rows=_diff_rows())
+@example(rows=[("", 2**31 - 1, 2**63 - 1, -0.0), ("日😀", -2**31, -2**63, math.nan),
+               ("$a$", 105, 105, math.inf), ("b", 0, 0, 0.5)])
+@example(rows=[(None, None, None, None), ("a", 105, 2**53 + 1, 0.0), ("$", -1, 105, math.nan)])
+def test_application_compiled_matches_udf(spark, construct, rows):
+    ops = [ApplicationOperation(input_columns=cols, function_str=fn, return_type=rtype,
+                                output_column=f"out{k}")
+           for k, (fn, cols, rtype) in enumerate(SUBSET_LAMBDAS[construct])]
+    for op in ops:
+        assert compile_application(op, DIFF_SCHEMA) is not None, op.function_str
+    # one partition, so the rows share one Arrow batch on the UDF path
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), DIFF_SCHEMA)
+    udf_runs = _outcomes(df, ops, apply_application_udf)
+    compiled_runs = _outcomes(df, ops, apply_application)
+    for op, (want, want_err), (got, got_err) in zip(ops, udf_runs, compiled_runs):
+        ctx = (op.function_str, rows)
+        if want_err is not None:
+            if got_err is None:
+                # only the float64 rounding may fail the UDF batch alone
+                assert _udf_reads_long_as_float(rows, op.input_columns), (ctx, want_err)
+                assert "Arrow" in str(want_err), want_err
+            continue
+        assert got_err is None, (ctx, got_err)
+        if _udf_reads_long_as_float(rows, op.input_columns):
+            assert all(w == g or w == int(float(g)) for w, g in zip(want, got)), (ctx, want, got)
+        else:
+            assert got == want, ctx
+
+
+def test_application_compiled_replace_on_null_raises_named(spark):
+    df = spark.createDataFrame([("$1",), (None,)], "unit_price string")
+    op = ApplicationOperation(
+        input_columns=["unit_price"],
+        function_str="lambda r: r['unit_price'].replace('$', '')",
+        return_type="string", output_column="clean")
+    with pytest.raises(Exception) as udf_err:
+        apply_application_udf(df, op).collect()
+    assert "AttributeError" in str(udf_err.value)
+    with pytest.raises(Exception) as err:
+        apply_application(df, op).collect()
+    msg = str(err.value)
+    assert "USER_RAISED_EXCEPTION" in msg and "'.replace' on a NULL in column 'unit_price'" in msg
+    assert op.function_str in msg and "Traceback" not in msg
+
+
+def test_application_compiled_eq_ne_with_null_ints(spark):
+    # pandas reads the NULL as NaN, so the UDF answers False / True, never NULL
+    df = spark.createDataFrame([(7,), (None,), (8,)], "q bigint").coalesce(1)
+    for fn, want in [("lambda r: r['q'] == 7", [True, False, False]),
+                     ("lambda r: r['q'] != 7", [False, True, True])]:
+        op = ApplicationOperation(input_columns=["q"], function_str=fn,
+                                  return_type="boolean", output_column="o")
+        assert compile_application(op, df.schema) is not None
+        assert [r.o for r in apply_application(df, op).collect()] == want
+        assert [r.o for r in apply_application_udf(df, op).collect()] == want
+
+
+def test_application_compiled_keeps_long_exact_where_udf_rounds(spark):
+    df = spark.createDataFrame([(2**53 + 1,), (None,)], "q bigint").coalesce(1)
+    op = ApplicationOperation(input_columns=["q"], function_str="lambda r: r['q']",
+                              return_type="integer", output_column="o")
+    assert [r.o for r in apply_application(df, op).collect()] == [2**53 + 1, None]
+    assert [r.o for r in apply_application_udf(df, op).collect()] == [2**53, None]
+
+
+FLOW_SCHEMA = T.StructType([
+    T.StructField("order_id", T.LongType()),
+    T.StructField("quantity", T.LongType()),
+    T.StructField("unit_price", T.StringType()),
+    T.StructField("o_totalprice", T.DoubleType()),
+    T.StructField("p_name", T.StringType()),
+])
+
+
+@pytest.mark.parametrize("fn,cols,rtype", [
+    ("lambda r: r['unit_price'].replace('$', '')", ["unit_price"], "string"),
+    ("lambda r: 999 if r['order_id'] == 105 else r['quantity']", ["order_id", "quantity"], "integer"),
+])
+def test_application_subset_covers_benchmark_flow_lambdas(spark, fn, cols, rtype):
+    op = ApplicationOperation(input_columns=cols, function_str=fn, return_type=rtype,
+                              output_column="o")
+    assert compile_application(op, FLOW_SCHEMA) is not None
+
+
+# Constructs kept out of the subset: each differs from Python somewhere.
+OUTSIDE_SUBSET = [
+    ("lambda r: r['unit_price'].strip()", "string"),       # Unicode whitespace vs spaces
+    ("lambda r: r['unit_price'].replace('', '-')", "string"),
+    ("lambda r: round(r['o_totalprice'])", "integer"),     # half-even vs half-up
+    ("lambda r: str(r['o_totalprice'])", "string"),
+    ("lambda r: r['quantity'] / 2", "float"),
+    ("lambda r: r['quantity'] // 2", "integer"),
+    ("lambda r: r['quantity'] % 2", "integer"),
+    ("lambda r: r['quantity'] + 1", "integer"),            # numpy wraps, ANSI raises
+    ("lambda r: r['unit_price'].upper()", "string"),
+    ("lambda r: r['unit_price'].lower()", "string"),
+    ("lambda r: r['unit_price'] and r['quantity']", "integer"),
+    ("lambda r: r['quantity'] or 0", "integer"),
+    ("lambda r: (r['o_totalprice'] * 100).round(0)", "integer"),
+    ("lambda r: r['quantity'] == 9007199254740993", "boolean"),  # not exact as float64
+    ("lambda r: r['unit_price'] == '\\ud800'", "boolean"),  # no Spark string holds it
+    ("lambda r: r['order_id'] == 105", None),              # the probe types it by row
+    ("lambda r: r['o_totalprice']", "float"),              # the UDF turns NaN into NULL
+    ("lambda r: r['missing']", "string"),
+    ("lambda r, s=1: r['unit_price']", "string"),
+]
+
+
+@pytest.mark.parametrize("fn,rtype", OUTSIDE_SUBSET)
+def test_application_outside_subset_stays_udf(spark, fn, rtype):
+    op = ApplicationOperation(input_columns=["order_id", "quantity", "unit_price", "o_totalprice"],
+                              function_str=fn, return_type=rtype, output_column="o")
+    assert compile_application(op, FLOW_SCHEMA) is None
+
+
+def test_application_outside_subset_plans_arrow_udf(spark):
+    df = spark.createDataFrame([(" a ",)], "unit_price string")
+    op = ApplicationOperation(input_columns=["unit_price"],
+                              function_str="lambda r: r['unit_price'].strip()",
+                              return_type="string", output_column="o")
+    out = apply_application(df, op)
+    assert "ArrowEvalPython" in out._jdf.queryExecution().executedPlan().toString()
+    assert out.collect()[0].o == "a"
 
 
 # --- bind ------------------------------------------------------------------

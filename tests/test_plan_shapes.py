@@ -9,10 +9,16 @@ These run on sf0.001 — plan SHAPE is scale-invariant for these queries
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
+import yaml
 
+from openetlagent_spark.model import load_pipeline_config, load_pipeline_flow
+from openetlagent_spark.operators import apply_application
 from openetlagent_spark.plans import HARNESS_QUERIES
+from openetlagent_spark.runner import run_flow
+from openetlagent_spark.sources import save_data
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -1276,3 +1282,61 @@ def test_ks_cumsum_is_pid_local(spark):
         spec = m.group(1)
         if "ASC" in spec or "DESC" in spec:
             assert "_x_pid" in spec, f"global ordered window leaked: {spec}"
+
+
+# --- flow job and plan budget -------------------------------------------------
+
+BENCHMARK_FLOWS = ["enriched_orders", "profit_by_region_category",
+                   "country_sales_summary", "refresh_audit"]
+EXAMPLES = Path(__file__).resolve().parents[1] / "examples"
+
+
+def _example_config(tmp_path):
+    """examples/config.yaml with inputs at examples/input_folder and
+    outputs under ``tmp_path``."""
+    cfg = yaml.safe_load((EXAMPLES / "config.yaml").read_text())
+    for fd in cfg["inputs"].values():
+        fd["path"] = str(EXAMPLES.parent / fd["path"])
+    for key, fd in cfg["outputs"].items():
+        fd["path"] = str(tmp_path / key)
+    path = tmp_path / "config.yaml"
+    path.write_text(yaml.safe_dump(cfg, sort_keys=False))
+    return load_pipeline_config(str(path))
+
+
+def _python_eval_nodes(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
+
+
+@pytest.mark.parametrize("name", BENCHMARK_FLOWS)
+def test_benchmark_flow_runs_no_job_before_save_and_no_python(spark, tmp_path, name):
+    """Scanning (driver-read CSV headers), binding and the compiled
+    ``application`` lambda launch no Spark job: the save is the flow's
+    first.  No Python worker runs in its plan."""
+    config = _example_config(tmp_path)
+    flow = load_pipeline_flow(str(EXAMPLES / "pipelines" / f"{name}.yaml"))
+    sc = spark.sparkContext
+    build, save = f"flow-budget/{name}:build", f"flow-budget/{name}:save"
+    try:
+        sc.setJobGroup(build, build)
+        result, ok, feedback = run_flow(spark, config, flow, name, save=False)
+        assert ok, feedback
+        sc.setJobGroup(save, save)
+        save_data(result, config.outputs[name])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert list(tracker.getJobIdsForGroup(build)) == []
+    assert len(tracker.getJobIdsForGroup(save)) >= 1
+    assert _python_eval_nodes(result) == []
+
+
+def test_benford_flow_lambda_still_plans_udf(spark):
+    """``(x * 100).round(0)`` is a numpy method, outside the compiled
+    subset: it keeps the pandas UDF."""
+    flow = load_pipeline_flow(str(EXAMPLES / "pipelines" / "benford_fraud_screen.yaml"))
+    op = next(o for o in flow.operations if o.operation_type == "application")
+    df = spark.createDataFrame([(123.45,)], "o_totalprice double")
+    assert _python_eval_nodes(apply_application(df, op)) == ["ArrowEvalPython"]
