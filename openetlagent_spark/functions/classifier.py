@@ -151,8 +151,8 @@ def save_classifier_weights(weights: list[float], path: str, *, spark=None) -> N
     from ..session import local_df
 
     rows = [(i, float(v)) for i, v in enumerate(weights)]
-    # one slice, one worker — not createDataFrame().coalesce(1) (the
-    # tiny-layer sequential-slice storm, see session.local_df)
+    # one JVM-built partition, no Python worker — not
+    # createDataFrame().coalesce(1) (see session.local_df)
     local_df(spark, rows, "bucket int, weight double").write.mode(
         "overwrite"
     ).parquet(path)

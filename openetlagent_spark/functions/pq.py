@@ -303,9 +303,13 @@ def ann_pq_from_store(
     rank, cosine) — the exact cosine of every emitted neighbor, so the
     approximation shows up only as which candidates reached the
     re-rank, never as a wrong score."""
-    from ..session import materialize
     from .clustering import _quantize
-    from .similarity import _read_ann_store_header, cosine_expr
+    from .similarity import (
+        _probe_lists,
+        _read_ann_store_header,
+        _read_store_layer,
+        cosine_expr,
+    )
 
     store_bits, n_cent, cents, meta = _read_ann_store_header(
         spark, store_path, expect_scale_bits=scale_bits
@@ -316,9 +320,7 @@ def ann_pq_from_store(
             "m/k_codes in meta) — serve it with ann_from_store"
         )
     m, k_codes = int(meta["m"]), int(meta["k_codes"])
-    cb_rows = spark.read.schema("sub int, code int, cw array<double>").parquet(
-        f"{store_path}/codebooks"
-    ).collect()
+    cb_rows = _read_store_layer(spark, store_path, "codebooks")
     if len(cb_rows) != m * k_codes:
         raise ValueError(
             f"pq store {store_path}: expected {m * k_codes} codebook rows, "
@@ -329,7 +331,7 @@ def ann_pq_from_store(
         [by_key[(s, c)] for c in range(k_codes)] for s in range(m)
     ]
     cents_lit = _array_literal(cents)
-    q = materialize(
+    q, probed = _probe_lists(
         queries.filter(F.col(vec_col).isNotNull())
         .select(
             F.col(id_col).alias("query_id"),
@@ -341,7 +343,6 @@ def ann_pq_from_store(
         )
         .drop("xq")
     )
-    probed = sorted({r["cid"] for r in q.select("cid").distinct().collect()})
     lists = spark.read.parquet(f"{store_path}/lists").where(F.col("cid").isin(probed))
     cand = lists.join(F.broadcast(q), "cid").filter(
         F.col("query_id") != F.col("neighbor_id")

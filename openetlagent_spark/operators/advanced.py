@@ -1215,17 +1215,12 @@ def apply_ann_store_query(
     """Query frame → (query_id, neighbor_id, rank, cosine) served from
     the persisted store (model.py AnnStoreQueryOperation).  Store kind
     is detected from the meta table — PQ stores declare m/k_codes —
-    mirroring the serve functions' own refusal contracts."""
-    require_columns(df, [op.id_column, op.vector_column], "ann_store_query")
-    meta_rows = spark.read.parquet(f"{op.store_path}/meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"ann_store_query: {op.store_path} has a missing/ambiguous meta table"
-        )
-    meta = meta_rows[0].asDict()
-    from ..functions.similarity import ann_store_is_pq
+    read and checked by the serve functions' own driver-side gate
+    (similarity._read_ann_store_meta), which launches no Spark job."""
+    from ..functions.similarity import _read_ann_store_meta, ann_store_is_pq
 
-    if ann_store_is_pq(meta, op.store_path):
+    require_columns(df, [op.id_column, op.vector_column], "ann_store_query")
+    if ann_store_is_pq(_read_ann_store_meta(spark, op.store_path), op.store_path):
         from ..functions.pq import ann_pq_from_store
 
         return ann_pq_from_store(

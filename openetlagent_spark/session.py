@@ -145,22 +145,43 @@ def materialize(df, eager: bool = True, require_truncation: bool = False):
 
 def local_df(spark: SparkSession, rows: list, schema: str):
     """Build a DataFrame from a SMALL driver-local list as ONE
-    partition.
+    partition, in the JVM alone: the rows travel as one JSON string
+    literal, ``inline(from_json(…, 'array<struct<…>>', FAILFAST))`` over
+    a one-row, one-partition ``range``.  ConstantFolding turns the
+    parsed array into a single literal, so no Python RDD exists and no
+    Python worker starts.
 
     ``spark.createDataFrame(rows)`` parallelizes local data into
-    ``defaultParallelism`` Python-RDD slices (32 here) even for a
-    16-row table; a subsequent ``coalesce(1)`` (the natural move before
-    writing a single-file store layer) then computes all 32 slices
-    SEQUENTIALLY in one task — each slice a Python-worker round trip.
-    Measured on this box: 7s to write 16 rows via
-    ``createDataFrame(..).coalesce(1)``, 0.4s via this helper (one
-    slice, one worker, no shuffle).  Store builders write 2–3 such
-    layers per index, so the storm multiplies.
+    ``defaultParallelism`` Python-RDD slices even for a 16-row table,
+    and a ``coalesce(1)`` before a single-file write then computes them
+    sequentially in one task, each slice a Python-worker round trip.
+    Even one slice needs a worker: measured on a 4-core host, writing a
+    16×64 centroid table took 0.30 s from a one-slice Python RDD and
+    0.12 s from this frame.  Store builders write 2–3 such layers per
+    index.
+
+    Values are the ones ``spark.createDataFrame(rows, schema)`` gives,
+    NULLs included: floats travel as their shortest round-trip
+    ``repr`` and Java parses them correctly rounded.  A value the
+    schema cannot hold (an int beyond int32 for an ``int`` column, a
+    float for an ``int``) fails the first action that reads the frame
+    instead of turning into NULL.
 
     Only for BOUNDED driver-side state (meta rows, centroid tables,
     collected model weights): one partition is the point, not a
     limitation."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType, DataType
+
+    struct = DataType.fromDDL(schema)
+    names = struct.names
+    if any(len(r) != len(names) for r in rows):
+        raise ValueError(f"local_df: every row must hold {len(names)} values ({schema})")
+    payload = json.dumps([dict(zip(names, r)) for r in rows])
+    parsed = F.from_json(F.lit(payload), ArrayType(struct), {"mode": "FAILFAST"})
+    return spark.range(0, 1, 1, 1).select(F.inline(parsed))
 
 
 def run_concurrent_writes(thunks: list) -> None:

@@ -30,14 +30,15 @@ from ..types import schema_to_struct
 logger = logging.getLogger(__name__)
 
 
-def _csv_files(spark: SparkSession, path: str):
-    """``(fs, statuses)`` of the data files Spark's CSV reader would scan
-    under ``path`` (a file, a flat directory or a glob), in the order its
-    header inference reads them: largest first, as ``FileSourceScanExec``
-    packs splits.  Names in a directory starting ``_`` or ``.`` are
-    skipped, as Spark's file index does.  ``None`` when the path does not
-    exist, names a hidden file itself or holds a subdirectory (partition
-    discovery): the caller leaves those to Spark."""
+def visible_files(spark: SparkSession, path: str):
+    """``(fs, statuses)`` of the data files Spark's file readers would
+    scan under ``path`` (a file, a flat directory or a glob), in the order
+    CSV header inference reads them: largest first, as
+    ``FileSourceScanExec`` packs splits.  Names in a directory starting
+    ``_`` or ``.`` (``_SUCCESS``, ``.crc`` files) are skipped, as Spark's
+    file index does.  ``None`` when the path does not exist, names a
+    hidden file itself or holds a subdirectory (partition discovery): the
+    caller leaves those to Spark."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -105,7 +106,7 @@ def read_csv_header(spark: SparkSession, path: str) -> list[str] | None:
     infers, read on the driver without a Spark job.  ``None`` when the
     path is missing or partitioned, so the caller defers to Spark (which
     names the missing path in its error)."""
-    found = _csv_files(spark, path)
+    found = visible_files(spark, path)
     if found is None:
         return None
     fs, files = found
@@ -114,6 +115,40 @@ def read_csv_header(spark: SparkSession, path: str) -> list[str] | None:
         if line is not None:
             return _parse_csv_header(spark, line)
     return []
+
+
+def read_parquet_on_driver(spark: SparkSession, path: str):
+    """Every row of a SMALL parquet table (a store's meta, centroid or
+    codebook layer) as one ``pyarrow.Table``, read on the driver: the
+    visible files' bytes come through the session's Hadoop
+    ``FileSystem`` and ``pyarrow.parquet`` decodes them, so the read
+    launches no Spark job (``spark.read.parquet(path).collect()`` costs a
+    schema-inference job plus the collect).  Int, double and array
+    values are the ones that collect returns; rows keep file order,
+    which Spark does not promise either.  Raises ``FileNotFoundError``
+    when the path is missing, hidden or partitioned, and ``ValueError``
+    when it holds no data file (Spark's ``UNABLE_TO_INFER_SCHEMA``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    found = visible_files(spark, path)
+    if found is None:
+        raise FileNotFoundError(
+            f"[PATH_NOT_FOUND] parquet table {path}: the path is missing, "
+            "hidden or partitioned"
+        )
+    fs, files = found
+    if not files:
+        raise ValueError(f"parquet table {path}: no data files to read")
+    tables = []
+    for status in files:
+        stream = fs.open(status.getPath())
+        try:
+            data = bytes(stream.readAllBytes())
+        finally:
+            stream.close()
+        tables.append(pq.read_table(pa.BufferReader(data)))
+    return pa.concat_tables(tables, promote_options="default")
 
 
 def read_csv_with_declared_schema(spark: SparkSession, path: str, struct: "T.StructType") -> DataFrame:
