@@ -67,6 +67,13 @@ def connected_components(
         # code returned untouched labels at 0; no caller ever passes
         # <1 — fail loudly rather than silently spend 2 pushes)
         raise ValueError(f"connected_components: max_iter must be >= 1, got {max_iter}")
+    if steps_per_cycle != "auto" and int(steps_per_cycle) < 1:
+        # a 0-push cycle leaves the label sum unchanged, which the loop
+        # below would read as convergence after the fused first push
+        raise ValueError(
+            "connected_components: steps_per_cycle must be >= 1 or 'auto', "
+            f"got {steps_per_cycle!r}"
+        )
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # localCheckpoint (not persist): each round references the previous
     # labels TWICE (union + join), so the un-truncated logical plan

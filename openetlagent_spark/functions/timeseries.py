@@ -681,9 +681,10 @@ def ewma_smooth(
             "key", F.col(ts_col), F.col(id_col), F.col("v"),
             arr.alias("__arr__"),
         )
+        # nullable, as the JVM branch's aggregate declares it
         schema = (
             windowed.drop("__arr__")
-            .withColumn("ewma", F.lit(0.0))
+            .withColumn("ewma", F.lit(None).cast("double"))
             .schema
         )
         folded = windowed.mapInArrow(_ewma_arrow_fold(a), schema)

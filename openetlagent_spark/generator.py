@@ -43,8 +43,7 @@ from .model import (
     SpecError,
     parse_operation,
 )
-from .operators import OPERATION_DISPATCHER
-from .runner import RUNNER_HANDLED_OPS, apply_operations, probe
+from .runner import apply_operations, probe
 from .sources import scan_data
 from .validate import validate_schema
 
@@ -291,11 +290,6 @@ def generate_pipeline_step_by_step(
                     transcript.append(f"done-rejected: {feedback}")
                     continue
                 op = parse_operation(raw)
-                if (
-                    op.operation_type not in OPERATION_DISPATCHER
-                    and op.operation_type not in RUNNER_HANDLED_OPS
-                ):
-                    raise SpecError(f"unsupported operation_type {op.operation_type!r}")
                 # Trial execution on the lazy chain (probe forces analysis
                 # plus a 3-row evaluation, surfacing executor-side errors).
                 # Temp columns must survive across per-op calls: they drop

@@ -1,20 +1,24 @@
 """Pipeline IR: operation specs, file definitions, pipeline config/flow.
 
 Mirrors the *capability surface* of the reference's Pydantic model layer
-(reference: app/models.py:40-149) as plain dataclasses: eleven operation
-types discriminated by ``operation_type``, a file/schema model, and the
-flat ``PipelineFlow`` op-list IR.  The engine compiles a flow into ONE
-lazy Spark DataFrame chain (see runner.py) instead of eagerly
+(reference: app/models.py:40-149) as plain dataclasses: one spec class
+per operation type, discriminated by its ``operation_type`` default
+(``OPERATION_TYPES`` is built from the classes), a file/schema model,
+and the flat ``PipelineFlow`` op-list IR.  The engine compiles a flow
+into ONE lazy Spark DataFrame chain (see runner.py) instead of eagerly
 materializing after every op like the reference (app/main.py:402-412).
 
-Extension operations beyond the reference surface (filter, aggregate,
-sort, limit, distinct, union, window) use the same discriminated-spec
-shape so flows can mix parity ops and extensions freely.
+The reference's eleven operation types are joined by the engine's
+extensions (docs/OPERATORS.md lists all of them); they share the same
+discriminated-spec shape so flows can mix them freely.
 """
 
 from __future__ import annotations
 
+import functools
 import re
+import types
+import typing
 
 from dataclasses import dataclass, field
 from typing import Any
@@ -2441,110 +2445,42 @@ class KsTestOperation(Operation):
             raise SpecError("ks_test cohorts must differ")
 
 
-OPERATION_TYPES: dict[str, type[Operation]] = {
-    "equality": EqualityOperation,
-    "concatenation": ConcatenationOperation,
-    "application": ApplicationOperation,
-    "switching": SwitchingOperation,
-    "assignation": AssignationOperation,
-    "casting": CastingOperation,
-    "arithmetic": ArithmeticOperation,
-    "comparison": ComparisonOperation,
-    "bind": BindOperation,
-    "fold": FoldOperation,
-    "unfold": UnfoldOperation,
-    # extensions
-    "filter": FilterOperation,
-    "aggregation": AggregationOperation,
-    "sort": SortOperation,
-    "limit": LimitOperation,
-    "distinct": DistinctOperation,
-    "union": UnionOperation,
-    "window": WindowOperation,
-    "repartition": RepartitionOperation,
-    "sample": SampleOperation,
-    "select": SelectOperation,
-    "json_extract": JsonExtractOperation,
-    # north-star operations (dedup/similarity/asof/range — SURVEY §2 ext)
-    "dedup": DedupOperation,
-    "similarity": SimilarityOperation,
-    "asof_join": AsofJoinOperation,
-    "range_join": RangeJoinOperation,
-    "contamination": ContaminationOperation,
-    "pack_sequences": PackSequencesOperation,
-    "provenance": ProvenanceOperation,
-    "scrub": ScrubOperation,
-    "repetition": RepetitionOperation,
-    "mixture": MixtureOperation,
-    # incremental maintenance + curation (round 3)
-    "merge": MergeOperation,
-    "snapshot_diff": SnapshotDiffOperation,
-    "scd2": Scd2Operation,
-    "stratified_sample": StratifiedSampleOperation,
-    "weighted_sample": WeightedSampleOperation,
-    "chunk": ChunkOperation,
-    "keyword_search": KeywordSearchOperation,
-    "fuzzy_pairs": FuzzyPairsOperation,
-    "tfidf": TfidfOperation,
-    "bigram_lm": BigramLmOperation,
-    "doc_lm_score": DocLmScoreOperation,
-    "inverted_index": InvertedIndexOperation,
-    "vocab_oov": VocabOovOperation,
-    "bpe_train": BpeTrainOperation,
-    "bpe_encode": BpeEncodeOperation,
-    "kmeans": ClusteringOperation,
-    "incremental_dedup": IncrementalDedupOperation,
-    "split_assign": SplitAssignOperation,
-    "profile": ProfileOperation,
-    "histogram": HistogramOperation,
-    "outliers": OutlierOperation,
-    "global_shuffle": GlobalShuffleOperation,
-    "quantile_filter": QuantileFilterOperation,
-    "gopher_rules": GopherRulesOperation,
-    "lm_buckets": LmBucketsOperation,
-    "line_dedup": LineDedupOperation,
-    "html_to_text": HtmlToTextOperation,
-    "classifier_score": ClassifierScoreOperation,
-    "classifier_train": ClassifierTrainOperation,
-    "url_normalize": UrlNormalizeOperation,
-    "domain_extract": DomainExtractOperation,
-    "domain_quota": DomainQuotaOperation,
-    "tokenize_ids": TokenizeIdsOperation,
-    "curriculum_order": CurriculumOrderOperation,
-    "store_gate": StoreGateOperation,
-    "ann_store_build": AnnStoreBuildOperation,
-    "ann_store_append": AnnStoreAppendOperation,
-    "ann_store_query": AnnStoreQueryOperation,
-    "gap_fill": GapFillOperation,
-    "bloom_gate": BloomGateOperation,
-    "hll_distinct": HllDistinctOperation,
-    "cms_counts": CmsCountsOperation,
-    "quantile_sketch": QuantileSketchOperation,
-    "rollup_aggregate": RollupOperation,
-    "time_weighted_avg": TimeWeightedAvgOperation,
-    "expectations": ExpectationsOperation,
-    "sql_transform": SqlTransformOperation,
-    "heavy_hitters": HeavyHittersOperation,
-    "classifier_eval": ClassifierEvalOperation,
-    "ohlc": OhlcOperation,
-    "ewma": EwmaOperation,
-    "rolling_median": RollingMedianOperation,
-    "changepoint": ChangepointOperation,
-    "association_rules": AssociationRulesOperation,
-    "markov": MarkovOperation,
-    "skyline": SkylineOperation,
-    # integrity / recommender / seasonal family (round 10)
-    "k_anonymity": KAnonymityOperation,
-    "benford": BenfordOperation,
-    "media_features": MediaFeaturesOperation,
-    "fk_check": FkCheckOperation,
-    "seasonal_baseline": SeasonalBaselineOperation,
-    "autocorr": AutocorrOperation,
-    "item_similarity": ItemSimilarityOperation,
-    "link_prediction": LinkPredictionOperation,
-    "ab_test": AbTestOperation,
-    "ks_test": KsTestOperation,
-}
+def _operation_types() -> dict[str, type[Operation]]:
+    """Every spec class keyed by its own ``operation_type`` default."""
+    found: dict[str, type[Operation]] = {}
+    for cls in Operation.__subclasses__():
+        name = cls.__dataclass_fields__["operation_type"].default  # type: ignore[attr-defined]
+        if not name or name in found:
+            raise TypeError(f"{cls.__name__}: operation_type {name!r} is empty or taken")
+        found[name] = cls
+    return found
+
+
+OPERATION_TYPES: dict[str, type[Operation]] = _operation_types()
+
+
+@functools.cache
+def _field_types(cls: type[Operation]) -> dict[str, Any]:
+    return typing.get_type_hints(cls)
+
+
+def _conforms(value: Any, tp: Any) -> bool:
+    """Does a parsed YAML value fit a spec field annotation?  An int
+    fits ``float``; a bool fits neither ``int`` nor ``float``."""
+    if tp is Any:
+        return True
+    origin, args = typing.get_origin(tp), typing.get_args(tp)
+    if origin is types.UnionType:
+        return any(_conforms(value, t) for t in args)
+    if origin is list:
+        return isinstance(value, list) and all(_conforms(v, args[0]) for v in value)
+    if origin is dict:
+        return isinstance(value, dict) and all(
+            _conforms(k, args[0]) and _conforms(v, args[1]) for k, v in value.items()
+        )
+    if tp in (int, float):
+        return isinstance(value, (int, tp)) and not isinstance(value, bool)
+    return isinstance(value, tp)
 
 
 def parse_operation(raw: dict[str, Any]) -> Operation:
@@ -2558,7 +2494,7 @@ def parse_operation(raw: dict[str, Any]) -> Operation:
         raise SpecError(
             f"Unknown operation_type {op_type!r}. Known: {sorted(OPERATION_TYPES)}"
         )
-    known = {f for f in cls.__dataclass_fields__}  # type: ignore[attr-defined]
+    hints = _field_types(cls)
     # Unknown keys fail LOUDLY (deliberate deviation from the
     # reference's lenient pydantic parsing): a silently-dropped key
     # means a typo'd or unsupported knob reverts to its default and
@@ -2566,15 +2502,22 @@ def parse_operation(raw: dict[str, Any]) -> Operation:
     # when a gopher_rules threshold was ignored and a trained gate
     # learned the degenerate all-pass label.  The message is
     # LLM-feedback-grade: it names the field and the valid set.
-    unknown = sorted(set(raw) - known)
+    unknown = sorted(set(raw) - set(hints))
     if unknown:
         raise SpecError(
             f"Unknown field(s) {unknown} for operation_type {op_type!r}. "
-            f"Valid fields: {sorted(known - {'operation_type'})}"
+            f"Valid fields: {sorted(set(hints) - {'operation_type'})}"
         )
-    kwargs = {k: v for k, v in raw.items() if k in known}
+    for name, value in raw.items():
+        tp = hints[name]
+        if not _conforms(value, tp):
+            expected = tp.__name__ if isinstance(tp, type) else str(tp).replace("typing.", "")
+            raise SpecError(
+                f"Invalid spec for {op_type}: field {name!r} expects {expected}, "
+                f"got {value!r} ({type(value).__name__})"
+            )
     try:
-        return cls(**kwargs)
+        return cls(**raw)
     except TypeError as exc:
         raise SpecError(f"Invalid spec for {op_type}: {exc}") from exc
 

@@ -1104,17 +1104,15 @@ def apply_curriculum_order(df: DataFrame, op: "CurriculumOrderOperation") -> Dat
     )
 
 
-def apply_store_gate(
-    df: DataFrame, op: "StoreGateOperation", spark: SparkSession
-) -> DataFrame:
+def apply_store_gate(df: DataFrame, op: "StoreGateOperation") -> DataFrame:
     from ..functions.incremental import dedup_gate_from_store, neardup_gate_from_store
 
     if op.strategy == "exact":
         return dedup_gate_from_store(
-            df, spark, op.store_path, op.id_column, op.text_column, mode=op.mode
+            df, df.sparkSession, op.store_path, op.id_column, op.text_column, mode=op.mode
         )
     return neardup_gate_from_store(
-        df, spark, op.store_path, op.id_column, op.text_column,
+        df, df.sparkSession, op.store_path, op.id_column, op.text_column,
         n=op.shingle_size, bands=op.bands, rows_per_band=op.rows_per_band,
         seed=op.seed, mode=op.mode,
     )
@@ -1171,9 +1169,7 @@ def _ann_store_manifest(spark: SparkSession, store_path: str) -> DataFrame:
     )
 
 
-def apply_ann_store_build(
-    df: DataFrame, op, spark: SparkSession
-) -> DataFrame:
+def apply_ann_store_build(df: DataFrame, op) -> DataFrame:
     """Corpus frame → persisted ANN store at op.store_path → build
     manifest (model.py AnnStoreBuildOperation)."""
     require_columns(df, [op.id_column, op.vector_column], "ann_store_build")
@@ -1194,24 +1190,20 @@ def apply_ann_store_build(
             n_centroids=op.n_centroids, iters=op.iters,
             sample_size=op.sample_size, scale_bits=op.scale_bits,
         )
-    return _ann_store_manifest(spark, op.store_path)
+    return _ann_store_manifest(df.sparkSession, op.store_path)
 
 
-def apply_ann_store_append(
-    df: DataFrame, op, spark: SparkSession
-) -> DataFrame:
+def apply_ann_store_append(df: DataFrame, op) -> DataFrame:
     """Batch frame → appended into the store's lists → post-append
     manifest (model.py AnnStoreAppendOperation)."""
     from ..functions.similarity import append_to_ann_store
 
     require_columns(df, [op.id_column, op.vector_column], "ann_store_append")
     append_to_ann_store(df, op.store_path, op.id_column, op.vector_column)
-    return _ann_store_manifest(spark, op.store_path)
+    return _ann_store_manifest(df.sparkSession, op.store_path)
 
 
-def apply_ann_store_query(
-    df: DataFrame, op, spark: SparkSession
-) -> DataFrame:
+def apply_ann_store_query(df: DataFrame, op) -> DataFrame:
     """Query frame → (query_id, neighbor_id, rank, cosine) served from
     the persisted store (model.py AnnStoreQueryOperation).  Store kind
     is detected from the meta table — PQ stores declare m/k_codes —
@@ -1220,6 +1212,7 @@ def apply_ann_store_query(
     from ..functions.similarity import _read_ann_store_meta, ann_store_is_pq
 
     require_columns(df, [op.id_column, op.vector_column], "ann_store_query")
+    spark = df.sparkSession
     if ann_store_is_pq(_read_ann_store_meta(spark, op.store_path), op.store_path):
         from ..functions.pq import ann_pq_from_store
 

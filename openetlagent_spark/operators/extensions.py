@@ -11,12 +11,13 @@ windows use a single shuffle on the partition keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..model import (
     AggregationOperation,
     DistinctOperation,
+    FileDefinition,
     FilterOperation,
     JsonExtractOperation,
     LimitOperation,
@@ -27,6 +28,7 @@ from ..model import (
     UnionOperation,
     WindowOperation,
 )
+from ..sources import scan_data
 from .base import comparison_column, require_columns
 
 _AGG_FNS = {
@@ -154,6 +156,22 @@ def apply_union(df: DataFrame, op: UnionOperation, right_df: DataFrame) -> DataF
     if op.mode == "except":
         return df.subtract(right_df)
     return df.unionByName(right_df, allowMissingColumns=False)
+
+
+def apply_union_input(
+    df: DataFrame,
+    op: UnionOperation,
+    spark: SparkSession,
+    inputs: dict[str, FileDefinition] | None,
+) -> DataFrame:
+    """``union`` as a flow op: the right side is the named pipeline
+    input ``op.right_input``, scanned like the flow source."""
+    if not inputs or op.right_input not in inputs:
+        raise ValueError(
+            f"union: right input '{op.right_input}' not found in pipeline inputs "
+            f"{sorted(inputs) if inputs else []}"
+        )
+    return apply_union(df, op, scan_data(spark, inputs[op.right_input]))
 
 
 SAMPLE_BUCKETS = 10_000  # basis-point granularity of the hash sample

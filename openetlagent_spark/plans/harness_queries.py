@@ -42,7 +42,6 @@ from ..model import (
     WindowOperation,
 )
 from ..operators import (
-    OPERATION_DISPATCHER,
     apply_aggregation,
     apply_application,
     apply_arithmetic,

@@ -23,68 +23,17 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from .model import (
-    AsofJoinOperation,
-    SqlTransformOperation,
-    MergeOperation,
     AssignationOperation,
-    AnnStoreAppendOperation,
-    AnnStoreBuildOperation,
-    AnnStoreQueryOperation,
-    BindOperation,
     FileDefinition,
-    BloomGateOperation,
-    CmsCountsOperation,
-    ContaminationOperation,
-    IncrementalDedupOperation,
-    StoreGateOperation,
     Operation,
     PipelineConfig,
     PipelineFlow,
-    RangeJoinOperation,
-    SimilarityOperation,
-    SnapshotDiffOperation,
-    FkCheckOperation,
-    UnionOperation,
 )
-from .operators import (
-    OPERATION_DISPATCHER,
-    apply_sql_transform,
-    apply_ann_store_append,
-    apply_ann_store_build,
-    apply_ann_store_query,
-    apply_asof_join,
-    apply_bind,
-    apply_bloom_gate,
-    apply_cms_counts,
-    apply_contamination,
-    apply_incremental_dedup,
-    apply_store_gate,
-    apply_merge,
-    apply_range_join,
-    apply_snapshot_diff,
-    apply_fk_check,
-    apply_similarity,
-    apply_union,
-)
+from .operators import OPERATION_DISPATCHER, ReadsInputs
 from .sources import save_data, scan_data
 from .validate import validate_schema
 
 _TEMP_COLUMN = re.compile(r"^_.+_$")
-
-# Operation types apply_operations special-cases OUTSIDE
-# OPERATION_DISPATCHER (they need spark + named inputs).  The single
-# source of truth for "runner supports this op" is
-# OPERATION_DISPATCHER | RUNNER_HANDLED_OPS — the generator's step
-# whitelist imports this instead of duplicating the list, and
-# tests/test_flow_roundtrip.py asserts every OPERATION_TYPES entry is
-# covered by one of the two.  MUST match the isinstance chain below.
-RUNNER_HANDLED_OPS = frozenset({
-    "bind", "union", "asof_join", "range_join", "similarity",
-    "contamination", "incremental_dedup", "merge", "store_gate",
-    "ann_store_build", "ann_store_append", "ann_store_query",
-    "snapshot_diff", "fk_check",
-    "bloom_gate", "cms_counts", "sql_transform",
-})
 
 
 def apply_operations(
@@ -107,50 +56,13 @@ def apply_operations(
     current = df
     temp_columns: list[str] = []
     for op in operations:
-        if isinstance(op, BindOperation):
-            current = apply_bind(current, op, spark, inputs)
-        elif isinstance(op, AsofJoinOperation):
-            current = apply_asof_join(current, op, spark, inputs)
-        elif isinstance(op, RangeJoinOperation):
-            current = apply_range_join(current, op, spark, inputs)
-        elif isinstance(op, SimilarityOperation):
-            current = apply_similarity(current, op, spark, inputs)
-        elif isinstance(op, ContaminationOperation):
-            current = apply_contamination(current, op, spark, inputs)
-        elif isinstance(op, BloomGateOperation):
-            current = apply_bloom_gate(current, op, spark, inputs)
-        elif isinstance(op, CmsCountsOperation):
-            current = apply_cms_counts(current, op, spark, inputs)
-        elif isinstance(op, MergeOperation):
-            current = apply_merge(current, op, spark, inputs)
-        elif isinstance(op, SnapshotDiffOperation):
-            current = apply_snapshot_diff(current, op, spark, inputs)
-        elif isinstance(op, FkCheckOperation):
-            current = apply_fk_check(current, op, spark, inputs)
-        elif isinstance(op, IncrementalDedupOperation):
-            current = apply_incremental_dedup(current, op, spark, inputs)
-        elif isinstance(op, StoreGateOperation):
-            current = apply_store_gate(current, op, spark)
-        elif isinstance(op, AnnStoreBuildOperation):
-            current = apply_ann_store_build(current, op, spark)
-        elif isinstance(op, AnnStoreAppendOperation):
-            current = apply_ann_store_append(current, op, spark)
-        elif isinstance(op, AnnStoreQueryOperation):
-            current = apply_ann_store_query(current, op, spark)
-        elif isinstance(op, SqlTransformOperation):
-            current = apply_sql_transform(current, op, spark, inputs)
-        elif isinstance(op, UnionOperation):
-            if not inputs or op.right_input not in inputs:
-                raise ValueError(
-                    f"union: right input '{op.right_input}' not found in pipeline inputs "
-                    f"{sorted(inputs) if inputs else []}"
-                )
-            current = apply_union(current, op, scan_data(spark, inputs[op.right_input]))
+        entry = OPERATION_DISPATCHER.get(op.operation_type)
+        if entry is None:
+            raise ValueError(f"Unknown operation type: {op.operation_type!r}")
+        if isinstance(entry, ReadsInputs):
+            current = entry.fn(current, op, spark, inputs)
         else:
-            fn = OPERATION_DISPATCHER.get(op.operation_type)
-            if fn is None:
-                raise ValueError(f"Unknown operation type: {op.operation_type!r}")
-            current = fn(current, op)
+            current = entry(current, op)
         # Only ASSIGNATION outputs participate in the temp-column sweep —
         # the reference drops exactly those (app/main.py:413-416); a
         # casting/equality output that happens to be named `_x_` survives.

@@ -37,19 +37,12 @@ def test_flow_yaml_roundtrip(tmp_path):
 
 
 def test_every_operation_type_is_executable():
-    """Mechanism guard (review r06): every YAML-parseable op must be
-    runnable — either via OPERATION_DISPATCHER or the runner's
-    special-case set — so the generator whitelist (which unions the
-    same two) can never reject a supported op again."""
+    """Every YAML-parseable op type has one dispatcher entry, and the
+    dispatcher holds no type the parser refuses."""
     from openetlagent_spark.model import OPERATION_TYPES
     from openetlagent_spark.operators import OPERATION_DISPATCHER
-    from openetlagent_spark.runner import RUNNER_HANDLED_OPS
 
-    covered = set(OPERATION_DISPATCHER) | set(RUNNER_HANDLED_OPS)
-    assert set(OPERATION_TYPES) <= covered, sorted(set(OPERATION_TYPES) - covered)
-    # no stale names, no double coverage
-    assert RUNNER_HANDLED_OPS <= set(OPERATION_TYPES)
-    assert not (RUNNER_HANDLED_OPS & set(OPERATION_DISPATCHER))
+    assert set(OPERATION_TYPES) == set(OPERATION_DISPATCHER)
 
 
 def test_flat_file_schema_raises_loudly(tmp_path):

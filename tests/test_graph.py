@@ -38,6 +38,14 @@ def test_deep_chain_converges(spark):
     assert len(got) == 21
 
 
+@pytest.mark.parametrize("steps", [0, -2])
+def test_components_refuse_empty_cycles(spark, steps):
+    # a cycle of 0 pushes leaves the label sum unchanged, which would
+    # read as convergence after the first push
+    with pytest.raises(ValueError, match=f"steps_per_cycle must be >= 1 or 'auto', got {steps}"):
+        connected_components(_edges(spark, [(1, 2), (2, 3)]), steps_per_cycle=steps)
+
+
 def test_components_partitioning_independent(spark):
     edges = _edges(spark, [(5, 3), (3, 9), (2, 7), (7, 1), (8, 8)])
     a = sorted(connected_components(edges).collect())

@@ -279,6 +279,21 @@ def test_ewma_drops_null_rows_and_validates(spark):
                     lookback=0)
 
 
+def test_ewma_engines_agree_on_schema_and_rows(spark):
+    from openetlagent_spark.functions.timeseries import ewma_smooth
+
+    rows = [
+        Row(k="ab"[i % 2], ts=_t(i), eid=i, v=float(i % 5))
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(rows)
+    jvm = ewma_smooth(df, "k", "ts", "eid", "v", engine="jvm", lookback=4)
+    arrow = ewma_smooth(df, "k", "ts", "eid", "v", engine="arrow", lookback=4)
+    assert arrow.schema == jvm.schema
+    assert arrow.schema["ewma"].nullable
+    assert arrow.collect() == jvm.collect()
+
+
 def test_rolling_median_resists_spikes(spark):
     from openetlagent_spark.functions.timeseries import rolling_median
 

@@ -188,11 +188,7 @@ def test_neardup_verify_joins_never_broadcast_unproven(spark):
     unproven = embedding_neardup_pairs(
         emb, "vec_id", "embedding", threshold=0.3, rademacher=True
     )
-    physical = (
-        unproven._jdf.queryExecution().explainString("formatted")
-        if False
-        else unproven._jdf.queryExecution().executedPlan().toString()
-    )
+    physical = unproven._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" not in physical
     assert "SortMergeJoin" in physical
 
