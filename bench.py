@@ -30,7 +30,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from openetlagent_spark.plans import HARNESS_QUERIES  # noqa: E402
-from openetlagent_spark.session import free_local_checkpoints, get_spark  # noqa: E402
+from openetlagent_spark.session import (  # noqa: E402
+    class_archive_state,
+    free_local_checkpoints,
+    get_spark,
+)
 
 # Headline set: the flagship plus the operators whose plans are
 # interesting at scale (joins, shuffles, pivot, UDF path), plus the
@@ -344,7 +348,10 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_QUERIES")
     headline = [q for q in HEADLINE if q in only.split(",")] if only else HEADLINE
 
+    t0 = time.time()
     spark = get_spark("bench")
+    session = {"get_spark_s": round(time.time() - t0, 3),
+               "class_archive": class_archive_state(spark)}
     # Warm the JVM/codegen once so per-query numbers measure the plan,
     # not session startup.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
@@ -384,11 +391,12 @@ def main() -> None:
         payload["canary"] = canary
     # Sibling artifact with the COMPLETE per-query map: the driver
     # records only a truncated tail of stdout, which has forced past
-    # rounds to reconstruct timings by regex.
+    # rounds to reconstruct timings by regex.  Session set-up goes
+    # there only; the stdout line keeps its fields.
     try:
         local = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
         with open(local, "w") as fh:
-            json.dump(payload, fh, indent=1)
+            json.dump({**payload, "session": session}, fh, indent=1)
             fh.write("\n")
     except OSError:
         pass  # read-only checkout: stdout line still carries the data

@@ -47,8 +47,9 @@ def main(argv: list[str] | None = None) -> int:
         "--explain",
         action="store_true",
         help="print each flow's optimized physical plan (joins, pushdown, "
-        "shuffles) WITHOUT executing or writing anything — the "
-        "scale-hygiene preflight for a new pipeline",
+        "shuffles) WITHOUT running its action or writing anything — the "
+        "scale-hygiene preflight for a new pipeline; also prints how many "
+        "Spark jobs building the plan launched (eager operator steps)",
     )
     args = parser.parse_args(argv)
 
@@ -69,10 +70,21 @@ def main(argv: list[str] | None = None) -> int:
                 from .runner import apply_operations
                 from .sources import scan_data
 
-                df = scan_data(spark, config.inputs[flow.source])
-                result = apply_operations(df, flow.operations, spark, config.inputs)
+                # operators with eager steps (checkpoints, probes,
+                # collects) run Spark jobs while the plan is built
+                group = f"explain/{output_key}"
+                sc = spark.sparkContext
+                sc.setJobGroup(group, f"plan {output_key}")
+                try:
+                    df = scan_data(spark, config.inputs[flow.source])
+                    result = apply_operations(df, flow.operations, spark, config.inputs)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
                 print(f"=== {output_key} ===")
                 result.explain("formatted")
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                print(f"planning {output_key} launched {jobs} Spark job(s)")
                 continue
             _, ok, feedback = run_flow(
                 spark, config, flow, output_key, save=True, single_file=args.single_file

@@ -907,7 +907,18 @@ def embedding_neardup_pairs(
     nears the cap and candidate pairs approach corpus²/2**n_planes —
     the r12 sf10 sweep measured ~5e8 candidates at 500k vectors with
     the default n_planes=8, vs ~2e6 at n_planes=14.  Rule of thumb:
-    2**n_planes ≥ corpus / target_bucket_size."""
+    2**n_planes ≥ corpus / target_bucket_size.
+
+    ``corpus_count``, when given, MUST be the exact row count of ``df``
+    (e.g. the ``df.count()`` that also sized ``n_planes``), never an
+    estimate.  It gates the verify join-backs: ``corpus_count · dim · 8``
+    bytes at or under ``_VEC_BROADCAST_MAX_BYTES`` broadcasts the vector
+    table, so an undercount can broadcast a table larger than the
+    driver and executors can hold.  It also gates the unrolled cosine
+    chains (``_UNROLL_MIN_CORPUS`` rows and up), which changes plan
+    cost, not values.
+    ``None`` (the default) treats the corpus as unbounded: sort-merge
+    join-backs and no unrolling."""
     from .similarity import cosine_expr, infer_dim, multi_table_signatures
 
     if dim is None:
