@@ -122,16 +122,16 @@ Available operation_type values and their fields:
   normalized-text fingerprint. {corpus_path: input_key, id_column,
   text_column, mode (annotate/filter); strategy: near for paraphrase-
   level MinHash admission + jaccard_threshold}
-- merge: apply a CDC change feed (latest-seq wins). {feed_path: input_key,
-  keys: [..], value_columns, op_column, seq_column}
-- scd2: collapse a history into validity intervals. {keys, time_column,
-  tracked_columns, order_column} — adds valid_from/valid_to/is_current
+- merge: apply a CDC change feed (latest-seq wins). {right_file_path: input_key,
+  keys: [..], op_column, delete_value, seq_column}
+- scd2: collapse a history into validity intervals. {keys, ts_column,
+  attr_columns, order_column} — adds valid_from/valid_to/is_current
 - stratified_sample: exact k rows per group by md5 rank. {group_columns,
   key_column, k, rank_column?}
 - chunk: overlapping token windows (RAG layout). {id_column, text_column,
   chunk_size, overlap}
 - fuzzy_pairs: blocked Levenshtein near-match pairs. {id_column,
-  text_column, max_dist, prefix_chars}
+  string_column, max_dist, prefix_chars}
 - tfidf: per-doc top-k TF-IDF keywords. {id_column, text_column, k}
 - bigram_lm: corpus bigram-LM top-k transitions. {text_column, k}
 - doc_lm_score: per-doc mean LM transition probability + OOV count

@@ -21,13 +21,66 @@ import types
 import typing
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Annotated, Any, Literal
 
 import yaml
 
 
 class SpecError(ValueError):
     """Raised when an operation spec is structurally invalid."""
+
+
+# ---------------------------------------------------------------------------
+# Field contracts.  A spec field declares what it accepts on its
+# annotation: the type, a ``Literal`` for a fixed set of values, and an
+# ``Annotated`` marker (``NonEmpty``, ``Bound``) for the rest.
+# ``Operation.__post_init__`` checks every field against its annotation
+# on every construction, parsed or built in code, then runs the spec's
+# own ``check`` for what one field cannot say: cross-field rules,
+# patterns and mode-dependent requirements.
+# ---------------------------------------------------------------------------
+
+
+class NonEmpty:
+    """Marker: the value may not be empty ("", [], {}) or None."""
+
+    def breach(self, op: str, name: str, value: Any) -> str | None:
+        return None if value else f"{op} requires {name}"
+
+
+@dataclass(frozen=True)
+class Bound:
+    """Marker: ``value >= lo`` (``>`` when ``lo_open``) and, when ``hi``
+    is set, ``value <= hi`` (``<`` when ``hi_open``).  NaN fails every
+    bound; None passes, so an optional field is bounded only when set."""
+
+    lo: float
+    hi: float | None = None
+    lo_open: bool = False
+    hi_open: bool = False
+
+    def __str__(self) -> str:
+        if self.hi is not None:
+            return f"in {'[('[self.lo_open]}{self.lo}, {self.hi}{'])'[self.hi_open]}"
+        if self.lo == 0 and self.lo_open:
+            return "positive"
+        return f"{'>' if self.lo_open else '>='} {self.lo}"
+
+    def breach(self, op: str, name: str, value: Any) -> str | None:
+        if value is None:
+            return None
+        above = value > self.lo if self.lo_open else value >= self.lo
+        below = self.hi is None or (value < self.hi if self.hi_open else value <= self.hi)
+        return None if above and below else f"{op} {name} must be {self}, got {value!r}"
+
+
+T = typing.TypeVar("T")
+Required = Annotated[T, NonEmpty()]
+Positive = Annotated[T, Bound(0, lo_open=True)]
+NonNegative = Annotated[T, Bound(0)]
+AtLeastOne = Annotated[T, Bound(1)]
+GateMode = Literal["annotate", "filter"]
+MatchStrategy = Literal["exact", "near"]
 
 
 # ---------------------------------------------------------------------------
@@ -43,6 +96,34 @@ class Operation:
     output_column: str | None = None
 
     operation_type: str = ""
+
+    def __init_subclass__(cls, **kwargs: Any) -> None:
+        super().__init_subclass__(**kwargs)
+        if "__post_init__" in cls.__dict__:
+            raise TypeError(
+                f"{cls.__name__}: put spec checks in check(), so the field "
+                "contract check in Operation.__post_init__ always runs first"
+            )
+
+    def __post_init__(self) -> None:
+        op, hints = self.operation_type, _field_types(type(self))
+        # every type before any bound: a bound compared against a
+        # mistyped value would raise a raw TypeError
+        for name, tp in hints.items():
+            value = getattr(self, name)
+            if not _conforms(value, tp):
+                raise SpecError(
+                    f"Invalid spec for {op}: field {name!r} expects {_type_name(tp)}, "
+                    f"got {value!r} ({type(value).__name__})"
+                )
+        for name, tp in hints.items():
+            breach = _breach(op, name, getattr(self, name), tp)
+            if breach:
+                raise SpecError(breach)
+        self.check()
+
+    def check(self) -> None:
+        """The spec's own rules beyond its field annotations."""
 
 
 @dataclass
@@ -90,7 +171,7 @@ class SwitchingOperation(Operation):
     default_value: Any = None
     operation_type: str = "switching"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         if (self.default_column is None) == (self.default_value is None):
             raise SpecError(
                 "switching requires exactly one of default_column / default_value "
@@ -122,17 +203,15 @@ class ArithmeticOperation(Operation):
     (reference: app/models.py:87-90)."""
 
     input_columns: list[str] = field(default_factory=list)
-    operator: str = "+"
+    operator: Literal["+", "-", "*", "/"] = "+"
     operation_type: str = "arithmetic"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         if len(self.input_columns) != 2:
             raise SpecError(
                 f"arithmetic requires exactly two input columns, got "
                 f"{self.input_columns} (reference: app/models.py:88)"
             )
-        if self.operator not in ("+", "-", "*", "/"):
-            raise SpecError(f"arithmetic operator must be one of + - * /, got {self.operator!r}")
 
 
 @dataclass
@@ -141,13 +220,9 @@ class ComparisonOperation(Operation):
     projection, NOT a row filter (reference: app/models.py:92-96)."""
 
     input_column: str = ""
-    operator: str = "=="
+    operator: Literal["==", "!=", ">", "<", ">=", "<="] = "=="
     value: Any = None
     operation_type: str = "comparison"
-
-    def __post_init__(self) -> None:
-        if self.operator not in ("==", "!=", ">", "<", ">=", "<="):
-            raise SpecError(f"comparison operator must be one of == != > < >= <=, got {self.operator!r}")
 
 
 @dataclass
@@ -162,18 +237,14 @@ class BindOperation(Operation):
     right_schema_columns: dict[str, str] = field(default_factory=dict)
     left_on: str | list[str] = ""
     right_on: str | list[str] = ""
-    how: str = "left"
+    # the reference surface is left/inner/outer/cross (app/models.py:104);
+    # semi/anti are engine extensions (SURVEY §2.2 gap)
+    how: Literal["left", "inner", "outer", "cross", "semi", "anti"] = "left"
     columns_to_add: list[str] = field(default_factory=list)
-    skew_salt: int = 0
+    skew_salt: NonNegative[int] = 0
     operation_type: str = "bind"
 
-    def __post_init__(self) -> None:
-        if self.how not in ("left", "inner", "outer", "cross", "semi", "anti"):
-            raise SpecError(
-                f"bind how must be one of left/inner/outer/cross/semi/anti, got {self.how!r} "
-                "(reference surface is left/inner/outer/cross, app/models.py:104; "
-                "semi/anti are engine extensions — SURVEY §2.2 gap)"
-            )
+    def check(self) -> None:
         if len(self.left_keys()) != len(self.right_keys()):
             raise SpecError(
                 f"bind left_on/right_on key counts differ: {self.left_on!r} vs {self.right_on!r}"
@@ -182,8 +253,6 @@ class BindOperation(Operation):
         # a silent cartesian product.  Cross joins must be asked for.
         if self.how != "cross" and not [k for k in self.left_keys() if k]:
             raise SpecError(f"bind how={self.how!r} requires join keys (use how='cross' for none)")
-        if self.skew_salt < 0:
-            raise SpecError(f"bind skew_salt must be >= 0, got {self.skew_salt!r}")
         if self.skew_salt > 1 and self.how not in ("inner", "left"):
             raise SpecError("bind skew_salt applies to inner/left joins only")
 
@@ -253,15 +322,11 @@ class AggregationOperation(Operation):
 
     group_by: list[str] = field(default_factory=list)
     aggregations: dict[str, dict[str, str]] = field(default_factory=dict)
-    grouping: str = "groupby"
+    grouping: Literal["groupby", "rollup", "cube", "sets"] = "groupby"
     grouping_sets: list[list[str]] = field(default_factory=list)
     operation_type: str = "aggregation"
 
-    def __post_init__(self) -> None:
-        if self.grouping not in ("groupby", "rollup", "cube", "sets"):
-            raise SpecError(
-                f"aggregation grouping must be groupby/rollup/cube/sets, got {self.grouping!r}"
-            )
+    def check(self) -> None:
         if self.grouping == "sets" and not self.grouping_sets:
             raise SpecError("aggregation grouping='sets' requires grouping_sets")
 
@@ -293,14 +358,8 @@ class UnionOperation(Operation):
     Spark's DISTINCT set semantics, matching SQL INTERSECT/EXCEPT."""
 
     right_input: str = ""
-    mode: str = "all"
+    mode: Literal["all", "distinct", "intersect", "except"] = "all"
     operation_type: str = "union"
-
-    def __post_init__(self) -> None:
-        if self.mode not in ("all", "distinct", "intersect", "except"):
-            raise SpecError(
-                f"union mode must be all/distinct/intersect/except, got {self.mode!r}"
-            )
 
 
 @dataclass
@@ -316,7 +375,7 @@ class JsonExtractOperation(Operation):
     target_type: str | None = None
     operation_type: str = "json_extract"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         if not self.json_path.startswith("$"):
             raise SpecError(f"json_extract path must start with '$', got {self.json_path!r}")
 
@@ -332,7 +391,7 @@ class SelectOperation(Operation):
     drop_columns: list[str] = field(default_factory=list)
     operation_type: str = "select"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         if bool(self.columns) == bool(self.drop_columns):
             raise SpecError("select requires exactly one of columns / drop_columns")
 
@@ -349,14 +408,10 @@ class SampleOperation(Operation):
       same hashing contract as functions.text.split_assign), and
       therefore oracle-checkable."""
 
-    fraction: float = 0.1
+    fraction: Annotated[float, Bound(0, 1, lo_open=True)] = 0.1
     seed: int = 42
     key_column: str = ""
     operation_type: str = "sample"
-
-    def __post_init__(self) -> None:
-        if not (0.0 < self.fraction <= 1.0):
-            raise SpecError(f"sample fraction must be in (0, 1], got {self.fraction!r}")
 
 
 @dataclass
@@ -388,10 +443,10 @@ class WindowOperation(Operation):
     value_column: str | None = None
     offset: int = 1
     frame: list[int] = field(default_factory=list)
-    frame_type: str = "rows"
+    frame_type: Literal["rows", "range"] = "rows"
     operation_type: str = "window"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         if self.frame and len(self.frame) != 2:
             raise SpecError(f"window frame must be [start, end] offsets, got {self.frame!r}")
         if self.frame and self.frame[0] > self.frame[1]:
@@ -400,8 +455,6 @@ class WindowOperation(Operation):
             raise SpecError(
                 f"window frame applies to aggregate functions only, not {self.function!r}"
             )
-        if self.frame_type not in ("rows", "range"):
-            raise SpecError(f"window frame_type must be rows/range, got {self.frame_type!r}")
         if self.frame_type == "range" and len(self.order_by) != 1:
             raise SpecError("window range frames require exactly one (numeric) order_by column")
 
@@ -431,8 +484,10 @@ class DedupOperation(Operation):
     ``exact`` supports only drop (its keep-min semantics have no pair
     form)."""
 
-    strategy: str = "exact"
-    mode: str = "drop"
+    strategy: Literal[
+        "exact", "minhash", "simhash", "ngram", "embedding", "substring", "fuzzy"
+    ] = "exact"
+    mode: Literal["drop", "pairs", "components", "cluster_drop", "keep_best"] = "drop"
     # exact
     keys: list[str] = field(default_factory=list)
     order_column: str = ""
@@ -460,19 +515,7 @@ class DedupOperation(Operation):
     score_column: str = ""
     operation_type: str = "dedup"
 
-    def __post_init__(self) -> None:
-        if self.strategy not in (
-            "exact", "minhash", "simhash", "ngram", "embedding", "substring", "fuzzy"
-        ):
-            raise SpecError(
-                f"dedup strategy must be exact/minhash/simhash/ngram/embedding/"
-                f"substring/fuzzy, got {self.strategy!r}"
-            )
-        if self.mode not in ("drop", "pairs", "components", "cluster_drop", "keep_best"):
-            raise SpecError(
-                f"dedup mode must be drop/pairs/components/cluster_drop/"
-                f"keep_best, got {self.mode!r}"
-            )
+    def check(self) -> None:
         if self.mode == "keep_best" and not self.score_column:
             raise SpecError("dedup mode='keep_best' requires score_column")
         if self.strategy == "exact":
@@ -496,26 +539,18 @@ class SimilarityOperation(Operation):
     path).  method ∈ brute (exact broadcast baseline) / lsh / ivf
     (approximate scale paths — functions/similarity.py)."""
 
-    method: str = "brute"
-    queries_path: str = ""
+    method: Literal["brute", "lsh", "ivf"] = "brute"
+    queries_path: Required[str] = ""  # named input or file path
     queries_schema_columns: dict[str, str] = field(default_factory=dict)
     id_column: str = "vec_id"
     vector_column: str = "embedding"
-    k: int = 10
+    k: Positive[int] = 10
     n_planes: int = 4
     n_tables: int = 8
     n_centroids: int = 16
     nprobe: int = 4
     seed: int = 42
     operation_type: str = "similarity"
-
-    def __post_init__(self) -> None:
-        if self.method not in ("brute", "lsh", "ivf"):
-            raise SpecError(f"similarity method must be brute/lsh/ivf, got {self.method!r}")
-        if not self.queries_path:
-            raise SpecError("similarity requires queries_path (named input or file path)")
-        if self.k <= 0:
-            raise SpecError(f"similarity k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -524,35 +559,19 @@ class AsofJoinOperation(Operation):
     (backward) / earliest (forward) right row's value_columns per key;
     right side resolves like bind's."""
 
-    right_file_path: str = ""
+    right_file_path: Required[str] = ""
     right_schema_columns: dict[str, str] = field(default_factory=dict)
-    left_on: str = ""
-    right_on: str = ""
-    left_time: str = ""
-    right_time: str = ""
-    value_columns: list[str] = field(default_factory=list)
-    direction: str = "backward"
+    left_on: Required[str] = ""
+    right_on: Required[str] = ""
+    left_time: Required[str] = ""
+    right_time: Required[str] = ""
+    value_columns: Required[list[str]] = field(default_factory=list)
+    direction: Literal["backward", "forward"] = "backward"
     suffix: str = "_asof"
-    # None = unbounded; seconds otherwise (stale matches revert to NULL)
-    tolerance: float | None = None
+    # None = unbounded; seconds otherwise (stale matches revert to NULL).
+    # NaN fails the bound, so it cannot silently disable staleness.
+    tolerance: NonNegative[float | None] = None
     operation_type: str = "asof_join"
-
-    def __post_init__(self) -> None:
-        if self.direction not in ("backward", "forward"):
-            raise SpecError(
-                f"asof_join direction must be backward/forward, got {self.direction!r}"
-            )
-        if self.tolerance is not None and not self.tolerance >= 0:
-            # `not (x >= 0)` also rejects NaN, which would otherwise
-            # silently disable the staleness bound
-            raise SpecError(
-                f"asof_join tolerance must be >= 0, got {self.tolerance!r}"
-            )
-        for f_name in ("right_file_path", "left_on", "right_on", "left_time", "right_time"):
-            if not getattr(self, f_name):
-                raise SpecError(f"asof_join requires {f_name}")
-        if not self.value_columns:
-            raise SpecError("asof_join requires value_columns")
 
 
 @dataclass
@@ -570,7 +589,7 @@ class RangeJoinOperation(Operation):
     canonical-bucket condition (functions/range_join.py
     interval_overlap_join)."""
 
-    kind: str = "tolerance"
+    kind: Literal["tolerance", "interval", "overlap"] = "tolerance"
     # tolerance (self-join)
     key: str = ""
     time_column: str = ""
@@ -592,11 +611,7 @@ class RangeJoinOperation(Operation):
     left_end_column: str = ""
     operation_type: str = "range_join"
 
-    def __post_init__(self) -> None:
-        if self.kind not in ("tolerance", "interval", "overlap"):
-            raise SpecError(
-                f"range_join kind must be tolerance/interval/overlap, got {self.kind!r}"
-            )
+    def check(self) -> None:
         if self.kind == "overlap":
             for f_name in (
                 "right_file_path", "key", "left_id_column", "right_id_column",
@@ -637,39 +652,27 @@ class ContaminationOperation(Operation):
     id, n_shingles, n_hits, contamination_rate, contaminated) /
     filter (return the corpus with contaminated rows removed)."""
 
-    benchmark_path: str = ""
+    benchmark_path: Required[str] = ""  # named input or file path
     benchmark_schema_columns: dict[str, str] = field(default_factory=dict)
     id_column: str = "doc_id"
     text_column: str = "text"
     benchmark_text_column: str = ""
     ngram_size: int = 3
     rate_threshold: float = 0.3
-    mode: str = "annotate"
+    mode: GateMode = "annotate"
     # strategy='near' switches from exact shingle overlap to banded
     # MinHash near-dup pairing (functions/curation.py
     # near_contamination) — catches paraphrased benchmark items the
     # exact check misses.  The near-specific knobs below are ignored
     # under strategy='exact'.
-    strategy: str = "exact"
+    strategy: MatchStrategy = "exact"
     jaccard_threshold: float = 0.5
     num_perm: int = 64
     bands: int = 16
     max_bucket: int = 1000
     operation_type: str = "contamination"
 
-    def __post_init__(self) -> None:
-        if not self.benchmark_path:
-            raise SpecError(
-                "contamination requires benchmark_path (named input or file path)"
-            )
-        if self.mode not in ("annotate", "filter"):
-            raise SpecError(
-                f"contamination mode must be annotate/filter, got {self.mode!r}"
-            )
-        if self.strategy not in ("exact", "near"):
-            raise SpecError(
-                f"contamination strategy must be exact/near, got {self.strategy!r}"
-            )
+    def check(self) -> None:
         if self.strategy == "near":
             if not 0.0 < self.jaccard_threshold <= 1.0:
                 raise SpecError(
@@ -691,22 +694,12 @@ class SnapshotDiffOperation(Operation):
     per key: key columns + diff_status ∈ added/removed/changed/
     unchanged) / counts ((diff_status, n) summary)."""
 
-    old_path: str = ""
+    old_path: Required[str] = ""  # named input or file path
     old_schema_columns: dict[str, str] = field(default_factory=dict)
-    key_columns: list[str] = field(default_factory=list)
-    compare_columns: list[str] = field(default_factory=list)
-    mode: str = "labels"
+    key_columns: Required[list[str]] = field(default_factory=list)
+    compare_columns: Required[list[str]] = field(default_factory=list)
+    mode: Literal["labels", "counts"] = "labels"
     operation_type: str = "snapshot_diff"
-
-    def __post_init__(self) -> None:
-        if not self.old_path:
-            raise SpecError("snapshot_diff requires old_path (named input or file path)")
-        if not self.key_columns or not self.compare_columns:
-            raise SpecError("snapshot_diff requires key_columns and compare_columns")
-        if self.mode not in ("labels", "counts"):
-            raise SpecError(
-                f"snapshot_diff mode must be labels/counts, got {self.mode!r}"
-            )
 
 
 @dataclass
@@ -723,16 +716,10 @@ class ProvenanceOperation(Operation):
     [name]) — ``name`` is the basename, ``path`` the full URI."""
 
     column_prefix: str = "src_"
-    fields: list[str] = field(default_factory=lambda: ["name"])
+    fields: Required[list[Literal["path", "name", "size", "mtime"]]] = field(
+        default_factory=lambda: ["name"]
+    )
     operation_type: str = "provenance"
-
-    def __post_init__(self) -> None:
-        bad = [f for f in self.fields if f not in ("path", "name", "size", "mtime")]
-        if bad or not self.fields:
-            raise SpecError(
-                f"provenance fields must be a non-empty subset of "
-                f"path/name/size/mtime, got {self.fields!r}"
-            )
 
 
 @dataclass
@@ -747,7 +734,7 @@ class ScrubOperation(Operation):
     rules: list[list[str]] = field(default_factory=list)
     operation_type: str = "scrub"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         for r in self.rules:
             if len(r) != 2:
                 raise SpecError(
@@ -765,14 +752,8 @@ class PackSequencesOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    context_length: int = 512
+    context_length: Positive[int] = 512
     operation_type: str = "pack_sequences"
-
-    def __post_init__(self) -> None:
-        if self.context_length <= 0:
-            raise SpecError(
-                f"pack_sequences context_length must be positive, got {self.context_length!r}"
-            )
 
 
 @dataclass
@@ -782,12 +763,8 @@ class RepetitionOperation(Operation):
     text quality screen for pretraining corpora."""
 
     input_column: str = "text"
-    ns: list[int] = field(default_factory=lambda: [2, 3])
+    ns: Required[list[Positive[int]]] = field(default_factory=lambda: [2, 3])
     operation_type: str = "repetition"
-
-    def __post_init__(self) -> None:
-        if not self.ns or any((not isinstance(n, int)) or n < 1 for n in self.ns):
-            raise SpecError(f"repetition ns must be positive ints, got {self.ns!r}")
 
 
 @dataclass
@@ -799,20 +776,13 @@ class MixtureOperation(Operation):
     re-weighting for training-data pipelines, engine-exact (same md5
     bucket contract as SampleOperation.key_column)."""
 
-    group_column: str = ""
-    key_column: str = ""
-    weights: dict[str, float] = field(default_factory=dict)
-    default_weight: float = 1.0
+    group_column: Required[str] = ""
+    key_column: Required[str] = ""
+    weights: dict[str, NonNegative[float]] = field(default_factory=dict)
+    default_weight: NonNegative[float] = 1.0
     seed: int = 42
     copy_column: str = "copy"
     operation_type: str = "mixture"
-
-    def __post_init__(self) -> None:
-        if not self.group_column or not self.key_column:
-            raise SpecError("mixture requires group_column and key_column")
-        for g, w in {**self.weights, "<default>": self.default_weight}.items():
-            if not isinstance(w, (int, float)) or w < 0:
-                raise SpecError(f"mixture weight for {g!r} must be >= 0, got {w!r}")
 
 
 @dataclass
@@ -824,19 +794,13 @@ class MergeOperation(Operation):
     ``op_column`` (rows equal to ``delete_value`` remove the key) and
     ``seq_column`` (highest sequence wins per key)."""
 
-    right_file_path: str = ""
+    right_file_path: Required[str] = ""  # named input or file path
     right_schema_columns: dict[str, str] = field(default_factory=dict)
-    keys: list[str] = field(default_factory=list)
+    keys: Required[list[str]] = field(default_factory=list)
     op_column: str = ""
     delete_value: str = "D"
     seq_column: str = ""
     operation_type: str = "merge"
-
-    def __post_init__(self) -> None:
-        if not self.right_file_path:
-            raise SpecError("merge requires right_file_path (named input or file path)")
-        if not self.keys:
-            raise SpecError("merge requires keys")
 
 
 @dataclass
@@ -846,16 +810,12 @@ class Scd2Operation(Operation):
     (valid_from / valid_to / is_current) per key.  ``collapse`` opens a
     new version only when an attr_column actually changes (null-safe)."""
 
-    keys: list[str] = field(default_factory=list)
-    ts_column: str = ""
-    attr_columns: list[str] = field(default_factory=list)
+    keys: Required[list[str]] = field(default_factory=list)
+    ts_column: Required[str] = ""
+    attr_columns: Required[list[str]] = field(default_factory=list)
     order_column: str = ""
     collapse: bool = True
     operation_type: str = "scd2"
-
-    def __post_init__(self) -> None:
-        if not self.keys or not self.ts_column or not self.attr_columns:
-            raise SpecError("scd2 requires keys, ts_column and attr_columns")
 
 
 @dataclass
@@ -865,18 +825,12 @@ class StratifiedSampleOperation(Operation):
     md5(key ∥ seed) — deterministic and partition-independent, unlike
     fraction-based sampling."""
 
-    group_columns: list[str] = field(default_factory=list)
-    key_column: str = ""
-    k: int = 0
+    group_columns: Required[list[str]] = field(default_factory=list)
+    key_column: Required[str] = ""
+    k: Positive[int] = 0
     seed: int = 42
     rank_column: str = ""
     operation_type: str = "stratified_sample"
-
-    def __post_init__(self) -> None:
-        if not self.group_columns or not self.key_column:
-            raise SpecError("stratified_sample requires group_columns and key_column")
-        if self.k <= 0:
-            raise SpecError(f"stratified_sample k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -887,22 +841,13 @@ class WeightedSampleOperation(Operation):
     with NULL/non-positive weight are excluded.  Deterministic,
     partition-independent, engine-exact."""
 
-    group_columns: list[str] = field(default_factory=list)
-    key_column: str = ""
-    weight_column: str = ""
-    k: int = 0
+    group_columns: Required[list[str]] = field(default_factory=list)
+    key_column: Required[str] = ""
+    weight_column: Required[str] = ""
+    k: Positive[int] = 0
     seed: int = 42
     rank_column: str = ""
     operation_type: str = "weighted_sample"
-
-    def __post_init__(self) -> None:
-        if not self.group_columns or not self.key_column or not self.weight_column:
-            raise SpecError(
-                "weighted_sample requires group_columns, key_column and "
-                "weight_column"
-            )
-        if self.k <= 0:
-            raise SpecError(f"weighted_sample k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -913,13 +858,11 @@ class ChunkOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    chunk_size: int = 512
+    chunk_size: Positive[int] = 512
     overlap: int = 0
     operation_type: str = "chunk"
 
-    def __post_init__(self) -> None:
-        if self.chunk_size <= 0:
-            raise SpecError(f"chunk chunk_size must be positive, got {self.chunk_size!r}")
+    def check(self) -> None:
         if not (0 <= self.overlap < self.chunk_size):
             raise SpecError(
                 f"chunk overlap must be in [0, chunk_size), got {self.overlap!r}"
@@ -932,25 +875,21 @@ class KeywordSearchOperation(Operation):
     keyword_search_topk): rational-idf BM25 top-k for a fixed list of
     query terms over the current frame."""
 
-    query_terms: list[str] = field(default_factory=list)
+    query_terms: Required[list[str]] = field(default_factory=list)
     id_column: str = "doc_id"
     text_column: str = "text"
-    k: int = 10
+    k: Positive[int] = 10
     k1: float = 1.2
     b: float = 0.75
     operation_type: str = "keyword_search"
 
-    def __post_init__(self) -> None:
-        if not self.query_terms:
-            raise SpecError("keyword_search requires query_terms")
+    def check(self) -> None:
         folded = [str(t).lower() for t in self.query_terms]
         if len(set(folded)) != len(folded):
             raise SpecError(
                 f"keyword_search query_terms must be unique (case-folded), "
                 f"got {self.query_terms!r}"
             )
-        if self.k <= 0:
-            raise SpecError(f"keyword_search k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -961,12 +900,8 @@ class InvertedIndexOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    max_df: int = 0
+    max_df: NonNegative[int] = 0
     operation_type: str = "inverted_index"
-
-    def __post_init__(self) -> None:
-        if self.max_df < 0:
-            raise SpecError(f"inverted_index max_df must be >= 0, got {self.max_df!r}")
 
 
 @dataclass
@@ -977,21 +912,12 @@ class FuzzyPairsOperation(Operation):
 
     id_column: str = "doc_id"
     string_column: str = "text"
-    max_dist: int = 8
-    prefix_chars: int = 40
-    block_tokens: int = 2
-    len_band: int = 8
-    max_bucket: int = 500
+    max_dist: NonNegative[int] = 8
+    prefix_chars: Positive[int] = 40
+    block_tokens: Positive[int] = 2
+    len_band: Positive[int] = 8
+    max_bucket: Positive[int] = 500
     operation_type: str = "fuzzy_pairs"
-
-    def __post_init__(self) -> None:
-        if self.max_dist < 0:
-            raise SpecError(f"fuzzy_pairs max_dist must be >= 0, got {self.max_dist!r}")
-        for fld in ("prefix_chars", "block_tokens", "len_band", "max_bucket"):
-            if getattr(self, fld) <= 0:
-                raise SpecError(
-                    f"fuzzy_pairs {fld} must be positive, got {getattr(self, fld)!r}"
-                )
 
 
 @dataclass
@@ -1002,12 +928,8 @@ class TfidfOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    k: int = 3
+    k: Positive[int] = 3
     operation_type: str = "tfidf"
-
-    def __post_init__(self) -> None:
-        if self.k <= 0:
-            raise SpecError(f"tfidf k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -1017,12 +939,8 @@ class BigramLmOperation(Operation):
     exact-integer MLE conditional probability."""
 
     text_column: str = "text"
-    k: int = 50
+    k: Positive[int] = 50
     operation_type: str = "bigram_lm"
-
-    def __post_init__(self) -> None:
-        if self.k <= 0:
-            raise SpecError(f"bigram_lm k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -1034,12 +952,8 @@ class DocLmScoreOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    k: int = 500
+    k: Positive[int] = 500
     operation_type: str = "doc_lm_score"
-
-    def __post_init__(self) -> None:
-        if self.k <= 0:
-            raise SpecError(f"doc_lm_score k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -1050,14 +964,8 @@ class BpeTrainOperation(Operation):
     returning the learned merge table."""
 
     text_column: str = "text"
-    n_merges: int = 5
+    n_merges: Positive[int] = 5
     operation_type: str = "bpe_train"
-
-    def __post_init__(self) -> None:
-        if self.n_merges <= 0:
-            raise SpecError(
-                f"bpe_train n_merges must be positive, got {self.n_merges!r}"
-            )
 
 
 @dataclass
@@ -1071,7 +979,7 @@ class BpeEncodeOperation(Operation):
     merges: list[list[str]] = field(default_factory=list)
     operation_type: str = "bpe_encode"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         for m in self.merges:
             if len(m) != 2 or not all(isinstance(x, str) and x for x in m):
                 raise SpecError(
@@ -1087,12 +995,8 @@ class VocabOovOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    top_k: int = 1000
+    top_k: Positive[int] = 1000
     operation_type: str = "vocab_oov"
-
-    def __post_init__(self) -> None:
-        if self.top_k <= 0:
-            raise SpecError(f"vocab_oov top_k must be positive, got {self.top_k!r}")
 
 
 @dataclass
@@ -1101,30 +1005,22 @@ class ClusteringOperation(Operation):
     clustering.py).  mode ∈ assign (per-vector cluster + distance) /
     sample (cluster-balanced ``per_cluster`` quota draw)."""
 
-    mode: str = "assign"
+    mode: Literal["assign", "sample"] = "assign"
     id_column: str = "vec_id"
     vector_column: str = "embedding"
-    k: int = 8
-    iters: int = 2
+    k: Positive[int] = 8
+    iters: NonNegative[int] = 2
     per_cluster: int = 10
-    scale_bits: int = 20
+    # a negative value would surface later as a cryptic Python
+    # 'negative shift count' from 1 << scale_bits; a huge one
+    # silently overflows the quantized grid's usable int64 range
+    scale_bits: Annotated[int, Bound(0, 40)] = 20
     operation_type: str = "kmeans"
 
-    def __post_init__(self) -> None:
-        if self.mode not in ("assign", "sample"):
-            raise SpecError(f"kmeans mode must be assign/sample, got {self.mode!r}")
-        if self.k <= 0 or self.iters < 0:
-            raise SpecError("kmeans requires k > 0 and iters >= 0")
+    def check(self) -> None:
         if self.mode == "sample" and self.per_cluster <= 0:
             raise SpecError(
                 f"kmeans sample per_cluster must be positive, got {self.per_cluster!r}"
-            )
-        # a negative value would surface later as a cryptic Python
-        # 'negative shift count' from 1 << scale_bits; a huge one
-        # silently overflows the quantized grid's usable int64 range
-        if not 0 <= self.scale_bits <= 40:
-            raise SpecError(
-                f"kmeans scale_bits must be in [0, 40], got {self.scale_bits!r}"
             )
 
 
@@ -1146,17 +1042,13 @@ class HistogramOperation(Operation):
     value_histogram).  ``lo``/``hi`` omitted (None) derive from the
     column min/max."""
 
-    input_column: str = ""
-    bins: int = 20
+    input_column: Required[str] = ""
+    bins: Positive[int] = 20
     lo: float | None = None
     hi: float | None = None
     operation_type: str = "histogram"
 
-    def __post_init__(self) -> None:
-        if not self.input_column:
-            raise SpecError("histogram requires input_column")
-        if self.bins <= 0:
-            raise SpecError(f"histogram bins must be positive, got {self.bins!r}")
+    def check(self) -> None:
         if self.lo is not None and self.hi is not None and not self.hi > self.lo:
             raise SpecError(f"histogram needs hi > lo, got [{self.lo!r}, {self.hi!r}]")
 
@@ -1167,18 +1059,10 @@ class OutlierOperation(Operation):
     outlier_flags): adds zscore + is_outlier per row; ``group_columns``
     switches to per-stratum statistics."""
 
-    input_column: str = ""
-    z_threshold: float = 3.0
+    input_column: Required[str] = ""
+    z_threshold: Positive[float] = 3.0
     group_columns: list[str] = field(default_factory=list)
     operation_type: str = "outliers"
-
-    def __post_init__(self) -> None:
-        if not self.input_column:
-            raise SpecError("outliers requires input_column")
-        if self.z_threshold <= 0:
-            raise SpecError(
-                f"outliers z_threshold must be positive, got {self.z_threshold!r}"
-            )
 
 
 @dataclass
@@ -1188,21 +1072,15 @@ class SplitAssignOperation(Operation):
     from the md5-bucket of its key — stable as the dataset grows,
     identical on any engine or partitioning."""
 
-    key_column: str = ""
-    splits: dict[str, int] = field(default_factory=dict)
+    key_column: Required[str] = ""
+    splits: dict[str, Positive[int]] = field(default_factory=dict)
     output_column: str = "split"
     operation_type: str = "split_assign"
 
-    def __post_init__(self) -> None:
-        if not self.key_column:
-            raise SpecError("split_assign requires key_column")
+    def check(self) -> None:
         if self.splits and sum(self.splits.values()) != 100:
             raise SpecError(
                 f"split_assign percentages must total 100, got {self.splits!r}"
-            )
-        if self.splits and any(p <= 0 for p in self.splits.values()):
-            raise SpecError(
-                f"split_assign percentages must all be positive, got {self.splits!r}"
             )
 
 
@@ -1214,17 +1092,17 @@ class IncrementalDedupOperation(Operation):
     (add is_known / is_batch_dup flags) / filter (keep admissible
     rows)."""
 
-    corpus_path: str = ""
+    corpus_path: Required[str] = ""  # named input or file path
     corpus_schema_columns: dict[str, str] = field(default_factory=dict)
     id_column: str = "doc_id"
     text_column: str = "text"
-    mode: str = "annotate"
+    mode: GateMode = "annotate"
     # strategy='near' switches the match key from the exact normalized-
     # text fingerprint to banded MinHash near-duplication (functions/
     # incremental.py incremental_neardup) — catches paraphrased
     # re-crawls the fingerprint gate admits.  The knobs below are
     # ignored under strategy='exact'.
-    strategy: str = "exact"
+    strategy: MatchStrategy = "exact"
     jaccard_threshold: float = 0.5
     num_perm: int = 64
     bands: int = 16
@@ -1232,19 +1110,7 @@ class IncrementalDedupOperation(Operation):
     max_bucket: int = 1000
     operation_type: str = "incremental_dedup"
 
-    def __post_init__(self) -> None:
-        if not self.corpus_path:
-            raise SpecError(
-                "incremental_dedup requires corpus_path (named input or file path)"
-            )
-        if self.mode not in ("annotate", "filter"):
-            raise SpecError(
-                f"incremental_dedup mode must be annotate/filter, got {self.mode!r}"
-            )
-        if self.strategy not in ("exact", "near"):
-            raise SpecError(
-                f"incremental_dedup strategy must be exact/near, got {self.strategy!r}"
-            )
+    def check(self) -> None:
         if self.strategy == "near":
             if not 0.0 < self.jaccard_threshold <= 1.0:
                 raise SpecError(
@@ -1266,15 +1132,13 @@ class GlobalShuffleOperation(Operation):
     rank — reproducible from (key, seed) alone, independent of engine
     and partitioning."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     seed: int = 42
     shuffle_key_column: str = "shuffle_key"
     position_column: str = "position"
     operation_type: str = "global_shuffle"
 
-    def __post_init__(self) -> None:
-        if not self.key_column:
-            raise SpecError("global_shuffle requires key_column")
+    def check(self) -> None:
         if self.shuffle_key_column == self.position_column:
             raise SpecError(
                 "global_shuffle shuffle_key_column and position_column must differ"
@@ -1288,21 +1152,11 @@ class QuantileFilterOperation(Operation):
     at or above their group's q-quantile — a relative threshold that
     cannot wipe out an entire group."""
 
-    group_columns: list[str] = field(default_factory=list)
-    value_column: str = ""
-    q: float = 0.75
+    group_columns: Required[list[str]] = field(default_factory=list)
+    value_column: Required[str] = ""
+    q: Annotated[float, Bound(0, 1, lo_open=True, hi_open=True)] = 0.75
     threshold_column: str = ""
     operation_type: str = "quantile_filter"
-
-    def __post_init__(self) -> None:
-        if not self.group_columns:
-            raise SpecError("quantile_filter requires group_columns")
-        if not self.value_column:
-            raise SpecError("quantile_filter requires value_column")
-        if not 0.0 < self.q < 1.0:
-            raise SpecError(
-                f"quantile_filter q must be in (0, 1), got {self.q!r}"
-            )
 
 
 @dataclass
@@ -1314,13 +1168,9 @@ class TokenizeIdsOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    top_k: int = 1000
+    top_k: Positive[int] = 1000
     oov_id: int = 0
     operation_type: str = "tokenize_ids"
-
-    def __post_init__(self) -> None:
-        if self.top_k <= 0:
-            raise SpecError(f"tokenize_ids top_k must be positive, got {self.top_k!r}")
 
 
 @dataclass
@@ -1330,21 +1180,13 @@ class CurriculumOrderOperation(Operation):
     column (desc NULLS LAST by default; ascending for easy-to-hard),
     optional batch assignment."""
 
-    score_column: str = ""
+    score_column: Required[str] = ""
     id_column: str = "doc_id"
     ascending: bool = False
     position_column: str = "position"
-    batch_size: int = 0  # 0 = no batch column
+    batch_size: NonNegative[int] = 0  # 0 = no batch column
     batch_column: str = "batch_id"
     operation_type: str = "curriculum_order"
-
-    def __post_init__(self) -> None:
-        if not self.score_column:
-            raise SpecError("curriculum_order requires score_column")
-        if self.batch_size < 0:
-            raise SpecError(
-                f"curriculum_order batch_size must be >= 0, got {self.batch_size!r}"
-            )
 
 
 @dataclass
@@ -1356,34 +1198,19 @@ class StoreGateOperation(Operation):
     build_* function.  strategy ∈ exact (fingerprint store) / near
     (band store); mode ∈ annotate / filter."""
 
-    store_path: str = ""
+    store_path: Required[str] = ""
     id_column: str = "doc_id"
     text_column: str = "text"
-    strategy: str = "exact"
-    mode: str = "annotate"
-    shingle_size: int = 3
-    bands: int = 4
-    rows_per_band: int = 3
+    strategy: MatchStrategy = "exact"
+    mode: GateMode = "annotate"
+    # bands = 0 would silently admit EVERY document (no band rows →
+    # empty known set); rows_per_band = 0 dies with a bare
+    # IndexError inside the band fold — fail at parse time instead
+    shingle_size: AtLeastOne[int] = 3
+    bands: AtLeastOne[int] = 4
+    rows_per_band: AtLeastOne[int] = 3
     seed: int = 7
     operation_type: str = "store_gate"
-
-    def __post_init__(self) -> None:
-        if not self.store_path:
-            raise SpecError("store_gate requires store_path")
-        if self.strategy not in ("exact", "near"):
-            raise SpecError(
-                f"store_gate strategy must be exact/near, got {self.strategy!r}"
-            )
-        if self.mode not in ("annotate", "filter"):
-            raise SpecError(f"store_gate mode must be annotate/filter, got {self.mode!r}")
-        # bands = 0 would silently admit EVERY document (no band rows →
-        # empty known set); rows_per_band = 0 dies with a bare
-        # IndexError inside the band fold — fail at parse time instead
-        for fld in ("shingle_size", "bands", "rows_per_band"):
-            if getattr(self, fld) < 1:
-                raise SpecError(
-                    f"store_gate {fld} must be >= 1, got {getattr(self, fld)!r}"
-                )
 
 
 @dataclass
@@ -1395,7 +1222,7 @@ class GopherRulesOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    mode: str = "annotate"
+    mode: GateMode = "annotate"
     min_words: int = 5
     max_words: int = 100_000
     min_mean_word_len: float = 2.0
@@ -1404,22 +1231,14 @@ class GopherRulesOperation(Operation):
     max_bullet_ratio: float = 0.9
     max_ellipsis_ratio: float = 0.3
     min_alpha_ratio: float = 0.7
-    min_stop_hits: int = 2
+    min_stop_hits: NonNegative[int] = 2
     operation_type: str = "gopher_rules"
 
-    def __post_init__(self) -> None:
-        if self.mode not in ("annotate", "filter"):
-            raise SpecError(
-                f"gopher_rules mode must be annotate/filter, got {self.mode!r}"
-            )
+    def check(self) -> None:
         if self.min_words < 0 or self.max_words < self.min_words:
             raise SpecError(
                 "gopher_rules requires 0 <= min_words <= max_words, got "
                 f"{self.min_words!r}/{self.max_words!r}"
-            )
-        if self.min_stop_hits < 0:
-            raise SpecError(
-                f"gopher_rules min_stop_hits must be >= 0, got {self.min_stop_hits!r}"
             )
 
 
@@ -1433,20 +1252,10 @@ class LineDedupOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    max_docs: int = 1
+    max_docs: AtLeastOne[int] = 1
     group_column: str | None = None
-    min_df: int | None = None
+    min_df: AtLeastOne[int | None] = None
     operation_type: str = "line_dedup"
-
-    def __post_init__(self) -> None:
-        if self.max_docs < 1:
-            raise SpecError(
-                f"line_dedup max_docs must be >= 1, got {self.max_docs!r}"
-            )
-        if self.min_df is not None and self.min_df < 1:
-            raise SpecError(
-                f"line_dedup min_df must be >= 1 when set, got {self.min_df!r}"
-            )
 
 
 @dataclass
@@ -1471,21 +1280,13 @@ class ClassifierScoreOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    dim: int = 1024
+    dim: AtLeastOne[int] = 1024
     seed: int = 42
     bias: float = 0.0
     threshold: float = 0.0
-    mode: str = "annotate"
+    mode: GateMode = "annotate"
     weights_path: str | None = None
     operation_type: str = "classifier_score"
-
-    def __post_init__(self) -> None:
-        if self.mode not in ("annotate", "filter"):
-            raise SpecError(
-                f"classifier_score mode must be annotate|filter, got {self.mode!r}"
-            )
-        if self.dim < 1:
-            raise SpecError(f"classifier_score dim must be >= 1, got {self.dim!r}")
 
 
 @dataclass
@@ -1504,29 +1305,17 @@ class ClassifierTrainOperation(Operation):
 
     id_column: str = "doc_id"
     text_column: str = "text"
-    label_column: str = ""
-    dim: int = 256
-    iters: int = 8
+    label_column: Required[str] = ""  # +1/-1 or boolean
+    dim: AtLeastOne[int] = 256
+    iters: AtLeastOne[int] = 8
     lr_bits: int = 10
     bias: float = 0.0
     threshold: float = 0.0
-    mode: str = "annotate"
+    mode: GateMode = "annotate"
     save_path: str | None = None
     operation_type: str = "classifier_train"
 
-    def __post_init__(self) -> None:
-        if not self.label_column:
-            raise SpecError("classifier_train requires label_column (+1/-1)")
-        if self.mode not in ("annotate", "filter"):
-            raise SpecError(
-                f"classifier_train mode must be annotate|filter, got {self.mode!r}"
-            )
-        if self.dim < 1:
-            raise SpecError(f"classifier_train dim must be >= 1, got {self.dim!r}")
-        if self.iters < 1:
-            raise SpecError(
-                f"classifier_train iters must be >= 1, got {self.iters!r}"
-            )
+    def check(self) -> None:
         if not 0 <= self.lr_bits <= 40 or self.lr_bits + self.iters > 52:
             raise SpecError(
                 f"classifier_train needs lr_bits in [0, 40] and lr_bits + iters "
@@ -1564,22 +1353,12 @@ class DomainQuotaOperation(Operation):
     ascending — the RefinedWeb/C4 crawl-balance gate."""
 
     domain_column: str = "domain"
-    order_column: str = ""
-    n_per_domain: int = 100
-    tie_column: str = ""
+    # order and tie columns make the per-domain ranking deterministic
+    order_column: Required[str] = ""
+    n_per_domain: AtLeastOne[int] = 100
+    tie_column: Required[str] = ""
     ascending: bool = False
     operation_type: str = "domain_quota"
-
-    def __post_init__(self) -> None:
-        if not self.order_column or not self.tie_column:
-            raise SpecError(
-                "domain_quota requires order_column and tie_column "
-                "(deterministic per-domain ranking)"
-            )
-        if self.n_per_domain < 1:
-            raise SpecError(
-                f"domain_quota n_per_domain must be >= 1, got {self.n_per_domain!r}"
-            )
 
 
 @dataclass
@@ -1591,12 +1370,8 @@ class LmBucketsOperation(Operation):
     id_column: str = "doc_id"
     text_column: str = "text"
     lang_column: str = "lang"
-    k: int = 500
+    k: Positive[int] = 500
     operation_type: str = "lm_buckets"
-
-    def __post_init__(self) -> None:
-        if self.k <= 0:
-            raise SpecError(f"lm_buckets k must be positive, got {self.k!r}")
 
 
 @dataclass
@@ -1606,19 +1381,11 @@ class GapFillOperation(Operation):
     the dense per-key hourly grid (key, hour_idx, n_events, observed,
     filled_sum) — the resample-and-ffill stage of a metrics pipeline."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     ts_column: str = "ts"
     value_column: str = "value"
-    max_span_hours: int = 24 * 366
+    max_span_hours: AtLeastOne[int] = 24 * 366
     operation_type: str = "gap_fill"
-
-    def __post_init__(self) -> None:
-        if not self.key_column:
-            raise SpecError("gap_fill requires key_column")
-        if self.max_span_hours < 1:
-            raise SpecError(
-                f"gap_fill max_span_hours must be >= 1, got {self.max_span_hours!r}"
-            )
 
 
 @dataclass
@@ -1631,24 +1398,18 @@ class BloomGateOperation(Operation):
     mode ∈ annotate (append ``bloom_hit`` 1/0) / filter (drop hits —
     conservative: deterministic false positives drop too)."""
 
-    eval_path: str = ""
+    eval_path: Required[str] = ""  # input key or file path
     eval_schema_columns: dict[str, str] = field(default_factory=dict)
     text_column: str = "text"
     eval_text_column: str = ""
     m: int = 1 << 16
-    k: int = 3
-    mode: str = "annotate"
+    k: AtLeastOne[int] = 3
+    mode: GateMode = "annotate"
     operation_type: str = "bloom_gate"
 
-    def __post_init__(self) -> None:
-        if not self.eval_path:
-            raise SpecError("bloom_gate requires eval_path (input key or file path)")
+    def check(self) -> None:
         if self.m < 64 or self.m % 64:
             raise SpecError(f"bloom_gate m must be a positive multiple of 64, got {self.m!r}")
-        if self.k < 1:
-            raise SpecError(f"bloom_gate k must be >= 1, got {self.k!r}")
-        if self.mode not in ("annotate", "filter"):
-            raise SpecError(f"bloom_gate mode must be annotate|filter, got {self.mode!r}")
 
 
 @dataclass
@@ -1657,16 +1418,10 @@ class HllDistinctOperation(Operation):
     (functions/sketch.py): REPLACES the frame with one row per group
     (group_columns, n_buckets_used, hll_est)."""
 
-    key_column: str = ""
-    group_columns: list[str] = field(default_factory=list)
-    p: int = 8
+    key_column: Required[str] = ""
+    group_columns: Required[list[str]] = field(default_factory=list)
+    p: Annotated[int, Bound(4, 16)] = 8
     operation_type: str = "hll_distinct"
-
-    def __post_init__(self) -> None:
-        if not self.key_column or not self.group_columns:
-            raise SpecError("hll_distinct requires key_column and group_columns")
-        if not 4 <= self.p <= 16:
-            raise SpecError(f"hll_distinct p must be in [4, 16], got {self.p!r}")
 
 
 @dataclass
@@ -1677,23 +1432,15 @@ class QuantileSketchOperation(Operation):
     (optional) engages the map-side hash prefilter; it is a
     caller-asserted LOWER BOUND on every group's non-null row count."""
 
-    value_column: str = ""
-    id_column: str = ""
-    group_columns: list[str] = field(default_factory=list)
-    qs: list[float] = field(default_factory=lambda: [0.5])
-    k: int = 1024
+    value_column: Required[str] = ""
+    id_column: Required[str] = ""
+    group_columns: Required[list[str]] = field(default_factory=list)
+    qs: Required[list[float]] = field(default_factory=lambda: [0.5])
+    k: AtLeastOne[int] = 1024
     min_group_rows: int | None = None
     operation_type: str = "quantile_sketch"
 
-    def __post_init__(self) -> None:
-        if not self.value_column or not self.id_column or not self.group_columns:
-            raise SpecError(
-                "quantile_sketch requires value_column, id_column and group_columns"
-            )
-        if self.k < 1:
-            raise SpecError(f"quantile_sketch k must be >= 1, got {self.k!r}")
-        if not self.qs:
-            raise SpecError("quantile_sketch requires at least one quantile in qs")
+    def check(self) -> None:
         from .functions.quantile import _q_parts
 
         for q in self.qs:
@@ -1737,21 +1484,16 @@ class SqlTransformOperation(Operation):
     views: dict[str, str] = field(default_factory=dict)
     operation_type: str = "sql_transform"
 
-    def __post_init__(self) -> None:
+    def check(self) -> None:
         if not self.statement or not self.statement.strip():
             raise SpecError("sql_transform requires a statement")
-        if not isinstance(self.views, dict):
-            raise SpecError(
-                f"sql_transform views must map view names to input keys, "
-                f"got {self.views!r}"
-            )
         for vname, key in self.views.items():
             if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", str(vname)):
                 raise SpecError(
                     f"sql_transform views key must be a bare identifier, "
                     f"got {vname!r}"
                 )
-            if not key or not isinstance(key, str):
+            if not key:
                 raise SpecError(
                     f"sql_transform views[{vname!r}] must name an input key, "
                     f"got {key!r}"
@@ -1796,15 +1538,10 @@ class ExpectationsOperation(Operation):
       violating row (the strict-cast contract)."""
 
     rules: list[dict] = field(default_factory=list)
-    mode: str = "summary"
+    mode: Literal["summary", "annotate", "filter", "enforce"] = "summary"
     operation_type: str = "expectations"
 
-    def __post_init__(self) -> None:
-        if self.mode not in ("summary", "annotate", "filter", "enforce"):
-            raise SpecError(
-                f"expectations mode must be summary/annotate/filter/enforce, "
-                f"got {self.mode!r}"
-            )
+    def check(self) -> None:
         from .functions.expectations import AGG_CHECKS, validate_rules
 
         try:
@@ -1832,20 +1569,12 @@ class TimeWeightedAvgOperation(Operation):
     n_segments, total_ms, twa`` (each value held until the key's next
     observation; duration-weighted mean)."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     ts_column: str = "ts"
     value_column: str = "value"
-    id_column: str = ""
-    q_bits: int = 16
+    id_column: Required[str] = ""
+    q_bits: Annotated[int, Bound(0, 30)] = 16
     operation_type: str = "time_weighted_avg"
-
-    def __post_init__(self) -> None:
-        if not self.key_column or not self.id_column:
-            raise SpecError("time_weighted_avg requires key_column and id_column")
-        if not 0 <= self.q_bits <= 30:
-            raise SpecError(
-                f"time_weighted_avg q_bits must be in [0, 30], got {self.q_bits!r}"
-            )
 
 
 @dataclass
@@ -1857,31 +1586,13 @@ class RollupOperation(Operation):
     (3600 = hour); ``coarsen_factor`` re-buckets the built partials by
     FLOOR(bucket/factor) before serving (hour partials → day serve)."""
 
-    ts_column: str = ""
-    value_column: str = ""
-    group_columns: list[str] = field(default_factory=list)
-    grain: int = 3600
-    coarsen_factor: int | None = None
-    q_bits: int = 20
+    ts_column: Required[str] = ""
+    value_column: Required[str] = ""
+    group_columns: Required[list[str]] = field(default_factory=list)
+    grain: AtLeastOne[int] = 3600
+    coarsen_factor: AtLeastOne[int | None] = None
+    q_bits: Annotated[int, Bound(0, 40)] = 20
     operation_type: str = "rollup_aggregate"
-
-    def __post_init__(self) -> None:
-        if not self.ts_column or not self.value_column or not self.group_columns:
-            raise SpecError(
-                "rollup_aggregate requires ts_column, value_column and "
-                "group_columns"
-            )
-        if self.grain < 1:
-            raise SpecError(f"rollup_aggregate grain must be >= 1, got {self.grain!r}")
-        if self.coarsen_factor is not None and self.coarsen_factor < 1:
-            raise SpecError(
-                f"rollup_aggregate coarsen_factor must be >= 1, got "
-                f"{self.coarsen_factor!r}"
-            )
-        if not 0 <= self.q_bits <= 40:
-            raise SpecError(
-                f"rollup_aggregate q_bits must be in [0, 40], got {self.q_bits!r}"
-            )
 
 
 @dataclass
@@ -1891,25 +1602,14 @@ class HeavyHittersOperation(Operation):
     one row per group whose row count reaches ``threshold`` —
     ``group_columns..., <count_column>``."""
 
-    group_columns: list[str] = field(default_factory=list)
-    threshold: int = 0
-    w: int = 256
-    d: int = 3
+    group_columns: Required[list[str]] = field(default_factory=list)
+    threshold: AtLeastOne[int] = 0
+    w: Annotated[int, Bound(2)] = 256
+    d: AtLeastOne[int] = 3
     count_column: str = "cnt"
     operation_type: str = "heavy_hitters"
 
-    def __post_init__(self) -> None:
-        if not self.group_columns:
-            raise SpecError("heavy_hitters requires group_columns")
-        if self.threshold < 1:
-            raise SpecError(
-                f"heavy_hitters threshold must be >= 1, got {self.threshold!r}"
-            )
-        if self.w < 2 or self.d < 1:
-            raise SpecError(
-                f"heavy_hitters needs w >= 2 and d >= 1, got w={self.w!r} "
-                f"d={self.d!r}"
-            )
+    def check(self) -> None:
         if self.w * self.d > 8192:
             raise SpecError(
                 f"heavy_hitters w*d must be <= 8192 (plan-literal table), got "
@@ -1925,16 +1625,12 @@ class ClassifierEvalOperation(Operation):
     column) with one row per candidate threshold — confusion counts
     plus accuracy/precision/recall/F1."""
 
-    label_column: str = ""
+    label_column: Required[str] = ""
     score_column: str = "score"
-    thresholds: list[float] = field(default_factory=lambda: [0.0])
+    thresholds: Required[list[float]] = field(default_factory=lambda: [0.0])
     operation_type: str = "classifier_eval"
 
-    def __post_init__(self) -> None:
-        if not self.label_column:
-            raise SpecError("classifier_eval requires label_column")
-        if not self.thresholds:
-            raise SpecError("classifier_eval requires at least one threshold")
+    def check(self) -> None:
         if len(set(self.thresholds)) != len(self.thresholds):
             raise SpecError(
                 f"classifier_eval thresholds must be distinct: {self.thresholds!r}"
@@ -1949,21 +1645,15 @@ class CmsCountsOperation(Operation):
     a named input key or file path, like bind's right side.  An empty
     probe_path probes the frame's own distinct keys."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     probe_path: str = ""
     probe_schema_columns: dict[str, str] = field(default_factory=dict)
     probe_key_column: str = ""
-    w: int = 1024
-    d: int = 3
+    w: Annotated[int, Bound(2)] = 1024
+    d: AtLeastOne[int] = 3
     operation_type: str = "cms_counts"
 
-    def __post_init__(self) -> None:
-        if not self.key_column:
-            raise SpecError("cms_counts requires key_column")
-        if self.w < 2 or self.d < 1:
-            raise SpecError(
-                f"cms_counts needs w >= 2 and d >= 1, got w={self.w!r} d={self.d!r}"
-            )
+    def check(self) -> None:
         if not self.probe_path and (self.probe_key_column or self.probe_schema_columns):
             raise SpecError(
                 "cms_counts: probe_key_column/probe_schema_columns are only "
@@ -1979,19 +1669,11 @@ class OhlcOperation(Operation):
     row per (key, time bucket) — ``key, bucket, open, high, low,
     close, n_obs``."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     ts_column: str = "ts"
     value_column: str = "value"
-    bucket_seconds: int = 3600
+    bucket_seconds: AtLeastOne[int] = 3600
     operation_type: str = "ohlc"
-
-    def __post_init__(self) -> None:
-        if not self.key_column:
-            raise SpecError("ohlc requires key_column")
-        if self.bucket_seconds < 1:
-            raise SpecError(
-                f"ohlc bucket_seconds must be >= 1, got {self.bucket_seconds!r}"
-            )
 
 
 @dataclass
@@ -2000,25 +1682,21 @@ class EwmaOperation(Operation):
     (functions/timeseries.py ewma_smooth): REPLACES the frame with
     ``key, <id_column>, value, ewma`` ordered (key, ts, id)."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     ts_column: str = "ts"
-    id_column: str = ""
+    id_column: Required[str] = ""
     value_column: str = "value"
     alpha_num: int = 1
     alpha_den: int = 4
-    lookback: int = 64
+    lookback: AtLeastOne[int] = 64
     operation_type: str = "ewma"
 
-    def __post_init__(self) -> None:
-        if not self.key_column or not self.id_column:
-            raise SpecError("ewma requires key_column and id_column")
+    def check(self) -> None:
         if not (0 < self.alpha_num < self.alpha_den):
             raise SpecError(
                 f"ewma needs 0 < alpha_num < alpha_den, got "
                 f"{self.alpha_num!r}/{self.alpha_den!r}"
             )
-        if self.lookback < 1:
-            raise SpecError(f"ewma lookback must be >= 1, got {self.lookback!r}")
 
 
 @dataclass
@@ -2027,20 +1705,12 @@ class RollingMedianOperation(Operation):
     (functions/timeseries.py rolling_median): REPLACES the frame with
     ``key, <id_column>, value, med`` ordered (key, ts, id)."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     ts_column: str = "ts"
-    id_column: str = ""
+    id_column: Required[str] = ""
     value_column: str = "value"
-    window_rows: int = 5
+    window_rows: AtLeastOne[int] = 5
     operation_type: str = "rolling_median"
-
-    def __post_init__(self) -> None:
-        if not self.key_column or not self.id_column:
-            raise SpecError("rolling_median requires key_column and id_column")
-        if self.window_rows < 1:
-            raise SpecError(
-                f"rolling_median window_rows must be >= 1, got {self.window_rows!r}"
-            )
 
 
 @dataclass
@@ -2050,13 +1720,9 @@ class ChangepointOperation(Operation):
     with one row per key — ``key, change_day, cusum_scaled, strength,
     n_days, total``."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     ts_column: str = "ts"
     operation_type: str = "changepoint"
-
-    def __post_init__(self) -> None:
-        if not self.key_column:
-            raise SpecError("changepoint requires key_column")
 
 
 @dataclass
@@ -2066,20 +1732,11 @@ class AssociationRulesOperation(Operation):
     ``antecedent, consequent, n_pair, n_ante, n_cons, support,
     confidence, lift``."""
 
-    basket_column: str = ""
-    item_column: str = ""
-    min_count: int = 2
-    k: int = 100
+    basket_column: Required[str] = ""
+    item_column: Required[str] = ""
+    min_count: AtLeastOne[int] = 2
+    k: AtLeastOne[int] = 100
     operation_type: str = "association_rules"
-
-    def __post_init__(self) -> None:
-        if not self.basket_column or not self.item_column:
-            raise SpecError("association_rules requires basket_column and item_column")
-        if self.k < 1 or self.min_count < 1:
-            raise SpecError(
-                f"association_rules needs k >= 1 and min_count >= 1, got "
-                f"{self.k!r}/{self.min_count!r}"
-            )
 
 
 @dataclass
@@ -2088,17 +1745,11 @@ class MarkovOperation(Operation):
     (functions/mining.py markov_transitions): REPLACES the frame with
     ``src, dst, n_trans, n_src, prob``."""
 
-    seq_column: str = ""
+    seq_column: Required[str] = ""
     order_column: str = "ts"
-    tiebreak_column: str = ""
-    state_column: str = ""
+    tiebreak_column: Required[str] = ""
+    state_column: Required[str] = ""
     operation_type: str = "markov"
-
-    def __post_init__(self) -> None:
-        if not self.seq_column or not self.tiebreak_column or not self.state_column:
-            raise SpecError(
-                "markov requires seq_column, tiebreak_column and state_column"
-            )
 
 
 @dataclass
@@ -2109,19 +1760,11 @@ class SkylineOperation(Operation):
     column (the unit-step RANGE frame — skyline2d refuses fractional
     x loudly); y carries no frame and may be any orderable type."""
 
-    id_column: str = ""
-    x_column: str = ""
-    y_column: str = ""
-    prune_buckets: int = 32
+    id_column: Required[str] = ""
+    x_column: Required[str] = ""
+    y_column: Required[str] = ""
+    prune_buckets: AtLeastOne[int] = 32
     operation_type: str = "skyline"
-
-    def __post_init__(self) -> None:
-        if not self.id_column or not self.x_column or not self.y_column:
-            raise SpecError("skyline requires id_column, x_column and y_column")
-        if self.prune_buckets < 1:
-            raise SpecError(
-                f"skyline prune_buckets must be >= 1, got {self.prune_buckets!r}"
-            )
 
 
 @dataclass
@@ -2131,15 +1774,9 @@ class KAnonymityOperation(Operation):
     combinations whose group size is below ``k`` (quasi columns +
     ``group_size``) — the cells a privacy release must suppress."""
 
-    quasi_columns: list[str] = field(default_factory=list)
-    k: int = 0
+    quasi_columns: Required[list[str]] = field(default_factory=list)
+    k: AtLeastOne[int] = 0
     operation_type: str = "k_anonymity"
-
-    def __post_init__(self) -> None:
-        if not self.quasi_columns:
-            raise SpecError("k_anonymity requires quasi_columns")
-        if self.k < 1:
-            raise SpecError(f"k_anonymity k must be >= 1, got {self.k!r}")
 
 
 @dataclass
@@ -2150,12 +1787,8 @@ class BenfordOperation(Operation):
     must be INTEGER-valued (cast monetary doubles to exact cents
     upstream with arithmetic + casting ops)."""
 
-    input_column: str = ""
+    input_column: Required[str] = ""
     operation_type: str = "benford"
-
-    def __post_init__(self) -> None:
-        if not self.input_column:
-            raise SpecError("benford requires input_column")
 
 
 @dataclass
@@ -2176,35 +1809,21 @@ class MediaFeaturesOperation(Operation):
     undecodable NON-EMPTY payload instead of emitting the zero vector
     — the trusted-format-corpus setting."""
 
-    modality: str = "image"
-    payload_column: str = "payload"
-    id_column: str = "media_id"
-    mime_column: str = "mime"
-    dim: int = 16
-    decoder: str = "fake"
+    modality: Literal["image", "audio"] = "image"
+    payload_column: Required[str] = "payload"
+    id_column: Required[str] = "media_id"
+    mime_column: Required[str] = "mime"
+    dim: AtLeastOne[int] = 16
+    decoder: Literal["fake", "real"] = "fake"
     strict: bool = False
     operation_type: str = "media_features"
 
-    def __post_init__(self) -> None:
-        if self.modality not in ("image", "audio"):
-            raise SpecError(
-                f"media_features modality must be image/audio, got {self.modality!r}"
-            )
-        if self.decoder not in ("fake", "real"):
-            raise SpecError(
-                f"media_features decoder must be fake/real, got {self.decoder!r}"
-            )
-        if not isinstance(self.dim, int) or self.dim < 1:
-            raise SpecError(f"media_features dim must be a positive int, got {self.dim!r}")
+    def check(self) -> None:
         if self.strict and self.decoder != "real":
             raise SpecError(
                 "media_features strict=true requires decoder='real' (the fake "
                 "byte-histogram path never decodes, so it cannot detect "
                 "undecodable payloads)"
-            )
-        if not self.payload_column or not self.id_column or not self.mime_column:
-            raise SpecError(
-                "media_features requires payload_column, id_column, mime_column"
             )
 
 
@@ -2221,40 +1840,26 @@ class AnnStoreBuildOperation(Operation):
     Rebuilding from the same corpus reproduces the same index
     bit-for-bit (hash-sampled integer Lloyd's)."""
 
-    store_path: str = ""
-    id_column: str = "vec_id"
-    vector_column: str = "embedding"
-    kind: str = "ivf"
-    n_centroids: int = 16
-    iters: int = 2
-    sample_size: int = 2048
-    scale_bits: int = 20
+    store_path: Required[str] = ""
+    id_column: Required[str] = "vec_id"
+    vector_column: Required[str] = "embedding"
+    kind: Literal["ivf", "pq"] = "ivf"
+    n_centroids: AtLeastOne[int] = 16
+    iters: AtLeastOne[int] = 2
+    sample_size: AtLeastOne[int] = 2048
+    scale_bits: AtLeastOne[int] = 20
     m: int = 8
     k_codes: int = 16
     operation_type: str = "ann_store_build"
 
-    def __post_init__(self) -> None:
-        if not self.store_path:
-            raise SpecError("ann_store_build requires store_path")
-        if self.kind not in ("ivf", "pq"):
-            raise SpecError(
-                f"ann_store_build kind must be ivf/pq, got {self.kind!r}"
-            )
-        if not self.id_column or not self.vector_column:
-            raise SpecError("ann_store_build requires id_column and vector_column")
-        for fld in ("n_centroids", "iters", "sample_size", "scale_bits"):
-            if not isinstance(getattr(self, fld), int) or getattr(self, fld) < 1:
-                raise SpecError(
-                    f"ann_store_build {fld} must be a positive int, "
-                    f"got {getattr(self, fld)!r}"
-                )
+    def check(self) -> None:
         if self.kind == "pq":
             # m=0 would divide the vector into no subspaces (ZeroDivision
             # deep in the codebook fit); k_codes<2 fits a degenerate
             # single-word codebook that quantizes everything to one point
-            if not isinstance(self.m, int) or self.m < 1:
+            if self.m < 1:
                 raise SpecError(f"ann_store_build m must be >= 1, got {self.m!r}")
-            if not isinstance(self.k_codes, int) or self.k_codes < 2:
+            if self.k_codes < 2:
                 raise SpecError(
                     f"ann_store_build k_codes must be >= 2, got {self.k_codes!r}"
                 )
@@ -2273,16 +1878,10 @@ class AnnStoreAppendOperation(Operation):
     frame with the store manifest ``(cid, n_vectors)`` AFTER the
     append — the same read-back shape as ann_store_build."""
 
-    store_path: str = ""
-    id_column: str = "vec_id"
-    vector_column: str = "embedding"
+    store_path: Required[str] = ""
+    id_column: Required[str] = "vec_id"
+    vector_column: Required[str] = "embedding"
     operation_type: str = "ann_store_append"
-
-    def __post_init__(self) -> None:
-        if not self.store_path:
-            raise SpecError("ann_store_append requires store_path")
-        if not self.id_column or not self.vector_column:
-            raise SpecError("ann_store_append requires id_column and vector_column")
 
 
 @dataclass
@@ -2297,26 +1896,14 @@ class AnnStoreQueryOperation(Operation):
     emitted neighbor, self-matches excluded.  ``refine_factor`` only
     applies to PQ stores (exact re-rank width)."""
 
-    store_path: str = ""
-    id_column: str = "vec_id"
-    vector_column: str = "embedding"
-    k: int = 10
-    nprobe: int = 4
-    refine_factor: int = 4
-    scale_bits: int = 20
+    store_path: Required[str] = ""
+    id_column: Required[str] = "vec_id"
+    vector_column: Required[str] = "embedding"
+    k: AtLeastOne[int] = 10
+    nprobe: AtLeastOne[int] = 4
+    refine_factor: AtLeastOne[int] = 4
+    scale_bits: AtLeastOne[int] = 20
     operation_type: str = "ann_store_query"
-
-    def __post_init__(self) -> None:
-        if not self.store_path:
-            raise SpecError("ann_store_query requires store_path")
-        if not self.id_column or not self.vector_column:
-            raise SpecError("ann_store_query requires id_column and vector_column")
-        for fld in ("k", "nprobe", "refine_factor", "scale_bits"):
-            if not isinstance(getattr(self, fld), int) or getattr(self, fld) < 1:
-                raise SpecError(
-                    f"ann_store_query {fld} must be a positive int, "
-                    f"got {getattr(self, fld)!r}"
-                )
 
 
 @dataclass
@@ -2327,16 +1914,14 @@ class FkCheckOperation(Operation):
     frame with the 1-row audit (``relationship, child_rows, null_keys,
     orphan_rows, orphan_keys``)."""
 
-    child_key: str = ""
-    parent_path: str = ""
-    parent_key: str = ""
+    child_key: Required[str] = ""
+    parent_path: Required[str] = ""
+    parent_key: Required[str] = ""
     parent_schema_columns: dict[str, str] = field(default_factory=dict)
     name: str = ""
     operation_type: str = "fk_check"
 
-    def __post_init__(self) -> None:
-        if not self.child_key or not self.parent_path or not self.parent_key:
-            raise SpecError("fk_check requires child_key, parent_path and parent_key")
+    def check(self) -> None:
         if not self.name:
             self.name = f"{self.child_key}->{self.parent_key}"
 
@@ -2348,14 +1933,10 @@ class SeasonalBaselineOperation(Operation):
     with one row per (key, dow): ``key, dow, n_events, mean_value,
     lift``."""
 
-    key_column: str = ""
+    key_column: Required[str] = ""
     ts_column: str = "ts"
     value_column: str = "value"
     operation_type: str = "seasonal_baseline"
-
-    def __post_init__(self) -> None:
-        if not self.key_column:
-            raise SpecError("seasonal_baseline requires key_column")
 
 
 @dataclass
@@ -2365,12 +1946,8 @@ class AutocorrOperation(Operation):
     one row per lag 1..max_lag: ``lag, n_pairs, autocorr``."""
 
     ts_column: str = "ts"
-    max_lag: int = 7
+    max_lag: AtLeastOne[int] = 7
     operation_type: str = "autocorr"
-
-    def __post_init__(self) -> None:
-        if self.max_lag < 1:
-            raise SpecError(f"autocorr max_lag must be >= 1, got {self.max_lag!r}")
 
 
 @dataclass
@@ -2379,13 +1956,9 @@ class ItemSimilarityOperation(Operation):
     item_similarity): REPLACES the frame with one row per co-occurring
     item pair: ``item_a, item_b, users_both, cosine``."""
 
-    user_column: str = ""
-    item_column: str = ""
+    user_column: Required[str] = ""
+    item_column: Required[str] = ""
     operation_type: str = "item_similarity"
-
-    def __post_init__(self) -> None:
-        if not self.user_column or not self.item_column:
-            raise SpecError("item_similarity requires user_column and item_column")
 
 
 @dataclass
@@ -2395,16 +1968,10 @@ class LinkPredictionOperation(Operation):
     top-k item pairs by Jaccard of their group sets: ``item_a, item_b,
     co_groups, jaccard``."""
 
-    group_column: str = ""
-    item_column: str = ""
-    k: int = 100
+    group_column: Required[str] = ""
+    item_column: Required[str] = ""
+    k: AtLeastOne[int] = 100
     operation_type: str = "link_prediction"
-
-    def __post_init__(self) -> None:
-        if not self.group_column or not self.item_column:
-            raise SpecError("link_prediction requires group_column and item_column")
-        if self.k < 1:
-            raise SpecError(f"link_prediction k must be >= 1, got {self.k!r}")
 
 
 @dataclass
@@ -2413,15 +1980,13 @@ class AbTestOperation(Operation):
     welch_z_test): REPLACES the frame with the 1-row readout
     ``n_a, mean_a, var_a, n_b, mean_b, var_b, z_score``."""
 
-    cohort_column: str = ""
-    cohort_a: str = ""
-    cohort_b: str = ""
+    cohort_column: Required[str] = ""
+    cohort_a: Required[str] = ""
+    cohort_b: Required[str] = ""
     value_column: str = "value"
     operation_type: str = "ab_test"
 
-    def __post_init__(self) -> None:
-        if not self.cohort_column or not self.cohort_a or not self.cohort_b:
-            raise SpecError("ab_test requires cohort_column, cohort_a and cohort_b")
+    def check(self) -> None:
         if self.cohort_a == self.cohort_b:
             raise SpecError("ab_test cohorts must differ")
 
@@ -2432,15 +1997,13 @@ class KsTestOperation(Operation):
     (functions/stats.py ks_two_sample): REPLACES the frame with the
     1-row readout ``n_a, n_b, ks_d, ks_stat``."""
 
-    cohort_column: str = ""
-    cohort_a: str = ""
-    cohort_b: str = ""
+    cohort_column: Required[str] = ""
+    cohort_a: Required[str] = ""
+    cohort_b: Required[str] = ""
     value_column: str = "value"
     operation_type: str = "ks_test"
 
-    def __post_init__(self) -> None:
-        if not self.cohort_column or not self.cohort_a or not self.cohort_b:
-            raise SpecError("ks_test requires cohort_column, cohort_a and cohort_b")
+    def check(self) -> None:
         if self.cohort_a == self.cohort_b:
             raise SpecError("ks_test cohorts must differ")
 
@@ -2461,15 +2024,20 @@ OPERATION_TYPES: dict[str, type[Operation]] = _operation_types()
 
 @functools.cache
 def _field_types(cls: type[Operation]) -> dict[str, Any]:
-    return typing.get_type_hints(cls)
+    return typing.get_type_hints(cls, include_extras=True)
 
 
 def _conforms(value: Any, tp: Any) -> bool:
-    """Does a parsed YAML value fit a spec field annotation?  An int
-    fits ``float``; a bool fits neither ``int`` nor ``float``."""
+    """Does a value fit a spec field annotation's type?  An int fits
+    ``float``; a bool fits neither ``int`` nor ``float``; a ``Literal``
+    takes its values' type (membership is a bound, see ``_breach``)."""
     if tp is Any:
         return True
     origin, args = typing.get_origin(tp), typing.get_args(tp)
+    if origin is Annotated:
+        return _conforms(value, args[0])
+    if origin is Literal:
+        return isinstance(value, type(args[0]))
     if origin is types.UnionType:
         return any(_conforms(value, t) for t in args)
     if origin is list:
@@ -2481,6 +2049,43 @@ def _conforms(value: Any, tp: Any) -> bool:
     if tp in (int, float):
         return isinstance(value, (int, tp)) and not isinstance(value, bool)
     return isinstance(value, tp)
+
+
+def _breach(op: str, name: str, value: Any, tp: Any) -> str | None:
+    """The message for the first declared bound a well-typed value
+    breaks, or None."""
+    origin, args = typing.get_origin(tp), typing.get_args(tp)
+    if origin is Annotated:
+        for mark in tp.__metadata__:
+            breach = mark.breach(op, name, value)
+            if breach:
+                return breach
+        return _breach(op, name, value, args[0])
+    if origin is Literal and value not in args:
+        return f"{op} {name} must be one of {', '.join(map(repr, args))}, got {value!r}"
+    if origin in (list, dict):
+        for item in value.values() if origin is dict else value:
+            breach = _breach(op, name, item, args[-1])
+            if breach:
+                return breach
+    return None
+
+
+def _type_name(tp: Any) -> str:
+    """An annotation as a message names it: markers dropped, a
+    ``Literal`` named by its values' type."""
+    origin, args = typing.get_origin(tp), typing.get_args(tp)
+    if origin is Annotated:
+        return _type_name(args[0])
+    if origin is Literal:
+        return type(args[0]).__name__
+    if origin is types.UnionType:
+        return " | ".join(map(_type_name, args))
+    if origin in (list, dict):
+        return f"{origin.__name__}[{', '.join(map(_type_name, args))}]"
+    if tp is type(None):
+        return "None"
+    return tp.__name__ if isinstance(tp, type) else str(tp).replace("typing.", "")
 
 
 def parse_operation(raw: dict[str, Any]) -> Operation:
@@ -2508,14 +2113,6 @@ def parse_operation(raw: dict[str, Any]) -> Operation:
             f"Unknown field(s) {unknown} for operation_type {op_type!r}. "
             f"Valid fields: {sorted(set(hints) - {'operation_type'})}"
         )
-    for name, value in raw.items():
-        tp = hints[name]
-        if not _conforms(value, tp):
-            expected = tp.__name__ if isinstance(tp, type) else str(tp).replace("typing.", "")
-            raise SpecError(
-                f"Invalid spec for {op_type}: field {name!r} expects {expected}, "
-                f"got {value!r} ({type(value).__name__})"
-            )
     try:
         return cls(**raw)
     except TypeError as exc:

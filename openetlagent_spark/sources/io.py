@@ -20,7 +20,7 @@ from __future__ import annotations
 import logging
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -306,24 +306,24 @@ def save_data(
         out = df.select(
             *[c for c in out.columns if c not in partition_by], *partition_by
         )
+    if fd.format not in ("csv", "parquet", "orc", "json"):
+        raise NotImplementedError(f"Unsupported output format: {fd.format}")
+    if fd.format == "json" and json_array:
+        _write_json_array(out, fd.path)
+        return
     writer_df = out.coalesce(1) if single_file and not partition_by else out
     writer = writer_df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
+    _save(writer, fd.format, fd.path)
 
-    if fd.format == "csv":
-        writer.option("header", True).csv(fd.path)
-    elif fd.format == "parquet":
-        writer.parquet(fd.path)
-    elif fd.format == "orc":
-        writer.orc(fd.path)
-    elif fd.format == "json":
-        if json_array:
-            _write_json_array(out, fd.path)
-        else:
-            writer.json(fd.path)
-    else:
-        raise NotImplementedError(f"Unsupported output format: {fd.format}")
+
+def _save(writer: DataFrameWriter, fmt: str, path: str) -> None:
+    """The sinks' one write form: ``format(fmt)``, plus a header row
+    for CSV."""
+    if fmt == "csv":
+        writer = writer.option("header", True)
+    writer.format(fmt).save(path)
 
 
 def write_compacted(
@@ -344,21 +344,14 @@ def write_compacted(
     partition columns additionally co-locates each hive partition's
     rows into whole files instead of every task writing a sliver of
     every partition."""
+    if fmt not in ("parquet", "orc", "json", "csv"):
+        raise NotImplementedError(f"Unsupported compacted output format: {fmt}")
     cols = [F.col(c) for c in (partition_by or [])]
     out = df.hint("rebalance", *cols) if cols else df.hint("rebalance")
     writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if fmt == "parquet":
-        writer.parquet(path)
-    elif fmt == "orc":
-        writer.orc(path)
-    elif fmt == "json":
-        writer.json(path)
-    elif fmt == "csv":
-        writer.option("header", True).csv(path)
-    else:
-        raise NotImplementedError(f"Unsupported compacted output format: {fmt}")
+    _save(writer, fmt, path)
 
 
 def write_sorted(
@@ -386,20 +379,15 @@ def write_sorted(
     Evidence: tests/test_sorted_layout.py reads the written footers
     with pyarrow and asserts disjoint per-file ranges and >80 %
     row-group skip for a narrow predicate vs an unsorted write."""
+    if fmt not in ("parquet", "orc"):
+        raise NotImplementedError(f"Unsupported sorted output format: {fmt}")
     cols = [F.col(c) for c in sort_cols]
     out = (
         df.repartitionByRange(num_files, *cols)
         if num_files
         else df.repartitionByRange(*cols)
     )
-    out = out.sortWithinPartitions(*cols)
-    writer = out.write.mode("overwrite")
-    if fmt == "parquet":
-        writer.parquet(path)
-    elif fmt == "orc":
-        writer.orc(path)
-    else:
-        raise NotImplementedError(f"Unsupported sorted output format: {fmt}")
+    _save(out.sortWithinPartitions(*cols).write.mode("overwrite"), fmt, path)
 
 
 def write_zorder(
@@ -431,6 +419,8 @@ def write_zorder(
     file footer ranges are bounded in both dimensions and quantifies
     row-group skipping vs a hash layout for single-column and 2-D box
     predicates."""
+    if fmt not in ("parquet", "orc"):
+        raise NotImplementedError(f"Unsupported zorder output format: {fmt}")
     if not (1 <= bits <= 10):
         raise ValueError(f"zorder bits must be in [1, 10], got {bits}")
     ncols = len(zorder_cols)
@@ -506,13 +496,7 @@ def write_zorder(
         else tagged.repartitionByRange("_x_zorder")
     )
     out = out.sortWithinPartitions("_x_zorder").drop("_x_zorder")
-    writer = out.write.mode("overwrite")
-    if fmt == "parquet":
-        writer.parquet(path)
-    elif fmt == "orc":
-        writer.orc(path)
-    else:
-        raise NotImplementedError(f"Unsupported zorder output format: {fmt}")
+    _save(out.write.mode("overwrite"), fmt, path)
 
 
 def write_bucketed(
@@ -638,15 +622,9 @@ def write_sized(
     if fmt not in ("parquet", "orc", "json", "csv"):
         raise NotImplementedError(f"Unsupported sized output format: {fmt}")
 
-    def _write(frame: DataFrame, dest: str) -> None:
-        writer = frame.write.mode("overwrite")
-        if fmt == "csv":
-            writer = writer.option("header", True)  # match write_compacted
-        writer.format(fmt).save(dest)
-
     total = df.count()
     if total == 0:
-        _write(df, path)
+        _save(df.write.mode("overwrite"), fmt, path)
         return 0
     if representative:
         frac = min(1.0, sample_rows / total)
@@ -664,7 +642,7 @@ def write_sized(
     jpath = jvm.org.apache.hadoop.fs.Path(scratch)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     try:
-        _write(probe.coalesce(1), scratch)
+        _save(probe.coalesce(1).write.mode("overwrite"), fmt, scratch)
         probe_bytes = sum(
             st.getLen()
             for st in fs.listStatus(jpath)
@@ -680,5 +658,5 @@ def write_sized(
     bytes_per_row = probe_bytes / n_probe
     rows_per_file = max(int((target_mb * 1024 * 1024) / bytes_per_row), 1)
     n_files = max(math.ceil(total / rows_per_file), 1)
-    _write(df.repartition(n_files), path)
+    _save(df.repartition(n_files).write.mode("overwrite"), fmt, path)
     return n_files

@@ -20,16 +20,27 @@ Two comparison modes:
   type-insensitive comparison.  Useful when debugging value drift
   without type noise.
 
+``--where "<pred>"`` compares a DETERMINISTIC SLICE of each result, for
+queries whose full output exceeds what one driver can collect (the sf10
+regime: quantile_bins emits 60M rows, ewma 100M).  The same predicate,
+a ``WHERE`` clause over the query's OUTPUT columns, filters the Spark
+result and the DuckDB oracle, and the surviving rows go through the
+same compare.  A slice match is the full compare restricted to the
+slice: rows outside it are unchecked.
+
 Usage:
 
     python scripts/check_oracle.py            # all queries, exact mode
     python scripts/check_oracle.py q1 q2      # subset
     python scripts/check_oracle.py --loose    # legacy comparison
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python scripts/check_oracle.py
+    SPARK_GRAFT_SF_DIR=.scaledata/sf10 \
+    python scripts/check_oracle.py quantile_bins --where "l_orderkey % 199 = 0"
 """
 
 from __future__ import annotations
 
+import argparse
 import datetime
 import decimal
 import math
@@ -135,17 +146,23 @@ def pdf_to_multiset(pdf: pd.DataFrame, norm) -> list[str]:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    args = [a for a in sys.argv[1:]]
-    loose = "--loose" in args
-    only = {a for a in args if not a.startswith("--")}
+    ap = argparse.ArgumentParser(description="Compare each query with its DuckDB oracle.")
+    ap.add_argument("queries", nargs="*", help="query names (default: all)")
+    ap.add_argument("--loose", action="store_true", help="6-digit, type-insensitive compare")
+    ap.add_argument("--where", metavar="PRED", help="compare only output rows matching PRED")
+    args = ap.parse_args()
+    loose, only, where = args.loose, set(args.queries), args.where
     norm = normalize_loose if loose else normalize_exact
+    label = f" [where {where}]" if where else ""
 
+    qs = entry_mod.queries()
+    if only - set(qs):
+        ap.error(f"unknown queries: {sorted(only - set(qs))}")
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = 0
     oracle_cache: dict[str, object] = {}  # sql -> result df; several
@@ -164,7 +181,7 @@ def main() -> int:
             pass
         try:
             sdf = fn(spark, sf_dir)
-            s_pdf = sdf.toPandas()
+            s_pdf = (sdf.where(where) if where else sdf).toPandas()
         except Exception as exc:
             print(f"FAIL  {name}: spark query raised: {str(exc)[:300]}")
             failures += 1
@@ -172,12 +189,14 @@ def main() -> int:
 
         sql = oracles.get(name)
         if sql is None:
-            print(f"OK?   {name}: rows-only (no oracle), {len(s_pdf)} rows "
+            print(f"OK?   {name}{label}: rows-only (no oracle), {len(s_pdf)} rows "
                   f"[{time.time()-t0:.1f}s]")
             if not len(s_pdf):
                 print(f"WARN  {name}: rows-only query returned 0 rows")
             continue
 
+        if where:
+            sql = f"SELECT * FROM ({sql}) __q WHERE {where}"
         try:
             if sql in oracle_cache:
                 d_pdf = oracle_cache[sql]
@@ -202,10 +221,10 @@ def main() -> int:
                 diff = [(a, b) for a, b in zip(sm, dm) if a != b][:3]
                 problems.append(f"value mismatch, first diffs: {diff}")
         if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)}")
+            print(f"FAIL  {name}{label}: {'; '.join(problems)}")
             failures += 1
         else:
-            print(f"PASS  {name}: {len(s_pdf)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS  {name}{label}: {len(s_pdf)} rows [{time.time()-t0:.1f}s]")
 
     mode = "loose" if loose else "exact"
     print(f"\n[{mode}] {'ALL PASS' if failures == 0 else f'{failures} FAILURES'}")

@@ -90,10 +90,10 @@ def test_asof_tolerance_flow_op_validates(spark):
 
     from openetlagent_spark.model import AsofJoinOperation, SpecError
 
-    with pytest.raises(SpecError):
+    with pytest.raises(SpecError, match="tolerance must be >= 0"):
         AsofJoinOperation(
             right_file_path="x", left_on="k", right_on="k",
-            left_time="t", right_time="t", tolerance=-1.0,
+            left_time="t", right_time="t", value_columns=["v"], tolerance=-1.0,
         )
 
 
@@ -111,8 +111,8 @@ def test_asof_tolerance_rejects_nan(spark):
             left, left, left_on="k", right_on="k", left_time="t", right_time="t",
             value_columns=[], tolerance=math.nan,
         )
-    with pytest.raises(SpecError):
+    with pytest.raises(SpecError, match="tolerance must be >= 0"):
         AsofJoinOperation(
             right_file_path="x", left_on="k", right_on="k",
-            left_time="t", right_time="t", tolerance=math.nan,
+            left_time="t", right_time="t", value_columns=["v"], tolerance=math.nan,
         )

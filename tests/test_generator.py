@@ -4,6 +4,8 @@ re-built around a pluggable ``complete`` callable)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from openetlagent_spark.generator import (
@@ -114,3 +116,37 @@ def test_generation_aborts_after_repeated_failures(spark, config):
     assert not result.success
     assert result.flow is None
     assert any("rejected" in t for t in result.transcript)
+
+
+def _prompt_entries():
+    """(types, fields) per ``- <type>: ... {fields}`` entry of the
+    prompt's op list.  Fields are the names at the top level of the
+    entry's first ``{...}`` block, split on ``,`` ``;`` ``+`` and ``OR``;
+    nested values and parenthesised notes are skipped."""
+    from openetlagent_spark.generator import OPERATION_DOCS
+
+    listing = OPERATION_DOCS.split("fields:\n\n", 1)[1].split("\n\n", 1)[0]
+    for entry in re.split(r"\n(?=- )", listing):
+        types = re.match(r"- ([a-z0-9_ /]+):", entry).group(1).split(" / ")
+        top, depth = "", 0
+        for ch in entry[entry.index("{"):] if "{" in entry else "":
+            depth += ch in "([{"
+            if depth == 1 and ch not in "{}":
+                top += ch
+            depth -= ch in ")]}"
+            if depth == 0:
+                break
+        names = [re.match(r"\s*(\w*)", seg).group(1) for seg in re.split(r"[,;+]|\bOR\b", top)]
+        yield [t.strip() for t in types], [n for n in names if n]
+
+
+def test_prompt_names_only_registered_types_and_their_fields():
+    from openetlagent_spark.model import OPERATION_TYPES, _field_types
+
+    entries = list(_prompt_entries())
+    assert len(entries) > 40
+    for types, names in entries:
+        for op_type in types:
+            assert op_type in OPERATION_TYPES, op_type
+            unknown = set(names) - set(_field_types(OPERATION_TYPES[op_type]))
+            assert not unknown, (op_type, sorted(unknown))

@@ -5,8 +5,14 @@ here launches a Spark job."""
 
 from __future__ import annotations
 
+import copy
+import functools
+import math
 import os
 import re
+import typing
+
+from typing import Annotated, Any, Literal
 
 import pytest
 import yaml
@@ -14,9 +20,13 @@ import yaml
 from openetlagent_spark import runner
 from openetlagent_spark.model import (
     OPERATION_TYPES,
+    Bound,
+    NonEmpty,
     Operation,
     SpecError,
     UnionOperation,
+    _conforms,
+    _field_types,
     _operation_types,
     parse_operation,
 )
@@ -147,3 +157,154 @@ def test_parse_accepts_int_for_float_any_and_either_union_arm():
         assert op.left_on == on
     op = parse_operation({"operation_type": "histogram", "input_column": "v", "lo": None})
     assert op.lo is None
+
+
+@functools.cache
+def _documented_specs() -> dict[str, dict]:
+    """The first docs/OPERATORS.md example of each op type: a spec that
+    parses, used as the base that one field at a time is varied on."""
+    with open(DOCS) as fh:
+        blocks = re.findall(r"```yaml\n(.*?)```", fh.read(), re.S)
+    found: dict[str, dict] = {}
+    for block in blocks:
+        for raw in yaml.safe_load(block):
+            found.setdefault(raw["operation_type"], raw)
+    return found
+
+
+def _number_type(tp) -> type:
+    return float if float in typing.get_args(tp) or tp is float else int
+
+
+def _bound_values(bound: Bound, num: type) -> tuple[list, list]:
+    """(the values at each end of ``bound`` that it admits, the first
+    values past each end)."""
+    def step(x, up):
+        return x + (1 if up else -1) if num is int else math.nextafter(x, math.inf if up else -math.inf)
+
+    lo = num(bound.lo)
+    ok = [step(lo, True) if bound.lo_open else lo]
+    bad = [lo if bound.lo_open else step(lo, False)]
+    if bound.hi is not None:
+        hi = num(bound.hi)
+        ok.append(step(hi, False) if bound.hi_open else hi)
+        bad.append(hi if bound.hi_open else step(hi, True))
+    if num is float:
+        bad.append(math.nan)
+    return ok, bad
+
+
+def _contract_values(tp, sample) -> tuple[list, list]:
+    """(accepted, refused) values for the contract declared on ``tp``:
+    each marker's boundary, each ``Literal`` member, and the same one
+    level down for list elements and dict values."""
+    origin, args = typing.get_origin(tp), typing.get_args(tp)
+    if origin is Annotated:
+        ok, bad = _contract_values(args[0], sample)
+        for mark in tp.__metadata__:
+            if isinstance(mark, NonEmpty):
+                ok.append(sample)
+                bad += [type(sample)(), None]
+            else:
+                b_ok, b_bad = _bound_values(mark, _number_type(args[0]))
+                ok += b_ok
+                bad += b_bad
+        return ok, bad
+    if origin is Literal:
+        return list(args), [f"not-{args[0]}"]
+    if origin is list:
+        ok, bad = _contract_values(args[0], None)
+        return [[v] for v in ok], [[v] for v in bad]
+    if origin is dict:
+        ok, bad = _contract_values(args[1], None)
+        return [{"k": v} for v in ok], [{"k": v} for v in bad]
+    return [], []
+
+
+# fields that the documented example does not satisfy a spec's own
+# (mode-dependent or cross-field) rules for, at every accepted value
+EXTRA = {
+    ("chunk", "chunk_size"): {"overlap": 0},
+    ("dedup", "strategy"): {"id_column": "id", "text_column": "t", "vector_column": "v"},
+    ("dedup", "mode"): {
+        "strategy": "minhash", "id_column": "id", "text_column": "t", "score_column": "s",
+    },
+    ("expectations", "mode"): {"rules": [{"column": "c", "check": "not_null"}]},
+    ("range_join", "kind"): dict.fromkeys(
+        ["key", "time_column", "id_column", "right_file_path", "left_on", "right_on",
+         "start_column", "end_column", "left_id_column", "right_id_column",
+         "left_start_column", "left_end_column"], "c"
+    ) | {"value_columns": ["v"]},
+    ("window", "frame_type"): {"order_by": ["ts"], "descending": [], "frame": []},
+}
+# a one-entry dict the percentages rule refuses: the boundary entry
+# plus the rest of the 100
+ACCEPTED_OVERRIDES = {("split_assign", "splits", "{'k': 1}"): {"k": 1, "rest": 99}}
+
+
+def _contract_table():
+    docs = _documented_specs()
+    for op_type, cls in sorted(OPERATION_TYPES.items()):
+        for name, tp in _field_types(cls).items():
+            base = {k: v for k, v in docs[op_type].items() if k != "operation_type"}
+            sample = base.get(name) or getattr(cls(**base), name)
+            ok, bad = _contract_values(tp, sample)
+            for value in ok:
+                yield op_type, name, ACCEPTED_OVERRIDES.get((op_type, name, repr(value)), value), True
+            for value in bad:
+                yield op_type, name, value, False
+
+
+CONTRACT = list(_contract_table())
+
+
+def test_contract_table_covers_every_declared_field():
+    declared = {(t, f) for t, f, _, _ in CONTRACT}
+    assert len(declared) >= 150
+    assert sum(not accepted for *_, accepted in CONTRACT) >= 250
+    for op_type, field in [("limit", "n"), ("equality", "input_column")]:
+        assert (op_type, field) not in declared  # undeclared fields stay open
+
+
+@pytest.mark.parametrize(
+    "op_type,field,value,accepted", CONTRACT, ids=lambda v: repr(v)[:40]
+)
+def test_declared_contract_boundaries(op_type, field, value, accepted):
+    raw = {**_documented_specs()[op_type], **EXTRA.get((op_type, field), {}), field: value}
+    raw = copy.deepcopy(raw)
+    if accepted:
+        assert getattr(parse_operation(raw), field) == value
+        return
+    with pytest.raises(SpecError, match=rf"\b{op_type}\b.*\b{field}\b"):
+        parse_operation(raw)
+
+
+def _mistyped(tp):
+    """A value whose type ``tp`` refuses."""
+    return next(v for v in (5, "5", [object()], None) if not _conforms(v, tp))
+
+
+@pytest.mark.parametrize("op_type", sorted(OPERATION_TYPES))
+def test_construction_checks_field_types(op_type):
+    """Every spec class runs the base check at ``cls(...)``, not only
+    through the parser (``LimitOperation(n="5")`` built at the parent):
+    no subclass can skip it."""
+    cls = OPERATION_TYPES[op_type]
+    hints = _field_types(cls)
+    own = [n for n in hints if n not in ("output_column", "operation_type")]
+    name = next((n for n in own if hints[n] is not Any), "output_column")
+    value = _mistyped(hints[name])
+    with pytest.raises(SpecError, match=rf"^Invalid spec for {op_type}: field '{name}' expects "):
+        cls(**{name: value})
+
+
+def test_spec_checks_cannot_bypass_the_field_check():
+    from dataclasses import dataclass
+
+    with pytest.raises(TypeError, match="put spec checks in check()"):
+        @dataclass
+        class _Bypass(Operation):
+            operation_type: str = "bypass"
+
+            def __post_init__(self) -> None:
+                pass
