@@ -67,17 +67,13 @@ def main(argv: list[str] | None = None) -> int:
         try:
             flow = load_pipeline_flow(flow_path)
             if args.explain:
-                from .runner import apply_operations
-                from .sources import scan_data
-
                 # operators with eager steps (checkpoints, probes,
                 # collects) run Spark jobs while the plan is built
                 group = f"explain/{output_key}"
                 sc = spark.sparkContext
                 sc.setJobGroup(group, f"plan {output_key}")
                 try:
-                    df = scan_data(spark, config.inputs[flow.source])
-                    result = apply_operations(df, flow.operations, spark, config.inputs)
+                    result, _, _ = run_flow(spark, config, flow, output_key, save=False)
                 finally:
                     sc.setLocalProperty("spark.jobGroup.id", None)
                     sc.setLocalProperty("spark.job.description", None)

@@ -37,7 +37,8 @@ class SpecError(ValueError):
 # ``Operation.__post_init__`` checks every field against its annotation
 # on every construction, parsed or built in code, then runs the spec's
 # own ``check`` for what one field cannot say: cross-field rules,
-# patterns and mode-dependent requirements.
+# patterns and mode-dependent requirements.  ``InputColumn`` declares
+# the columns an op reads, which the runner checks against the frame.
 # ---------------------------------------------------------------------------
 
 
@@ -74,7 +75,17 @@ class Bound:
         return None if above and below else f"{op} {name} must be {self}, got {value!r}"
 
 
+class InputColumn:
+    """Marker: the value names a column the op reads from its current
+    frame, in every mode, whenever it is set.  The runner checks that
+    the frame has it before the op runs (``columns_read``)."""
+
+    def breach(self, op: str, name: str, value: Any) -> str | None:
+        return None
+
+
 T = typing.TypeVar("T")
+Reads = Annotated[T, InputColumn()]
 Required = Annotated[T, NonEmpty()]
 Positive = Annotated[T, Bound(0, lo_open=True)]
 NonNegative = Annotated[T, Bound(0)]
@@ -130,7 +141,7 @@ class Operation:
 class EqualityOperation(Operation):
     """Copy a column under a new name (reference: app/models.py:46-48)."""
 
-    input_column: str = ""
+    input_column: Reads[str] = ""
     operation_type: str = "equality"
 
 
@@ -140,7 +151,7 @@ class ConcatenationOperation(Operation):
     (reference: app/models.py:50-53; null semantics per concat_str,
     app/operations/concatenation.py:10-13)."""
 
-    input_columns: list[str] = field(default_factory=list)
+    input_columns: list[Reads[str]] = field(default_factory=list)
     separator: str = ""
     operation_type: str = "concatenation"
 
@@ -150,7 +161,7 @@ class ApplicationOperation(Operation):
     """Row-wise sandboxed lambda over named input columns
     (reference: app/models.py:55-58, app/operations/application.py:5-33)."""
 
-    input_columns: list[str] = field(default_factory=list)
+    input_columns: list[Reads[str]] = field(default_factory=list)
     function_str: str = ""
     # Engine extension: declared Spark-side return logical type.  The
     # reference relies on Polars type inference; Spark UDFs need a declared
@@ -165,9 +176,9 @@ class SwitchingOperation(Operation):
     (reference: app/models.py:60-76).  Exactly one of default_column /
     default_value must be set (validator at app/models.py:67-76)."""
 
-    switch_column: str = ""
-    mapping: dict[Any, str] = field(default_factory=dict)
-    default_column: str | None = None
+    switch_column: Reads[str] = ""
+    mapping: dict[Any, Reads[str]] = field(default_factory=dict)
+    default_column: Reads[str | None] = None
     default_value: Any = None
     operation_type: str = "switching"
 
@@ -192,7 +203,7 @@ class CastingOperation(Operation):
     """Cast one column to one of the logical types
     (reference: app/models.py:82-85)."""
 
-    input_column: str = ""
+    input_column: Reads[str] = ""
     target_type: str = "string"
     operation_type: str = "casting"
 
@@ -202,7 +213,7 @@ class ArithmeticOperation(Operation):
     """Binary + - * / between exactly two columns
     (reference: app/models.py:87-90)."""
 
-    input_columns: list[str] = field(default_factory=list)
+    input_columns: list[Reads[str]] = field(default_factory=list)
     operator: Literal["+", "-", "*", "/"] = "+"
     operation_type: str = "arithmetic"
 
@@ -219,7 +230,7 @@ class ComparisonOperation(Operation):
     """Compare a column to a literal producing a boolean *column* — a
     projection, NOT a row filter (reference: app/models.py:92-96)."""
 
-    input_column: str = ""
+    input_column: Reads[str] = ""
     operator: Literal["==", "!=", ">", "<", ">=", "<="] = "=="
     value: Any = None
     operation_type: str = "comparison"
@@ -235,7 +246,7 @@ class BindOperation(Operation):
 
     right_file_path: str = ""
     right_schema_columns: dict[str, str] = field(default_factory=dict)
-    left_on: str | list[str] = ""
+    left_on: Reads[str | list[str]] = ""
     right_on: str | list[str] = ""
     # the reference surface is left/inner/outer/cross (app/models.py:104);
     # semi/anti are engine extensions (SURVEY §2.2 gap)
@@ -271,8 +282,8 @@ class FoldOperation(Operation):
     """Unpivot wide→long (reference: app/models.py:107-112,
     app/operations/fold.py:6-32).  id/value overlap is legal."""
 
-    id_columns: list[str] = field(default_factory=list)
-    value_columns: list[str] = field(default_factory=list)
+    id_columns: list[Reads[str]] = field(default_factory=list)
+    value_columns: list[Reads[str]] = field(default_factory=list)
     key_column_name: str = "key"
     value_column_name: str = "value"
     operation_type: str = "fold"
@@ -287,10 +298,10 @@ class UnfoldOperation(Operation):
     execution (min_by over that column); when absent, a stable row id
     captured at scan time is used."""
 
-    index_columns: list[str] = field(default_factory=list)
-    key_column: str = ""
-    value_column: str = ""
-    order_column: str | None = None
+    index_columns: list[Reads[str]] = field(default_factory=list)
+    key_column: Reads[str] = ""
+    value_column: Reads[str] = ""
+    order_column: Reads[str | None] = None
     operation_type: str = "unfold"
 
 
@@ -304,7 +315,7 @@ class FilterOperation(Operation):
     needs one.  Either a boolean ``input_column`` or a (column, operator,
     value) predicate like comparison."""
 
-    input_column: str = ""
+    input_column: Reads[str] = ""
     operator: str | None = None
     value: Any = None
     operation_type: str = "filter"
@@ -320,7 +331,7 @@ class AggregationOperation(Operation):
     ``grouping``: "groupby" (default) | "rollup" | "cube" |
     "sets" (explicit ``grouping_sets``) for subtotal combinations."""
 
-    group_by: list[str] = field(default_factory=list)
+    group_by: list[Reads[str]] = field(default_factory=list)
     aggregations: dict[str, dict[str, str]] = field(default_factory=dict)
     grouping: Literal["groupby", "rollup", "cube", "sets"] = "groupby"
     grouping_sets: list[list[str]] = field(default_factory=list)
@@ -333,7 +344,7 @@ class AggregationOperation(Operation):
 
 @dataclass
 class SortOperation(Operation):
-    columns: list[str] = field(default_factory=list)
+    columns: list[Reads[str]] = field(default_factory=list)
     descending: list[bool] = field(default_factory=list)
     operation_type: str = "sort"
 
@@ -346,7 +357,7 @@ class LimitOperation(Operation):
 
 @dataclass
 class DistinctOperation(Operation):
-    subset: list[str] = field(default_factory=list)
+    subset: list[Reads[str]] = field(default_factory=list)
     operation_type: str = "distinct"
 
 
@@ -370,7 +381,7 @@ class JsonExtractOperation(Operation):
     'no array/map/json functions').  Malformed JSON or a missing path
     yields NULL (get_json_object semantics)."""
 
-    input_column: str = ""
+    input_column: Reads[str] = ""
     json_path: str = "$"
     target_type: str | None = None
     operation_type: str = "json_extract"
@@ -387,8 +398,8 @@ class SelectOperation(Operation):
     can only drop columns via the ``_x_`` temp convention at flow end
     (SURVEY §1.4); set ops and sinks need explicit shape control."""
 
-    columns: list[str] = field(default_factory=list)
-    drop_columns: list[str] = field(default_factory=list)
+    columns: list[Reads[str]] = field(default_factory=list)
+    drop_columns: list[Reads[str]] = field(default_factory=list)
     operation_type: str = "select"
 
     def check(self) -> None:
@@ -410,7 +421,7 @@ class SampleOperation(Operation):
 
     fraction: Annotated[float, Bound(0, 1, lo_open=True)] = 0.1
     seed: int = 42
-    key_column: str = ""
+    key_column: Reads[str] = ""
     operation_type: str = "sample"
 
 
@@ -420,7 +431,7 @@ class RepartitionOperation(Operation):
     co-locate downstream stages, or rebalance after a skewing filter.
     ``columns`` empty → round-robin rebalance to ``num_partitions``."""
 
-    columns: list[str] = field(default_factory=list)
+    columns: list[Reads[str]] = field(default_factory=list)
     num_partitions: int | None = None
     operation_type: str = "repartition"
 
@@ -437,8 +448,8 @@ class WindowOperation(Operation):
     running aggregate into a sliding one."""
 
     function: str = "row_number"
-    partition_by: list[str] = field(default_factory=list)
-    order_by: list[str] = field(default_factory=list)
+    partition_by: list[Reads[str]] = field(default_factory=list)
+    order_by: list[Reads[str]] = field(default_factory=list)
     descending: list[bool] = field(default_factory=list)
     value_column: str | None = None
     offset: int = 1
@@ -542,8 +553,8 @@ class SimilarityOperation(Operation):
     method: Literal["brute", "lsh", "ivf"] = "brute"
     queries_path: Required[str] = ""  # named input or file path
     queries_schema_columns: dict[str, str] = field(default_factory=dict)
-    id_column: str = "vec_id"
-    vector_column: str = "embedding"
+    id_column: Reads[str] = "vec_id"
+    vector_column: Reads[str] = "embedding"
     k: Positive[int] = 10
     n_planes: int = 4
     n_tables: int = 8
@@ -561,9 +572,9 @@ class AsofJoinOperation(Operation):
 
     right_file_path: Required[str] = ""
     right_schema_columns: dict[str, str] = field(default_factory=dict)
-    left_on: Required[str] = ""
+    left_on: Required[Reads[str]] = ""
     right_on: Required[str] = ""
-    left_time: Required[str] = ""
+    left_time: Required[Reads[str]] = ""
     right_time: Required[str] = ""
     value_columns: Required[list[str]] = field(default_factory=list)
     direction: Literal["backward", "forward"] = "backward"
@@ -594,7 +605,7 @@ class RangeJoinOperation(Operation):
     key: str = ""
     time_column: str = ""
     id_column: str = ""
-    tolerance: float = 60.0
+    tolerance: Positive[float] = 60.0
     # interval (two-sided)
     right_file_path: str = ""
     right_schema_columns: dict[str, str] = field(default_factory=dict)
@@ -603,7 +614,7 @@ class RangeJoinOperation(Operation):
     start_column: str = ""
     end_column: str = ""
     value_columns: list[str] = field(default_factory=list)
-    bucket_width: float = 3600.0
+    bucket_width: Positive[float] = 3600.0
     # overlap (two-sided interval × interval)
     left_id_column: str = ""
     right_id_column: str = ""
@@ -620,18 +631,12 @@ class RangeJoinOperation(Operation):
             ):
                 if not getattr(self, f_name):
                     raise SpecError(f"range_join kind='overlap' requires {f_name}")
-            if self.bucket_width <= 0:
-                raise SpecError(
-                    f"range_join bucket_width must be positive, got {self.bucket_width!r}"
-                )
             return
         if self.kind == "tolerance":
             if not self.key or not self.time_column or not self.id_column:
                 raise SpecError(
                     "range_join kind='tolerance' requires key, time_column, id_column"
                 )
-            if self.tolerance <= 0:
-                raise SpecError(f"range_join tolerance must be positive, got {self.tolerance!r}")
         else:
             for f_name in (
                 "right_file_path", "left_on", "right_on",
@@ -654,8 +659,8 @@ class ContaminationOperation(Operation):
 
     benchmark_path: Required[str] = ""  # named input or file path
     benchmark_schema_columns: dict[str, str] = field(default_factory=dict)
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     benchmark_text_column: str = ""
     ngram_size: int = 3
     rate_threshold: float = 0.3
@@ -696,8 +701,8 @@ class SnapshotDiffOperation(Operation):
 
     old_path: Required[str] = ""  # named input or file path
     old_schema_columns: dict[str, str] = field(default_factory=dict)
-    key_columns: Required[list[str]] = field(default_factory=list)
-    compare_columns: Required[list[str]] = field(default_factory=list)
+    key_columns: Required[list[Reads[str]]] = field(default_factory=list)
+    compare_columns: Required[list[Reads[str]]] = field(default_factory=list)
     mode: Literal["labels", "counts"] = "labels"
     operation_type: str = "snapshot_diff"
 
@@ -729,7 +734,7 @@ class ScrubOperation(Operation):
     of [pattern, replacement] pairs; empty = the default PII set
     (emails, URLs, IPv4s, digit runs)."""
 
-    input_column: str = "text"
+    input_column: Reads[str] = "text"
     output_column: str = ""
     rules: list[list[str]] = field(default_factory=list)
     operation_type: str = "scrub"
@@ -750,8 +755,8 @@ class PackSequencesOperation(Operation):
     the two-phase distributed prefix scan, never a global single
     -partition window."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     context_length: Positive[int] = 512
     operation_type: str = "pack_sequences"
 
@@ -762,7 +767,7 @@ class RepetitionOperation(Operation):
     with_repetition): adds ``dup_{n}gram_frac`` per n — the repetitious-
     text quality screen for pretraining corpora."""
 
-    input_column: str = "text"
+    input_column: Reads[str] = "text"
     ns: Required[list[Positive[int]]] = field(default_factory=lambda: [2, 3])
     operation_type: str = "repetition"
 
@@ -776,6 +781,8 @@ class MixtureOperation(Operation):
     re-weighting for training-data pipelines, engine-exact (same md5
     bucket contract as SampleOperation.key_column)."""
 
+    # no column is marked Reads: group_column is read only for the
+    # groups in weights, key_column only under a fractional weight
     group_column: Required[str] = ""
     key_column: Required[str] = ""
     weights: dict[str, NonNegative[float]] = field(default_factory=dict)
@@ -796,7 +803,7 @@ class MergeOperation(Operation):
 
     right_file_path: Required[str] = ""  # named input or file path
     right_schema_columns: dict[str, str] = field(default_factory=dict)
-    keys: Required[list[str]] = field(default_factory=list)
+    keys: Required[list[Reads[str]]] = field(default_factory=list)
     op_column: str = ""
     delete_value: str = "D"
     seq_column: str = ""
@@ -810,10 +817,10 @@ class Scd2Operation(Operation):
     (valid_from / valid_to / is_current) per key.  ``collapse`` opens a
     new version only when an attr_column actually changes (null-safe)."""
 
-    keys: Required[list[str]] = field(default_factory=list)
-    ts_column: Required[str] = ""
-    attr_columns: Required[list[str]] = field(default_factory=list)
-    order_column: str = ""
+    keys: Required[list[Reads[str]]] = field(default_factory=list)
+    ts_column: Required[Reads[str]] = ""
+    attr_columns: Required[list[Reads[str]]] = field(default_factory=list)
+    order_column: Reads[str] = ""
     collapse: bool = True
     operation_type: str = "scd2"
 
@@ -825,8 +832,8 @@ class StratifiedSampleOperation(Operation):
     md5(key ∥ seed) — deterministic and partition-independent, unlike
     fraction-based sampling."""
 
-    group_columns: Required[list[str]] = field(default_factory=list)
-    key_column: Required[str] = ""
+    group_columns: Required[list[Reads[str]]] = field(default_factory=list)
+    key_column: Required[Reads[str]] = ""
     k: Positive[int] = 0
     seed: int = 42
     rank_column: str = ""
@@ -841,9 +848,9 @@ class WeightedSampleOperation(Operation):
     with NULL/non-positive weight are excluded.  Deterministic,
     partition-independent, engine-exact."""
 
-    group_columns: Required[list[str]] = field(default_factory=list)
-    key_column: Required[str] = ""
-    weight_column: Required[str] = ""
+    group_columns: Required[list[Reads[str]]] = field(default_factory=list)
+    key_column: Required[Reads[str]] = ""
+    weight_column: Required[Reads[str]] = ""
     k: Positive[int] = 0
     seed: int = 42
     rank_column: str = ""
@@ -856,8 +863,8 @@ class ChunkOperation(Operation):
     curation.py chunk_text): one output row per ``chunk_size``-token
     window advancing ``chunk_size - overlap`` tokens."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     chunk_size: Positive[int] = 512
     overlap: int = 0
     operation_type: str = "chunk"
@@ -876,8 +883,8 @@ class KeywordSearchOperation(Operation):
     query terms over the current frame."""
 
     query_terms: Required[list[str]] = field(default_factory=list)
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     k: Positive[int] = 10
     k1: float = 1.2
     b: float = 0.75
@@ -898,8 +905,8 @@ class InvertedIndexOperation(Operation):
     inverted_index): term → df, tf_total, id-sorted posting string;
     ``max_df`` = 0 disables the hot-term posting cap."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     max_df: NonNegative[int] = 0
     operation_type: str = "inverted_index"
 
@@ -910,8 +917,8 @@ class FuzzyPairsOperation(Operation):
     fuzzy_pairs): (id_a, id_b, dist) for same-block rows whose
     normalized prefixes are within ``max_dist`` Levenshtein edits."""
 
-    id_column: str = "doc_id"
-    string_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    string_column: Reads[str] = "text"
     max_dist: NonNegative[int] = 8
     prefix_chars: Positive[int] = 40
     block_tokens: Positive[int] = 2
@@ -926,8 +933,8 @@ class TfidfOperation(Operation):
     (functions/search.py tfidf_topk): (id, rank, term, tfidf) with the
     rational-idf weight and (weight desc, term asc) tie-break."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     k: Positive[int] = 3
     operation_type: str = "tfidf"
 
@@ -938,7 +945,7 @@ class BigramLmOperation(Operation):
     (functions/text.py bigram_lm_topk): top-k (w1, w2, n, p) with the
     exact-integer MLE conditional probability."""
 
-    text_column: str = "text"
+    text_column: Reads[str] = "text"
     k: Positive[int] = 50
     operation_type: str = "bigram_lm"
 
@@ -950,8 +957,8 @@ class DocLmScoreOperation(Operation):
     transition probability + OOV count against the corpus's own top-k
     bigram LM — the CCNet-style LM filter stage."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     k: Positive[int] = 500
     operation_type: str = "doc_lm_score"
 
@@ -963,7 +970,7 @@ class BpeTrainOperation(Operation):
     counting + greedy merge over the corpus word-frequency vocab,
     returning the learned merge table."""
 
-    text_column: str = "text"
+    text_column: Reads[str] = "text"
     n_merges: Positive[int] = 5
     operation_type: str = "bpe_train"
 
@@ -974,8 +981,8 @@ class BpeEncodeOperation(Operation):
     apply a shipped merge table — ``merges`` is a list of [left, right]
     pairs in rank order — returning per-doc symbol counts."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     merges: list[list[str]] = field(default_factory=list)
     operation_type: str = "bpe_encode"
 
@@ -993,8 +1000,8 @@ class VocabOovOperation(Operation):
     vocab_oov): per-doc token totals and out-of-vocabulary counts
     against the corpus's own top-``top_k`` vocabulary."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     top_k: Positive[int] = 1000
     operation_type: str = "vocab_oov"
 
@@ -1006,8 +1013,8 @@ class ClusteringOperation(Operation):
     sample (cluster-balanced ``per_cluster`` quota draw)."""
 
     mode: Literal["assign", "sample"] = "assign"
-    id_column: str = "vec_id"
-    vector_column: str = "embedding"
+    id_column: Reads[str] = "vec_id"
+    vector_column: Reads[str] = "embedding"
     k: Positive[int] = 8
     iters: NonNegative[int] = 2
     per_cluster: int = 10
@@ -1031,7 +1038,7 @@ class ProfileOperation(Operation):
     ``approx`` swaps exact COUNT(DISTINCT) for the HLL sketch (the
     petabyte path)."""
 
-    columns: list[str] = field(default_factory=list)
+    columns: list[Reads[str]] = field(default_factory=list)
     approx: bool = False
     operation_type: str = "profile"
 
@@ -1042,7 +1049,7 @@ class HistogramOperation(Operation):
     value_histogram).  ``lo``/``hi`` omitted (None) derive from the
     column min/max."""
 
-    input_column: Required[str] = ""
+    input_column: Required[Reads[str]] = ""
     bins: Positive[int] = 20
     lo: float | None = None
     hi: float | None = None
@@ -1059,9 +1066,9 @@ class OutlierOperation(Operation):
     outlier_flags): adds zscore + is_outlier per row; ``group_columns``
     switches to per-stratum statistics."""
 
-    input_column: Required[str] = ""
+    input_column: Required[Reads[str]] = ""
     z_threshold: Positive[float] = 3.0
-    group_columns: list[str] = field(default_factory=list)
+    group_columns: list[Reads[str]] = field(default_factory=list)
     operation_type: str = "outliers"
 
 
@@ -1072,7 +1079,7 @@ class SplitAssignOperation(Operation):
     from the md5-bucket of its key — stable as the dataset grows,
     identical on any engine or partitioning."""
 
-    key_column: Required[str] = ""
+    key_column: Required[Reads[str]] = ""
     splits: dict[str, Positive[int]] = field(default_factory=dict)
     output_column: str = "split"
     operation_type: str = "split_assign"
@@ -1094,8 +1101,8 @@ class IncrementalDedupOperation(Operation):
 
     corpus_path: Required[str] = ""  # named input or file path
     corpus_schema_columns: dict[str, str] = field(default_factory=dict)
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     mode: GateMode = "annotate"
     # strategy='near' switches the match key from the exact normalized-
     # text fingerprint to banded MinHash near-duplication (functions/
@@ -1132,7 +1139,7 @@ class GlobalShuffleOperation(Operation):
     rank — reproducible from (key, seed) alone, independent of engine
     and partitioning."""
 
-    key_column: Required[str] = ""
+    key_column: Required[Reads[str]] = ""
     seed: int = 42
     shuffle_key_column: str = "shuffle_key"
     position_column: str = "position"
@@ -1152,8 +1159,8 @@ class QuantileFilterOperation(Operation):
     at or above their group's q-quantile — a relative threshold that
     cannot wipe out an entire group."""
 
-    group_columns: Required[list[str]] = field(default_factory=list)
-    value_column: Required[str] = ""
+    group_columns: Required[list[Reads[str]]] = field(default_factory=list)
+    value_column: Required[Reads[str]] = ""
     q: Annotated[float, Bound(0, 1, lo_open=True, hi_open=True)] = 0.75
     threshold_column: str = ""
     operation_type: str = "quantile_filter"
@@ -1166,8 +1173,8 @@ class TokenizeIdsOperation(Operation):
     top-k vocabulary; replaces the frame with (id, n_tokens, n_oov,
     token_ids)."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     top_k: Positive[int] = 1000
     oov_id: int = 0
     operation_type: str = "tokenize_ids"
@@ -1180,8 +1187,8 @@ class CurriculumOrderOperation(Operation):
     column (desc NULLS LAST by default; ascending for easy-to-hard),
     optional batch assignment."""
 
-    score_column: Required[str] = ""
-    id_column: str = "doc_id"
+    score_column: Required[Reads[str]] = ""
+    id_column: Reads[str] = "doc_id"
     ascending: bool = False
     position_column: str = "position"
     batch_size: NonNegative[int] = 0  # 0 = no batch column
@@ -1199,8 +1206,8 @@ class StoreGateOperation(Operation):
     (band store); mode ∈ annotate / filter."""
 
     store_path: Required[str] = ""
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     strategy: MatchStrategy = "exact"
     mode: GateMode = "annotate"
     # bands = 0 would silently admit EVERY document (no band rows →
@@ -1221,7 +1228,7 @@ class GopherRulesOperation(Operation):
     mode='filter' keeps only passing rows of the ORIGINAL frame."""
 
     id_column: str = "doc_id"
-    text_column: str = "text"
+    text_column: Reads[str] = "text"
     mode: GateMode = "annotate"
     min_words: int = 5
     max_words: int = 100_000
@@ -1250,10 +1257,10 @@ class LineDedupOperation(Operation):
     stripped from every document; the text column is REPLACED by the
     rebuilt text."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     max_docs: AtLeastOne[int] = 1
-    group_column: str | None = None
+    group_column: Reads[str | None] = None
     min_df: AtLeastOne[int | None] = None
     operation_type: str = "line_dedup"
 
@@ -1264,7 +1271,7 @@ class HtmlToTextOperation(Operation):
     html_to_text): the text column is REPLACED by the extracted text
     (or written to ``output_column`` when set)."""
 
-    input_column: str = "text"
+    input_column: Reads[str] = "text"
     operation_type: str = "html_to_text"
 
 
@@ -1278,8 +1285,8 @@ class ClassifierScoreOperation(Operation):
     save_classifier_weights) instead of the seeded stub table; ``dim``
     must match the artifact."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
     dim: AtLeastOne[int] = 1024
     seed: int = 42
     bias: float = 0.0
@@ -1303,9 +1310,9 @@ class ClassifierTrainOperation(Operation):
     appends n_tokens / score / clf_pass; mode='filter' keeps passing
     rows."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
-    label_column: Required[str] = ""  # +1/-1 or boolean
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
+    label_column: Required[Reads[str]] = ""  # +1/-1 or boolean
     dim: AtLeastOne[int] = 256
     iters: AtLeastOne[int] = 8
     lr_bits: int = 10
@@ -1329,7 +1336,7 @@ class UrlNormalizeOperation(Operation):
     lowercase scheme/host, strip fragments, default ports, and tracking
     query params; appends ``output_column``."""
 
-    url_column: str = "url"
+    url_column: Reads[str] = "url"
     output_column: str = "url_norm"
     operation_type: str = "url_normalize"
 
@@ -1339,7 +1346,7 @@ class DomainExtractOperation(Operation):
     """Domain + apex-domain extraction from a URL column
     (functions/web.py domain_extract)."""
 
-    url_column: str = "url"
+    url_column: Reads[str] = "url"
     domain_column: str = "domain"
     apex_column: str = "apex_domain"
     operation_type: str = "domain_extract"
@@ -1352,11 +1359,11 @@ class DomainQuotaOperation(Operation):
     (descending unless ``ascending``), ties broken by ``tie_column``
     ascending — the RefinedWeb/C4 crawl-balance gate."""
 
-    domain_column: str = "domain"
+    domain_column: Reads[str] = "domain"
     # order and tie columns make the per-domain ranking deterministic
-    order_column: Required[str] = ""
+    order_column: Required[Reads[str]] = ""
     n_per_domain: AtLeastOne[int] = 100
-    tie_column: Required[str] = ""
+    tie_column: Required[Reads[str]] = ""
     ascending: bool = False
     operation_type: str = "domain_quota"
 
@@ -1367,9 +1374,9 @@ class LmBucketsOperation(Operation):
     (functions/text.py lm_quality_buckets): head/middle/tail by each
     language's own score quantiles."""
 
-    id_column: str = "doc_id"
-    text_column: str = "text"
-    lang_column: str = "lang"
+    id_column: Reads[str] = "doc_id"
+    text_column: Reads[str] = "text"
+    lang_column: Reads[str] = "lang"
     k: Positive[int] = 500
     operation_type: str = "lm_buckets"
 
@@ -1381,9 +1388,9 @@ class GapFillOperation(Operation):
     the dense per-key hourly grid (key, hour_idx, n_events, observed,
     filled_sum) — the resample-and-ffill stage of a metrics pipeline."""
 
-    key_column: Required[str] = ""
-    ts_column: str = "ts"
-    value_column: str = "value"
+    key_column: Required[Reads[str]] = ""
+    ts_column: Reads[str] = "ts"
+    value_column: Reads[str] = "value"
     max_span_hours: AtLeastOne[int] = 24 * 366
     operation_type: str = "gap_fill"
 
@@ -1400,7 +1407,7 @@ class BloomGateOperation(Operation):
 
     eval_path: Required[str] = ""  # input key or file path
     eval_schema_columns: dict[str, str] = field(default_factory=dict)
-    text_column: str = "text"
+    text_column: Reads[str] = "text"
     eval_text_column: str = ""
     m: int = 1 << 16
     k: AtLeastOne[int] = 3
@@ -1418,8 +1425,8 @@ class HllDistinctOperation(Operation):
     (functions/sketch.py): REPLACES the frame with one row per group
     (group_columns, n_buckets_used, hll_est)."""
 
-    key_column: Required[str] = ""
-    group_columns: Required[list[str]] = field(default_factory=list)
+    key_column: Required[Reads[str]] = ""
+    group_columns: Required[list[Reads[str]]] = field(default_factory=list)
     p: Annotated[int, Bound(4, 16)] = 8
     operation_type: str = "hll_distinct"
 
@@ -1432,9 +1439,9 @@ class QuantileSketchOperation(Operation):
     (optional) engages the map-side hash prefilter; it is a
     caller-asserted LOWER BOUND on every group's non-null row count."""
 
-    value_column: Required[str] = ""
-    id_column: Required[str] = ""
-    group_columns: Required[list[str]] = field(default_factory=list)
+    value_column: Required[Reads[str]] = ""
+    id_column: Required[Reads[str]] = ""
+    group_columns: Required[list[Reads[str]]] = field(default_factory=list)
     qs: Required[list[float]] = field(default_factory=lambda: [0.5])
     k: AtLeastOne[int] = 1024
     min_group_rows: int | None = None
@@ -1569,10 +1576,10 @@ class TimeWeightedAvgOperation(Operation):
     n_segments, total_ms, twa`` (each value held until the key's next
     observation; duration-weighted mean)."""
 
-    key_column: Required[str] = ""
-    ts_column: str = "ts"
-    value_column: str = "value"
-    id_column: Required[str] = ""
+    key_column: Required[Reads[str]] = ""
+    ts_column: Reads[str] = "ts"
+    value_column: Reads[str] = "value"
+    id_column: Required[Reads[str]] = ""
     q_bits: Annotated[int, Bound(0, 30)] = 16
     operation_type: str = "time_weighted_avg"
 
@@ -1586,9 +1593,9 @@ class RollupOperation(Operation):
     (3600 = hour); ``coarsen_factor`` re-buckets the built partials by
     FLOOR(bucket/factor) before serving (hour partials → day serve)."""
 
-    ts_column: Required[str] = ""
-    value_column: Required[str] = ""
-    group_columns: Required[list[str]] = field(default_factory=list)
+    ts_column: Required[Reads[str]] = ""
+    value_column: Required[Reads[str]] = ""
+    group_columns: Required[list[Reads[str]]] = field(default_factory=list)
     grain: AtLeastOne[int] = 3600
     coarsen_factor: AtLeastOne[int | None] = None
     q_bits: Annotated[int, Bound(0, 40)] = 20
@@ -1602,7 +1609,7 @@ class HeavyHittersOperation(Operation):
     one row per group whose row count reaches ``threshold`` —
     ``group_columns..., <count_column>``."""
 
-    group_columns: Required[list[str]] = field(default_factory=list)
+    group_columns: Required[list[Reads[str]]] = field(default_factory=list)
     threshold: AtLeastOne[int] = 0
     w: Annotated[int, Bound(2)] = 256
     d: AtLeastOne[int] = 3
@@ -1625,8 +1632,8 @@ class ClassifierEvalOperation(Operation):
     column) with one row per candidate threshold — confusion counts
     plus accuracy/precision/recall/F1."""
 
-    label_column: Required[str] = ""
-    score_column: str = "score"
+    label_column: Required[Reads[str]] = ""
+    score_column: Reads[str] = "score"
     thresholds: Required[list[float]] = field(default_factory=lambda: [0.0])
     operation_type: str = "classifier_eval"
 
@@ -1645,7 +1652,7 @@ class CmsCountsOperation(Operation):
     a named input key or file path, like bind's right side.  An empty
     probe_path probes the frame's own distinct keys."""
 
-    key_column: Required[str] = ""
+    key_column: Required[Reads[str]] = ""
     probe_path: str = ""
     probe_schema_columns: dict[str, str] = field(default_factory=dict)
     probe_key_column: str = ""
@@ -1669,9 +1676,9 @@ class OhlcOperation(Operation):
     row per (key, time bucket) — ``key, bucket, open, high, low,
     close, n_obs``."""
 
-    key_column: Required[str] = ""
-    ts_column: str = "ts"
-    value_column: str = "value"
+    key_column: Required[Reads[str]] = ""
+    ts_column: Reads[str] = "ts"
+    value_column: Reads[str] = "value"
     bucket_seconds: AtLeastOne[int] = 3600
     operation_type: str = "ohlc"
 
@@ -1682,10 +1689,10 @@ class EwmaOperation(Operation):
     (functions/timeseries.py ewma_smooth): REPLACES the frame with
     ``key, <id_column>, value, ewma`` ordered (key, ts, id)."""
 
-    key_column: Required[str] = ""
-    ts_column: str = "ts"
-    id_column: Required[str] = ""
-    value_column: str = "value"
+    key_column: Required[Reads[str]] = ""
+    ts_column: Reads[str] = "ts"
+    id_column: Required[Reads[str]] = ""
+    value_column: Reads[str] = "value"
     alpha_num: int = 1
     alpha_den: int = 4
     lookback: AtLeastOne[int] = 64
@@ -1705,10 +1712,10 @@ class RollingMedianOperation(Operation):
     (functions/timeseries.py rolling_median): REPLACES the frame with
     ``key, <id_column>, value, med`` ordered (key, ts, id)."""
 
-    key_column: Required[str] = ""
-    ts_column: str = "ts"
-    id_column: Required[str] = ""
-    value_column: str = "value"
+    key_column: Required[Reads[str]] = ""
+    ts_column: Reads[str] = "ts"
+    id_column: Required[Reads[str]] = ""
+    value_column: Reads[str] = "value"
     window_rows: AtLeastOne[int] = 5
     operation_type: str = "rolling_median"
 
@@ -1720,8 +1727,8 @@ class ChangepointOperation(Operation):
     with one row per key — ``key, change_day, cusum_scaled, strength,
     n_days, total``."""
 
-    key_column: Required[str] = ""
-    ts_column: str = "ts"
+    key_column: Required[Reads[str]] = ""
+    ts_column: Reads[str] = "ts"
     operation_type: str = "changepoint"
 
 
@@ -1732,8 +1739,8 @@ class AssociationRulesOperation(Operation):
     ``antecedent, consequent, n_pair, n_ante, n_cons, support,
     confidence, lift``."""
 
-    basket_column: Required[str] = ""
-    item_column: Required[str] = ""
+    basket_column: Required[Reads[str]] = ""
+    item_column: Required[Reads[str]] = ""
     min_count: AtLeastOne[int] = 2
     k: AtLeastOne[int] = 100
     operation_type: str = "association_rules"
@@ -1745,10 +1752,10 @@ class MarkovOperation(Operation):
     (functions/mining.py markov_transitions): REPLACES the frame with
     ``src, dst, n_trans, n_src, prob``."""
 
-    seq_column: Required[str] = ""
-    order_column: str = "ts"
-    tiebreak_column: Required[str] = ""
-    state_column: Required[str] = ""
+    seq_column: Required[Reads[str]] = ""
+    order_column: Reads[str] = "ts"
+    tiebreak_column: Required[Reads[str]] = ""
+    state_column: Required[Reads[str]] = ""
     operation_type: str = "markov"
 
 
@@ -1760,9 +1767,9 @@ class SkylineOperation(Operation):
     column (the unit-step RANGE frame — skyline2d refuses fractional
     x loudly); y carries no frame and may be any orderable type."""
 
-    id_column: Required[str] = ""
-    x_column: Required[str] = ""
-    y_column: Required[str] = ""
+    id_column: Required[Reads[str]] = ""
+    x_column: Required[Reads[str]] = ""
+    y_column: Required[Reads[str]] = ""
     prune_buckets: AtLeastOne[int] = 32
     operation_type: str = "skyline"
 
@@ -1774,7 +1781,7 @@ class KAnonymityOperation(Operation):
     combinations whose group size is below ``k`` (quasi columns +
     ``group_size``) — the cells a privacy release must suppress."""
 
-    quasi_columns: Required[list[str]] = field(default_factory=list)
+    quasi_columns: Required[list[Reads[str]]] = field(default_factory=list)
     k: AtLeastOne[int] = 0
     operation_type: str = "k_anonymity"
 
@@ -1787,7 +1794,7 @@ class BenfordOperation(Operation):
     must be INTEGER-valued (cast monetary doubles to exact cents
     upstream with arithmetic + casting ops)."""
 
-    input_column: Required[str] = ""
+    input_column: Required[Reads[str]] = ""
     operation_type: str = "benford"
 
 
@@ -1810,9 +1817,9 @@ class MediaFeaturesOperation(Operation):
     — the trusted-format-corpus setting."""
 
     modality: Literal["image", "audio"] = "image"
-    payload_column: Required[str] = "payload"
-    id_column: Required[str] = "media_id"
-    mime_column: Required[str] = "mime"
+    payload_column: Required[Reads[str]] = "payload"
+    id_column: Required[Reads[str]] = "media_id"
+    mime_column: Required[Reads[str]] = "mime"
     dim: AtLeastOne[int] = 16
     decoder: Literal["fake", "real"] = "fake"
     strict: bool = False
@@ -1841,8 +1848,8 @@ class AnnStoreBuildOperation(Operation):
     bit-for-bit (hash-sampled integer Lloyd's)."""
 
     store_path: Required[str] = ""
-    id_column: Required[str] = "vec_id"
-    vector_column: Required[str] = "embedding"
+    id_column: Required[Reads[str]] = "vec_id"
+    vector_column: Required[Reads[str]] = "embedding"
     kind: Literal["ivf", "pq"] = "ivf"
     n_centroids: AtLeastOne[int] = 16
     iters: AtLeastOne[int] = 2
@@ -1879,8 +1886,8 @@ class AnnStoreAppendOperation(Operation):
     append — the same read-back shape as ann_store_build."""
 
     store_path: Required[str] = ""
-    id_column: Required[str] = "vec_id"
-    vector_column: Required[str] = "embedding"
+    id_column: Required[Reads[str]] = "vec_id"
+    vector_column: Required[Reads[str]] = "embedding"
     operation_type: str = "ann_store_append"
 
 
@@ -1897,8 +1904,8 @@ class AnnStoreQueryOperation(Operation):
     applies to PQ stores (exact re-rank width)."""
 
     store_path: Required[str] = ""
-    id_column: Required[str] = "vec_id"
-    vector_column: Required[str] = "embedding"
+    id_column: Required[Reads[str]] = "vec_id"
+    vector_column: Required[Reads[str]] = "embedding"
     k: AtLeastOne[int] = 10
     nprobe: AtLeastOne[int] = 4
     refine_factor: AtLeastOne[int] = 4
@@ -1914,7 +1921,7 @@ class FkCheckOperation(Operation):
     frame with the 1-row audit (``relationship, child_rows, null_keys,
     orphan_rows, orphan_keys``)."""
 
-    child_key: Required[str] = ""
+    child_key: Required[Reads[str]] = ""
     parent_path: Required[str] = ""
     parent_key: Required[str] = ""
     parent_schema_columns: dict[str, str] = field(default_factory=dict)
@@ -1933,9 +1940,9 @@ class SeasonalBaselineOperation(Operation):
     with one row per (key, dow): ``key, dow, n_events, mean_value,
     lift``."""
 
-    key_column: Required[str] = ""
-    ts_column: str = "ts"
-    value_column: str = "value"
+    key_column: Required[Reads[str]] = ""
+    ts_column: Reads[str] = "ts"
+    value_column: Reads[str] = "value"
     operation_type: str = "seasonal_baseline"
 
 
@@ -1945,7 +1952,7 @@ class AutocorrOperation(Operation):
     (functions/timeseries.py autocorr_lags): REPLACES the frame with
     one row per lag 1..max_lag: ``lag, n_pairs, autocorr``."""
 
-    ts_column: str = "ts"
+    ts_column: Reads[str] = "ts"
     max_lag: AtLeastOne[int] = 7
     operation_type: str = "autocorr"
 
@@ -1956,8 +1963,8 @@ class ItemSimilarityOperation(Operation):
     item_similarity): REPLACES the frame with one row per co-occurring
     item pair: ``item_a, item_b, users_both, cosine``."""
 
-    user_column: Required[str] = ""
-    item_column: Required[str] = ""
+    user_column: Required[Reads[str]] = ""
+    item_column: Required[Reads[str]] = ""
     operation_type: str = "item_similarity"
 
 
@@ -1968,8 +1975,8 @@ class LinkPredictionOperation(Operation):
     top-k item pairs by Jaccard of their group sets: ``item_a, item_b,
     co_groups, jaccard``."""
 
-    group_column: Required[str] = ""
-    item_column: Required[str] = ""
+    group_column: Required[Reads[str]] = ""
+    item_column: Required[Reads[str]] = ""
     k: AtLeastOne[int] = 100
     operation_type: str = "link_prediction"
 
@@ -1980,10 +1987,10 @@ class AbTestOperation(Operation):
     welch_z_test): REPLACES the frame with the 1-row readout
     ``n_a, mean_a, var_a, n_b, mean_b, var_b, z_score``."""
 
-    cohort_column: Required[str] = ""
+    cohort_column: Required[Reads[str]] = ""
     cohort_a: Required[str] = ""
     cohort_b: Required[str] = ""
-    value_column: str = "value"
+    value_column: Reads[str] = "value"
     operation_type: str = "ab_test"
 
     def check(self) -> None:
@@ -1997,10 +2004,10 @@ class KsTestOperation(Operation):
     (functions/stats.py ks_two_sample): REPLACES the frame with the
     1-row readout ``n_a, n_b, ks_d, ks_stat``."""
 
-    cohort_column: Required[str] = ""
+    cohort_column: Required[Reads[str]] = ""
     cohort_a: Required[str] = ""
     cohort_b: Required[str] = ""
-    value_column: str = "value"
+    value_column: Reads[str] = "value"
     operation_type: str = "ks_test"
 
     def check(self) -> None:
@@ -2025,6 +2032,39 @@ OPERATION_TYPES: dict[str, type[Operation]] = _operation_types()
 @functools.cache
 def _field_types(cls: type[Operation]) -> dict[str, Any]:
     return typing.get_type_hints(cls, include_extras=True)
+
+
+@functools.cache
+def _input_fields(cls: type[Operation]) -> tuple[str, ...]:
+    """The fields marked ``InputColumn``, on the field itself or on its
+    list elements or dict values."""
+
+    def marked(tp: Any) -> bool:
+        return typing.get_origin(tp) is Annotated and any(
+            isinstance(m, InputColumn) for m in tp.__metadata__
+        )
+
+    found = []
+    for name, tp in _field_types(cls).items():
+        bare = typing.get_args(tp)[0] if typing.get_origin(tp) is Annotated else tp
+        nested = typing.get_origin(bare) in (list, dict) and marked(typing.get_args(bare)[-1])
+        if marked(tp) or nested:
+            found.append(name)
+    return tuple(found)
+
+
+def columns_read(op: Operation) -> list[str]:
+    """The columns an op reads from its current frame: the non-empty
+    values of its ``InputColumn`` fields, in field order."""
+    cols: list[str] = []
+    for name in _input_fields(type(op)):
+        value = getattr(op, name)
+        if isinstance(value, dict):
+            value = list(value.values())
+        elif not isinstance(value, list):
+            value = [value]
+        cols += [c for c in value if c]
+    return cols
 
 
 def _conforms(value: Any, tp: Any) -> bool:

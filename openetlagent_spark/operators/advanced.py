@@ -262,14 +262,12 @@ def apply_similarity(
     op: SimilarityOperation,
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    queries_df: DataFrame | None = None,
 ) -> DataFrame:
     """ANN top-k: current frame = corpus, queries resolved like bind's
-    right side (or injected by the caller)."""
+    right side."""
     from ..functions import similarity as S
 
-    if queries_df is None:
-        queries_df = resolve_side(spark, op.queries_path, op.queries_schema_columns, inputs)
+    queries_df = resolve_side(spark, op.queries_path, op.queries_schema_columns, inputs)
     kwargs = dict(k=op.k, id_col=op.id_column, vec_col=op.vector_column)
     if op.method == "brute":
         return S.cosine_topk(df, queries_df, **kwargs)
@@ -289,12 +287,10 @@ def apply_asof_join(
     op: AsofJoinOperation,
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    right_df: DataFrame | None = None,
 ) -> DataFrame:
     from ..functions.asof import asof_join
 
-    if right_df is None:
-        right_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
+    right_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
     return asof_join(
         df,
         right_df,
@@ -314,7 +310,6 @@ def apply_range_join(
     op: RangeJoinOperation,
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    right_df: DataFrame | None = None,
 ) -> DataFrame:
     from ..functions import range_join as R
 
@@ -323,8 +318,7 @@ def apply_range_join(
             df, key=op.key, time_col=op.time_column,
             id_col=op.id_column, tolerance=op.tolerance,
         )
-    if right_df is None:
-        right_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
+    right_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
     if op.kind == "overlap":
         return R.interval_overlap_join(
             df,
@@ -356,14 +350,12 @@ def apply_snapshot_diff(
     op: "SnapshotDiffOperation",
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    old_df: DataFrame | None = None,
 ) -> DataFrame:
     """Table-version diff: current frame = NEW snapshot, old snapshot
     resolved like bind's right side."""
     from ..functions.profile import snapshot_diff
 
-    if old_df is None:
-        old_df = resolve_side(spark, op.old_path, op.old_schema_columns, inputs)
+    old_df = resolve_side(spark, op.old_path, op.old_schema_columns, inputs)
     labeled = snapshot_diff(old_df, df, op.key_columns, op.compare_columns)
     if op.mode == "labels":
         return labeled
@@ -377,16 +369,12 @@ def apply_merge(
     op: MergeOperation,
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    changes_df: DataFrame | None = None,
 ) -> DataFrame:
     """CDC merge: current frame = base snapshot, change feed resolved
     like bind's right side."""
     from ..functions.incremental import merge_changes
 
-    if changes_df is None:
-        changes_df = resolve_side(
-            spark, op.right_file_path, op.right_schema_columns, inputs
-        )
+    changes_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
     return merge_changes(
         df,
         changes_df,
@@ -426,9 +414,6 @@ def apply_stratified_sample(df: DataFrame, op: StratifiedSampleOperation) -> Dat
 def apply_weighted_sample(df: DataFrame, op: "WeightedSampleOperation") -> DataFrame:
     from ..functions.curation import weighted_sample
 
-    require_columns(
-        df, [op.key_column, op.weight_column, *op.group_columns], "weighted_sample"
-    )
     return weighted_sample(
         df,
         op.group_columns,
@@ -663,7 +648,6 @@ def apply_line_dedup(df: DataFrame, op: "LineDedupOperation") -> DataFrame:
 def apply_html_to_text(df: DataFrame, op: "HtmlToTextOperation") -> DataFrame:
     from ..functions.curation import html_to_text
 
-    require_columns(df, [op.input_column], "html_to_text")
     out_col = op.output_column or op.input_column
     return df.withColumn(out_col, html_to_text(F.col(op.input_column)))
 
@@ -671,7 +655,6 @@ def apply_html_to_text(df: DataFrame, op: "HtmlToTextOperation") -> DataFrame:
 def apply_hll_distinct(df: DataFrame, op: "HllDistinctOperation") -> DataFrame:
     from ..functions.sketch import hll_distinct
 
-    require_columns(df, [op.key_column, *op.group_columns], "hll_distinct")
     return hll_distinct(df, op.key_column, list(op.group_columns), p=op.p)
 
 
@@ -680,24 +663,17 @@ def apply_cms_counts(
     op: "CmsCountsOperation",
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    probe_df: DataFrame | None = None,
 ) -> DataFrame:
     """Count-min build over the current frame + point queries for the
     probe side (bind's named-input-or-path convention; empty
     probe_path = the frame's own distinct keys)."""
     from ..functions.cms import cms_build, cms_estimate
 
-    require_columns(df, [op.key_column], "cms_counts")
     counters = cms_build(df, op.key_column, w=op.w, d=op.d)
-    if probe_df is None:
-        if op.probe_path:
-            probe_df = resolve_side(
-                spark, op.probe_path, op.probe_schema_columns, inputs
-            )
-        else:
-            probe_df = df.select(op.key_column).where(
-                F.col(op.key_column).isNotNull()
-            ).distinct()
+    if op.probe_path:
+        probe_df = resolve_side(spark, op.probe_path, op.probe_schema_columns, inputs)
+    else:
+        probe_df = df.select(op.key_column).where(F.col(op.key_column).isNotNull()).distinct()
     probe_key = op.probe_key_column or op.key_column
     require_columns(probe_df, [probe_key], "cms_counts (probe side)")
     # same contract as the self-probe default and the oracle: NULL keys
@@ -713,9 +689,6 @@ def apply_cms_counts(
 def apply_gap_fill(df: DataFrame, op: "GapFillOperation") -> DataFrame:
     from ..functions.timeseries import gap_fill_hourly
 
-    require_columns(
-        df, [op.key_column, op.ts_column, op.value_column], "gap_fill"
-    )
     return gap_fill_hourly(
         df,
         key=op.key_column,
@@ -730,16 +703,13 @@ def apply_bloom_gate(
     op: "BloomGateOperation",
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    eval_df: DataFrame | None = None,
 ) -> DataFrame:
     """Bloom membership gate: current frame = corpus, eval side
     resolved like bind's right side, packed once into a bitmap and
     served as a pure projection (functions/bloom.py)."""
     from ..functions.bloom import build_bloom_bitmap, with_bloom_flag
 
-    require_columns(df, [op.text_column], "bloom_gate")
-    if eval_df is None:
-        eval_df = resolve_side(spark, op.eval_path, op.eval_schema_columns, inputs)
+    eval_df = resolve_side(spark, op.eval_path, op.eval_schema_columns, inputs)
     eval_col = op.eval_text_column or op.text_column
     require_columns(eval_df, [eval_col], "bloom_gate (eval side)")
     bitmap = build_bloom_bitmap(
@@ -754,9 +724,6 @@ def apply_bloom_gate(
 def apply_quantile_sketch(df: DataFrame, op: "QuantileSketchOperation") -> DataFrame:
     from ..functions.quantile import quantile_sketch
 
-    require_columns(
-        df, [op.value_column, op.id_column, *op.group_columns], "quantile_sketch"
-    )
     return quantile_sketch(
         df, op.value_column, op.id_column, list(op.group_columns), list(op.qs),
         k=op.k, min_group_rows=op.min_group_rows,
@@ -879,11 +846,6 @@ def apply_time_weighted_avg(
 ) -> DataFrame:
     from ..functions.timeseries import time_weighted_avg
 
-    require_columns(
-        df,
-        [op.key_column, op.ts_column, op.value_column, op.id_column],
-        "time_weighted_avg",
-    )
     return time_weighted_avg(
         df, key=op.key_column, ts_col=op.ts_column, value_col=op.value_column,
         id_col=op.id_column, q_bits=op.q_bits,
@@ -893,9 +855,6 @@ def apply_time_weighted_avg(
 def apply_rollup_aggregate(df: DataFrame, op: "RollupOperation") -> DataFrame:
     from ..functions.rollup import rollup_build, rollup_coarsen, rollup_serve
 
-    require_columns(
-        df, [op.ts_column, op.value_column, *op.group_columns], "rollup_aggregate"
-    )
     groups = list(op.group_columns)
     built = rollup_build(
         df, op.ts_column, op.value_column, groups, grain=op.grain, q_bits=op.q_bits
@@ -914,7 +873,6 @@ def apply_rollup_aggregate(df: DataFrame, op: "RollupOperation") -> DataFrame:
 def apply_heavy_hitters(df: DataFrame, op: "HeavyHittersOperation") -> DataFrame:
     from ..functions.cms import cms_heavy_hitters
 
-    require_columns(df, list(op.group_columns), "heavy_hitters")
     return cms_heavy_hitters(
         df, list(op.group_columns), threshold=op.threshold, w=op.w, d=op.d,
         count_col=op.count_column,
@@ -924,9 +882,6 @@ def apply_heavy_hitters(df: DataFrame, op: "HeavyHittersOperation") -> DataFrame
 def apply_ohlc(df: DataFrame, op) -> DataFrame:
     from ..functions.timeseries import ohlc_bars
 
-    require_columns(
-        df, [op.key_column, op.ts_column, op.value_column], "ohlc"
-    )
     return ohlc_bars(
         df, op.key_column, op.ts_column, op.value_column,
         bucket_seconds=op.bucket_seconds,
@@ -936,9 +891,6 @@ def apply_ohlc(df: DataFrame, op) -> DataFrame:
 def apply_ewma(df: DataFrame, op) -> DataFrame:
     from ..functions.timeseries import ewma_smooth
 
-    require_columns(
-        df, [op.key_column, op.ts_column, op.id_column, op.value_column], "ewma"
-    )
     return ewma_smooth(
         df, op.key_column, op.ts_column, op.id_column, op.value_column,
         alpha_num=op.alpha_num, alpha_den=op.alpha_den, lookback=op.lookback,
@@ -948,10 +900,6 @@ def apply_ewma(df: DataFrame, op) -> DataFrame:
 def apply_rolling_median(df: DataFrame, op) -> DataFrame:
     from ..functions.timeseries import rolling_median
 
-    require_columns(
-        df, [op.key_column, op.ts_column, op.id_column, op.value_column],
-        "rolling_median",
-    )
     return rolling_median(
         df, op.key_column, op.ts_column, op.id_column, op.value_column,
         window_rows=op.window_rows,
@@ -961,14 +909,12 @@ def apply_rolling_median(df: DataFrame, op) -> DataFrame:
 def apply_changepoint(df: DataFrame, op) -> DataFrame:
     from ..functions.timeseries import changepoint_cusum
 
-    require_columns(df, [op.key_column, op.ts_column], "changepoint")
     return changepoint_cusum(df, op.key_column, op.ts_column)
 
 
 def apply_association_rules(df: DataFrame, op) -> DataFrame:
     from ..functions.mining import association_rules
 
-    require_columns(df, [op.basket_column, op.item_column], "association_rules")
     return association_rules(
         df, op.basket_column, op.item_column, min_count=op.min_count, k=op.k
     )
@@ -977,11 +923,6 @@ def apply_association_rules(df: DataFrame, op) -> DataFrame:
 def apply_markov(df: DataFrame, op) -> DataFrame:
     from ..functions.mining import markov_transitions
 
-    require_columns(
-        df,
-        [op.seq_column, op.order_column, op.tiebreak_column, op.state_column],
-        "markov",
-    )
     return markov_transitions(
         df, op.seq_column, op.order_column, op.tiebreak_column, op.state_column
     )
@@ -990,7 +931,6 @@ def apply_markov(df: DataFrame, op) -> DataFrame:
 def apply_skyline(df: DataFrame, op) -> DataFrame:
     from ..functions.mining import skyline2d
 
-    require_columns(df, [op.id_column, op.x_column, op.y_column], "skyline")
     return skyline2d(
         df, op.id_column, op.x_column, op.y_column,
         prune_buckets=op.prune_buckets,
@@ -1000,7 +940,6 @@ def apply_skyline(df: DataFrame, op) -> DataFrame:
 def apply_classifier_eval(df: DataFrame, op: "ClassifierEvalOperation") -> DataFrame:
     from ..functions.classifier import classifier_eval
 
-    require_columns(df, [op.label_column, op.score_column], "classifier_eval")
     return classifier_eval(
         df, op.label_column, op.score_column, thresholds=list(op.thresholds)
     )
@@ -1009,7 +948,6 @@ def apply_classifier_eval(df: DataFrame, op: "ClassifierEvalOperation") -> DataF
 def apply_classifier_score(df: DataFrame, op: "ClassifierScoreOperation") -> DataFrame:
     from ..functions.classifier import classifier_score, load_classifier_weights
 
-    require_columns(df, [op.id_column, op.text_column], "classifier_score")
     weights = (
         load_classifier_weights(op.weights_path, spark=df.sparkSession, dim=op.dim)
         if op.weights_path
@@ -1034,9 +972,6 @@ def apply_classifier_train(df: DataFrame, op: "ClassifierTrainOperation") -> Dat
         save_classifier_weights,
     )
 
-    require_columns(
-        df, [op.id_column, op.text_column, op.label_column], "classifier_train"
-    )
     # a BOOLEAN label column (e.g. a rule battery's pass flag — the
     # distillation recipe) maps true→+1 / false→-1; NULL stays NULL
     # (excluded from training, like NULL text)
@@ -1063,23 +998,18 @@ def apply_classifier_train(df: DataFrame, op: "ClassifierTrainOperation") -> Dat
 def apply_url_normalize(df: DataFrame, op: "UrlNormalizeOperation") -> DataFrame:
     from ..functions.web import url_normalize
 
-    require_columns(df, [op.url_column], "url_normalize")
     return url_normalize(df, op.url_column, op.output_column)
 
 
 def apply_domain_extract(df: DataFrame, op: "DomainExtractOperation") -> DataFrame:
     from ..functions.web import domain_extract
 
-    require_columns(df, [op.url_column], "domain_extract")
     return domain_extract(df, op.url_column, op.domain_column, op.apex_column)
 
 
 def apply_domain_quota(df: DataFrame, op: "DomainQuotaOperation") -> DataFrame:
     from ..functions.web import domain_quota
 
-    require_columns(
-        df, [op.domain_column, op.order_column, op.tie_column], "domain_quota"
-    )
     return domain_quota(
         df, op.domain_column, op.order_column, op.n_per_domain,
         op.tie_column, ascending=op.ascending,
@@ -1121,14 +1051,12 @@ def apply_store_gate(df: DataFrame, op: "StoreGateOperation") -> DataFrame:
 def apply_k_anonymity(df: DataFrame, op) -> DataFrame:
     from ..functions.integrity import k_anonymity
 
-    require_columns(df, list(op.quasi_columns), "k_anonymity")
     return k_anonymity(df, list(op.quasi_columns), op.k)
 
 
 def apply_benford(df: DataFrame, op) -> DataFrame:
     from ..functions.integrity import benford_audit
 
-    require_columns(df, [op.input_column], "benford")
     return benford_audit(df, op.input_column)
 
 
@@ -1141,9 +1069,6 @@ def apply_media_features(df: DataFrame, op) -> DataFrame:
         extract_image_features,
     )
 
-    require_columns(
-        df, [op.payload_column, op.id_column, op.mime_column], "media_features"
-    )
     fn = extract_image_features if op.modality == "image" else extract_audio_features
     return fn(
         df,
@@ -1172,7 +1097,6 @@ def _ann_store_manifest(spark: SparkSession, store_path: str) -> DataFrame:
 def apply_ann_store_build(df: DataFrame, op) -> DataFrame:
     """Corpus frame → persisted ANN store at op.store_path → build
     manifest (model.py AnnStoreBuildOperation)."""
-    require_columns(df, [op.id_column, op.vector_column], "ann_store_build")
     if op.kind == "pq":
         from ..functions.pq import build_pq_store
 
@@ -1198,7 +1122,6 @@ def apply_ann_store_append(df: DataFrame, op) -> DataFrame:
     manifest (model.py AnnStoreAppendOperation)."""
     from ..functions.similarity import append_to_ann_store
 
-    require_columns(df, [op.id_column, op.vector_column], "ann_store_append")
     append_to_ann_store(df, op.store_path, op.id_column, op.vector_column)
     return _ann_store_manifest(df.sparkSession, op.store_path)
 
@@ -1211,7 +1134,6 @@ def apply_ann_store_query(df: DataFrame, op) -> DataFrame:
     (similarity._read_ann_store_meta), which launches no Spark job."""
     from ..functions.similarity import _read_ann_store_meta, ann_store_is_pq
 
-    require_columns(df, [op.id_column, op.vector_column], "ann_store_query")
     spark = df.sparkSession
     if ann_store_is_pq(_read_ann_store_meta(spark, op.store_path), op.store_path):
         from ..functions.pq import ann_pq_from_store
@@ -1235,15 +1157,12 @@ def apply_fk_check(
     op,
     spark: SparkSession,
     inputs: dict[str, FileDefinition] | None = None,
-    parent_df: DataFrame | None = None,
 ) -> DataFrame:
     """FK orphan audit: current frame = CHILD, parent resolved like
     bind's right side."""
     from ..functions.integrity import fk_orphans
 
-    require_columns(df, [op.child_key], "fk_check")
-    if parent_df is None:
-        parent_df = resolve_side(spark, op.parent_path, op.parent_schema_columns, inputs)
+    parent_df = resolve_side(spark, op.parent_path, op.parent_schema_columns, inputs)
     require_columns(parent_df, [op.parent_key], "fk_check (parent)")
     return fk_orphans(
         [{
@@ -1259,42 +1178,34 @@ def apply_fk_check(
 def apply_seasonal_baseline(df: DataFrame, op) -> DataFrame:
     from ..functions.timeseries import seasonal_baseline
 
-    require_columns(
-        df, [op.key_column, op.ts_column, op.value_column], "seasonal_baseline"
-    )
     return seasonal_baseline(df, op.key_column, op.ts_column, op.value_column)
 
 
 def apply_autocorr(df: DataFrame, op) -> DataFrame:
     from ..functions.timeseries import autocorr_lags
 
-    require_columns(df, [op.ts_column], "autocorr")
     return autocorr_lags(df, ts_col=op.ts_column, max_lag=op.max_lag)
 
 
 def apply_item_similarity(df: DataFrame, op) -> DataFrame:
     from ..functions.mining import item_similarity
 
-    require_columns(df, [op.user_column, op.item_column], "item_similarity")
     return item_similarity(df, op.user_column, op.item_column)
 
 
 def apply_link_prediction(df: DataFrame, op) -> DataFrame:
     from ..functions.graph import link_prediction
 
-    require_columns(df, [op.group_column, op.item_column], "link_prediction")
     return link_prediction(df, op.group_column, op.item_column, k=op.k)
 
 
 def apply_ab_test(df: DataFrame, op) -> DataFrame:
     from ..functions.stats import welch_z_test
 
-    require_columns(df, [op.cohort_column, op.value_column], "ab_test")
     return welch_z_test(df, op.cohort_column, op.cohort_a, op.cohort_b, op.value_column)
 
 
 def apply_ks_test(df: DataFrame, op) -> DataFrame:
     from ..functions.stats import ks_two_sample
 
-    require_columns(df, [op.cohort_column, op.value_column], "ks_test")
     return ks_two_sample(df, op.cohort_column, op.cohort_a, op.cohort_b, op.value_column)

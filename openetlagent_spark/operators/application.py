@@ -50,7 +50,6 @@ from pyspark.sql import types as T
 
 from ..model import ApplicationOperation
 from ..types import logical_to_spark
-from .base import require_columns
 
 # The reference's exact sandbox surface (app/operations/application.py:14-17).
 SANDBOX_BUILTINS: dict[str, Any] = {
@@ -314,7 +313,6 @@ def apply_application_udf(df: DataFrame, op: ApplicationOperation) -> DataFrame:
     """The lambda as an Arrow-batched pandas UDF — the path for every
     lambda outside the compiled subset, and the reference the compiled
     path is tested against."""
-    require_columns(df, op.input_columns, "application")
     fn = compile_lambda(op.function_str)
     return_type = _infer_return_type(df, op, fn)
 
@@ -329,7 +327,6 @@ def apply_application_udf(df: DataFrame, op: ApplicationOperation) -> DataFrame:
 
 
 def apply_application(df: DataFrame, op: ApplicationOperation) -> DataFrame:
-    require_columns(df, op.input_columns, "application")
     compile_lambda(op.function_str)  # the sandbox check, on either path
     col = compile_application(op, df.schema)
     if col is None:

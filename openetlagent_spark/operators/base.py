@@ -1,11 +1,17 @@
 """Shared operator helpers.
 
-Every operator validates referenced columns up front and raises a
-ValueError naming the missing column AND the available columns — these
-messages are load-bearing in the reference (the feedback channel that
-lets an LLM generator self-correct, reference: app/main.py:276-278 and
-e.g. app/operations/equality.py:8-9).  Validation here is pure metadata
-(``df.columns``) — no Spark job is triggered.
+A missing input column raises a ValueError naming the missing column
+AND the available columns — these messages are load-bearing in the
+reference (the feedback channel that lets an LLM generator
+self-correct, reference: app/main.py:276-278 and e.g.
+app/operations/equality.py:8-9).  The runner checks the columns each
+spec declares it reads (``model.InputColumn``) before the op runs; the
+operators check only what a spec cannot declare: side-frame columns,
+columns named inside nested values, and mode-dependent ones.  A direct
+Python caller of an ``apply_*`` function skips the runner, so a
+missing column surfaces as whatever Spark raises, usually its analysis
+error.  Validation is pure metadata (``df.columns``) — no Spark job is
+triggered.
 """
 
 from __future__ import annotations

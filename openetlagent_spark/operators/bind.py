@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import BindOperation, FileDefinition
+from ..sources import scan_data
+from ..sources.io import read_csv_with_declared_schema
 from ..types import schema_to_struct
 from .base import require_columns
 
@@ -60,36 +62,27 @@ def resolve_side(
     inputs: dict[str, FileDefinition] | None,
 ) -> DataFrame:
     """Resolve a secondary frame by named input key first, then direct
-    path (reference: app/operations/bind.py:10-17).  Shared by bind and
-    the advanced two-sided operators (asof/range/similarity)."""
+    path (reference: app/operations/bind.py:10-17).  A named input is
+    scanned exactly like a flow source; a path is read by its extension
+    with ``schema_columns``.  Shared by bind and the advanced two-sided
+    operators (asof/range/similarity)."""
     if inputs and path_or_key in inputs:
-        fd = inputs[path_or_key]
-        struct = schema_to_struct(fd.file_schema.logical_types())
-        path, fmt = fd.path, fd.format
-    else:
-        struct = schema_to_struct(schema_columns) if schema_columns else None
-        path = path_or_key
-        ext = os.path.splitext(path)[1].lower().lstrip(".")
-        fmt = ext if ext in ("csv", "json", "parquet", "orc") else "csv"
+        return scan_data(spark, inputs[path_or_key])
+    struct = schema_to_struct(schema_columns) if schema_columns else None
+    path = path_or_key
+    ext = os.path.splitext(path)[1].lower().lstrip(".")
+    fmt = ext if ext in ("csv", "json", "parquet", "orc") else "csv"
 
     reader = spark.read
     if fmt == "csv":
         if struct is None:
             return reader.option("header", True).option("inferSchema", True).csv(path)
-        from ..sources.io import read_csv_with_declared_schema
-
         return read_csv_with_declared_schema(spark, path, struct)
     if fmt == "json":
         return reader.schema(struct).json(path) if struct else reader.json(path)
     if fmt == "orc":
         return reader.orc(path)
     return reader.parquet(path)
-
-
-def _read_right_side(
-    spark: SparkSession, op: BindOperation, inputs: dict[str, FileDefinition] | None
-) -> DataFrame:
-    return resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
 
 
 def apply_bind(
@@ -104,7 +97,7 @@ def apply_bind(
     caller inject an already-built DataFrame (used by tests and by flows
     binding a named in-memory input)."""
     if right_df is None:
-        right_df = _read_right_side(spark, op, inputs)
+        right_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
 
     lk, rk = op.left_keys(), op.right_keys()
 
@@ -112,7 +105,6 @@ def apply_bind(
     # columns are added (engine extension beyond the reference's four
     # join types).
     if op.how in ("semi", "anti"):
-        require_columns(df, lk, "bind")
         require_columns(right_df, rk, "bind")
         right = right_df.select(*rk)
         if broadcast:
@@ -126,7 +118,6 @@ def apply_bind(
     # appearing in columns_to_add doesn't produce a duplicate column.
     add_cols = [c for c in op.columns_to_add if c not in rk or op.how == "cross"]
     if op.how != "cross":
-        require_columns(df, lk, "bind")
         require_columns(right_df, rk + op.columns_to_add, "bind")
         right = right_df.select(*rk, *add_cols)
     else:
@@ -152,11 +143,9 @@ def apply_bind(
         right = right.withColumnRenamed(old, new)
 
     # Broadcast decision: explicit > file-size heuristic > leave to AQE.
-    if broadcast is None and op.right_file_path and not (inputs and op.right_file_path in inputs):
-        size = _file_size(op.right_file_path)
-        broadcast = size is not None and size < BROADCAST_FILE_BYTES
-    if broadcast is None and inputs and op.right_file_path in inputs:
-        size = _file_size(inputs[op.right_file_path].path)
+    if broadcast is None:
+        named = inputs and op.right_file_path in inputs
+        size = _file_size(inputs[op.right_file_path].path if named else op.right_file_path)
         broadcast = size is not None and size < BROADCAST_FILE_BYTES
     if broadcast:
         right = F.broadcast(right)

@@ -24,13 +24,12 @@ from ..model import (
     SwitchingOperation,
 )
 from ..types import logical_to_spark
-from .base import comparison_column, require_columns
+from .base import comparison_column
 
 
 def apply_equality(df: DataFrame, op: EqualityOperation) -> DataFrame:
     """Copy a column under a new name, keeping the original
     (reference: app/operations/equality.py:4-12)."""
-    require_columns(df, [op.input_column], "equality")
     return df.withColumn(op.output_column, F.col(op.input_column))
 
 
@@ -43,7 +42,6 @@ def apply_concatenation(df: DataFrame, op: ConcatenationOperation) -> DataFrame:
     *skips* nulls and would diverge, so we use ``F.concat`` with the
     separator interleaved as literals.
     """
-    require_columns(df, op.input_columns, "concatenation")
     parts = []
     for i, c in enumerate(op.input_columns):
         if i > 0 and op.separator:
@@ -72,7 +70,6 @@ def apply_casting(df: DataFrame, op: CastingOperation, *, strict: bool = True) -
     Dates parse strictly as ISO ``yyyy-MM-dd`` from strings
     (reference pipelines cast ISO strings: config.yaml:12).
     """
-    require_columns(df, [op.input_column], "casting")
     src = F.col(op.input_column)
     target = logical_to_spark(op.target_type)
     src_type = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))[op.input_column]
@@ -117,7 +114,6 @@ def apply_arithmetic(df: DataFrame, op: ArithmeticOperation) -> DataFrame:
     (reference: app/operations/arithmetic.py:4-28).  int/int ``/``
     yields double in both engines; int×float promotes to double.
     """
-    require_columns(df, op.input_columns, "arithmetic")
     left, right = (F.col(c) for c in op.input_columns)
     if op.operator == "+":
         expr = left + right
@@ -148,7 +144,6 @@ def apply_comparison(df: DataFrame, op: ComparisonOperation) -> DataFrame:
     """Compare a column against a literal → boolean COLUMN (a projection,
     not a filter — no reference operator removes rows, SURVEY §2.2;
     reference impl: app/operations/comparison.py:6-42)."""
-    require_columns(df, [op.input_column], "comparison")
     return df.withColumn(
         op.output_column, comparison_column(F.col(op.input_column), op.operator, op.value)
     )
@@ -160,11 +155,6 @@ def apply_switching(df: DataFrame, op: SwitchingOperation) -> DataFrame:
     ``default_column`` or the literal ``default_value`` (exactly one —
     reference validator app/models.py:67-76; when/then chain at
     app/operations/switching.py:26-52)."""
-    needed = [op.switch_column] + list(op.mapping.values())
-    if op.default_column is not None:
-        needed.append(op.default_column)
-    require_columns(df, needed, "switching")
-
     switch = F.col(op.switch_column)
     expr = None
     for key, source_col in op.mapping.items():

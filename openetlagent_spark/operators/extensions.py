@@ -47,14 +47,12 @@ _AGG_FNS = {
 
 
 def apply_filter(df: DataFrame, op: FilterOperation) -> DataFrame:
-    require_columns(df, [op.input_column], "filter")
     if op.operator is None:
         return df.filter(F.col(op.input_column))
     return df.filter(comparison_column(F.col(op.input_column), op.operator, op.value))
 
 
 def apply_aggregation(df: DataFrame, op: AggregationOperation) -> DataFrame:
-    require_columns(df, op.group_by, "aggregation")
     aggs = []
     for out_name, spec in op.aggregations.items():
         fn_name = spec.get("agg", "sum")
@@ -133,7 +131,6 @@ def _order_cols(columns: list[str], descending: list[bool], op_name: str):
 
 
 def apply_sort(df: DataFrame, op: SortOperation) -> DataFrame:
-    require_columns(df, op.columns, "sort")
     return df.orderBy(*_order_cols(op.columns, op.descending, "sort"))
 
 
@@ -143,7 +140,6 @@ def apply_limit(df: DataFrame, op: LimitOperation) -> DataFrame:
 
 def apply_distinct(df: DataFrame, op: DistinctOperation) -> DataFrame:
     if op.subset:
-        require_columns(df, op.subset, "distinct")
         return df.dropDuplicates(op.subset)
     return df.distinct()
 
@@ -183,7 +179,6 @@ def apply_sample(df: DataFrame, op: SampleOperation) -> DataFrame:
     or partitioning, the contract split_assign uses.  DuckDB mirror:
     sample_hash_oracle_predicate()."""
     if op.key_column:
-        require_columns(df, [op.key_column], "sample")
         bucket = (
             F.conv(
                 F.substring(
@@ -215,7 +210,6 @@ def apply_json_extract(df: DataFrame, op: JsonExtractOperation) -> DataFrame:
     For repeated extraction of many paths from huge payloads prefer
     from_json with an explicit schema (single parse); this per-path
     form matches the flow model's one-output-column shape."""
-    require_columns(df, [op.input_column], "json_extract")
     expr = F.get_json_object(F.col(op.input_column), op.json_path)
     if op.target_type is not None:
         from ..types import logical_to_spark
@@ -226,15 +220,12 @@ def apply_json_extract(df: DataFrame, op: JsonExtractOperation) -> DataFrame:
 
 def apply_select(df: DataFrame, op: SelectOperation) -> DataFrame:
     if op.columns:
-        require_columns(df, op.columns, "select")
         return df.select(*op.columns)
-    require_columns(df, op.drop_columns, "select")
     return df.drop(*op.drop_columns)
 
 
 def apply_repartition(df: DataFrame, op: RepartitionOperation) -> DataFrame:
     if op.columns:
-        require_columns(df, op.columns, "repartition")
         cols = [F.col(c) for c in op.columns]
         return (
             df.repartition(op.num_partitions, *cols) if op.num_partitions else df.repartition(*cols)
@@ -245,7 +236,6 @@ def apply_repartition(df: DataFrame, op: RepartitionOperation) -> DataFrame:
 
 
 def apply_window(df: DataFrame, op: WindowOperation) -> DataFrame:
-    require_columns(df, op.partition_by + op.order_by, "window")
     order_cols = _order_cols(op.order_by, op.descending, "window")
     w = Window.partitionBy(*op.partition_by)
     if order_cols:

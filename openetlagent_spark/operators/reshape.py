@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import FoldOperation, UnfoldOperation
-from .base import require_columns
 
 MAX_PIVOT_KEYS = 10_000
 
@@ -49,7 +48,6 @@ def _common_type(types: list[T.DataType]) -> str:
 
 
 def apply_fold(df: DataFrame, op: FoldOperation) -> DataFrame:
-    require_columns(df, op.id_columns + op.value_columns, "fold")
     field_types = {f.name: f.dataType for f in df.schema.fields}
     common = _common_type([field_types[c] for c in op.value_columns])
 
@@ -71,10 +69,7 @@ def apply_fold(df: DataFrame, op: FoldOperation) -> DataFrame:
 
 
 def apply_unfold(df: DataFrame, op: UnfoldOperation) -> DataFrame:
-    require_columns(df, op.index_columns + [op.key_column, op.value_column], "unfold")
-
     if op.order_column is not None:
-        require_columns(df, [op.order_column], "unfold")
         ordered = df
         order_col = op.order_column
     else:

@@ -9,6 +9,9 @@ semantics, one optimized distributed plan, no intermediate
 materialization.
 
 Also implements the engine-level conventions:
+- input-column check: before each op, the columns its spec declares
+  it reads (``model.columns_read``) must be on the current frame; the
+  error names the missing and the available columns;
 - temp-column drop: an ``assignation`` op whose output column is named
   ``_x_`` (leading AND trailing underscore) is dropped after all ops
   run (reference drops assignation outputs only: app/main.py:413-416);
@@ -28,8 +31,10 @@ from .model import (
     Operation,
     PipelineConfig,
     PipelineFlow,
+    columns_read,
 )
 from .operators import OPERATION_DISPATCHER, ReadsInputs
+from .operators.base import require_columns
 from .sources import save_data, scan_data
 from .validate import validate_schema
 
@@ -59,6 +64,9 @@ def apply_operations(
         entry = OPERATION_DISPATCHER.get(op.operation_type)
         if entry is None:
             raise ValueError(f"Unknown operation type: {op.operation_type!r}")
+        columns = columns_read(op)
+        if columns:
+            require_columns(current, columns, op.operation_type)
         if isinstance(entry, ReadsInputs):
             current = entry.fn(current, op, spark, inputs)
         else:

@@ -595,3 +595,58 @@ def test_bind_salt_invalid_how_raises():
 
     with pytest.raises(SpecError, match="skew_salt"):
         BindOperation(left_on="k", right_on="k", how="outer", skew_salt=4)
+
+
+# --- side inputs named by a pipeline key ----------------------------------
+
+
+def _named_inputs(spark, tmp_path):
+    """One named input per format over the same rows; the parquet one
+    declares an int64 column as float."""
+    from openetlagent_spark.model import ColumnDefinition, FileDefinition, FileSchema
+
+    def fd(path, fmt, **cols):
+        schema = FileSchema(name=fmt, columns={c: ColumnDefinition(t) for c, t in cols.items()})
+        return FileDefinition(path=str(path), format=fmt, file_schema=schema)
+
+    rows = spark.createDataFrame([Row(k=1, name="a b c"), Row(k=2, name="d e f")])
+    for fmt in ("csv", "json", "parquet", "orc"):
+        rows.write.mode("overwrite").option("header", True).format(fmt).save(str(tmp_path / fmt))
+    (tmp_path / "lines.txt").write_text("a b c\nx y z\n")
+    (tmp_path / "media").mkdir()
+    (tmp_path / "media" / "one.bin").write_bytes(b"\x00\x01")
+    return {
+        "csv": fd(tmp_path / "csv", "csv", k="integer", name="string"),
+        "json": fd(tmp_path / "json", "json", k="integer", name="string"),
+        "parquet": fd(tmp_path / "parquet", "parquet", k="float", name="string"),
+        "orc": fd(tmp_path / "orc", "orc", k="integer"),
+        "text": fd(tmp_path / "lines.txt", "text", line="string"),
+        "binary": fd(tmp_path / "media", "binary", content="binary", length="integer"),
+    }
+
+
+def test_resolve_side_reads_a_named_input_like_a_flow_source(spark, tmp_path):
+    from openetlagent_spark.operators.bind import resolve_side
+    from openetlagent_spark.sources import scan_data
+
+    inputs = _named_inputs(spark, tmp_path)
+    for key, fd in inputs.items():
+        side = resolve_side(spark, key, {"ignored": "string"}, inputs)
+        source = scan_data(spark, fd)
+        assert side.schema == source.schema, key
+        assert sorted(side.collect()) == sorted(source.collect()), key
+    assert dict(resolve_side(spark, "parquet", None, inputs).dtypes)["k"] == "double"
+
+
+def test_contamination_against_a_named_text_benchmark(spark, tmp_path):
+    from openetlagent_spark.model import ContaminationOperation
+    from openetlagent_spark.runner import apply_operations
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="a b c"), Row(doc_id=2, text="p q r")]
+    )
+    op = ContaminationOperation(
+        benchmark_path="text", benchmark_text_column="line", rate_threshold=0.5
+    )
+    out = apply_operations(docs, [op], spark, _named_inputs(spark, tmp_path))
+    assert {r["doc_id"]: r["contaminated"] for r in out.collect()} == {1: True, 2: False}

@@ -5,6 +5,8 @@ from __future__ import annotations
 import os
 import re
 
+import yaml
+
 from openetlagent_spark import __main__ as cli
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -28,3 +30,16 @@ def test_explain_reports_the_jobs_planning_launched(spark, capsys, monkeypatch):
     assert {k: jobs[k] for k in BENCHMARK_FLOWS} == dict.fromkeys(BENCHMARK_FLOWS, 0)
     assert jobs["duplicate_order_pairs"] >= 1
     assert out.count("== Physical Plan ==") == len(jobs)
+
+
+def test_explain_names_an_unknown_flow_source(spark, tmp_path, caplog, monkeypatch):
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    table = {"path": str(tmp_path / "t.csv"), "format": "csv",
+             "file_schema": {"name": "t", "columns": {"a": {"type": "string"}}}}
+    (tmp_path / "config.yaml").write_text(
+        yaml.safe_dump({"inputs": {"orders": table}, "outputs": {"x": table}})
+    )
+    (tmp_path / "x.yaml").write_text("source: nosuch\noperations: []\n")
+    argv = [str(tmp_path / "config.yaml"), "--pipelines-dir", str(tmp_path), "--explain"]
+    assert cli.main(argv) == 1
+    assert "output 'x' failed: flow source 'nosuch' not in config inputs ['orders']" in caplog.text

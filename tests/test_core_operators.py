@@ -37,9 +37,11 @@ def test_equality_copies_column(spark):
 
 
 def test_equality_missing_column_names_available(spark):
+    from openetlagent_spark.runner import apply_operations
+
     df = spark.createDataFrame([Row(a=1)])
     with pytest.raises(ValueError, match=r"\['nope'\].*Available columns.*'a'"):
-        apply_equality(df, EqualityOperation(input_column="nope", output_column="b"))
+        apply_operations(df, [EqualityOperation(input_column="nope", output_column="b")], spark)
 
 
 def test_concatenation_null_propagates(spark):

@@ -306,12 +306,12 @@ def test_select_requires_exactly_one():
         SelectOperation(columns=["a"], drop_columns=["b"])
 
 
-def test_select_missing_column_raises(sales):
+def test_select_missing_column_raises(spark, sales):
     from openetlagent_spark.model import SelectOperation
-    from openetlagent_spark.operators import apply_select
+    from openetlagent_spark.runner import apply_operations
 
     with pytest.raises(ValueError, match="nope"):
-        apply_select(sales, SelectOperation(columns=["nope"]))
+        apply_operations(sales, [SelectOperation(columns=["nope"])], spark)
 
 
 def test_aggregation_approx_percentile(spark):

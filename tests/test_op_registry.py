@@ -6,6 +6,7 @@ here launches a Spark job."""
 from __future__ import annotations
 
 import copy
+import dataclasses
 import functools
 import math
 import os
@@ -27,7 +28,9 @@ from openetlagent_spark.model import (
     UnionOperation,
     _conforms,
     _field_types,
+    _input_fields,
     _operation_types,
+    columns_read,
     parse_operation,
 )
 from openetlagent_spark.operators import OPERATION_DISPATCHER, ReadsInputs
@@ -59,6 +62,27 @@ def test_duplicate_operation_type_refused():
         _operation_types()
 
 
+class _EveryColumn(list):
+    def __contains__(self, name):
+        return True
+
+
+class _Frame:
+    """A frame stub: the runner reads only its ``columns``."""
+
+    def __init__(self, columns):
+        self.columns = columns
+
+
+def _with_defaults(cls):
+    """A spec holding its class defaults, built without the field check."""
+    op = cls.__new__(cls)
+    for f in dataclasses.fields(cls):
+        default = f.default_factory() if f.default is dataclasses.MISSING else f.default
+        setattr(op, f.name, default)
+    return op
+
+
 def test_runner_passes_spark_and_inputs_to_exactly_the_input_ops(monkeypatch):
     calls = {}
 
@@ -74,9 +98,9 @@ def test_runner_passes_spark_and_inputs_to_exactly_the_input_ops(monkeypatch):
             OPERATION_DISPATCHER, name,
             ReadsInputs(fn) if isinstance(entry, ReadsInputs) else fn,
         )
-    df, spark, inputs = object(), object(), {"orders": object()}
+    df, spark, inputs = _Frame(_EveryColumn()), object(), {"orders": object()}
     for name, cls in OPERATION_TYPES.items():
-        op = cls.__new__(cls)  # class defaults only; no __post_init__ guard
+        op = _with_defaults(cls)  # no __post_init__ guard
         assert runner.apply_operations(df, [op], spark, inputs) is df
     assert set(calls) == set(OPERATION_TYPES)
     assert {n for n, extra in calls.items() if extra} == INPUT_OPS
@@ -205,7 +229,7 @@ def _contract_values(tp, sample) -> tuple[list, list]:
             if isinstance(mark, NonEmpty):
                 ok.append(sample)
                 bad += [type(sample)(), None]
-            else:
+            elif isinstance(mark, Bound):
                 b_ok, b_bad = _bound_values(mark, _number_type(args[0]))
                 ok += b_ok
                 bad += b_bad
@@ -308,3 +332,52 @@ def test_spec_checks_cannot_bypass_the_field_check():
 
             def __post_init__(self) -> None:
                 pass
+
+
+# the op types whose columns all depend on a mode or on other fields,
+# sit in nested values or on a side frame, or that read no column
+UNDECLARED_READS = {
+    "assignation", "limit", "union", "dedup", "range_join", "mixture",
+    "provenance", "sql_transform", "expectations",
+}
+INPUT_FIELDS = [
+    (op_type, name)
+    for op_type, cls in sorted(OPERATION_TYPES.items())
+    for name in _input_fields(cls)
+]
+
+
+def test_input_column_fields_cover_every_reading_op():
+    assert {t for t, _ in INPUT_FIELDS} == set(OPERATION_TYPES) - UNDECLARED_READS
+    assert len(INPUT_FIELDS) >= 160
+
+
+def _pointing_at(value, column):
+    """``value`` with its first column name replaced by ``column``."""
+    if isinstance(value, dict):
+        return {**value, next(iter(value), "k"): column}
+    if isinstance(value, list):
+        return [column, *value[1:]]
+    return column
+
+
+@pytest.mark.parametrize("op_type,field", INPUT_FIELDS)
+def test_runner_names_a_missing_input_column_before_the_op_runs(op_type, field, monkeypatch):
+    def op_ran(*args):
+        raise AssertionError(f"{op_type} ran")
+
+    entry = OPERATION_DISPATCHER[op_type]
+    monkeypatch.setitem(
+        OPERATION_DISPATCHER, op_type,
+        ReadsInputs(op_ran) if isinstance(entry, ReadsInputs) else op_ran,
+    )
+    op = parse_operation(copy.deepcopy(_documented_specs()[op_type]))
+    available = [c for c in columns_read(op) if c != "nope"]
+    op = copy.copy(op)
+    setattr(op, field, _pointing_at(getattr(op, field), "nope"))
+    msg = (
+        f"Operation '{op_type}': input column(s) ['nope'] not found. "
+        f"Available columns: {available}"
+    )
+    with pytest.raises(ValueError, match=f"^{re.escape(msg)}$"):
+        runner.apply_operations(_Frame(available), [op], object(), {})

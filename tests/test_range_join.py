@@ -136,3 +136,31 @@ def test_interval_overlap_join_refuses_degenerate_span(spark):
             left_start="s", left_end="e", right_start="s", right_end="e",
             bucket_width_seconds=1.0, max_interval_buckets=100,
         ).collect()
+
+
+RANGE_JOIN_KINDS = {
+    "tolerance": {"key": "k", "time_column": "t", "id_column": "i"},
+    "interval": {
+        "right_file_path": "r", "left_on": "k", "right_on": "k", "time_column": "t",
+        "start_column": "s", "end_column": "e", "value_columns": ["v"],
+    },
+    "overlap": {
+        "right_file_path": "r", "key": "k", "left_id_column": "a", "right_id_column": "b",
+        "left_start_column": "ls", "left_end_column": "le", "start_column": "s",
+        "end_column": "e",
+    },
+}
+
+
+@pytest.mark.parametrize("kind", sorted(RANGE_JOIN_KINDS))
+@pytest.mark.parametrize("field", ["tolerance", "bucket_width"])
+@pytest.mark.parametrize("value", [float("nan"), 0, -1])
+def test_range_join_refuses_non_positive_widths_under_every_kind(kind, field, value):
+    from openetlagent_spark.model import SpecError, parse_operation
+
+    raw = {"operation_type": "range_join", "kind": kind, **RANGE_JOIN_KINDS[kind]}
+    assert parse_operation(dict(raw)).kind == kind
+    with pytest.raises(
+        SpecError, match=rf"^range_join {field} must be positive, got {value!r}$"
+    ):
+        parse_operation({**raw, field: value})
