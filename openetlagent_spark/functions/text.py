@@ -281,6 +281,34 @@ def split_assign_oracle_sql(
     return case + f" END AS {output_column}"
 
 
+SAMPLE_BUCKETS = 10_000  # basis-point granularity of the hash sample
+
+
+def with_hash_sample(df: DataFrame, key_col: str, fraction: float, seed: int = 42) -> DataFrame:
+    """Deterministic md5-bucket sample (seed-salted): the identical row
+    set on any engine or partitioning, the contract split_assign uses.
+    DuckDB mirror: sample_hash_oracle_predicate()."""
+    bucket = (
+        F.conv(
+            F.substring(F.md5(F.concat(F.col(key_col).cast("string"), F.lit(f":{seed}"))), 1, 8),
+            16,
+            10,
+        ).cast("long")
+        % SAMPLE_BUCKETS
+    )
+    return df.filter(bucket < int(round(fraction * SAMPLE_BUCKETS)))
+
+
+def sample_hash_oracle_predicate(key_col: str, fraction: float, seed: int = 42) -> str:
+    """DuckDB WHERE-clause mirror of with_hash_sample — generated from
+    the same constants so the two cannot drift."""
+    bucket = (
+        f"(CAST(('0x' || substr(md5(CAST({key_col} AS VARCHAR) || ':{seed}'), 1, 8)) AS BIGINT) "
+        f"% {SAMPLE_BUCKETS})"
+    )
+    return f"{bucket} < {int(round(fraction * SAMPLE_BUCKETS))}"
+
+
 def lang_id_oracle_sql(table: str = "documents", text_col: str = "text") -> str:
     """The DuckDB mirror of with_lang_id, generated from the same
     stopword tables so the two can never drift apart."""

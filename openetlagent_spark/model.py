@@ -141,7 +141,7 @@ class Operation:
 class EqualityOperation(Operation):
     """Copy a column under a new name (reference: app/models.py:46-48)."""
 
-    input_column: Reads[str] = ""
+    input_column: Required[Reads[str]] = ""
     operation_type: str = "equality"
 
 
@@ -176,7 +176,7 @@ class SwitchingOperation(Operation):
     (reference: app/models.py:60-76).  Exactly one of default_column /
     default_value must be set (validator at app/models.py:67-76)."""
 
-    switch_column: Reads[str] = ""
+    switch_column: Required[Reads[str]] = ""
     mapping: dict[Any, Reads[str]] = field(default_factory=dict)
     default_column: Reads[str | None] = None
     default_value: Any = None
@@ -203,7 +203,7 @@ class CastingOperation(Operation):
     """Cast one column to one of the logical types
     (reference: app/models.py:82-85)."""
 
-    input_column: Reads[str] = ""
+    input_column: Required[Reads[str]] = ""
     target_type: str = "string"
     operation_type: str = "casting"
 
@@ -230,7 +230,7 @@ class ComparisonOperation(Operation):
     """Compare a column to a literal producing a boolean *column* — a
     projection, NOT a row filter (reference: app/models.py:92-96)."""
 
-    input_column: Reads[str] = ""
+    input_column: Required[Reads[str]] = ""
     operator: Literal["==", "!=", ">", "<", ">=", "<="] = "=="
     value: Any = None
     operation_type: str = "comparison"
@@ -299,8 +299,8 @@ class UnfoldOperation(Operation):
     captured at scan time is used."""
 
     index_columns: list[Reads[str]] = field(default_factory=list)
-    key_column: Reads[str] = ""
-    value_column: Reads[str] = ""
+    key_column: Required[Reads[str]] = ""
+    value_column: Required[Reads[str]] = ""
     order_column: Reads[str | None] = None
     operation_type: str = "unfold"
 
@@ -315,7 +315,7 @@ class FilterOperation(Operation):
     needs one.  Either a boolean ``input_column`` or a (column, operator,
     value) predicate like comparison."""
 
-    input_column: Reads[str] = ""
+    input_column: Required[Reads[str]] = ""
     operator: str | None = None
     value: Any = None
     operation_type: str = "filter"
@@ -381,7 +381,7 @@ class JsonExtractOperation(Operation):
     'no array/map/json functions').  Malformed JSON or a missing path
     yields NULL (get_json_object semantics)."""
 
-    input_column: Reads[str] = ""
+    input_column: Required[Reads[str]] = ""
     json_path: str = "$"
     target_type: str | None = None
     operation_type: str = "json_extract"
@@ -1227,7 +1227,6 @@ class GopherRulesOperation(Operation):
     ``gopher_pass``; mode='annotate' keeps metrics and flags,
     mode='filter' keeps only passing rows of the ORIGINAL frame."""
 
-    id_column: str = "doc_id"
     text_column: Reads[str] = "text"
     mode: GateMode = "annotate"
     min_words: int = 5

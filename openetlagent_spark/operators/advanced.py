@@ -19,7 +19,6 @@ from ..model import (
     ClusteringOperation,
     ContaminationOperation,
     DedupOperation,
-    FileDefinition,
     IncrementalDedupOperation,
     InvertedIndexOperation,
     BigramLmOperation,
@@ -44,7 +43,7 @@ from ..model import (
     StratifiedSampleOperation,
     VocabOovOperation,
 )
-from .base import require_columns
+from .base import Inputs, read_input, require_columns
 from .bind import resolve_side
 
 
@@ -52,8 +51,7 @@ def apply_contamination(
     df: DataFrame,
     op: ContaminationOperation,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
-    bench_df: DataFrame | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """Benchmark-contamination check: current frame = corpus, benchmark
     resolved like bind's right side.  mode='annotate' returns the
@@ -61,10 +59,7 @@ def apply_contamination(
     the ORIGINAL frame (all columns preserved)."""
     from ..functions.curation import contamination_check, near_contamination
 
-    if bench_df is None:
-        bench_df = resolve_side(
-            spark, op.benchmark_path, op.benchmark_schema_columns, inputs
-        )
+    bench_df = resolve_side(spark, op.benchmark_path, op.benchmark_schema_columns, inputs)
     if op.strategy == "near":
         bench_side = bench_df
         if op.benchmark_text_column and op.benchmark_text_column != op.text_column:
@@ -261,7 +256,7 @@ def apply_similarity(
     df: DataFrame,
     op: SimilarityOperation,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """ANN top-k: current frame = corpus, queries resolved like bind's
     right side."""
@@ -286,7 +281,7 @@ def apply_asof_join(
     df: DataFrame,
     op: AsofJoinOperation,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     from ..functions.asof import asof_join
 
@@ -309,7 +304,7 @@ def apply_range_join(
     df: DataFrame,
     op: RangeJoinOperation,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     from ..functions import range_join as R
 
@@ -349,7 +344,7 @@ def apply_snapshot_diff(
     df: DataFrame,
     op: "SnapshotDiffOperation",
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """Table-version diff: current frame = NEW snapshot, old snapshot
     resolved like bind's right side."""
@@ -368,7 +363,7 @@ def apply_merge(
     df: DataFrame,
     op: MergeOperation,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """CDC merge: current frame = base snapshot, change feed resolved
     like bind's right side."""
@@ -524,16 +519,14 @@ def apply_incremental_dedup(
     df: DataFrame,
     op: IncrementalDedupOperation,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
-    corpus_df: DataFrame | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """Append-batch dedup: current frame = incoming batch, corpus
     resolved like bind's right side.  strategy='near' swaps the exact
     fingerprint key for banded MinHash near-duplication."""
     from ..functions.incremental import incremental_dedup, incremental_neardup
 
-    if corpus_df is None:
-        corpus_df = resolve_side(spark, op.corpus_path, op.corpus_schema_columns, inputs)
+    corpus_df = resolve_side(spark, op.corpus_path, op.corpus_schema_columns, inputs)
     if op.strategy == "near":
         return incremental_neardup(
             df, corpus_df, op.id_column, op.text_column, mode=op.mode,
@@ -600,7 +593,7 @@ def apply_gopher_rules(df: DataFrame, op: "GopherRulesOperation") -> DataFrame:
     # a pure projection — no join back, no id-uniqueness assumption,
     # and the frame is evaluated exactly once
     flagged = gopher_rules(
-        df, op.id_column, op.text_column,
+        df, text_col=op.text_column,
         min_words=op.min_words, max_words=op.max_words,
         min_mean_word_len=op.min_mean_word_len,
         max_mean_word_len=op.max_mean_word_len,
@@ -662,7 +655,7 @@ def apply_cms_counts(
     df: DataFrame,
     op: "CmsCountsOperation",
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """Count-min build over the current frame + point queries for the
     probe side (bind's named-input-or-path convention; empty
@@ -702,7 +695,7 @@ def apply_bloom_gate(
     df: DataFrame,
     op: "BloomGateOperation",
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """Bloom membership gate: current frame = corpus, eval side
     resolved like bind's right side, packed once into a bitmap and
@@ -733,8 +726,8 @@ def apply_quantile_sketch(df: DataFrame, op: "QuantileSketchOperation") -> DataF
 def apply_sql_transform(
     df: DataFrame,
     op: "SqlTransformOperation",
-    spark=None,
-    inputs: dict | None = None,
+    spark: SparkSession,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """Register the frame under the spec's view name (plus any
     ``views``-declared pipeline inputs under theirs), run the SELECT,
@@ -752,11 +745,8 @@ def apply_sql_transform(
       via ``WITH x AS (...) INSERT INTO ...``, and spark.sql would
       EXECUTE such a statement eagerly, mutating catalogs from inside
       a pipeline op."""
-    spark = spark or df.sparkSession
     side_frames: dict[str, DataFrame] = {}
     if op.views:
-        from ..sources import scan_data
-
         inputs = inputs or {}
         missing = [k for k in op.views.values() if k not in inputs]
         if missing:
@@ -765,7 +755,7 @@ def apply_sql_transform(
                 f"pipeline inputs {sorted(inputs)}"
             )
         side_frames = {
-            vname: scan_data(spark, inputs[key]) for vname, key in op.views.items()
+            vname: read_input(spark, inputs[key]) for vname, key in op.views.items()
         }
     all_views = [op.view, *side_frames]
     existing = {
@@ -1156,7 +1146,7 @@ def apply_fk_check(
     df: DataFrame,
     op,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
     """FK orphan audit: current frame = CHILD, parent resolved like
     bind's right side."""

@@ -12,8 +12,8 @@ suffix (pipelines/enriched_output_def.yaml:37-39).
 Scale design:
 - The right side stays a lazy scan; Catalyst prunes columns and pushes
   filters into it.
-- Small right sides are broadcast: explicit ``broadcast`` hint, else a
-  file-size heuristic (< ``BROADCAST_FILE_BYTES``).  On a cluster AQE
+- Small right sides are broadcast: a broadcast-hinted named frame, else
+  a file-size heuristic (< ``BROADCAST_FILE_BYTES``).  On a cluster AQE
   additionally converts shuffle joins to broadcast at runtime.
 - ``outer`` joins coalesce the two key columns into ``left_on`` so the
   key survives unmatched right rows.
@@ -26,11 +26,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..model import BindOperation, FileDefinition
-from ..sources import scan_data
+from ..model import BindOperation
 from ..sources.io import read_csv_with_declared_schema
 from ..types import schema_to_struct
-from .base import require_columns
+from .base import Inputs, read_input, require_columns
 
 BROADCAST_FILE_BYTES = 256 * 1024 * 1024  # pre-compression parquet/csv bytes
 
@@ -59,15 +58,15 @@ def resolve_side(
     spark: SparkSession,
     path_or_key: str,
     schema_columns: dict[str, str] | None,
-    inputs: dict[str, FileDefinition] | None,
+    inputs: Inputs | None,
 ) -> DataFrame:
     """Resolve a secondary frame by named input key first, then direct
     path (reference: app/operations/bind.py:10-17).  A named input is
-    scanned exactly like a flow source; a path is read by its extension
-    with ``schema_columns``.  Shared by bind and the advanced two-sided
+    read by ``read_input``; a path is read by its extension with
+    ``schema_columns``.  Shared by bind and the advanced two-sided
     operators (asof/range/similarity)."""
     if inputs and path_or_key in inputs:
-        return scan_data(spark, inputs[path_or_key])
+        return read_input(spark, inputs[path_or_key])
     struct = schema_to_struct(schema_columns) if schema_columns else None
     path = path_or_key
     ext = os.path.splitext(path)[1].lower().lstrip(".")
@@ -89,15 +88,10 @@ def apply_bind(
     df: DataFrame,
     op: BindOperation,
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
-    right_df: DataFrame | None = None,
-    broadcast: bool | None = None,
+    inputs: Inputs | None = None,
 ) -> DataFrame:
-    """Join ``df`` with the resolved right side.  ``right_df`` lets a
-    caller inject an already-built DataFrame (used by tests and by flows
-    binding a named in-memory input)."""
-    if right_df is None:
-        right_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
+    """Join ``df`` with the resolved right side."""
+    right_df = resolve_side(spark, op.right_file_path, op.right_schema_columns, inputs)
 
     lk, rk = op.left_keys(), op.right_keys()
 
@@ -107,8 +101,6 @@ def apply_bind(
     if op.how in ("semi", "anti"):
         require_columns(right_df, rk, "bind")
         right = right_df.select(*rk)
-        if broadcast:
-            right = F.broadcast(right)
         how = "left_semi" if op.how == "semi" else "left_anti"
         cond = _and_all(df[l] == right[r] for l, r in zip(lk, rk))
         return df.join(right, cond, how)
@@ -142,10 +134,13 @@ def apply_bind(
     for old, new in renames.items():
         right = right.withColumnRenamed(old, new)
 
-    # Broadcast decision: explicit > file-size heuristic > leave to AQE.
-    if broadcast is None:
-        named = inputs and op.right_file_path in inputs
-        size = _file_size(inputs[op.right_file_path].path if named else op.right_file_path)
+    # Broadcast decision: a small right file gets a hint; a named frame
+    # has no file size and keeps whatever hint its caller gave it.
+    source = inputs.get(op.right_file_path) if inputs else None
+    if isinstance(source, DataFrame):
+        broadcast = False
+    else:
+        size = _file_size(source.path if source else op.right_file_path)
         broadcast = size is not None and size < BROADCAST_FILE_BYTES
     if broadcast:
         right = F.broadcast(right)

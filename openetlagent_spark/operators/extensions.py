@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from ..model import (
     AggregationOperation,
     DistinctOperation,
-    FileDefinition,
     FilterOperation,
     JsonExtractOperation,
     LimitOperation,
@@ -28,8 +27,7 @@ from ..model import (
     UnionOperation,
     WindowOperation,
 )
-from ..sources import scan_data
-from .base import comparison_column, require_columns
+from .base import Inputs, comparison_column, read_input, require_columns
 
 _AGG_FNS = {
     "sum": F.sum,
@@ -144,7 +142,19 @@ def apply_distinct(df: DataFrame, op: DistinctOperation) -> DataFrame:
     return df.distinct()
 
 
-def apply_union(df: DataFrame, op: UnionOperation, right_df: DataFrame) -> DataFrame:
+def apply_union(
+    df: DataFrame,
+    op: UnionOperation,
+    spark: SparkSession,
+    inputs: Inputs | None,
+) -> DataFrame:
+    """Set operation with the named pipeline input ``op.right_input``."""
+    if not inputs or op.right_input not in inputs:
+        raise ValueError(
+            f"union: right input '{op.right_input}' not found in pipeline inputs "
+            f"{sorted(inputs) if inputs else []}"
+        )
+    right_df = read_input(spark, inputs[op.right_input])
     if op.mode == "distinct":
         return df.unionByName(right_df, allowMissingColumns=False).distinct()
     if op.mode == "intersect":
@@ -154,55 +164,14 @@ def apply_union(df: DataFrame, op: UnionOperation, right_df: DataFrame) -> DataF
     return df.unionByName(right_df, allowMissingColumns=False)
 
 
-def apply_union_input(
-    df: DataFrame,
-    op: UnionOperation,
-    spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None,
-) -> DataFrame:
-    """``union`` as a flow op: the right side is the named pipeline
-    input ``op.right_input``, scanned like the flow source."""
-    if not inputs or op.right_input not in inputs:
-        raise ValueError(
-            f"union: right input '{op.right_input}' not found in pipeline inputs "
-            f"{sorted(inputs) if inputs else []}"
-        )
-    return apply_union(df, op, scan_data(spark, inputs[op.right_input]))
-
-
-SAMPLE_BUCKETS = 10_000  # basis-point granularity of the hash sample
-
-
 def apply_sample(df: DataFrame, op: SampleOperation) -> DataFrame:
-    """Bernoulli by default; with ``key_column``, a deterministic
-    md5-bucket sample (seed-salted) — identical row set on any engine
-    or partitioning, the contract split_assign uses.  DuckDB mirror:
-    sample_hash_oracle_predicate()."""
+    """Bernoulli by default; with ``key_column``, the deterministic
+    md5-bucket sample of ``functions.text.with_hash_sample``."""
     if op.key_column:
-        bucket = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col(op.key_column).cast("string"), F.lit(f":{op.seed}"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % SAMPLE_BUCKETS
-        )
-        return df.filter(bucket < int(round(op.fraction * SAMPLE_BUCKETS)))
+        from ..functions.text import with_hash_sample
+
+        return with_hash_sample(df, op.key_column, op.fraction, op.seed)
     return df.sample(withReplacement=False, fraction=op.fraction, seed=op.seed)
-
-
-def sample_hash_oracle_predicate(key_col: str, fraction: float, seed: int = 42) -> str:
-    """DuckDB WHERE-clause mirror of the key_column sample — generated
-    from the same constants so the two cannot drift."""
-    bucket = (
-        f"(CAST(('0x' || substr(md5(CAST({key_col} AS VARCHAR) || ':{seed}'), 1, 8)) AS BIGINT) "
-        f"% {SAMPLE_BUCKETS})"
-    )
-    return f"{bucket} < {int(round(fraction * SAMPLE_BUCKETS))}"
 
 
 def apply_json_extract(df: DataFrame, op: JsonExtractOperation) -> DataFrame:

@@ -32,15 +32,7 @@ from ..model import (
     UnionOperation,
     WindowOperation,
 )
-from ..operators import (
-    apply_aggregation,
-    apply_bind,
-    apply_filter,
-    apply_limit,
-    apply_sort,
-    apply_union,
-    apply_window,
-)
+from ..runner import apply_operations
 
 
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -61,13 +53,12 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey")
     )
     hit = orders.join(returned, orders["o_orderkey"] == returned["l_orderkey"], "left_semi")
-    return apply_aggregation(
-        hit,
+    return apply_operations(hit, [
         AggregationOperation(
             group_by=["o_orderpriority"],
             aggregations={"order_count": {"column": "*", "agg": "count"}},
         ),
-    )
+    ], spark)
 
 
 TPCH_Q4_SQL = """
@@ -85,8 +76,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem(R) ⋈ orders(date window) ⋈ customer ⋈ nation.  customer
     and nation are broadcast; the only shuffle is the final group-by."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -94,12 +84,10 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_custkey", "o_orderdate"],
         ),
-        spark,
-    ).filter(
+    ], spark).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01")) & (F.col("o_orderdate") < F.lit("1996-04-01"))
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/customer.parquet",
             left_on="o_custkey",
@@ -107,10 +95,6 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["c_name", "c_acctbal", "c_nationkey"],
         ),
-        spark,
-    )
-    li = apply_bind(
-        li,
         BindOperation(
             right_file_path=f"{sf_dir}/nation.parquet",
             left_on="c_nationkey",
@@ -118,27 +102,27 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["n_name"],
         ),
-        spark,
-    )
+    ], spark)
     li = li.withColumn(
         "rev_dec",
         (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,6)"),
     )
-    agg = apply_aggregation(
-        li,
+    agg = apply_operations(li, [
         AggregationOperation(
             group_by=["o_custkey", "c_name", "c_acctbal", "n_name"],
             aggregations={"revenue_dec": {"column": "rev_dec", "agg": "sum"}},
         ),
-    ).select(
+    ], spark).select(
         F.col("o_custkey").alias("c_custkey"),
         "c_name",
         "c_acctbal",
         "n_name",
         F.col("revenue_dec").cast("double").alias("revenue"),
     )
-    ranked = apply_sort(agg, SortOperation(columns=["revenue", "c_custkey"], descending=[True, False]))
-    return apply_limit(ranked, LimitOperation(n=20))
+    return apply_operations(agg, [
+        SortOperation(columns=["revenue", "c_custkey"], descending=[True, False]),
+        LimitOperation(n=20),
+    ], spark)
 
 
 TPCH_Q10_SQL = """
@@ -164,8 +148,7 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01")) & (F.col("l_shipdate") < F.lit("1997-01-01"))
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -173,14 +156,12 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_orderpriority"],
         ),
-        spark,
-    )
+    ], spark)
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     li = li.withColumn("high_flag", F.when(high, F.lit(1)).otherwise(F.lit(0))).withColumn(
         "low_flag", F.when(high, F.lit(0)).otherwise(F.lit(1))
     )
-    return apply_aggregation(
-        li,
+    return apply_operations(li, [
         AggregationOperation(
             group_by=["l_linestatus"],
             aggregations={
@@ -188,7 +169,7 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "low_line_count": {"column": "low_flag", "agg": "sum"},
             },
         ),
-    )
+    ], spark)
 
 
 TPCH_Q12_SQL = """
@@ -208,8 +189,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01")) & (F.col("l_shipdate") < F.lit("1996-04-01"))
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/part.parquet",
             left_on="l_partkey",
@@ -217,8 +197,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["p_type"],
         ),
-        spark,
-    )
+    ], spark)
     rev = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,6)")
     li = li.withColumn("rev_dec", rev).withColumn(
         "promo_rev_dec",
@@ -226,8 +205,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("decimal(18,6)")
         ),
     )
-    agg = apply_aggregation(
-        li,
+    agg = apply_operations(li, [
         AggregationOperation(
             group_by=[],
             aggregations={
@@ -235,7 +213,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_dec": {"column": "rev_dec", "agg": "sum"},
             },
         ),
-    )
+    ], spark)
     return agg.select(
         (
             F.lit(100.0) * F.col("promo_dec").cast("double") / F.col("total_dec").cast("double")
@@ -259,21 +237,17 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(qty) > 300, join the few survivors back to orders ⋈ customer.
     The having-filter runs BEFORE the join-back, so the second join's
     probe side is tiny (classic aggregate-then-join ordering)."""
-    qty = apply_aggregation(
-        _t(spark, sf_dir, "lineitem").withColumn(
-            "qty_dec", F.col("l_quantity").cast("decimal(18,2)")
-        ),
+    li = _t(spark, sf_dir, "lineitem").withColumn(
+        "qty_dec", F.col("l_quantity").cast("decimal(18,2)")
+    )
+    qty = apply_operations(li, [
         AggregationOperation(
             group_by=["l_orderkey"],
             aggregations={"sum_qty_dec": {"column": "qty_dec", "agg": "sum"}},
         ),
-    )
-    big = apply_filter(
-        qty.withColumn("sum_qty", F.col("sum_qty_dec").cast("double")),
+    ], spark)
+    out = apply_operations(qty.withColumn("sum_qty", F.col("sum_qty_dec").cast("double")), [
         FilterOperation(input_column="sum_qty", operator=">", value=300),
-    )
-    out = apply_bind(
-        big,
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -281,10 +255,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_custkey", "o_orderdate", "o_totalprice"],
         ),
-        spark,
-    )
-    out = apply_bind(
-        out,
         BindOperation(
             right_file_path=f"{sf_dir}/customer.parquet",
             left_on="o_custkey",
@@ -292,8 +262,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["c_name"],
         ),
-        spark,
-    )
+    ], spark)
     out = out.select(
         F.col("o_custkey").alias("c_custkey"),
         "c_name",
@@ -302,10 +271,10 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "sum_qty",
     )
-    ranked = apply_sort(
-        out, SortOperation(columns=["o_totalprice", "o_orderkey"], descending=[True, False])
-    )
-    return apply_limit(ranked, LimitOperation(n=100))
+    return apply_operations(out, [
+        SortOperation(columns=["o_totalprice", "o_orderkey"], descending=[True, False]),
+        LimitOperation(n=100),
+    ], spark)
 
 
 TPCH_Q18_SQL = """
@@ -335,30 +304,24 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
         (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"),
     )
-    supply = apply_aggregation(
-        li,
+    supply = apply_operations(li, [
         AggregationOperation(
             group_by=["l_partkey", "l_suppkey"],
             aggregations={"supply_cost": {"column": "unit_price", "agg": "min"}},
         ),
-    )
+    ], spark)
     part = _t(spark, sf_dir, "part").filter(
         (F.col("p_type") == "STANDARD") & (F.col("p_size") <= 10)
     )
-    out = apply_bind(
-        supply,
+    europe = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    ranked = apply_operations(supply, [
         BindOperation(
-            right_file_path=f"{sf_dir}/part.parquet",
+            right_file_path="part",
             left_on="l_partkey",
             right_on="p_partkey",
             how="inner",
             columns_to_add=["p_type", "p_size"],
         ),
-        spark,
-        right_df=part,
-    )
-    out = apply_bind(
-        out,
         BindOperation(
             right_file_path=f"{sf_dir}/supplier.parquet",
             left_on="l_suppkey",
@@ -366,10 +329,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["s_name", "s_acctbal", "s_nationkey"],
         ),
-        spark,
-    )
-    out = apply_bind(
-        out,
         BindOperation(
             right_file_path=f"{sf_dir}/nation.parquet",
             left_on="s_nationkey",
@@ -377,23 +336,13 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["n_name", "n_regionkey"],
         ),
-        spark,
-    )
-    europe = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    out = apply_bind(
-        out,
         BindOperation(
-            right_file_path=f"{sf_dir}/region.parquet",
+            right_file_path="europe",
             left_on="n_regionkey",
             right_on="r_regionkey",
             how="inner",
             columns_to_add=["r_name"],
         ),
-        spark,
-        right_df=europe,
-    )
-    ranked = apply_window(
-        out,
         WindowOperation(
             function="row_number",
             partition_by=["l_partkey"],
@@ -401,7 +350,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
             descending=[False, False],
             output_column="cost_rank",
         ),
-    )
+    ], spark, {"part": F.broadcast(part), "europe": F.broadcast(europe)})
     out = ranked.filter(F.col("cost_rank") == 1).select(
         "s_acctbal",
         "s_name",
@@ -409,10 +358,10 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("p_partkey"),
         "supply_cost",
     )
-    ranked_out = apply_sort(
-        out, SortOperation(columns=["s_acctbal", "p_partkey"], descending=[True, False])
-    )
-    return apply_limit(ranked_out, LimitOperation(n=100))
+    return apply_operations(out, [
+        SortOperation(columns=["s_acctbal", "p_partkey"], descending=[True, False]),
+        LimitOperation(n=100),
+    ], spark)
 
 
 TPCH_Q2_SQL = """
@@ -484,8 +433,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/supplier.parquet",
             left_on="l_suppkey",
@@ -493,10 +441,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["s_nationkey"],
         ),
-        spark,
-    )
-    li = apply_bind(
-        li,
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -504,10 +448,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_custkey"],
         ),
-        spark,
-    )
-    li = apply_bind(
-        li,
         BindOperation(
             right_file_path=f"{sf_dir}/customer.parquet",
             left_on="o_custkey",
@@ -515,8 +455,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["c_nationkey"],
         ),
-        spark,
-    )
+    ], spark)
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     supp_nation = nation.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
@@ -582,17 +521,10 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rich = cust.join(F.broadcast(avg_bal)).filter(F.col("c_acctbal") > F.col("avg_bal"))
     big_orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 250000)
-    no_orders = apply_bind(
-        rich,
-        BindOperation(
-            right_file_path=f"{sf_dir}/orders.parquet",
-            left_on="c_custkey",
-            right_on="o_custkey",
-            how="anti",
-        ),
-        spark,
-        right_df=big_orders,
+    op = BindOperation(
+        right_file_path="orders", left_on="c_custkey", right_on="o_custkey", how="anti"
     )
+    no_orders = apply_operations(rich, [op], spark, {"orders": big_orders})
     return (
         no_orders.groupBy("c_mktsegment")
         .agg(
@@ -620,8 +552,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "lineitem").withColumn(
         "qty_dec", F.col("l_quantity").cast("decimal(18,2)")
     )
-    agg = apply_aggregation(
-        df,
+    agg = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag", "l_linestatus"],
             grouping="sets",
@@ -631,7 +562,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_rows": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     return agg.select(
         "l_returnflag",
         "l_linestatus",
@@ -655,8 +586,7 @@ def q_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     group — appropriate grouped; the sketch path for global quantiles
     at 100 TB is approx_percentile (see q_approx_distinct for the
     sketch-family rationale)."""
-    return apply_aggregation(
-        _t(spark, sf_dir, "lineitem"),
+    return apply_operations(_t(spark, sf_dir, "lineitem"), [
         AggregationOperation(
             group_by=["l_returnflag"],
             aggregations={
@@ -665,7 +595,7 @@ def q_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "p75_qty": {"column": "l_quantity", "agg": "percentile", "p": "0.75"},
             },
         ),
-    ).select("l_returnflag", "p25_qty", "median_qty", "p75_qty")
+    ], spark).select("l_returnflag", "p25_qty", "median_qty", "p75_qty")
 
 
 PERCENTILE_SQL = """
@@ -689,8 +619,7 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qty_dec", F.col("l_quantity").cast("decimal(18,2)")
     )
     df = df.withColumn("qty_sq_dec", (F.col("qty_dec") * F.col("qty_dec")).cast("decimal(28,4)"))
-    agg = apply_aggregation(
-        df,
+    agg = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag"],
             aggregations={
@@ -699,7 +628,7 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     s1 = F.col("s1_dec").cast("double")
     s2 = F.col("s2_dec").cast("double")
     n = F.col("n").cast("double")
@@ -734,8 +663,7 @@ def q_stats_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("q3d", q3)
         .withColumn("q4d", q4)
     )
-    agg = apply_aggregation(
-        df,
+    agg = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag"],
             aggregations={
@@ -746,7 +674,7 @@ def q_stats_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     n = F.col("n").cast("double")
     m = F.col("s1_dec").cast("double") / n
     e2 = F.col("s2_dec").cast("double") / n
@@ -833,8 +761,7 @@ def q_stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("x2d", (x * x).cast("decimal(28,4)"))
         .withColumn("y2d", (y * y).cast("decimal(38,4)"))
     )
-    agg = apply_aggregation(
-        df,
+    agg = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag"],
             aggregations={
@@ -846,7 +773,7 @@ def q_stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     n = F.col("n").cast("double")
     sx = F.col("sx").cast("double")
     sy = F.col("sy").cast("double")
@@ -910,8 +837,7 @@ def q_ols_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("x2d", (x * x).cast("decimal(28,4)"))
         .withColumn("y2d", (y * y).cast("decimal(38,4)"))
     )
-    agg = apply_aggregation(
-        df,
+    agg = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag"],
             aggregations={
@@ -923,7 +849,7 @@ def q_ols_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     n = F.col("n").cast("double")
     sx = F.col("sx").cast("double")
     sy = F.col("sy").cast("double")
@@ -1765,8 +1691,7 @@ def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    out = apply_window(
-        df,
+    out = apply_operations(df, [
         WindowOperation(
             function="avg",
             partition_by=["o_custkey"],
@@ -1775,7 +1700,7 @@ def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             frame=[-2, 0],
             output_column="moving_avg_price",
         ),
-    )
+    ], spark)
     return out.select("o_orderkey", "o_custkey", "moving_avg_price")
 
 
@@ -1792,8 +1717,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, then filter the rank column — the distributed top-k-per-
     group idiom (no per-group collect; one shuffle on the group key)."""
     df = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_retailprice")
-    ranked = apply_window(
-        df,
+    return apply_operations(df, [
         WindowOperation(
             function="row_number",
             partition_by=["p_brand"],
@@ -1801,8 +1725,8 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             descending=[True, False],
             output_column="rk",
         ),
-    )
-    return apply_filter(ranked, FilterOperation(input_column="rk", operator="<=", value=3))
+        FilterOperation(input_column="rk", operator="<=", value=3),
+    ], spark)
 
 
 TOPK_PER_GROUP_SQL = """
@@ -1823,8 +1747,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     value and exact percentile sorts per group).  Estimates are
     engine-specific, so this query takes the driver's rows-only check
     (no DuckDB oracle)."""
-    return apply_aggregation(
-        _t(spark, sf_dir, "lineitem"),
+    return apply_operations(_t(spark, sf_dir, "lineitem"), [
         AggregationOperation(
             group_by=["l_returnflag"],
             aggregations={
@@ -1838,7 +1761,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_rows": {"column": "*", "agg": "count"},
             },
         ),
-    ).select(
+    ], spark).select(
         "l_returnflag", "approx_parts", "approx_suppliers", "approx_median_qty", "n_rows"
     )
 
@@ -1852,8 +1775,7 @@ def q_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the CORRECTNESS tier of the distinct-count capability; at
     100 TB the per-group distinct re-shuffle is exactly why the sketch
     variant (q_approx_distinct) stays the recommended scale path."""
-    return apply_aggregation(
-        _t(spark, sf_dir, "lineitem"),
+    return apply_operations(_t(spark, sf_dir, "lineitem"), [
         AggregationOperation(
             group_by=["l_returnflag"],
             aggregations={
@@ -1862,7 +1784,7 @@ def q_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_rows": {"column": "*", "agg": "count"},
             },
         ),
-    ).select("l_returnflag", "n_parts", "n_suppliers", "n_rows")
+    ], spark).select("l_returnflag", "n_parts", "n_suppliers", "n_rows")
 
 
 EXACT_DISTINCT_SQL = """
@@ -2394,7 +2316,8 @@ def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") > 8000)
         .select(F.col("s_nationkey").alias("nationkey"))
     )
-    return apply_union(cust, UnionOperation(right_input="supplier", mode="intersect"), supp)
+    op = UnionOperation(right_input="supplier", mode="intersect")
+    return apply_operations(cust, [op], spark, {"supplier": supp})
 
 
 SET_INTERSECT_SQL = """
@@ -2412,7 +2335,8 @@ def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") > 8000)
         .select(F.col("s_nationkey").alias("nationkey"))
     )
-    return apply_union(cust, UnionOperation(right_input="supplier", mode="except"), supp)
+    op = UnionOperation(right_input="supplier", mode="except")
+    return apply_operations(cust, [op], spark, {"supplier": supp})
 
 
 SET_EXCEPT_SQL = """
@@ -2431,17 +2355,14 @@ def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = docs.select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
     ).filter(F.col("token") != "")
-    agg = apply_aggregation(
-        tokens,
+    return apply_operations(tokens, [
         AggregationOperation(
             group_by=["token"],
             aggregations={"n_occurrences": {"column": "*", "agg": "count"}},
         ),
-    )
-    ranked = apply_sort(
-        agg, SortOperation(columns=["n_occurrences", "token"], descending=[True, False])
-    )
-    return apply_limit(ranked, LimitOperation(n=20))
+        SortOperation(columns=["n_occurrences", "token"], descending=[True, False]),
+        LimitOperation(n=20),
+    ], spark)
 
 
 EXPLODE_TOKENS_SQL = f"""
@@ -2461,8 +2382,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample() cannot promise that).  Output: per-split doc counts and
     total characters."""
     docs = with_split_assign(_t(spark, sf_dir, "documents"), key_col="doc_id")
-    return apply_aggregation(
-        docs,
+    return apply_operations(docs, [
         AggregationOperation(
             group_by=["split"],
             aggregations={
@@ -2470,7 +2390,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_chars": {"column": "n_chars", "agg": "sum"},
             },
         ),
-    )
+    ], spark)
 
 
 DATASET_SPLIT_SQL = f"""
@@ -2490,26 +2410,23 @@ def q_bind_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_linenumber", "l_quantity"
     )
-    grp = apply_aggregation(
-        li.withColumn("qty_dec", F.col("l_quantity").cast("decimal(18,2)")),
+    grp = apply_operations(li.withColumn("qty_dec", F.col("l_quantity").cast("decimal(18,2)")), [
         AggregationOperation(
             group_by=["l_orderkey", "l_returnflag"],
             aggregations={"grp_qty_dec": {"column": "qty_dec", "agg": "sum"}},
         ),
-    ).select(
+    ], spark).select(
         "l_orderkey", "l_returnflag", F.col("grp_qty_dec").cast("double").alias("grp_qty")
     )
-    out = apply_bind(
-        li,
+    out = apply_operations(li, [
         BindOperation(
+            right_file_path="grp",
             left_on=["l_orderkey", "l_returnflag"],
             right_on=["l_orderkey", "l_returnflag"],
             how="inner",
             columns_to_add=["grp_qty"],
         ),
-        spark,
-        right_df=grp,
-    )
+    ], spark, {"grp": grp})
     return out.select("l_orderkey", "l_returnflag", "l_linenumber", "l_quantity", "grp_qty")
 
 
@@ -2530,21 +2447,19 @@ def q_bind_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the hot key's rows spread over 8 shuffle partitions instead of
     one straggler."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    out = apply_bind(
-        li,
+    # an unhinted in-memory frame: bind adds no broadcast, so it salts
+    orders = _t(spark, sf_dir, "orders")
+    out = apply_operations(li, [
         BindOperation(
-            right_file_path=f"{sf_dir}/orders.parquet",
+            right_file_path="orders",
             left_on="l_orderkey",
             right_on="o_orderkey",
             how="inner",
             columns_to_add=["o_orderpriority"],
             skew_salt=8,
         ),
-        spark,
-        broadcast=False,
-    )
-    agg = apply_aggregation(
-        out.withColumn("qty_dec", F.col("l_quantity").cast("decimal(18,2)")),
+    ], spark, {"orders": orders})
+    agg = apply_operations(out.withColumn("qty_dec", F.col("l_quantity").cast("decimal(18,2)")), [
         AggregationOperation(
             group_by=["o_orderpriority"],
             aggregations={
@@ -2552,7 +2467,7 @@ def q_bind_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_lines": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     return agg.select(
         "o_orderpriority", F.col("sum_qty_dec").cast("double").alias("sum_qty"), "n_lines"
     )
@@ -2581,8 +2496,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("long").alias("ts_epoch"),
         F.col("value").cast("decimal(18,6)").alias("val_dec"),
     )
-    out = apply_window(
-        df,
+    out = apply_operations(df, [
         WindowOperation(
             function="sum",
             partition_by=["user_id"],
@@ -2592,7 +2506,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             frame_type="range",
             output_column="trailing_hour_dec",
         ),
-    )
+    ], spark)
     return out.select(
         "event_id",
         "user_id",
@@ -2615,24 +2529,20 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     of retail price within each brand — purely rank-based, so results
     are exact across engines (no FP accumulation)."""
     df = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_retailprice")
-    out = apply_window(
-        df,
+    out = apply_operations(df, [
         WindowOperation(
             function="percent_rank",
             partition_by=["p_brand"],
             order_by=["p_retailprice", "p_partkey"],
             output_column="price_pct_rank",
         ),
-    )
-    out = apply_window(
-        out,
         WindowOperation(
             function="cume_dist",
             partition_by=["p_brand"],
             order_by=["p_retailprice", "p_partkey"],
             output_column="price_cume_dist",
         ),
-    )
+    ], spark)
     return out
 
 
@@ -2712,31 +2622,31 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_event_table(spark, f"{sf_dir}/events.parquet").select(
         "user_id", "event_type", F.col("ts").cast("long").alias("epoch")
     )
-    first_view = apply_aggregation(
-        apply_filter(ev, FilterOperation(input_column="event_type", operator="==", value="view")),
+    first_view = apply_operations(ev, [
+        FilterOperation(input_column="event_type", operator="==", value="view"),
         AggregationOperation(
             group_by=["user_id"], aggregations={"view_epoch": {"column": "epoch", "agg": "min"}}
         ),
-    )
-    purchases = apply_filter(
-        ev, FilterOperation(input_column="event_type", operator="==", value="purchase")
-    )
-    joined = apply_bind(
-        purchases,
-        BindOperation(left_on="user_id", right_on="user_id", how="inner", columns_to_add=["view_epoch"]),
-        spark,
-        right_df=first_view,
-    ).filter(F.col("epoch") > F.col("view_epoch"))
-    conv = apply_aggregation(
-        joined,
+    ], spark)
+    joined = apply_operations(ev, [
+        FilterOperation(input_column="event_type", operator="==", value="purchase"),
+        BindOperation(
+            right_file_path="first_view",
+            left_on="user_id",
+            right_on="user_id",
+            how="inner",
+            columns_to_add=["view_epoch"],
+        ),
+    ], spark, {"first_view": first_view}).filter(F.col("epoch") > F.col("view_epoch"))
+    conv = apply_operations(joined, [
         AggregationOperation(
             group_by=["user_id", "view_epoch"],
             aggregations={"purchase_epoch": {"column": "epoch", "agg": "min"}},
         ),
-    ).withColumn("latency_s", F.col("purchase_epoch") - F.col("view_epoch"))
-    return apply_filter(
-        conv, FilterOperation(input_column="latency_s", operator="<=", value=3600)
-    ).select("user_id", "view_epoch", "purchase_epoch", "latency_s")
+    ], spark).withColumn("latency_s", F.col("purchase_epoch") - F.col("view_epoch"))
+    return apply_operations(conv, [
+        FilterOperation(input_column="latency_s", operator="<=", value=3600),
+    ], spark).select("user_id", "view_epoch", "purchase_epoch", "latency_s")
 
 
 FUNNEL_SQL = """

@@ -41,26 +41,7 @@ from ..model import (
     UnionOperation,
     WindowOperation,
 )
-from ..operators import (
-    apply_aggregation,
-    apply_application,
-    apply_arithmetic,
-    apply_assignation,
-    apply_bind,
-    apply_casting,
-    apply_comparison,
-    apply_concatenation,
-    apply_distinct,
-    apply_equality,
-    apply_filter,
-    apply_fold,
-    apply_limit,
-    apply_sort,
-    apply_switching,
-    apply_unfold,
-    apply_union,
-    apply_window,
-)
+from ..runner import apply_operations
 
 
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -162,33 +143,31 @@ def _ts(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 def q_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    return apply_equality(
-        df, EqualityOperation(input_column="p_retailprice", output_column="retailprice_copy")
-    )
+    return apply_operations(df, [
+        EqualityOperation(input_column="p_retailprice", output_column="retailprice_copy"),
+    ], spark)
 
 
 def q_concatenation(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-    out = apply_concatenation(
-        df,
+    out = apply_operations(df, [
         ConcatenationOperation(
             input_columns=["c_name", "c_mktsegment"], separator="-", output_column="label"
         ),
-    )
+    ], spark)
     return out.select("c_custkey", "label")
 
 
 def q_application(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    out = apply_application(
-        df,
+    out = apply_operations(df, [
         ApplicationOperation(
             input_columns=["p_name"],
             function_str="lambda r: str(r['p_name']).upper()",
             return_type="string",
             output_column="name_upper",
         ),
-    )
+    ], spark)
     return out.select("p_partkey", "name_upper")
 
 
@@ -196,31 +175,30 @@ def q_switching(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice", "l_quantity"
     )
-    out = apply_switching(
-        df,
+    out = apply_operations(df, [
         SwitchingOperation(
             switch_column="l_returnflag",
             mapping={"A": "l_extendedprice", "N": "l_quantity"},
             default_value=0.0,
             output_column="switched_value",
         ),
-    )
+    ], spark)
     return out.select("l_orderkey", "l_linenumber", "switched_value")
 
 
 def q_assignation(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "region")
-    return apply_assignation(df, AssignationOperation(value="ACTIVE", output_column="status"))
+    return apply_operations(df, [
+        AssignationOperation(value="ACTIVE", output_column="status"),
+    ], spark)
 
 
 def q_casting(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-    out = apply_casting(
-        df, CastingOperation(input_column="l_shipdate", target_type="date", output_column="ship_date")
-    )
-    out = apply_casting(
-        out, CastingOperation(input_column="l_quantity", target_type="integer", output_column="qty_int")
-    )
+    out = apply_operations(df, [
+        CastingOperation(input_column="l_shipdate", target_type="date", output_column="ship_date"),
+        CastingOperation(input_column="l_quantity", target_type="integer", output_column="qty_int"),
+    ], spark)
     return out.select("l_orderkey", "l_linenumber", "ship_date", "qty_int")
 
 
@@ -228,29 +206,24 @@ def q_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_tax"
     )
-    out = apply_arithmetic(
-        df,
+    out = apply_operations(df, [
         ArithmeticOperation(
             input_columns=["l_extendedprice", "l_discount"], operator="*", output_column="discount_amount"
         ),
-    )
-    out = apply_arithmetic(
-        out,
         ArithmeticOperation(
             input_columns=["l_extendedprice", "l_tax"], operator="-", output_column="price_less_tax"
         ),
-    )
+    ], spark)
     return out.select("l_orderkey", "l_linenumber", "discount_amount", "price_less_tax")
 
 
 def q_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    return apply_comparison(
-        df,
+    return apply_operations(df, [
         ComparisonOperation(
             input_column="o_totalprice", operator=">", value=150000.0, output_column="is_large"
         ),
-    )
+    ], spark)
 
 
 def q_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,20 +235,20 @@ def q_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="left",
         columns_to_add=["c_name", "c_mktsegment"],
     )
-    return apply_bind(df, op, spark).select("o_orderkey", "o_custkey", "c_name", "c_mktsegment")
+    out = apply_operations(df, [op], spark)
+    return out.select("o_orderkey", "o_custkey", "c_name", "c_mktsegment")
 
 
 def q_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_type")
-    return apply_fold(
-        df,
+    return apply_operations(df, [
         FoldOperation(
             id_columns=["p_partkey"],
             value_columns=["p_brand", "p_type"],
             key_column_name="attr",
             value_column_name="val",
         ),
-    )
+    ], spark)
 
 
 def q_unfold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,15 +257,14 @@ def q_unfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata's l_linenumber is NOT unique within an order, so lineitem
     would have ambiguous ties)."""
     df = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus", "o_totalprice", "o_orderkey")
-    return apply_unfold(
-        df,
+    return apply_operations(df, [
         UnfoldOperation(
             index_columns=["o_custkey"],
             key_column="o_orderstatus",
             value_column="o_totalprice",
             order_column="o_orderkey",
         ),
-    )
+    ], spark)
 
 
 # --- extension operators ---------------------------------------------------
@@ -300,9 +272,9 @@ def q_unfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    return apply_filter(
-        df, FilterOperation(input_column="l_quantity", operator=">", value=45.0)
-    )
+    return apply_operations(df, [
+        FilterOperation(input_column="l_quantity", operator=">", value=45.0),
+    ], spark)
 
 
 def q_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,8 +286,7 @@ def q_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("qty_dec", F.col("l_quantity").cast("decimal(18,2)"))
         .withColumn("price_dec", F.col("l_extendedprice").cast("decimal(18,2)"))
     )
-    out = apply_aggregation(
-        df,
+    out = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag", "l_linestatus"],
             aggregations={
@@ -324,7 +295,7 @@ def q_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "count_order": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     return out.select(
         "l_returnflag",
         "l_linestatus",
@@ -336,22 +307,21 @@ def q_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    out = apply_sort(
-        df, SortOperation(columns=["o_totalprice", "o_orderkey"], descending=[True, False])
-    )
-    return apply_limit(out, LimitOperation(n=10))
+    return apply_operations(df, [
+        SortOperation(columns=["o_totalprice", "o_orderkey"], descending=[True, False]),
+        LimitOperation(n=10),
+    ], spark)
 
 
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "customer").select("c_mktsegment")
-    return apply_distinct(df, DistinctOperation())
+    return apply_operations(df, [DistinctOperation()], spark)
 
 
 def q_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top order per customer via row_number + filter."""
     df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    out = apply_window(
-        df,
+    out = apply_operations(df, [
         WindowOperation(
             function="row_number",
             partition_by=["o_custkey"],
@@ -359,15 +329,16 @@ def q_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             descending=[True, False],
             output_column="rn",
         ),
-    )
-    out = apply_filter(out, FilterOperation(input_column="rn", operator="==", value=1))
+        FilterOperation(input_column="rn", operator="==", value=1),
+    ], spark)
     return out.select("o_custkey", "o_orderkey", "o_totalprice")
 
 
 def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = _t(spark, sf_dir, "customer").select(F.col("c_name").alias("name"))
     right = _t(spark, sf_dir, "supplier").select(F.col("s_name").alias("name"))
-    return apply_union(left, UnionOperation(right_input="supplier"), right)
+    op = UnionOperation(right_input="supplier")
+    return apply_operations(left, [op], spark, {"supplier": right})
 
 
 # --- flagship --------------------------------------------------------------
@@ -380,8 +351,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount"
     )
-    df = apply_bind(
-        df,
+    df = apply_operations(df, [
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -389,10 +359,6 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="left",
             columns_to_add=["o_custkey", "o_orderpriority"],
         ),
-        spark,
-    )
-    df = apply_bind(
-        df,
         BindOperation(
             right_file_path=f"{sf_dir}/part.parquet",
             left_on="l_partkey",
@@ -400,21 +366,13 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="left",
             columns_to_add=["p_brand", "p_retailprice"],
         ),
-        spark,
-    )
-    df = apply_assignation(df, AssignationOperation(value=1.0, output_column="_one_"))
-    df = apply_arithmetic(
-        df, ArithmeticOperation(input_columns=["_one_", "l_discount"], operator="-", output_column="_disc_factor_")
-    )
-    df = apply_arithmetic(
-        df,
+        AssignationOperation(value=1.0, output_column="_one_"),
+        ArithmeticOperation(input_columns=["_one_", "l_discount"], operator="-", output_column="_disc_factor_"),
         ArithmeticOperation(
             input_columns=["l_extendedprice", "_disc_factor_"], operator="*", output_column="revenue"
         ),
-    )
-    df = apply_comparison(
-        df, ComparisonOperation(input_column="revenue", operator=">", value=2000.0, output_column="is_high_value")
-    )
+        ComparisonOperation(input_column="revenue", operator=">", value=2000.0, output_column="is_high_value"),
+    ], spark)
     return df.select(
         "l_orderkey", "l_linenumber", "o_custkey", "o_orderpriority", "p_brand", "revenue", "is_high_value"
     )
@@ -431,7 +389,7 @@ def q_bind_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="outer",
         columns_to_add=["c_name"],
     )
-    return apply_bind(df, op, spark).select("o_orderkey", "o_custkey", "c_name")
+    return apply_operations(df, [op], spark).select("o_orderkey", "o_custkey", "c_name")
 
 
 def q_bind_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -446,7 +404,7 @@ def q_bind_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_on="o_custkey",
         how="anti",
     )
-    return apply_bind(df, op, spark, right_df=big_orders)
+    return apply_operations(df, [op], spark, {"orders": big_orders})
 
 
 def q_bind_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,7 +416,7 @@ def q_bind_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_on="l_suppkey",
         how="semi",
     )
-    return apply_bind(df, op, spark)
+    return apply_operations(df, [op], spark)
 
 
 def q_bind_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,29 +426,27 @@ def q_bind_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="cross",
         columns_to_add=["n_name"],
     )
-    return apply_bind(df, op, spark)
+    return apply_operations(df, [op], spark)
 
 
 def q_fold_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold across string+int+double value columns — the Polars
     supercast-to-string path."""
     df = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size", "p_retailprice")
-    return apply_fold(
-        df,
+    return apply_operations(df, [
         FoldOperation(
             id_columns=["p_partkey"],
             value_columns=["p_brand", "p_size", "p_retailprice"],
             key_column_name="attr",
             value_column_name="val",
         ),
-    )
+    ], spark)
 
 
 def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregation variants: count_distinct, min, max, avg."""
     df = _t(spark, sf_dir, "customer")
-    out = apply_aggregation(
-        df,
+    out = apply_operations(df, [
         AggregationOperation(
             group_by=["c_mktsegment"],
             aggregations={
@@ -500,7 +456,7 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_customers": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     return out
 
 
@@ -508,8 +464,7 @@ def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag(): each order's previous total for the same customer in
     orderkey sequence."""
     df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    return apply_window(
-        df,
+    return apply_operations(df, [
         WindowOperation(
             function="lag",
             partition_by=["o_custkey"],
@@ -518,7 +473,7 @@ def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             offset=1,
             output_column="prev_totalprice",
         ),
-    )
+    ], spark)
 
 
 def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,8 +483,7 @@ def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    out = apply_window(
-        df,
+    out = apply_operations(df, [
         WindowOperation(
             function="first_value",
             partition_by=["o_custkey"],
@@ -537,9 +491,6 @@ def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
             value_column="o_totalprice",
             output_column="first_total",
         ),
-    )
-    out = apply_window(
-        out,
         WindowOperation(
             function="last_value",
             partition_by=["o_custkey"],
@@ -547,7 +498,7 @@ def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
             value_column="o_totalprice",
             output_column="last_total",
         ),
-    )
+    ], spark)
     return out.select("o_orderkey", "o_custkey", "first_total", "last_total")
 
 
@@ -1479,12 +1430,11 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce on any engine or cluster layout — hash-checked against
     the generated DuckDB predicate."""
     from ..model import SampleOperation
-    from ..operators.extensions import apply_sample
 
     df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    return apply_sample(
-        df, SampleOperation(fraction=0.25, seed=42, key_column="o_orderkey")
-    )
+    return apply_operations(df, [
+        SampleOperation(fraction=0.25, seed=42, key_column="o_orderkey"),
+    ], spark)
 
 
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1493,16 +1443,14 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference lacks entirely — SURVEY §2.2 'no array/map/json
     functions')."""
     from ..model import JsonExtractOperation
-    from ..operators import apply_json_extract
     from ..streaming import read_event_table
 
     df = read_event_table(spark, f"{sf_dir}/events.parquet")
-    out = apply_json_extract(
-        df,
+    out = apply_operations(df, [
         JsonExtractOperation(
             input_column="props", json_path="$.k", target_type="integer", output_column="prop_k"
         ),
-    )
+    ], spark)
     return out.select("event_id", "prop_k")
 
 
@@ -1587,8 +1535,7 @@ def _grouped_qty(spark: SparkSession, sf_dir: str, grouping: str) -> DataFrame:
     df = _t(spark, sf_dir, "lineitem").withColumn(
         "qty_dec", F.col("l_quantity").cast("decimal(18,2)")
     )
-    out = apply_aggregation(
-        df,
+    out = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag", "l_linestatus"],
             grouping=grouping,
@@ -1597,7 +1544,7 @@ def _grouped_qty(spark: SparkSession, sf_dir: str, grouping: str) -> DataFrame:
                 "n": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     return out.select(
         "l_returnflag", "l_linestatus", F.col("sum_qty").cast("double").alias("sum_qty"), "n"
     )
@@ -2388,14 +2335,13 @@ def q_sql_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's table name — shared-dialect aggregates only, so the two
     sides are one string."""
     from ..model import parse_operation
-    from ..operators import apply_sql_transform
 
     ev = _t(spark, sf_dir, "events")
     op = parse_operation({
         "operation_type": "sql_transform",
         "statement": _SQLT_TEMPLATE.format(table="frame"),
     })
-    return apply_sql_transform(ev, op)
+    return apply_operations(ev, [op], spark)
 
 
 SQL_TRANSFORM_SQL = _SQLT_TEMPLATE.format(table="events")
@@ -2431,7 +2377,6 @@ def q_sql_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         FileSchema,
         parse_operation,
     )
-    from ..operators import apply_sql_transform
 
     orders = _t(spark, sf_dir, "orders")
     cust_def = FileDefinition(
@@ -2450,7 +2395,7 @@ def q_sql_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "views": {"cust": "customer"},
         "statement": _SQLJ_TEMPLATE.format(orders="frame", customer="cust"),
     })
-    return apply_sql_transform(orders, op, spark, {"customer": cust_def})
+    return apply_operations(orders, [op], spark, {"customer": cust_def})
 
 
 SQL_JOIN_SQL = _SQLJ_TEMPLATE.format(orders="orders", customer="customer")
@@ -3400,12 +3345,9 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition global window; the permutation is reproducible
     from (key, seed) alone."""
     from ..model import GlobalShuffleOperation
-    from ..operators import apply_global_shuffle
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return apply_global_shuffle(
-        docs, GlobalShuffleOperation(key_column="doc_id", seed=7)
-    )
+    return apply_operations(docs, [GlobalShuffleOperation(key_column="doc_id", seed=7)], spark)
 
 
 def q_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3416,16 +3358,14 @@ def q_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized and BROADCASTS back onto the corpus — the corpus never
     shuffles; integer count/sum aggregates keep the check exact."""
     from ..model import QuantileFilterOperation
-    from ..operators import apply_quantile_filter
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    kept = apply_quantile_filter(
-        docs,
+    kept = apply_operations(docs, [
         QuantileFilterOperation(
             group_columns=["source"], value_column="n_chars", q=0.75,
             threshold_column="threshold",
         ),
-    )
+    ], spark)
     return kept.groupBy("source").agg(
         F.min("threshold").alias("threshold"),
         F.count(F.lit(1)).alias("n_kept"),
@@ -4414,7 +4354,7 @@ HARNESS_ORACLES["incremental_dedup"] = _incr_dedup_oracle_sql(
     corpus_sql="SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0",
 )
 
-from ..operators.extensions import sample_hash_oracle_predicate as _sample_pred  # noqa: E402
+from ..functions.text import sample_hash_oracle_predicate as _sample_pred  # noqa: E402
 
 HARNESS_ORACLES["sample_hash"] = (
     "SELECT o_orderkey, o_totalprice FROM orders WHERE "

@@ -23,13 +23,7 @@ from ..model import (
     LimitOperation,
     SortOperation,
 )
-from ..operators import (
-    apply_aggregation,
-    apply_bind,
-    apply_filter,
-    apply_limit,
-    apply_sort,
-)
+from ..runner import apply_operations
 
 
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -47,8 +41,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,6)"),
         )
     )
-    out = apply_aggregation(
-        df,
+    out = apply_operations(df, [
         AggregationOperation(
             group_by=["l_returnflag", "l_linestatus"],
             aggregations={
@@ -58,7 +51,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "count_order": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     return out.select(
         "l_returnflag",
         "l_linestatus",
@@ -87,8 +80,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 shipping priority: segment-filtered customers ⋈ orders ⋈
     lineitem → revenue per order → top 10."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1997-03-15"))
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -96,10 +88,8 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_custkey", "o_orderdate"],
         ),
-        spark,
-    ).filter(F.col("o_orderdate") < F.lit("1997-03-15"))
-    li = apply_bind(
-        li,
+    ], spark).filter(F.col("o_orderdate") < F.lit("1997-03-15"))
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/customer.parquet",
             left_on="o_custkey",
@@ -107,22 +97,22 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["c_mktsegment"],
         ),
-        spark,
-    )
-    li = apply_filter(li, FilterOperation(input_column="c_mktsegment", operator="==", value="BUILDING"))
+        FilterOperation(input_column="c_mktsegment", operator="==", value="BUILDING"),
+    ], spark)
     li = li.withColumn(
         "rev_dec",
         (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,6)"),
     )
-    agg = apply_aggregation(
-        li,
+    agg = apply_operations(li, [
         AggregationOperation(
             group_by=["l_orderkey"],
             aggregations={"revenue_dec": {"column": "rev_dec", "agg": "sum"}},
         ),
-    ).select("l_orderkey", F.col("revenue_dec").cast("double").alias("revenue"))
-    ranked = apply_sort(agg, SortOperation(columns=["revenue", "l_orderkey"], descending=[True, False]))
-    return apply_limit(ranked, LimitOperation(n=10))
+    ], spark).select("l_orderkey", F.col("revenue_dec").cast("double").alias("revenue"))
+    return apply_operations(agg, [
+        SortOperation(columns=["revenue", "l_orderkey"], descending=[True, False]),
+        LimitOperation(n=10),
+    ], spark)
 
 
 TPCH_Q3_SQL = """
@@ -146,8 +136,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -155,12 +144,10 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_custkey", "o_orderdate"],
         ),
-        spark,
-    ).filter(
+    ], spark).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01")) & (F.col("o_orderdate") < F.lit("1998-01-01"))
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/customer.parquet",
             left_on="o_custkey",
@@ -168,10 +155,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["c_nationkey"],
         ),
-        spark,
-    )
-    li = apply_bind(
-        li,
         BindOperation(
             right_file_path=f"{sf_dir}/supplier.parquet",
             left_on="l_suppkey",
@@ -179,12 +162,10 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["s_nationkey"],
         ),
-        spark,
-    )
+    ], spark)
     # same-nation condition: customer nation == supplier nation
     li = li.filter(F.col("c_nationkey") == F.col("s_nationkey"))
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/nation.parquet",
             left_on="s_nationkey",
@@ -192,10 +173,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["n_name", "n_regionkey"],
         ),
-        spark,
-    )
-    li = apply_bind(
-        li,
         BindOperation(
             right_file_path=f"{sf_dir}/region.parquet",
             left_on="n_regionkey",
@@ -203,19 +180,17 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["r_name"],
         ),
-        spark,
-    )
+    ], spark)
     li = li.withColumn(
         "rev_dec",
         (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,6)"),
     )
-    agg = apply_aggregation(
-        li,
+    agg = apply_operations(li, [
         AggregationOperation(
             group_by=["n_name"],
             aggregations={"revenue_dec": {"column": "rev_dec", "agg": "sum"}},
         ),
-    )
+    ], spark)
     return agg.select("n_name", F.col("revenue_dec").cast("double").alias("revenue"))
 
 
@@ -247,8 +222,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = df.withColumn(
         "rev_dec", (F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,6)")
     )
-    agg = apply_aggregation(
-        df,
+    agg = apply_operations(df, [
         AggregationOperation(
             group_by=[],
             aggregations={
@@ -256,7 +230,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_items": {"column": "*", "agg": "count"},
             },
         ),
-    )
+    ], spark)
     return agg.select(F.col("revenue_dec").cast("double").alias("revenue"), "n_items")
 
 

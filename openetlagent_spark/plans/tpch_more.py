@@ -48,12 +48,7 @@ from ..model import (
     LimitOperation,
     SortOperation,
 )
-from ..operators import (
-    apply_aggregation,
-    apply_bind,
-    apply_limit,
-    apply_sort,
-)
+from ..runner import apply_operations
 
 
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -80,8 +75,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     promo = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
     li = li.join(F.broadcast(promo), li.l_partkey == promo.p_partkey).drop("p_partkey")
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -89,13 +83,11 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_custkey", "o_orderdate"],
         ),
-        spark,
-    ).filter(
+    ], spark).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") <= F.lit("1997-12-31"))
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/customer.parquet",
             left_on="o_custkey",
@@ -103,8 +95,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["c_nationkey"],
         ),
-        spark,
-    )
+    ], spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     cust_nation = (
@@ -115,8 +106,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp_nation = _t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/supplier.parquet",
             left_on="l_suppkey",
@@ -124,8 +114,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["s_nationkey"],
         ),
-        spark,
-    ).join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("sn_key"))
+    ], spark).join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("sn_key"))
     li = (
         li.withColumn("o_year", F.year(F.col("o_orderdate").cast("date")))
         .withColumn("vol_dec", _rev_dec())
@@ -134,8 +123,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("supp_nation") == "NATION_1", F.col("vol_dec")).otherwise(_dec0()),
         )
     )
-    agg = apply_aggregation(
-        li,
+    agg = apply_operations(li, [
         AggregationOperation(
             group_by=["o_year"],
             aggregations={
@@ -143,7 +131,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "all_sum": {"column": "vol_dec", "agg": "sum"},
             },
         ),
-    )
+    ], spark)
     return agg.select(
         "o_year",
         (F.col("nat_sum").cast("double") / F.col("all_sum").cast("double")).alias("mkt_share"),
@@ -188,8 +176,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey", "p_retailprice")
     )
     li = li.join(F.broadcast(widget), li.l_partkey == widget.p_partkey)
-    li = apply_bind(
-        li,
+    li = apply_operations(li, [
         BindOperation(
             right_file_path=f"{sf_dir}/supplier.parquet",
             left_on="l_suppkey",
@@ -197,10 +184,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["s_nationkey"],
         ),
-        spark,
-    )
-    li = apply_bind(
-        li,
         BindOperation(
             right_file_path=f"{sf_dir}/orders.parquet",
             left_on="l_orderkey",
@@ -208,8 +191,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["o_orderdate"],
         ),
-        spark,
-    )
+    ], spark)
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
     li = li.join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
     li = (
@@ -222,13 +204,12 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("decimal(18,6)"),
         )
     )
-    agg = apply_aggregation(
-        li,
+    agg = apply_operations(li, [
         AggregationOperation(
             group_by=["nation", "o_year"],
             aggregations={"profit_dec": {"column": "amount_dec", "agg": "sum"}},
         ),
-    )
+    ], spark)
     return agg.select("nation", "o_year", F.col("profit_dec").cast("double").alias("sum_profit"))
 
 
@@ -269,13 +250,12 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey"
     )
     li = li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-    per_part = apply_aggregation(
-        li.withColumn("rev_dec", _rev_dec()),
+    per_part = apply_operations(li.withColumn("rev_dec", _rev_dec()), [
         AggregationOperation(
             group_by=["l_partkey"],
             aggregations={"value_dec": {"column": "rev_dec", "agg": "sum"}},
         ),
-    )
+    ], spark)
     total = per_part.agg(F.sum("value_dec").alias("total_dec"))
     kept = (
         per_part.join(F.broadcast(total))
@@ -320,13 +300,12 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
     per_cust = joined.groupBy("c_custkey").agg(F.count("o_orderkey").alias("c_count"))
-    dist = apply_aggregation(
-        per_cust,
+    dist = apply_operations(per_cust, [
         AggregationOperation(
             group_by=["c_count"],
             aggregations={"custdist": {"column": "*", "agg": "count"}},
         ),
-    )
+    ], spark)
     return dist.select("c_count", "custdist")
 
 
@@ -351,13 +330,12 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01")) & (F.col("l_shipdate") < F.lit("1997-04-01"))
     )
-    rev = apply_aggregation(
-        li.withColumn("rev_dec", _rev_dec()),
+    rev = apply_operations(li.withColumn("rev_dec", _rev_dec()), [
         AggregationOperation(
             group_by=["l_suppkey"],
             aggregations={"rev_sum_dec": {"column": "rev_dec", "agg": "sum"}},
         ),
-    ).withColumn("total_rev", F.col("rev_sum_dec").cast("double"))
+    ], spark).withColumn("total_rev", F.col("rev_sum_dec").cast("double"))
     # The revenue view feeds BOTH the MAX probe and the winner filter;
     # without a materialization boundary each consumer re-scans and
     # re-shuffles lineitem (Spark plans share nothing across actions'
@@ -367,8 +345,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = rev.transform(materialize)
     mx = rev.agg(F.max("total_rev").alias("max_rev"))
     top = rev.join(F.broadcast(mx)).filter(F.col("total_rev") == F.col("max_rev"))
-    top = apply_bind(
-        top,
+    top = apply_operations(top, [
         BindOperation(
             right_file_path=f"{sf_dir}/supplier.parquet",
             left_on="l_suppkey",
@@ -376,8 +353,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="inner",
             columns_to_add=["s_name"],
         ),
-        spark,
-    )
+    ], spark)
     return top.select(F.col("l_suppkey").alias("s_suppkey"), "s_name", "total_rev")
 
 
@@ -572,15 +548,14 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_name"
     )
     cand = cand.join(F.broadcast(supp), cand.l_suppkey == supp.s_suppkey)
-    out = apply_aggregation(
-        cand,
+    return apply_operations(cand, [
         AggregationOperation(
             group_by=["s_name"],
             aggregations={"numwait": {"column": "*", "agg": "count"}},
         ),
-    )
-    out = apply_sort(out, SortOperation(columns=["numwait", "s_name"], descending=[True, False]))
-    return apply_limit(out, LimitOperation(n=100))
+        SortOperation(columns=["numwait", "s_name"], descending=[True, False]),
+        LimitOperation(n=100),
+    ], spark)
 
 
 TPCH_Q21_SQL = """

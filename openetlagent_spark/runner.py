@@ -27,14 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .model import (
     AssignationOperation,
-    FileDefinition,
     Operation,
     PipelineConfig,
     PipelineFlow,
     columns_read,
 )
 from .operators import OPERATION_DISPATCHER, ReadsInputs
-from .operators.base import require_columns
+from .operators.base import Inputs, require_columns
 from .sources import save_data, scan_data
 from .validate import validate_schema
 
@@ -45,13 +44,20 @@ def apply_operations(
     df: DataFrame,
     operations: list[Operation],
     spark: SparkSession,
-    inputs: dict[str, FileDefinition] | None = None,
+    inputs: Inputs | None = None,
     *,
     drop_temp_columns: bool = True,
 ) -> DataFrame:
     """Fold the op list over the lazy DataFrame (reference loop:
     app/main.py:397-429 — ours builds one plan instead of executing
     per-op).
+
+    ``inputs`` maps each named input an op reads (bind's
+    ``right_file_path``, union's ``right_input``, sql_transform's
+    ``views``, ...) to a ``FileDefinition``, scanned like a flow source,
+    or to an in-memory ``DataFrame``, used as it is.  Bind adds no
+    broadcast hint to an in-memory frame: a caller that wants one
+    passes ``F.broadcast(frame)``.
 
     ``drop_temp_columns=False`` keeps ``_x_`` temp columns alive —
     required when a caller applies ops one at a time (the generator's

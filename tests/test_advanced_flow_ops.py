@@ -759,6 +759,9 @@ def test_unknown_spec_fields_fail_loudly():
         parse_operation({
             "operation_type": "gopher_rules", "min_men_word_len": 4.4,
         })
+    # gopher_rules reads no id column, so it declares none
+    with pytest.raises(SpecError, match=r"Unknown field\(s\) \['id_column'\]"):
+        parse_operation({"operation_type": "gopher_rules", "id_column": "doc_id"})
     # the full Gopher threshold battery is now spec-reachable
     op = parse_operation({
         "operation_type": "gopher_rules", "min_mean_word_len": 4.4,

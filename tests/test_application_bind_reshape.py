@@ -338,7 +338,7 @@ def test_bind_left_join_drops_right_key_and_suffixes_collisions(spark):
         how="left",
         columns_to_add=["customer_name", "country"],
     )
-    out = apply_bind(_left(spark), op, spark, right_df=_right(spark))
+    out = apply_bind(_left(spark), op, spark, {"customers": _right(spark)})
     assert set(out.columns) == {"order_id", "customer_id", "country", "customer_name", "country_right"}
     rows = {r.order_id: r for r in out.collect()}
     assert rows[101].customer_name == "Alice" and rows[101].country_right == "USA"
@@ -354,7 +354,7 @@ def test_bind_inner_join(spark):
         how="inner",
         columns_to_add=["customer_name"],
     )
-    out = apply_bind(_left(spark), op, spark, right_df=_right(spark))
+    out = apply_bind(_left(spark), op, spark, {"customers": _right(spark)})
     assert out.count() == 2
 
 
@@ -367,7 +367,7 @@ def test_bind_outer_join_coalesces_key(spark):
         how="outer",
         columns_to_add=["customer_name"],
     )
-    out = apply_bind(_left(spark), op, spark, right_df=right)
+    out = apply_bind(_left(spark), op, spark, {"x": right})
     keys = sorted(r.customer_id for r in out.collect())
     assert keys == [1, 2, 7, 9]
 
@@ -375,7 +375,7 @@ def test_bind_outer_join_coalesces_key(spark):
 def test_bind_cross_join(spark):
     right = spark.createDataFrame([Row(tag="a"), Row(tag="b")])
     op = BindOperation(right_file_path="x", how="cross", columns_to_add=["tag"])
-    out = apply_bind(_left(spark), op, spark, right_df=right)
+    out = apply_bind(_left(spark), op, spark, {"x": right})
     assert out.count() == 6
 
 
@@ -407,7 +407,7 @@ def test_bind_collision_with_left_join_key_gets_suffixed(spark):
         how="left",
         columns_to_add=["customer_id", "y"],
     )
-    out = apply_bind(left, op, spark, right_df=right)
+    out = apply_bind(left, op, spark, {"x": right})
     assert set(out.columns) == {"customer_id", "x", "customer_id_right", "y"}
     r = out.collect()[0]
     assert r.customer_id == 1 and r.customer_id_right == 999
@@ -420,7 +420,7 @@ def test_bind_right_key_in_columns_to_add_deduped(spark):
         right_file_path="x", left_on="k", right_on="k", how="inner",
         columns_to_add=["k", "y"],
     )
-    out = apply_bind(left, op, spark, right_df=right)
+    out = apply_bind(left, op, spark, {"x": right})
     assert out.columns.count("k") == 1
     assert set(out.columns) == {"k", "x", "y"}
 
@@ -434,7 +434,7 @@ def test_bind_missing_column_error_names_available(spark):
         columns_to_add=["nope"],
     )
     with pytest.raises(ValueError, match=r"\['nope'\]"):
-        apply_bind(_left(spark), op, spark, right_df=_right(spark))
+        apply_bind(_left(spark), op, spark, {"x": _right(spark)})
 
 
 # --- fold / unfold ---------------------------------------------------------
@@ -533,9 +533,10 @@ def test_bind_multikey_join(spark):
         [Row(k1=1, k2="a", extra="x"), Row(k1=2, k2="a", extra="y"), Row(k1=9, k2="z", extra="n")]
     )
     op = BindOperation(
-        left_on=["k1", "k2"], right_on=["k1", "k2"], how="inner", columns_to_add=["extra"]
+        right_file_path="r", left_on=["k1", "k2"], right_on=["k1", "k2"], how="inner",
+        columns_to_add=["extra"],
     )
-    out = apply_bind(left, op, spark, right_df=right)
+    out = apply_bind(left, op, spark, {"r": right})
     got = sorted((r.k1, r.k2, r.v, r.extra) for r in out.collect())
     assert got == [(1, "a", 10, "x"), (2, "a", 30, "y")]
     # both right key columns dropped, no duplicates
@@ -549,10 +550,11 @@ def test_bind_multikey_outer_coalesces_all_keys(spark):
     left = spark.createDataFrame([Row(k1=1, k2="a", v=10)])
     right = spark.createDataFrame([Row(k1=2, k2="b", extra="y")])
     op = BindOperation(
-        left_on=["k1", "k2"], right_on=["k1", "k2"], how="outer", columns_to_add=["extra"]
+        right_file_path="r", left_on=["k1", "k2"], right_on=["k1", "k2"], how="outer",
+        columns_to_add=["extra"],
     )
     got = sorted(
-        (r.k1, r.k2, r.v, r.extra) for r in apply_bind(left, op, spark, right_df=right).collect()
+        (r.k1, r.k2, r.v, r.extra) for r in apply_bind(left, op, spark, {"r": right}).collect()
     )
     assert got == [(1, "a", 10, None), (2, "b", None, "y")]
 
@@ -574,17 +576,18 @@ def test_bind_salted_join_matches_unsalted(spark):
     )
     right = spark.createDataFrame([Row(k=1, name="hot"), Row(k=2, name="cold")])
 
-    plain = BindOperation(left_on="k", right_on="k", how="left", columns_to_add=["name"])
+    plain = BindOperation(
+        right_file_path="r", left_on="k", right_on="k", how="left", columns_to_add=["name"]
+    )
     salted = BindOperation(
-        left_on="k", right_on="k", how="left", columns_to_add=["name"], skew_salt=8
+        right_file_path="r", left_on="k", right_on="k", how="left", columns_to_add=["name"],
+        skew_salt=8,
     )
     want = sorted(
-        (r.k, r.v, r.name)
-        for r in apply_bind(left, plain, spark, right_df=right, broadcast=False).collect()
+        (r.k, r.v, r.name) for r in apply_bind(left, plain, spark, {"r": right}).collect()
     )
     got = sorted(
-        (r.k, r.v, r.name)
-        for r in apply_bind(left, salted, spark, right_df=right, broadcast=False).collect()
+        (r.k, r.v, r.name) for r in apply_bind(left, salted, spark, {"r": right}).collect()
     )
     assert got == want
     assert len(got) == 202

@@ -333,7 +333,7 @@ def test_near_contamination_flow_filter_mode(spark, tmp_path):
         mode="filter",
         jaccard_threshold=0.3,
     )
-    out = apply_contamination(c, op, spark, None, bench_df=b)
+    out = apply_contamination(c, op, spark, {"bench": b})
     assert sorted(r["doc_id"] for r in out.collect()) == [2]
     assert out.columns == c.columns
 

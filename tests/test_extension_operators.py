@@ -102,7 +102,7 @@ def test_window_lead(spark):
 def test_union_by_name(spark):
     a = spark.createDataFrame([Row(x=1, y="a")])
     b = spark.createDataFrame([Row(y="b", x=2)])  # different column order
-    out = apply_union(a, UnionOperation(right_input="b"), b)
+    out = apply_union(a, UnionOperation(right_input="b"), spark, {"b": b})
     assert sorted((r.x, r.y) for r in out.collect()) == [(1, "a"), (2, "b")]
 
 
@@ -228,7 +228,7 @@ def test_union_modes(spark):
     from openetlagent_spark.model import UnionOperation
 
     def run(mode):
-        out = apply_union(left, UnionOperation(right_input="r", mode=mode), right)
+        out = apply_union(left, UnionOperation(right_input="r", mode=mode), spark, {"r": right})
         return sorted(r.k for r in out.collect())
 
     assert run("all") == [1, 1, 2, 2, 3, 4]

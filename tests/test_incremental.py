@@ -408,7 +408,7 @@ def test_incremental_neardup_filter_via_flow_op(spark):
     })
     kept = sorted(
         r["doc_id"]
-        for r in apply_incremental_dedup(batch, op, spark, None, corpus_df=corpus).collect()
+        for r in apply_incremental_dedup(batch, op, spark, {"corpus": corpus}).collect()
     )
     assert kept == [11, 13]
     # exact fingerprint gate admits ALL of them (none is an exact dup)
@@ -417,7 +417,7 @@ def test_incremental_neardup_filter_via_flow_op(spark):
     })
     kept2 = sorted(
         r["doc_id"]
-        for r in apply_incremental_dedup(batch, op2, spark, None, corpus_df=corpus).collect()
+        for r in apply_incremental_dedup(batch, op2, spark, {"corpus": corpus}).collect()
     )
     assert kept2 == [10, 11, 12, 13]
 

@@ -5,6 +5,7 @@ here launches a Spark job."""
 
 from __future__ import annotations
 
+import ast
 import copy
 import dataclasses
 import functools
@@ -36,6 +37,7 @@ from openetlagent_spark.model import (
 from openetlagent_spark.operators import OPERATION_DISPATCHER, ReadsInputs
 
 DOCS = os.path.join(os.path.dirname(__file__), "..", "docs", "OPERATORS.md")
+PLANS = os.path.join(os.path.dirname(__file__), "..", "openetlagent_spark", "plans")
 
 # the op types that read a named pipeline input
 INPUT_OPS = {
@@ -105,6 +107,30 @@ def test_runner_passes_spark_and_inputs_to_exactly_the_input_ops(monkeypatch):
     assert set(calls) == set(OPERATION_TYPES)
     assert {n for n, extra in calls.items() if extra} == INPUT_OPS
     assert all(extra == (spark, inputs) for n, extra in calls.items() if n in INPUT_OPS)
+
+
+def test_plans_reach_operators_only_through_the_runner():
+    """Every harness plan runs its ops through ``apply_operations``: no
+    plan module imports from ``operators`` or names an ``apply_*``
+    operator function."""
+    modules = sorted(f for f in os.listdir(PLANS) if f.endswith(".py"))
+    assert "harness_queries.py" in modules
+    for module in modules:
+        with open(os.path.join(PLANS, module)) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            names = []
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                paths = [node.module or ""] if isinstance(node, ast.ImportFrom) else []
+                paths += [a.name for a in node.names]
+                assert not any("operators" in p.split(".") for p in paths), (module, node.lineno)
+                names = [a.asname or a.name for a in node.names] + [a.name for a in node.names]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            named = [n for n in names if n.startswith("apply_") and n != "apply_operations"]
+            assert not named, (module, node.lineno, named)
 
 
 def test_runner_error_texts():
@@ -286,7 +312,7 @@ def test_contract_table_covers_every_declared_field():
     declared = {(t, f) for t, f, _, _ in CONTRACT}
     assert len(declared) >= 150
     assert sum(not accepted for *_, accepted in CONTRACT) >= 250
-    for op_type, field in [("limit", "n"), ("equality", "input_column")]:
+    for op_type, field in [("limit", "n"), ("concatenation", "separator")]:
         assert (op_type, field) not in declared  # undeclared fields stay open
 
 

@@ -14,10 +14,12 @@ from pathlib import Path
 import pytest
 import yaml
 
-from openetlagent_spark.model import load_pipeline_config, load_pipeline_flow
+from pyspark.sql import functions as F
+
+from openetlagent_spark.model import BindOperation, load_pipeline_config, load_pipeline_flow
 from openetlagent_spark.operators import apply_application
 from openetlagent_spark.plans import HARNESS_QUERIES
-from openetlagent_spark.runner import run_flow
+from openetlagent_spark.runner import apply_operations, run_flow
 from openetlagent_spark.sources import save_data
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -238,6 +240,29 @@ def test_new_operators_avoid_joins_where_promised(spark):
         df = HARNESS_QUERIES[name](spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert not re.search(r"\w*(HashJoin|MergeJoin)", plan), name
+
+
+def test_named_frame_broadcasts_only_by_its_own_hint(spark):
+    """Bind adds no hint to an in-memory named input: an ``F.broadcast``
+    frame plans a broadcast join, and an unhinted frame under
+    ``skew_salt`` still plans the salt columns."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select("l_orderkey", "l_quantity")
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    keys = dict(right_file_path="orders", left_on="l_orderkey", right_on="o_orderkey", how="inner")
+    plain = BindOperation(**keys, columns_to_add=["o_orderpriority"])
+    salted = BindOperation(**keys, columns_to_add=["o_orderpriority"], skew_salt=8)
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        hinted = apply_operations(li, [plain], spark, {"orders": F.broadcast(orders)})
+        assert "BroadcastHashJoin" in hinted._jdf.queryExecution().toString()
+        plan = apply_operations(li, [salted], spark, {"orders": orders})
+        plan = plan._jdf.queryExecution().toString()
+    finally:
+        spark.conf.set(key, before)
+    assert "__skew_salt__" in plan and "__skew_salt_r__" in plan
+    assert "BroadcastHashJoin" not in plan
 
 
 def test_incremental_dedup_broadcasts_both_sides(spark):
