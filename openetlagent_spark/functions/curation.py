@@ -156,7 +156,6 @@ def line_dedup(
     text_col: str = "text",
     max_docs: int = 1,
     out_col: str = "text_clean",
-    cache: bool = True,
     group_col: str | None = None,
     min_df: int | None = None,
 ) -> DataFrame:
@@ -172,11 +171,10 @@ def line_dedup(
     document whose every line is boilerplate comes back with ''.
 
     Scale shape (100 TB): lines explode scan-locally into ONE
-    materialized frame (eager localCheckpoint when ``cache=True`` —
-    the frame feeds the boilerplate count, the anti-join probe, and
-    the per-doc line totals; without the boundary the split+md5 runs
-    once per consumer, the same two-consumer diamond contamination
-    guards against).  ONE line-key count shuffle finds the boilerplate
+    materialized frame (eager localCheckpoint — the frame feeds the
+    boilerplate count, the anti-join probe, and the per-doc line
+    totals; without the boundary the split+md5 runs once per consumer,
+    the same two-consumer diamond contamination guards against).  ONE line-key count shuffle finds the boilerplate
     set (HAVING df > max_docs cuts it to the boilerplate lines only —
     a tiny fraction of distinct lines); the anti-join shuffles by line
     key (AQE broadcasts the boilerplate side when it is small, the
@@ -210,9 +208,7 @@ def line_dedup(
         *gkey,
         F.size(split).cast("bigint").alias("__n_lines__"),
         F.posexplode(split).alias("__pos__", "__line__"),
-    ).withColumn("__k__", F.md5(F.trim(F.lower(F.col("__line__")))))
-    if cache:
-        lines = lines.transform(materialize)
+    ).withColumn("__k__", F.md5(F.trim(F.lower(F.col("__line__"))))).transform(materialize)
     common = (
         lines.filter(F.trim(F.col("__line__")) != "")
         .groupBy(*gkey, "__k__")
@@ -1228,7 +1224,6 @@ def near_contamination(
     shingle_size: int = 3,
     seed: int = 42,
     max_bucket: int = 1000,
-    md5_mode: bool = False,
 ) -> DataFrame:
     """Near-duplicate decontamination: (corpus_id, bench_id, jaccard)
     pairs whose word-shingle Jaccard meets ``threshold`` — the
@@ -1250,15 +1245,13 @@ def near_contamination(
     keeps the candidate geometry identical to the dedup family (and
     its generated oracle); the corpus–corpus pairs it also surfaces
     are dropped by the side filter after the (small) pair set exists,
-    so no extra wide work.
-
-    ``md5_mode`` (cf. minhash_lsh_pairs): engine-exact hashing end to
-    end, so the full check hash-matches the generated oracle."""
+    so no extra wide work.  Every stage is engine-exact, so the full
+    check hash-matches the generated oracle; rows with NULL text never
+    pair."""
     pairs = side_tagged_pairs(
         corpus, bench, id_col, text_col,
-        num_perm=num_perm, bands=bands, shingle_size=shingle_size,
-        threshold=threshold, seed=seed, max_bucket=max_bucket,
-        md5_mode=md5_mode,
+        n=shingle_size, threshold=threshold, bands=bands,
+        rows_per_band=num_perm // bands, seed=seed, max_bucket=max_bucket,
     )
     # struct ordering puts the corpus row in id_a of every cross pair —
     # the CASE below still handles both orientations for robustness
@@ -1282,7 +1275,7 @@ def near_contamination_oracle_sql(
     seed: int = 42,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB mirror of :func:`near_contamination` in md5_mode, built
+    """DuckDB mirror of :func:`near_contamination`, built
     on the SAME generated pair SQL as the dedup family
     (dedup.ngram_pairs_oracle_sql, same band geometry) over the union
     table, with side membership decided by ``bench_predicate`` — a SQL

@@ -1,31 +1,32 @@
 """Deduplication at training-data scale.
 
-Six strategies (north-star surface, BASELINE.json):
+One hash scheme per near-duplicate family, and each is engine-exact
+end to end, so the code a flow runs is the code its generated DuckDB
+oracle checks:
 
 - exact_dedup: hash-groupBy keep-first — one shuffle on the key.
-- minhash_lsh_pairs / minhash_dedup: word-shingle MinHash signatures →
-  LSH band buckets → bucket-local candidate pairs → exact Jaccard
-  verification.  The classic near-dup pipeline (Broder-style MinHash,
-  banding as in the standard LSH formulation): candidate generation is
-  a shuffle on (band, band_hash), never an all-pairs join.
-- simhash64 / simhash_pairs: 64-bit SimHash; Hamming-≤k candidates via
-  pigeonhole banding (k+1 bands ⇒ at least one identical band), verified
-  with bit_count(xor).
-- ngram_jaccard_pairs: word-n-gram Jaccard with DETERMINISTIC MinHash
-  banding built entirely from engine-exact hashing (md5-prefix token
-  ints, Mersenne modular folds) — the full LSH pipeline, blocking
-  included, hash-matches a generated DuckDB oracle end to end.
-- embedding_neardup_pairs: cosine ≥ threshold via sign-LSH blocking over
-  random hyperplanes, exact cosine verification.
+- minhash_lsh_pairs: word-n-gram MinHash LSH — md5-fold shingle codes
+  → numpy signatures of Mersenne ``(a*g + b) mod M`` permutations →
+  integer band folds → one shuffle on (band, bkey) → bucket-local
+  candidate pairs → exact Jaccard verify (ngram_pairs_oracle_sql).
+  ngram_band_table exposes its band keys for persisted stores.
+- simhash60 / simhash_pairs: 60-bit md5-token SimHash; Hamming-≤k
+  candidates via pigeonhole banding (k+1 bands ⇒ at least one
+  identical band), verified with bit_count(xor)
+  (simhash_pairs_oracle_sql).
+- embedding_neardup_pairs: cosine ≥ threshold via sign-LSH blocking
+  over ±1.0 (Rademacher) hyperplanes, exact cosine verification
+  (embedding_pairs_oracle_sql).
 - substring_run_pairs: pairs sharing EXACT ``run_len``-token runs (the
   suffix-array partial-duplication signal — boilerplate, quoted
-  passages) as a capped shingle-code equi-join; integer-exact end to
-  end, generated oracle.
+  passages) as a capped shingle-code equi-join (substring_pairs_oracle_sql).
 
-String hashing (xxhash64/md5) and set math stay JVM-side; the two
-per-element-math hot spots — MinHash's 64-permutation min-reduce and
-SimHash's 64-bit popcount accumulation — run as Arrow-batched numpy
-pandas UDFs over precomputed hash arrays, because Spark's higher-order
+Rows with NULL text have no shingles: every text miner leaves them out.
+
+String hashing (md5) and set math stay JVM-side; the two
+per-element-math hot spots — MinHash's permutation min-reduce and
+SimHash's popcount accumulation — run as Arrow-batched numpy pandas
+UDFs over precomputed code arrays, because Spark's higher-order
 functions evaluate interpreted (never whole-stage codegen; measured
 ~6× — see SCALE.md).
 
@@ -56,6 +57,7 @@ from .text import _toks_sql
 # Mersenne prime 2^31-1: (a*h + b) % M stays under 2^62, so the modular
 # permutation math never overflows a long even in ANSI mode.
 _MERSENNE = 2_147_483_647
+_FOLD_PRIME = 1_000_003  # shingle/band fold multiplier (k*P + v mod M)
 
 
 def bind_once(expr: Column, fn) -> Column:
@@ -89,41 +91,11 @@ def _token_col(text_col: Column) -> Column:
     return F.split(F.trim(F.lower(text_col)), r"\s+")
 
 
-def word_shingles(text_col: Column, k: int) -> Column:
-    """Array of k-word shingles (distinct).  k=1 degenerates to the
-    distinct token set.  The token array is bound once (see bind_once)."""
-    tokens = _token_col(text_col)
-    if k == 1:
-        return F.array_distinct(tokens)
-
-    def build(toks: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1)))
-        return F.array_distinct(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
-        )
-
-    return bind_once(tokens, build)
-
-
-def shingle_hashes(text_col: Column, shingle_size: int = 3) -> Column:
-    """Distinct word-shingle hashes folded into [0, MERSENNE).
-
-    (A numeric rolling-combine over per-token hashes was tried here and
-    measured SLOWER than hashing the joined shingle strings — nested
-    element_at chains lose to the native slice + array_join kernels.)"""
-    return F.transform(
-        word_shingles(text_col, shingle_size), lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE))
-    )
-
-
 def minhash_from_hashes(hashes_col: Column, num_perm: int = 64, seed: int = 42) -> Column:
-    """MinHash signature (array<long>) from a PRE-MATERIALIZED column of
-    shingle hashes: sig[i] = min over hashes of (a_i*h + b_i) mod M.
-
-    Take the hashes from a persisted column: Catalyst does not eliminate
-    common subtrees across lambda bodies, so referencing a raw
-    shingle-construction expression here would recompute the (expensive)
-    shingling once per permutation — measured 64× slower."""
+    """MinHash signature (array<long>) as one JVM expression:
+    sig[i] = min over hashes h of (a_i*h + b_i) mod M.  The reference
+    form :func:`minhash_udf` is checked against; pipelines use the UDF
+    (Spark's higher-order functions evaluate interpreted — see there)."""
 
     params = _perm_params(num_perm, seed)
     # One parsed literal of (a, b) pairs + one nested transform: a
@@ -139,35 +111,31 @@ def minhash_from_hashes(hashes_col: Column, num_perm: int = 64, seed: int = 42) 
     )
 
 
-def minhash_signature(
-    text_col: Column, num_perm: int = 64, shingle_size: int = 3, seed: int = 42
-) -> Column:
-    """Single-expression MinHash signature.  Convenient for one-off use;
-    pipelines should stage shingle_hashes() through a persisted column
-    and call minhash_from_hashes() (see note there)."""
-    return minhash_from_hashes(shingle_hashes(text_col, shingle_size), num_perm, seed)
+def minhash_udf(bands: int, rows_per_band: int, seed: int):
+    """Arrow-batched numpy MinHash band keys over a shingle-code array
+    column: the signature of ``bands * rows_per_band`` ``(a*h + b) mod
+    M`` permutations (numerically IDENTICAL to minhash_from_hashes from
+    the same seed), each run of ``rows_per_band`` consecutive values
+    folded into one band key ``k*P + v mod M`` — pure integer
+    arithmetic DuckDB evaluates identically (see
+    _ngram_band_sql_parts).  With ``rows_per_band=1`` the keys are the
+    signature itself.
 
-
-def minhash_udf(num_perm: int = 64, seed: int = 42):
-    """Arrow-batched numpy MinHash over a pre-materialized hash-array
-    column — numerically IDENTICAL to minhash_from_hashes (same
-    ``(a*h + b) mod M`` permutations from the same seed), but ~6×
-    faster on the signature stage: Spark's higher-order functions
-    evaluate on the interpreted expression path (never whole-stage
-    codegen), so the 64-permutation min-reduce costs ~20 s over 50k
-    docs JVM-side vs ~3.5 s as one vectorized ``(A*h+B) % M`` outer
-    product per Arrow batch (measured at sf1).  Same precedent as
-    simhash64's popcount UDF: Python only where numpy beats the
-    interpreted JVM path.  Rows with no hashes yield NULL signatures
-    (degenerate docs cannot verify as near-dups anyway)."""
-    import numpy as np
+    Spark's higher-order functions evaluate on the interpreted
+    expression path (never whole-stage codegen), so the 64-permutation
+    min-reduce costs ~20 s over 50k docs JVM-side vs ~3.5 s as one
+    vectorized ``(A*h+B) % M`` outer product per Arrow batch (measured
+    at sf1).  Same precedent as simhash60's popcount UDF: Python only
+    where numpy beats the interpreted JVM path.  Codes are below 2^32
+    and a, b below M, so ``a*h + b`` stays under 2^63; band folds stay
+    under 2^52 (values < M, P < 2^20).  Rows with no codes yield NULL."""
     from pyspark.sql.types import ArrayType, LongType
 
-    params = _perm_params(num_perm, seed)
+    params = _perm_params(bands * rows_per_band, seed)
     a = [p[0] for p in params]
     b = [p[1] for p in params]
 
-    @F.pandas_udf(ArrayType(LongType()))
+    @F.pandas_udf(ArrayType(LongType(), containsNull=False))
     def mh(hash_arrays: pd.Series) -> pd.Series:
         import numpy as np
 
@@ -179,112 +147,86 @@ def minhash_udf(num_perm: int = 64, seed: int = 42):
                 out.append(None)
                 continue
             h = np.asarray(arr, dtype=np.int64)[None, :]
-            out.append(((A * h + B) % _MERSENNE).min(axis=1).tolist())
+            sig = ((A * h + B) % _MERSENNE).min(axis=1)
+            rows = sig.reshape(bands, rows_per_band)
+            keys = rows[:, 0]
+            for j in range(1, rows_per_band):
+                keys = (keys * _FOLD_PRIME + rows[:, j]) % _MERSENNE
+            out.append(keys.tolist())
         return pd.Series(out)
 
     return mh
+
+
+def _band_table(base: DataFrame, bands: int, rows_per_band: int, seed: int) -> DataFrame:
+    """(__id__, band, bkey) from a prepared (__id__, grams) frame — the
+    ONE place the MinHash band keys are computed (shared by the pair
+    miner and the persisted band store, so the two can never drift):
+    minhash_udf's band keys, posexploded.  A row without codes has no
+    keys, so it has no band rows."""
+    keys = minhash_udf(bands, rows_per_band, seed)(F.col("grams"))
+    return base.select("__id__", F.posexplode(keys).alias("band", "bkey"))
+
+
+def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(__id__, grams) for every non-NULL-text row: NULL text has no
+    shingles, so it can neither pair nor be paired."""
+    return df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("__id__"),
+        word_ngram_codes(F.col(text_col), n).alias("grams"),
+    )
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_size: int = 3,
+    n: int = 3,
     threshold: float = 0.5,
-    seed: int = 42,
+    bands: int = 4,
+    rows_per_band: int = 3,
+    seed: int = 7,
     max_bucket: int = 1000,
-    md5_mode: bool = False,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
+    """Word-n-gram near-duplicate pairs (id_a < id_b, jaccard >=
+    threshold) by MinHash LSH, engine-exact end to end: shingle codes
+    are md5-fold ints (word_ngram_codes), each of ``bands`` band keys
+    folds ``rows_per_band`` minhash values — min over codes g of ``(a*g
+    + b) mod M``, M = 2^31-1 — and verification is exact Jaccard on the
+    code sets.  So the whole pipeline, blocking included, hash-matches
+    the DuckDB oracle ngram_pairs_oracle_sql with the same parameters.
 
-    Plan shape: scan → signature (narrow) → explode bands → shuffle on
-    (band, band_hash) → bucket-local self-join → exact Jaccard verify on
-    the shingle sets.  Buckets larger than ``max_bucket`` are dropped
-    (degenerate mass-duplicate clusters; handle those with exact_dedup
-    on the fingerprint first).
+    A pair with Jaccard j becomes a candidate with probability
+    1-(1-j^r)^bands (r=3, 4 bands: j=0.9 → 99.5%, j=0.004 → ~3e-7) —
+    the classic LSH S-curve with a DETERMINISTIC fixed-seed hash.  Key
+    cardinality grows with the corpus (attribute blocking went
+    quadratic at 10× data: 366 blocks → 4.1M candidate pairs), while
+    minhash buckets stay near-dup-sized.  Buckets larger than
+    ``max_bucket`` are dropped (degenerate mass-duplicate clusters;
+    handle those with exact_dedup on the fingerprint first).  Rows with
+    NULL text are left out.
 
-    ``md5_mode``: engine-exact hashing end to end — shingle codes are
-    the md5-fold word_ngram_codes and band keys are Mersenne folds of
-    the signature slice (instead of xxhash64 on both) — so the FULL
-    pipeline hash-checks against ngram_pairs_oracle_sql with the same
-    parameters.  The numpy signature UDF is shared by both modes (its
-    ``(a*h+b) mod M`` permutations are already oracle-equal integer
-    math); only the shingle/band hash functions differ."""
-    rows_per_band = num_perm // bands
-    # Stage 1 — materialize shingle hashes once per row.  The signature
-    # derives 64 mins from this array; without the persist boundary each
-    # permutation would recompute the whole shingling subtree (Catalyst
-    # does no CSE across lambda bodies — measured 64× slower).
-    shingle_expr = (
-        word_ngram_codes(F.col(text_col), shingle_size)
-        if md5_mode
-        else shingle_hashes(F.col(text_col), shingle_size)
-    )
-    hashed = df.select(
-        F.col(id_col).alias("__id__"),
-        shingle_expr.alias("__shingles__"),
-    ).transform(materialize)
-    # Stage 2 — signatures from the cached hash arrays.  Persisted too:
-    # referenced by bucket counting and both self-join sides.  Jaccard
-    # verification also runs on the hash sets (identical to shingle-set
-    # Jaccard up to xxhash64 collisions).  ~1 KB/row, MEMORY_AND_DISK-style
-    # eviction handled by Spark's block manager; mirrors how Spark MLlib's
-    # MinHashLSH materializes its transformed dataset.
-    base = hashed.select(
-        "__id__",
-        "__shingles__",
-        # numpy UDF, not minhash_from_hashes: identical values, ~6×
-        # faster (HOFs are interpreted, not codegen — see minhash_udf).
-        minhash_udf(num_perm, seed)(F.col("__shingles__")).alias("__sig__"),
-    ).transform(materialize)  # not persist: blocks free on GC of
-    # the returned DataFrame instead of leaking for the session
-
-    # Bands carry ONLY (id, band, bhash) — the (large) shingle arrays
-    # never enter the banding shuffles; they are joined back from the
-    # persisted base solely for final candidate verification.
-    if md5_mode:
-        # Mersenne fold of the slice (oracle-equal integer math,
-        # matching ngram_pairs_oracle_sql's band_key)
-        def band_hash(j):
-            return F.aggregate(
-                F.slice(F.col("__sig__"), j * rows_per_band + 2, rows_per_band - 1),
-                F.element_at(F.col("__sig__"), j * rows_per_band + 1),
-                lambda k, v: (k * F.lit(_FOLD_PRIME) + v) % F.lit(_MERSENNE),
-            )
-    else:
-        def band_hash(j):
-            return F.xxhash64(
-                F.array_join(
-                    F.transform(
-                        F.slice(F.col("__sig__"), j * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                    ",",
-                )
-            )
-
-    banded = base.select(
-        "__id__",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), band_hash(j).alias("bhash"))
-                    for j in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select("__id__", "__band__.band", "__band__.bhash")
+    Plan shape: scan → shingle codes (one eager checkpoint: it feeds
+    the banding pass and both verification join-backs) → numpy
+    signature + band folds → one shuffle on (band, bkey) → bucket-local
+    pairs → exact Jaccard.  The (large) code arrays never enter the
+    banding shuffle."""
+    if bands < 1 or rows_per_band < 1:
+        raise ValueError(
+            f"minhash_lsh_pairs needs bands >= 1 and rows_per_band >= 1, "
+            f"got {bands} and {rows_per_band}"
+        )
+    # eager checkpoint, not persist: blocks free on GC of the returned
+    # DataFrame instead of leaking for the session
+    base = _shingled(df, id_col, text_col, n).transform(materialize)
+    banded = _band_table(base, bands, rows_per_band, seed)
 
     # Bucket-local pair generation WITHOUT a self-join: one shuffle
-    # gathers each (band, bhash) bucket's ids into an array, then the
-    # id_a < id_b pairs expand as a JVM array expression.  The old
-    # count-filter-join + self-join layout cost three shuffles of the
-    # banded table; this costs one, and the max_bucket guard bounds the
-    # per-bucket O(n²) expansion exactly as before.
+    # gathers each (band, bkey) bucket's ids into an array, then the
+    # id_a < id_b pairs expand as a JVM array expression; the
+    # max_bucket guard bounds the per-bucket O(n²) expansion.
     buckets = (
-        banded.groupBy("band", "bhash")
+        banded.groupBy("band", "bkey")
         .agg(F.collect_list("__id__").alias("ids"))
         .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
     )
@@ -301,27 +243,19 @@ def minhash_lsh_pairs(
     candidates = (
         buckets.select(F.explode(pair_expr).alias("p"))
         .select("p.id_a", "p.id_b")
+        # a pair can collide in several bands
         .dropDuplicates(["id_a", "id_b"])
     )
 
-    shingle_sets = base.select("__id__", "__shingles__").hint("merge")
+    grams = base.hint("merge")
     # merge hints: see embedding_neardup_pairs — neither the statically
     # underestimated pair list nor the corpus-sized checkpoint frame
     # may ever be the broadcast side
-    candidates = (
-        candidates.hint("merge")
-        .join(
-            shingle_sets.select(F.col("__id__").alias("id_a"), F.col("__shingles__").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            shingle_sets.select(F.col("__id__").alias("id_b"), F.col("__shingles__").alias("sh_b")),
-            "id_b",
-        )
-    )
-
+    candidates = candidates.hint("merge").join(
+        grams.select(F.col("__id__").alias("id_a"), F.col("grams").alias("g_a")), "id_a"
+    ).join(grams.select(F.col("__id__").alias("id_b"), F.col("grams").alias("g_b")), "id_b")
     return (
-        candidates.withColumn("jaccard", _jaccard_expr("sh_a", "sh_b"))
+        candidates.withColumn("jaccard", _jaccard_expr("g_a", "g_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -339,43 +273,23 @@ def _jaccard_expr(a: str, b: str) -> Column:
     )
 
 
-def minhash_dedup(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5, **kwargs
-) -> DataFrame:
-    """Drop near-duplicates: any row with a lower-id near-dup partner is
-    removed (single-hop min-id clustering — transitive chains longer
-    than one hop are handled by re-running; documented approximation,
-    avoids an iterative connected-components job)."""
-    pairs = minhash_lsh_pairs(df, id_col, text_col, threshold=threshold, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
-
-
 # --- SimHash ---------------------------------------------------------------
 
 
-def simhash64(
-    df: DataFrame, id_col: str, text_col: str, md5_mode: bool = False
-) -> DataFrame:
-    """Add ``simhash``: SimHash of the token multiset.  Token hashing
-    runs JVM-side; the per-bit popcount accumulation runs in one
-    Arrow-batched pandas UDF over the hash arrays (numpy vectorized —
-    Python never touches strings).
-
-    Default: 64-bit xxhash64 tokens (fastest JVM hash).  ``md5_mode``:
-    60-bit md5-prefix tokens (``conv(substring(md5(w),1,15),16,10)`` ==
-    DuckDB ``('0x'||substr(md5(w),1,15))::BIGINT``) — slower hashing,
-    but every stage becomes engine-exact integer math, so the FULL
-    pipeline is oracle-checkable (simhash_pairs_oracle_sql)."""
-    tokens = _token_col(F.col(text_col))
-    if md5_mode:
-        n_bits = 60
-        hashes = F.transform(
-            tokens, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-        )
-    else:
-        n_bits = 64
-        hashes = F.transform(tokens, lambda t: F.xxhash64(t))
+def simhash60(df: DataFrame, text_col: str) -> DataFrame:
+    """Add ``simhash``: 60-bit SimHash of the token multiset.  Tokens
+    hash JVM-side to their 60-bit md5 prefix
+    (``conv(substring(md5(w),1,15),16,10)`` == DuckDB
+    ``('0x'||substr(md5(w),1,15))::BIGINT``), so every stage is
+    engine-exact integer math and the pipeline is oracle-checkable
+    (simhash_pairs_oracle_sql); the per-bit popcount accumulation runs
+    in one Arrow-batched pandas UDF over the hash arrays (numpy
+    vectorized — Python never touches strings)."""
+    n_bits = 60
+    hashes = F.transform(
+        _token_col(F.col(text_col)),
+        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
+    )
 
     import numpy as np
     from pyspark.sql.types import LongType
@@ -406,12 +320,13 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     max_bucket: int = 1000,
-    md5_mode: bool = False,
 ) -> DataFrame:
     """Candidate pairs with Hamming(simhash) <= max_hamming, via
-    pigeonhole banding: split 64 bits into (max_hamming+1) bands — any
-    pair within the Hamming budget must agree exactly on ≥1 band.
-    Verification is bit_count(xor) on the JVM.
+    pigeonhole banding: split the 60 bits into (max_hamming+1) bands —
+    any pair within the Hamming budget must agree exactly on ≥1 band.
+    Verification is bit_count(xor) on the JVM.  Rows with NULL text
+    are left out.  The whole pipeline hash-checks against
+    simhash_pairs_oracle_sql with the same parameters.
 
     Plan shape mirrors minhash_lsh_pairs: one shuffle gathers each
     (band, bval) bucket's (id, simhash) structs, the id_a < id_b pairs
@@ -420,8 +335,8 @@ def simhash_pairs(
     bucket payload (8 bytes), so no join-back — and the pandas-UDF
     signature pass sits in a single linear chain, needing no persist."""
     n_bands = max_hamming + 1
-    width = (60 if md5_mode else 64) // n_bands
-    with_sig = simhash64(df, id_col, text_col, md5_mode=md5_mode).select(
+    width = 60 // n_bands
+    with_sig = simhash60(df.filter(F.col(text_col).isNotNull()), text_col).select(
         F.col(id_col).alias("__id__"), "simhash"
     )
 
@@ -481,7 +396,7 @@ def simhash_pairs_oracle_sql(
     max_hamming: int = 3,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB oracle for simhash_pairs(md5_mode=True): the same 60-bit
+    """DuckDB oracle for simhash_pairs: the same 60-bit
     md5-prefix token hashes, per-bit vote sums via unnest ×
     generate_series, signature assembly by shifted bit sums, pigeonhole
     banding, and bit_count(xor) Hamming verification — every stage
@@ -529,8 +444,8 @@ def char_ngrams(text_col: Column, n: int = 3) -> Column:
 
 
 def char_ngram_codes(text_col: Column, n: int = 3) -> Column:
-    """Distinct char-n-gram CODES of the lowercased text — the set-math
-    form ngram_jaccard_pairs consumes.
+    """Distinct char-n-gram CODES of the lowercased text — a set-math
+    form of char_ngrams.
 
     For n <= 3 each gram packs exactly into one long (21 bits per
     codepoint — Unicode tops out below 2^21), a COLLISION-FREE encoding
@@ -559,9 +474,6 @@ def char_ngram_codes(text_col: Column, n: int = 3) -> Column:
 
     codes = F.transform(F.split(F.lower(text_col), ""), lambda c: F.ascii(c))
     return bind_once(codes, build)
-
-
-_FOLD_PRIME = 1_000_003  # shingle/band fold multiplier (k*P + v mod M)
 
 
 def word_ngram_codes(text_col: Column, n: int = 3) -> Column:
@@ -598,53 +510,6 @@ def word_ngram_codes(text_col: Column, n: int = 3) -> Column:
     return bind_once(word_codes, build)
 
 
-def _band_table_from_base(
-    base: DataFrame, bands: int, rows_per_band: int, seed: int
-) -> DataFrame:
-    """(__id__, band, bkey) from a prepared (__id__, grams) frame — the
-    ONE place the md5-mode MinHash band keys are computed (shared by
-    the pair miner and the persisted band store, so the two can never
-    drift).  Each band key folds ``rows_per_band`` minhash values —
-    min over shingle codes g of ``(a*(g mod M) + b) mod M`` — with
-    pure integer arithmetic DuckDB evaluates identically."""
-    params = _perm_params(bands * rows_per_band, seed)
-
-    def min_hash(a: int, b: int) -> Column:
-        # closure factory, NOT a default-arg lambda (default args change
-        # the perceived lambda arity and break HOF binding)
-        return F.array_min(
-            F.transform(
-                F.col("grams"),
-                lambda g: (F.lit(a) * (g % F.lit(_MERSENNE)) + F.lit(b)) % F.lit(_MERSENNE),
-            )
-        )
-
-    def band_key(i: int) -> Column:
-        # fold the band's r min-values into one key; values < M and
-        # P < 2^20 keep every intermediate under 2^52 (no overflow)
-        vals = [min_hash(a, b) for a, b in params[i * rows_per_band : (i + 1) * rows_per_band]]
-        k = vals[0]
-        for v in vals[1:]:
-            k = (k * F.lit(_FOLD_PRIME) + v) % F.lit(_MERSENNE)
-        return k
-
-    return (
-        base.select(
-            "__id__",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(i).alias("band"), band_key(i).alias("bkey"))
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("bd"),
-        )
-        .select("__id__", "bd.band", "bd.bkey")
-        .filter(F.col("bkey").isNotNull())
-    )
-
-
 def ngram_band_table(
     df: DataFrame,
     id_col: str,
@@ -658,93 +523,8 @@ def ngram_band_table(
     non-NULL-text document — the unit a persisted near-dup signature
     store is made of (see incremental.build_neardup_store).  Single
     consumer, so no checkpoint: the caller decides materialization."""
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__id__"),
-        word_ngram_codes(F.col(text_col), n).alias("grams"),
-    )
-    return _band_table_from_base(base, bands, rows_per_band, seed).withColumnRenamed(
-        "__id__", id_col
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    bands: int = 4,
-    rows_per_band: int = 3,
-    seed: int = 7,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Exact word-n-gram Jaccard with DETERMINISTIC MinHash-banded
-    blocking, fully SQL-oracle-checkable end to end: shingle codes are
-    engine-exact ints (word_ngram_codes), each of ``bands`` band keys
-    folds ``rows_per_band`` minhash values — min over shingle codes g of
-    ``(a*(g mod M) + b) mod M``, M = 2^31-1 — with pure integer
-    arithmetic DuckDB evaluates identically (see ngram_pairs_oracle_sql).
-    This is the same LSH architecture as minhash_lsh_pairs, trading
-    xxhash64 for md5/modular hashing so the ENTIRE pipeline (blocking +
-    exact Jaccard verify) hash-matches a DuckDB oracle instead of a
-    rows-only check.
-
-    A pair with Jaccard j becomes a candidate with probability
-    1-(1-j^r)^bands (r=3, 4 bands: j=0.9 → 99.5%, j=0.004 → ~3e-7) —
-    the classic LSH S-curve with a DETERMINISTIC fixed-seed hash, so
-    both engines compute the identical candidate set.  Unlike attribute
-    blocking (length bucket + leading token — the v1 scheme), key
-    cardinality GROWS with the corpus: measured at 10× data, attribute
-    blocks went quadratic (366 blocks total → 4.1M candidate pairs)
-    while minhash buckets stay near-dup-sized.  ``max_bucket`` still
-    drops degenerate mass-duplicate buckets.
-
-    Plan shape mirrors minhash_lsh_pairs: one shuffle gathers each
-    bucket's ids, pairs expand as a JVM array expression, and the
-    (large) shingle arrays never enter the blocking shuffle — they join
-    back from the persisted base only for final verification."""
-    base = df.select(
-        F.col(id_col).alias("__id__"),
-        word_ngram_codes(F.col(text_col), n).alias("grams"),
-    ).transform(materialize)  # feeds the banding groupBy and both
-    # verification join-backs; eager checkpoint so blocks free on GC
-
-    banded = _band_table_from_base(base, bands, rows_per_band, seed)
-
-    buckets = (
-        banded.groupBy("band", "bkey")
-        .agg(F.collect_list("__id__").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-    )
-    ids = F.col("ids")
-    pair_expr = F.flatten(
-        F.transform(
-            ids,
-            lambda a: F.transform(
-                F.filter(ids, lambda b: b > a),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
-    candidates = (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .select("p.id_a", "p.id_b")
-        # a pair can collide in several bands
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    grams = base.select("__id__", "grams").hint("merge")
-    # merge hints: see embedding_neardup_pairs — neither the statically
-    # underestimated pair list nor the corpus-sized checkpoint frame
-    # may ever be the broadcast side
-    candidates = candidates.hint("merge").join(
-        grams.select(F.col("__id__").alias("id_a"), F.col("grams").alias("g_a")), "id_a"
-    ).join(grams.select(F.col("__id__").alias("id_b"), F.col("grams").alias("g_b")), "id_b")
-    return (
-        candidates.withColumn("jaccard", _jaccard_expr("g_a", "g_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    base = _shingled(df, id_col, text_col, n)
+    return _band_table(base, bands, rows_per_band, seed).withColumnRenamed("__id__", id_col)
 
 
 def _ngram_band_sql_parts(
@@ -757,11 +537,11 @@ def _ngram_band_sql_parts(
     seed: int,
     g_name: str = "g",
 ) -> tuple[str, str]:
-    """The two shared DuckDB fragments of the md5-mode MinHash banding
+    """The two shared DuckDB fragments of the MinHash banding
     pipeline: the grams CTE body (``SELECT did, grams FROM ...``) and
     the banded UNION ALL selecting ``(did, band, bkey)`` from
     ``g_name``.  Generated from the SAME ``_perm_params`` as the Spark
-    ``_band_table_from_base`` — the one source of band keys for both
+    ``_band_table`` — the one source of band keys for both
     the pair oracle and the store-gate oracle, so none can drift."""
     m = _MERSENNE
     toks = _toks_sql(text_col)
@@ -812,7 +592,7 @@ def ngram_pairs_oracle_sql(
     seed: int = 7,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB oracle for ngram_jaccard_pairs, generated from the SAME
+    """DuckDB oracle for minhash_lsh_pairs, generated from the SAME
     band parameters (_perm_params) as the Spark plan — the two can never
     drift.  Every stage is engine-exact: md5-prefix token codes match
     Spark's conv(substring(md5,1,8),16,10), shingle and band keys are
@@ -886,21 +666,18 @@ def embedding_neardup_pairs(
     n_tables: int = 2,
     seed: int = 42,
     max_bucket: int = 2000,
-    rademacher: bool = False,
     dim: int | None = None,
     corpus_count: int | None = None,
 ) -> DataFrame:
     """Cosine-similar pairs (cos >= threshold) via sign-LSH blocking:
-    ``n_tables`` independent sets of ``n_planes`` random hyperplanes;
-    candidates share a full sign pattern in at least one table; exact
-    cosine verifies.  Recall < 1 by construction (documented LSH
-    trade-off); raise n_tables for higher recall.
-
-    ``rademacher``: ±1.0 planes (similarity.rademacher_planes) instead
-    of Gaussian — identical LSH family guarantees, but every projection
-    becomes an exact-float add/subtract chain, so the WHOLE pipeline
-    (bucket assignment included) hash-checks against the generated
-    DuckDB oracle (embedding_pairs_oracle_sql with the same seed).
+    ``n_tables`` independent sets of ``n_planes`` random ±1.0
+    (Rademacher) hyperplanes; candidates share a full sign pattern in
+    at least one table; exact cosine verifies.  Recall < 1 by
+    construction (documented LSH trade-off); raise n_tables for higher
+    recall.  Every projection is an exact-float add/subtract chain, so
+    the WHOLE pipeline (bucket assignment included) hash-checks against
+    the generated DuckDB oracle (embedding_pairs_oracle_sql with the
+    same seed).
 
     SIZE ``n_planes`` TO THE CORPUS: each table has 2**n_planes
     buckets, so once corpus >> 2**n_planes · max_bucket every bucket
@@ -953,9 +730,7 @@ def embedding_neardup_pairs(
     banded = base.select(
         "__id__",
         F.posexplode(
-            multi_table_signatures(
-                guarded, n_planes, n_tables, seed, dim, rademacher=rademacher
-            )
+            multi_table_signatures(guarded, n_planes, n_tables, seed, dim)
         ).alias("tbl", "bucket"),
     )
     buckets = (
@@ -1041,9 +816,9 @@ def embedding_pairs_oracle_sql(
     max_bucket: int = 2000,
     dim: int = 64,
 ) -> str:
-    """DuckDB oracle for embedding_neardup_pairs(rademacher=True),
-    generated from the SAME ±1.0 planes (similarity.rademacher_planes
-    with the same seed) — the two cannot drift.  Each sign projection
+    """DuckDB oracle for embedding_neardup_pairs, generated from the
+    SAME ±1.0 planes (similarity.rademacher_planes with the same seed)
+    — the two cannot drift.  Each sign projection
     unrolls to the identical left-to-right add/subtract chain Spark's
     dot fold evaluates (±1.0 products are exact, float addition order
     matches), the bucket id is the same bit-pack integer, and the final
@@ -1135,13 +910,10 @@ def substring_run_pairs(
     pair.  No full-text column ever enters a shuffle.
 
     Extends the reference's operator surface (its dedup vocabulary is
-    absent entirely — SURVEY §2.2); sibling of ngram_jaccard_pairs
-    (word-gram Jaccard) and minhash_lsh_pairs (approximate Jaccard)."""
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__id__"),
-        word_ngram_codes(F.col(text_col), run_len).alias("runs"),
-    )
-    exploded = base.select("__id__", F.explode("runs").alias("code"))
+    absent entirely — SURVEY §2.2); sibling of minhash_lsh_pairs
+    (word-gram Jaccard)."""
+    base = _shingled(df, id_col, text_col, run_len)
+    exploded = base.select("__id__", F.explode("grams").alias("code"))
     buckets = (
         exploded.groupBy("code")
         .agg(F.collect_list("__id__").alias("ids"))

@@ -1,8 +1,7 @@
 """Distributed connected components — the clustering step that turns
 near-duplicate PAIRS (dedup.py emits them) into duplicate CLUSTERS and
 a deterministic survivor set.  This closes the dedup loop the
-single-hop approximation in ``dedup.minhash_dedup`` documents as
-deferred: transitive chains (A~B, B~C, but A≁C) collapse into one
+single-hop ``dedup`` flow mode ``drop`` leaves open: transitive chains (A~B, B~C, but A≁C) collapse into one
 component here, so exactly one document per duplicate cluster
 survives.
 

@@ -228,7 +228,6 @@ def incremental_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     mode: str = "annotate",
-    cache: bool = True,
 ) -> DataFrame:
     """Append-batch deduplication: which rows of an incoming batch are
     already in the corpus, and which duplicate each other WITHIN the
@@ -237,13 +236,11 @@ def incremental_dedup(
     text fingerprint (text.with_fingerprint: md5 over lowercased,
     whitespace-collapsed text), so formatting variants dedup too.
 
-    ``cache``: eagerly localCheckpoint the fingerprinted batch (it
-    feeds both the fingerprint-set broadcast and the final
-    join/window), so the materialized blocks free when the returned
-    DataFrame is garbage-collected instead of leaking executor storage
-    for the session (``persist`` on a lazily-returned result can never
-    be safely released).  Pass ``cache=False`` to recompute the batch
-    fingerprints on the second branch instead.
+    The fingerprinted batch is eagerly materialized (it feeds both the
+    fingerprint-set broadcast and the final join/window), so its blocks
+    free when the returned DataFrame is garbage-collected instead of
+    leaking executor storage for the session (``persist`` on a
+    lazily-returned result can never be safely released).
 
     mode='annotate' returns the batch with ``is_known`` (fingerprint
     exists in the corpus) and ``is_batch_dup`` (a lower-id row of the
@@ -264,9 +261,7 @@ def incremental_dedup(
 
     if mode not in ("annotate", "filter"):
         raise ValueError(f"mode must be annotate/filter, got {mode!r}")
-    batch = with_fingerprint(new_docs, text_col)
-    if cache:
-        batch = batch.transform(materialize)
+    batch = with_fingerprint(new_docs, text_col).transform(materialize)
     batch_fps = batch.select(F.col("fingerprint").alias("__fp__")).distinct()
     known = (
         with_fingerprint(corpus, text_col)
@@ -331,7 +326,6 @@ def incremental_neardup(
     shingle_size: int = 3,
     seed: int = 42,
     max_bucket: int = 1000,
-    md5_mode: bool = False,
 ) -> DataFrame:
     """NEAR-duplicate admission gate — the paraphrase-level companion
     to :func:`incremental_dedup`, whose fingerprint key only catches
@@ -360,19 +354,17 @@ def incremental_neardup(
     it inline, which is the correct semantics and the right shape for
     the recompute; the band-table reuse is a storage-layout decision
     (cf. sources/io.py write_bucketed) orthogonal to the operator.
-
-    ``md5_mode``: engine-exact hashing end to end (cf.
-    minhash_lsh_pairs), so both verdicts hash-check against the
-    generated oracles."""
+    Every stage is engine-exact, so both verdicts hash-check against
+    the generated oracle.  Rows with NULL text never pair, so they
+    are admitted."""
     from .curation import side_tagged_pairs
 
     if mode not in ("annotate", "filter"):
         raise ValueError(f"mode must be annotate/filter, got {mode!r}")
     pairs = side_tagged_pairs(
         new_docs, corpus, id_col, text_col,
-        threshold=threshold, num_perm=num_perm, bands=bands,
-        shingle_size=shingle_size, seed=seed, max_bucket=max_bucket,
-        md5_mode=md5_mode,
+        n=shingle_size, threshold=threshold, bands=bands,
+        rows_per_band=num_perm // bands, seed=seed, max_bucket=max_bucket,
     ).transform(materialize)  # consumed by both verdicts; tiny
     # (near-dup pairs only) — eager checkpoint, not persist: blocks
     # free on GC of the result instead of leaking for the session
@@ -420,10 +412,10 @@ def incremental_neardup_oracle_sql(
     seed: int = 42,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB mirror of :func:`incremental_neardup` (annotate mode,
-    md5_mode): ONE generated pair SQL (dedup.ngram_pairs_oracle_sql)
-    over the union table — the same single banding space as the Spark
-    plan — with EXISTS verdicts reading side membership off
+    """DuckDB mirror of :func:`incremental_neardup` (annotate mode):
+    ONE generated pair SQL (dedup.ngram_pairs_oracle_sql) over the
+    union table — the same single banding space as the Spark plan —
+    with EXISTS verdicts reading side membership off
     ``batch_predicate`` — an ``{id}``-placeholder SQL template, e.g.
     ``"{id} % 10 = 3"``.  The plain-id pairs orient by id while the
     Spark struct keys orient batch-first, so the cross verdict accepts

@@ -36,16 +36,15 @@ Scale shapes (100 TB):
   materialized copy → vocabulary-sized stats → anti-join-guarded
   posting collect.  Three wide exchanges total.
 
-Cache lifetime: when ``cache=True`` every operator here materializes
-its reused intermediate with an EAGER ``localCheckpoint`` — never
-``persist`` — so the blocks free when the returned DataFrame is
-garbage-collected instead of leaking executor storage for the session
-(a lazily-returned result can never safely ``unpersist`` its own
-inputs).  Pass ``cache=False`` for a fully lazy plan that re-derives
-the intermediate.  Cluster note: ``localCheckpoint`` blocks live on
-the executors that computed them, so with aggressive dynamic
-de-allocation prefer ``cache=False`` (recompute) or a reliable
-``checkpoint`` directory.
+Cache lifetime: every operator here materializes its reused
+intermediate through ``session.materialize`` (a ``localCheckpoint`` by
+default) — never ``persist`` — so the blocks free when the returned
+DataFrame is garbage-collected instead of leaking executor storage for
+the session (a lazily-returned result can never safely ``unpersist``
+its own inputs).  Cluster note: ``localCheckpoint`` blocks live on the
+executors that computed them, so with aggressive dynamic
+de-allocation set the session's materialization mode to
+``checkpoint`` (see ``session.materialize``).
 """
 
 from __future__ import annotations
@@ -92,7 +91,6 @@ def keyword_search_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    cache: bool = True,
 ) -> DataFrame:
     """Top-``k`` documents for ``query_terms`` under rational-idf BM25
     (see module docstring).  Ties break on ascending id so the result
@@ -103,15 +101,10 @@ def keyword_search_topk(
     after Catalyst's projection collapse (T separate ``filter`` calls
     would each re-inline the split — the with_repetition lesson).  The
     per-doc branch then feeds both the corpus-stats aggregate and the
-    scoring projection.
-
-    ``cache``: eagerly localCheckpoint the per-doc counts frame — (id,
-    dl, T ints), a few bytes per document, NOT the token arrays — so
-    the second scan reads the narrow materialized copy instead of
-    re-splitting the corpus, and the blocks free on GC of the result
-    (see module docstring).  Pass False to trade the materialization
-    for one extra corpus scan — both plans are correct, this is purely
-    a storage-vs-CPU knob."""
+    scoring projection.  That branch is eagerly materialized — (id, dl,
+    T ints), a few bytes per document, NOT the token arrays — so the
+    second consumer reads the narrow copy instead of re-splitting the
+    corpus (see module docstring)."""
     terms = _normalized_terms(query_terms)
 
     # One fold computes dl plus every tf: acc is a (T+1)-field struct of
@@ -140,9 +133,8 @@ def keyword_search_topk(
             F.col("__c__")["dl"].alias("dl"),
             *[F.col("__c__")[f"tf_{i}"].alias(f"tf_{i}") for i in range(len(terms))],
         )
+        .transform(materialize)
     )
-    if cache:
-        base = base.transform(materialize)
 
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -234,7 +226,6 @@ def inverted_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_df: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Term-level index: ``df`` (document frequency), ``tf_total``
     (corpus term frequency), and ``postings`` — the id-ascending
@@ -243,7 +234,7 @@ def inverted_index(
     statistics still report).  See module docstring for the anti-join
     guard that keeps the collect bounded at scale.
 
-    Shuffle shape (cache=True): exactly THREE wide exchanges run end to
+    Shuffle shape: exactly THREE wide exchanges run end to
     end — (1) the map-side-combined (term, doc) tf count, (2) the
     per-term stats aggregate, (3) the posting aggregation.  tf and
     stats are ``localCheckpoint``-ed (eager): each is computed ONCE and
@@ -254,21 +245,15 @@ def inverted_index(
     a lazily-returned result can never safely unpersist).  The over-cap
     rows re-enter the result via a UNION of the stats branch — no
     stats⋈postings join at all (the previous shape spent 9 exchanges
-    on separate shuffle chains plus a sort-merge join).
-
-    ``cache=False`` builds the same result fully lazily (no eager jobs,
-    no executor storage) at the cost of re-deriving the tf subtree per
-    branch — the right trade when the tf table rivals the corpus and
-    executor storage is the scarcer resource.  Correctness is identical
-    either way."""
+    on separate shuffle chains plus a sort-merge join)."""
     toks = (
         df.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col).alias("__id__"), F.explode(_tokens(F.col(text_col))).alias("term"))
     )
     # exchange 1: partial-aggregated (term, doc) counts
-    tf = toks.groupBy("term", "__id__").agg(F.count(F.lit(1)).alias("tf"))
-    if cache:
-        tf = tf.transform(materialize, False)
+    tf = toks.groupBy("term", "__id__").agg(F.count(F.lit(1)).alias("tf")).transform(
+        materialize, False
+    )
 
     posting_expr = F.array_join(
         F.transform(
@@ -286,9 +271,7 @@ def inverted_index(
     # exchange 2: vocabulary-sized term statistics
     stats = tf.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("tf_total")
-    )
-    if cache:
-        stats = stats.transform(materialize, False)
+    ).transform(materialize, False)
     # anti-join against the OVER-cap set: hot terms are few by
     # construction (stopword-class), so that side always broadcasts;
     # the under-cap set is vocabulary-sized and must never be the
@@ -336,7 +319,6 @@ def tfidf_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    cache: bool = True,
 ) -> DataFrame:
     """Per-document top-``k`` TF-IDF terms: (id, rank, term, tfidf),
     rank 1..k by (weight desc, term asc) — the deterministic tie-break
@@ -354,15 +336,7 @@ def tfidf_topk(
     corpus N reduces to one broadcast row; the tf⋈df join shuffles on
     term (df side is vocabulary-sized — broadcastable for bounded
     vocabularies, shuffle join beyond); the top-k window shuffles on
-    doc id.  No collects, no UDFs.
-
-    ``cache=True`` (default) runs an EAGER job at construction time —
-    ``localCheckpoint`` materializes the (term, doc) counts once for
-    both consumer branches, and its blocks free on garbage collection.
-    Callers that only build/inspect the plan without executing it, or
-    that filter the result and want that filter pushed below tf,
-    should pass ``cache=False`` for a fully lazy (re-derived) plan.
-    """
+    doc id.  No collects, no UDFs."""
     if k <= 0:
         raise ValueError(f"tfidf_topk k must be positive, got {k!r}")
     from pyspark.sql import Window
@@ -371,14 +345,14 @@ def tfidf_topk(
         df.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col).alias("__id__"), F.explode(_tokens(F.col(text_col))).alias("term"))
     )
-    tf = toks.groupBy("term", "__id__").agg(F.count(F.lit(1)).alias("tf"))
-    if cache:
-        # same diamond as inverted_index: tf feeds both the df aggregate
-        # and the weighting join; an eager localCheckpoint materializes
-        # the explode+count ONCE (Catalyst's per-branch column pruning
-        # makes the two subtrees non-identical, so exchange reuse cannot
-        # dedupe them), and its blocks free on garbage collection
-        tf = tf.transform(materialize, False)
+    # same diamond as inverted_index: tf feeds both the df aggregate
+    # and the weighting join; a localCheckpoint materializes the
+    # explode+count ONCE (Catalyst's per-branch column pruning makes the
+    # two subtrees non-identical, so exchange reuse cannot dedupe them),
+    # and its blocks free on garbage collection
+    tf = toks.groupBy("term", "__id__").agg(F.count(F.lit(1)).alias("tf")).transform(
+        materialize, False
+    )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.filter(F.col(text_col).isNotNull()).agg(
         F.count(F.lit(1)).alias("n_docs")

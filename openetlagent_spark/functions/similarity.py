@@ -4,9 +4,11 @@
   set against the corpus, JVM-side dot products (zip_with + aggregate,
   no Python), window top-k per query.  The correctness baseline.
 - lsh_topk: sign-LSH bucketed approximate top-k — candidates share a
-  hyperplane sign pattern in ≥1 table, exact cosine re-ranks.  The
-  scale path: candidate generation is a bucket equi-join (shuffle on
-  bucket), not a cross join; recall < 1, tunable via n_tables/n_planes.
+  ±1.0 (Rademacher) hyperplane sign pattern in ≥1 table, exact cosine
+  re-ranks.  The scale path: candidate generation is a bucket
+  equi-join (shuffle on bucket), not a cross join; recall < 1, tunable
+  via n_tables/n_planes.  Every projection is exact, so the whole
+  query checks against a generated DuckDB oracle (lsh_topk_oracle_sql).
 - ivf_topk: inverted-file index — k-means-style centroids fitted on a
   driver-side sample (deterministic numpy), corpus assigned to nearest
   centroid (broadcast centroid array, JVM expressions), queries probe
@@ -347,16 +349,6 @@ def infer_dim(df: DataFrame, vec_col: str) -> int:
     return int(row["d"])
 
 
-def hyperplane_signature(vec: Column, n_planes: int = 8, seed: int = 42, dim: int = 64) -> Column:
-    """Sign pattern of the vector against ``n_planes`` deterministic
-    random hyperplanes, packed into a long.  Single-table special case
-    of multi_table_signatures — numpy's RNG stream makes the 1-table
-    planes identical to a standalone draw, so existing signatures are
-    unchanged.  ``dim`` MUST equal the embedding length (see
-    infer_dim)."""
-    return F.element_at(multi_table_signatures(vec, n_planes, 1, seed, dim), 1)
-
-
 def _array_literal(values) -> Column:
     """Nested double-array literal as ONE node: the values as a JSON
     string under ``from_json`` (mode FAILFAST), typed
@@ -409,18 +401,16 @@ def rademacher_planes(
 
 
 def multi_table_signatures(
-    vec: Column, n_planes: int, n_tables: int, seed: int, dim: int,
-    rademacher: bool = False,
+    vec: Column, n_planes: int, n_tables: int, seed: int, dim: int
 ) -> Column:
-    """``array<long>`` of hyperplane signatures, one per LSH table, from
-    ONE 3-D plane literal and one nested transform/aggregate expression.
-    Building per-table signature columns costs n_tables × n_planes × dim
-    py4j literal round-trips (measured: seconds of driver time); this
-    form is a handful of calls and evaluates in one JVM pass.
-
-    ``rademacher``: draw ±1.0 planes (rademacher_planes) instead of
-    Gaussian — engine-exact, enabling a full SQL oracle over the
-    blocking stage.
+    """``array<long>`` of sign-LSH signatures over ±1.0 planes
+    (rademacher_planes), one per LSH table, from ONE 3-D plane literal
+    and one nested transform/aggregate expression.  Building per-table
+    signature columns costs n_tables × n_planes × dim py4j literal
+    round-trips (measured: seconds of driver time); this form is a
+    handful of calls and evaluates in one JVM pass.  The planes make
+    every projection engine-exact, so the blocking stage has a full
+    SQL oracle.
 
     ``vec`` is hoisted through a single-element ``transform(array(vec),
     v -> …)`` wrapper (dedup.bind_once's pattern, inlined here to keep
@@ -430,11 +420,7 @@ def multi_table_signatures(
     re-evaluates them n_tables × n_planes times per row — Catalyst
     does no CSE across lambda scopes (the nearest_centroid_ids
     lesson)."""
-    if rademacher:
-        tables_lit = _array_literal(rademacher_planes(n_tables, n_planes, dim, seed))
-    else:
-        rng = np.random.RandomState(seed)
-        tables_lit = _array_literal(rng.randn(n_tables, n_planes, dim))
+    tables_lit = _array_literal(rademacher_planes(n_tables, n_planes, dim, seed))
 
     def body(v: Column) -> Column:
         return F.transform(
@@ -461,14 +447,13 @@ def lsh_topk(
     n_planes: int = 4,
     n_tables: int = 8,
     seed: int = 42,
-    rademacher: bool = False,
     broadcast_queries: bool = True,
 ) -> DataFrame:
-    """Approximate top-k: candidates share a bucket in ≥1 LSH table,
-    exact cosine re-ranks.  Each side is ONE scan: the per-table
-    signatures come out of multi_table_signatures as an array and
-    posexplode to (tbl, bucket) rows — no n_tables-way union, and the
-    only shuffle is on (tbl, bucket).
+    """Approximate top-k: candidates share a bucket in ≥1 sign-LSH
+    table over ±1.0 planes, exact cosine re-ranks.  Each side is ONE
+    scan: the per-table signatures come out of multi_table_signatures
+    as an array and posexplode to (tbl, bucket) rows — no n_tables-way
+    union, and the only shuffle is on (tbl, bucket).
 
     Knobs: fewer planes → coarser buckets → more candidates and higher
     recall; more tables → more chances to collide → higher recall.  The
@@ -478,10 +463,9 @@ def lsh_topk(
     instead use tight buckets (8+ planes), as embedding_neardup_pairs
     does.
 
-    ``rademacher``: ±1.0 planes instead of Gaussian — same LSH family
-    guarantees, but every projection becomes an exact-float
-    add/subtract chain, so the WHOLE query (bucketing, candidate set,
-    cosine, rank) hash-checks against lsh_topk_oracle_sql.
+    Every projection is an exact-float add/subtract chain, so the WHOLE
+    query (bucketing, candidate set, cosine, rank) hash-checks against
+    lsh_topk_oracle_sql.
 
     ``broadcast_queries``: True (default) broadcasts the exploded query
     signatures — right for the bounded-query-set case (the corpus is
@@ -503,8 +487,7 @@ def lsh_topk(
         F.col(vec_col).cast("array<double>").alias("cv"),
         F.posexplode(
             multi_table_signatures(
-                F.col(vec_col).cast("array<double>"), n_planes, n_tables, seed, dim,
-                rademacher=rademacher,
+                F.col(vec_col).cast("array<double>"), n_planes, n_tables, seed, dim
             )
         ).alias("tbl", "bucket"),
     )
@@ -513,8 +496,7 @@ def lsh_topk(
         F.col(vec_col).cast("array<double>").alias("qv"),
         F.posexplode(
             multi_table_signatures(
-                F.col(vec_col).cast("array<double>"), n_planes, n_tables, seed, dim,
-                rademacher=rademacher,
+                F.col(vec_col).cast("array<double>"), n_planes, n_tables, seed, dim
             )
         ).alias("tbl", "bucket"),
     )
@@ -598,8 +580,8 @@ def lsh_topk_oracle_sql(
     dim: int = 64,
     query_pred: str = "vid < 20",
 ) -> str:
-    """DuckDB oracle for lsh_topk(rademacher=True), generated from the
-    SAME ±1.0 planes (rademacher_planes, same seed).  Mirrors every
+    """DuckDB oracle for lsh_topk, generated from the SAME ±1.0
+    planes (rademacher_planes, same seed).  Mirrors every
     stage exactly: per-table sign buckets (exact-float add/subtract
     chains), the (tbl, bucket) candidate equi-join with self-match
     exclusion and pair dedup, the fold-order cosine re-rank, and the

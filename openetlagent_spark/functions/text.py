@@ -619,7 +619,6 @@ def tokenize_ids(
     text_col: str = "text",
     top_k: int = 1000,
     oov_id: int = 0,
-    cache: bool = True,
 ) -> DataFrame:
     """Last-mile tokenization: map every document to INTEGER token ids
     against the corpus's own top-``top_k`` vocabulary (id = 1..k by the
@@ -644,16 +643,14 @@ def tokenize_ids(
             f"tokenize_ids oov_id must lie outside the vocabulary id range "
             f"1..{top_k}, got {oov_id!r} (it would alias a real token's id)"
         )
+    # e feeds BOTH the vocabulary count and the id join — without the
+    # boundary the tokenize+explode of every document runs once per
+    # consumer (eager localCheckpoint; blocks free on GC — module
+    # policy, cf. doc_lm_score's base)
     e = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__id__"),
         F.posexplode(_tokens(F.col(text_col))).alias("__pos__", "tok"),
-    )
-    if cache:
-        # e feeds BOTH the vocabulary count and the id join — without
-        # the boundary the tokenize+explode of every document runs once
-        # per consumer (eager localCheckpoint; blocks free on GC —
-        # module policy, cf. doc_lm_score's base)
-        e = e.transform(materialize)
+    ).transform(materialize)
     # rank window runs on the LIMITED k-row frame — single partition by
     # construction and bounded by top_k, not by the corpus
     vocab = (
@@ -908,7 +905,6 @@ def doc_lm_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 500,
-    cache: bool = True,
 ) -> DataFrame:
     """Score every document against the corpus's own top-``k`` bigram
     LM — the CCNet-style language-model quality filter: documents whose
@@ -938,16 +934,13 @@ def doc_lm_score(
     )
     pairs = F.filter(pairs_all, lambda p: p["w2"].isNotNull())
 
+    # base feeds BOTH the LM-build branch and the per-doc gather — the
+    # same two-consumer diamond as tfidf_topk; a localCheckpoint
+    # tokenizes the corpus once instead of twice (blocks free on
+    # garbage collection)
     base = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__id__"), pairs.alias("__bg__")
-    )
-    if cache:
-        # base feeds BOTH the LM-build branch and the per-doc gather —
-        # the same two-consumer diamond as tfidf_topk; an eager
-        # localCheckpoint tokenizes the corpus once instead of twice
-        # (blocks free on garbage collection; pass cache=False for a
-        # fully lazy plan)
-        base = base.transform(materialize, False)
+    ).transform(materialize, False)
 
     # corpus LM: counts → conditional p → top-k truncation (same
     # (n desc, w1, w2) tie-break as bigram_lm_topk)
@@ -1048,7 +1041,6 @@ def lm_quality_buckets(
     k: int = 500,
     lo: float = 1 / 3,
     hi: float = 2 / 3,
-    cache: bool = True,
 ) -> DataFrame:
     """CCNet-style quality bucketing: score every document against the
     corpus's own top-``k`` bigram LM (:func:`doc_lm_score`), then
@@ -1069,7 +1061,7 @@ def lm_quality_buckets(
     each language).  Exactness: the interpolated quantile is the same
     double in both engines (cf. quantile_filter), and the bucket CASE
     compares per-row."""
-    scored = doc_lm_score(df.select(id_col, text_col), id_col, text_col, k=k, cache=cache)
+    scored = doc_lm_score(df.select(id_col, text_col), id_col, text_col, k=k)
     j = scored.filter(F.col("lm_score").isNotNull()).join(
         df.select(id_col, lang_col), id_col
     )

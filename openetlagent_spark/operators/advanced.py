@@ -182,14 +182,9 @@ def apply_dedup(df: DataFrame, op: DedupOperation) -> DataFrame:
         return D.exact_dedup(df, op.keys, op.order_column)
     if op.strategy == "minhash":
         pairs = D.minhash_lsh_pairs(
-            df,
-            op.id_column,
-            op.text_column,
-            num_perm=op.num_perm,
-            bands=op.bands,
-            shingle_size=op.shingle_size,
-            threshold=op.threshold,
-            seed=op.seed,
+            df, op.id_column, op.text_column,
+            n=op.shingle_size, threshold=op.threshold, bands=op.bands,
+            rows_per_band=op.num_perm // op.bands, seed=op.seed,
             max_bucket=op.max_bucket,
         )
     elif op.strategy == "simhash":
@@ -198,7 +193,8 @@ def apply_dedup(df: DataFrame, op: DedupOperation) -> DataFrame:
             max_hamming=op.max_hamming, max_bucket=op.max_bucket,
         )
     elif op.strategy == "ngram":
-        pairs = D.ngram_jaccard_pairs(
+        # the miner's default 4 bands x 3 rows: ngram keeps that geometry
+        pairs = D.minhash_lsh_pairs(
             df, op.id_column, op.text_column,
             n=op.ngram_size, threshold=op.threshold,
             seed=op.seed, max_bucket=op.max_bucket,
@@ -247,7 +243,8 @@ def apply_dedup(df: DataFrame, op: DedupOperation) -> DataFrame:
         from ..functions.graph import dedup_by_components
 
         return dedup_by_components(df, pairs, op.id_column, edges_deduped=True)
-    # drop: single-hop min-id clustering, same semantics as minhash_dedup.
+    # drop: single-hop min-id clustering — any row with a lower-id
+    # partner goes (longer chains are the transitive modes' job)
     losers = pairs.select(F.col("id_b").alias(op.id_column)).distinct()
     return df.join(losers, op.id_column, "left_anti")
 

@@ -1006,42 +1006,44 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs via MinHash LSH (64 perms, 16 bands).  md5_mode
-    swaps the two xxhash64 stages for engine-exact md5-fold shingle
-    codes and Mersenne band folds, so the numpy-UDF signatures, the
-    banded candidate set, AND the exact-Jaccard verify all hash-check
-    against the generated oracle (ngram_pairs_oracle_sql with the same
-    band geometry); the xxhash64 path stays the production default."""
+    """Near-dup pairs via MinHash LSH (64 perms, 16 bands) — the
+    ``dedup`` op's minhash geometry.  md5-fold shingle codes, the
+    numpy-UDF signatures, the Mersenne band folds, the banded candidate
+    set AND the exact-Jaccard verify all hash-check against the
+    generated oracle (ngram_pairs_oracle_sql with the same band
+    geometry), the same code a flow runs."""
     from ..functions.dedup import minhash_lsh_pairs
 
     df = _ts(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    return minhash_lsh_pairs(df, "doc_id", "text", threshold=0.3, md5_mode=True)
+    return minhash_lsh_pairs(
+        df, "doc_id", "text", threshold=0.3, bands=16, rows_per_band=4, seed=42
+    )
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming-≤3 pairs (the standard near-dup radius; a loose
     radius like 10 degrades banding to 5-bit buckets and goes
-    quadratic).  md5_mode: 60-bit md5-prefix token hashes make every
-    stage — vote sums, signature bits, pigeonhole bands, Hamming
-    verify — engine-exact integer math, so the FULL pipeline
-    hash-checks against the generated oracle (simhash_pairs_oracle_sql;
-    the xxhash64 fast path stays the production default)."""
+    quadratic).  60-bit md5-prefix token hashes make every stage —
+    vote sums, signature bits, pigeonhole bands, Hamming verify —
+    engine-exact integer math, so the FULL pipeline hash-checks
+    against the generated oracle (simhash_pairs_oracle_sql), the same
+    code a flow runs."""
     from ..functions.dedup import simhash_pairs
 
     df = _ts(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    return simhash_pairs(df, "doc_id", "text", max_hamming=3, md5_mode=True)
+    return simhash_pairs(df, "doc_id", "text", max_hamming=3)
 
 
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-3-gram Jaccard pairs via deterministic MinHash banding —
-    every stage (md5-int shingle codes, integer band keys, exact
-    Jaccard) is SQL-expressible, so the FULL LSH pipeline is
-    hash-checked against the generated DuckDB oracle
-    (ngram_pairs_oracle_sql)."""
-    from ..functions.dedup import ngram_jaccard_pairs
+    """Word-3-gram Jaccard pairs via deterministic MinHash banding at
+    the miner's default 4 bands × 3 rows — every stage (md5-int
+    shingle codes, integer band keys, exact Jaccard) is
+    SQL-expressible, so the FULL LSH pipeline is hash-checked against
+    the generated DuckDB oracle (ngram_pairs_oracle_sql)."""
+    from ..functions.dedup import minhash_lsh_pairs
 
     df = _ts(spark, sf_dir, "documents").select("doc_id", "text")
-    return ngram_jaccard_pairs(df, "doc_id", "text")
+    return minhash_lsh_pairs(df, "doc_id", "text")
 
 
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1062,8 +1064,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     add/subtract chain, so bucket assignment, candidate pairing, AND
     the fold-order cosine verify all hash-match the generated DuckDB
     oracle (functions/dedup.py embedding_pairs_oracle_sql, same seed).
-    Gaussian planes remain the library default for callers that don't
-    need SQL checkability.  ``n_planes`` self-sizes from the corpus
+    ``n_planes`` self-sizes from the corpus
     count through dedup.auto_n_planes (8/11/14 ladder) — the r12 sf10
     sweep proved the fixed default saturates every bucket at 200k
     vectors (candidates ≈ corpus²/2**n_planes); the oracle carries one
@@ -1073,7 +1074,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _ts(spark, sf_dir, "embeddings")
     n = df.count()  # sizes n_planes AND gates the broadcast verify
     return embedding_neardup_pairs(
-        df, "vec_id", "embedding", threshold=0.3, rademacher=True,
+        df, "vec_id", "embedding", threshold=0.3,
         n_planes=auto_n_planes(n), corpus_count=n,
     )
 
@@ -1115,14 +1116,14 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     share a hyperplane-signature bucket in ≥1 of 8 tables; only bucket
     collisions pay the exact-cosine re-rank).  Approximate relative to
     brute force (recall floors in tests/test_similarity_recall.py) but
-    engine-EXACT with Rademacher planes: the generated oracle
+    engine-EXACT with its ±1.0 (Rademacher) planes: the generated oracle
     (similarity.lsh_topk_oracle_sql, same seed) reproduces the bucket
     assignment, candidate set, cosine, and rank bit-for-bit."""
     from ..functions.similarity import lsh_topk
 
     emb = _ts(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    return lsh_topk(emb, queries, k=10, rademacher=True)
+    return lsh_topk(emb, queries, k=10)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2958,11 +2959,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle runs the SAME generated pair SQL through a recursive
     transitive-closure CTE, so pair mining AND clustering are checked
     together."""
-    from ..functions.dedup import ngram_jaccard_pairs
+    from ..functions.dedup import minhash_lsh_pairs
     from ..functions.graph import connected_components
 
     df = _ts(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = ngram_jaccard_pairs(df, "doc_id", "text")
+    pairs = minhash_lsh_pairs(df, "doc_id", "text")
     return connected_components(pairs, edges_deduped=True).select(
         F.col("node").alias("doc_id"), "component"
     )
@@ -3040,16 +3041,16 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental_neardup): a 10 % slice of documents plays the incoming
     batch against the remaining corpus — each batch row flagged if it
     near-duplicates the corpus (is_known_near) or a lower-id batch row
-    (is_batch_dup).  md5_mode end to end; the oracle composes the
+    (is_batch_dup).  Engine-exact end to end; the oracle composes the
     cross-side and batch-only generated pair SQL with EXISTS verdicts."""
     from ..functions.incremental import incremental_neardup
 
     docs = _ts(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     batch = docs.filter(F.col("doc_id") % 10 == 3).select("doc_id", "text", "source")
     corpus = docs.filter(F.col("doc_id") % 10 != 3).select("doc_id", "text")
-    return incremental_neardup(
-        batch, corpus, "doc_id", "text", threshold=0.3, md5_mode=True
-    ).select("doc_id", "source", "is_known_near", "is_batch_dup")
+    return incremental_neardup(batch, corpus, "doc_id", "text", threshold=0.3).select(
+        "doc_id", "source", "is_known_near", "is_batch_dup"
+    )
 
 
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3060,11 +3061,11 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production curation policy.  Oracle composes the same generated
     pair SQL, the recursive-closure component CTE, and the identical
     rank policy, so all three stages are checked together."""
-    from ..functions.dedup import ngram_jaccard_pairs
+    from ..functions.dedup import minhash_lsh_pairs
     from ..functions.graph import dedup_keep_best
 
     docs = _ts(spark, sf_dir, "documents").select("doc_id", "text", "source", "n_chars")
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text")
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text")
     return dedup_keep_best(
         docs, pairs, "doc_id", "n_chars", edges_deduped=True
     ).select("doc_id", "source", "n_chars")
@@ -3095,7 +3096,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     n = emb.count()  # sizes n_planes AND gates the broadcast verify
     pairs = embedding_neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.3, rademacher=True,
+        emb, "vec_id", "embedding", threshold=0.3,
         n_planes=auto_n_planes(n), corpus_count=n,
     )
     return dedup_keep_best(
@@ -3149,7 +3150,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centered = center_embeddings(feats, "feature", "centered", dim=16)
     pairs = embedding_neardup_pairs(
         centered, "media_id", "centered",
-        threshold=0.995, n_planes=n_planes, n_tables=2, rademacher=True,
+        threshold=0.995, n_planes=n_planes, n_tables=2,
         dim=16, corpus_count=n,
     )
     return dedup_keep_best(
@@ -3301,17 +3302,15 @@ def q_near_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     near_contamination): MinHash-banded cross-side pairs between a
     held-out benchmark slice (doc_id % 20 == 0) and the remaining
     corpus — the paraphrase-level companion to the exact
-    `contamination` check.  md5_mode makes every stage engine-exact,
-    so the full pipeline hash-checks against the generated oracle
-    (same band geometry as dedup_minhash)."""
+    `contamination` check.  Every stage is engine-exact, so the full
+    pipeline hash-checks against the generated oracle (same band
+    geometry as dedup_minhash)."""
     from ..functions.curation import near_contamination
 
     docs = _ts(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     bench = docs.filter(F.col("doc_id") % 20 == 0)
-    return near_contamination(
-        corpus, bench, "doc_id", "text", threshold=0.3, md5_mode=True
-    )
+    return near_contamination(corpus, bench, "doc_id", "text", threshold=0.3)
 
 
 def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4210,8 +4209,9 @@ from ..functions.dedup import simhash_pairs_oracle_sql as _simhash_pairs_oracle_
 
 HARNESS_ORACLES["dedup_simhash"] = _simhash_pairs_oracle_sql()
 
-# minhash md5_mode shares the ngram oracle generator — same shingle
-# codes, same permutations, same band folds; only the geometry differs
+# minhash and ngram are one miner, so they share the oracle generator —
+# same shingle codes, same permutations, same band folds; only the
+# geometry differs
 HARNESS_ORACLES["dedup_minhash"] = _ngram_pairs_oracle_sql(
     n=3, threshold=0.3, bands=16, rows_per_band=4, seed=42, max_bucket=1000
 )

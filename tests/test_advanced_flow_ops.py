@@ -228,7 +228,7 @@ def test_yaml_contamination_filter_then_pack(spark):
 def test_yaml_dedup_cluster_drop_transitive(spark):
     """cluster_drop keeps exactly one doc per TRANSITIVE duplicate
     cluster — equal to dedup_by_components over the same pairs."""
-    from openetlagent_spark.functions.dedup import ngram_jaccard_pairs
+    from openetlagent_spark.functions.dedup import minhash_lsh_pairs
     from openetlagent_spark.functions.graph import dedup_by_components
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
@@ -237,7 +237,7 @@ def test_yaml_dedup_cluster_drop_transitive(spark):
          "id_column": "doc_id", "text_column": "text", "threshold": 0.5}
     )
     got = sorted(r["doc_id"] for r in apply_operations(docs, [op], spark).collect())
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5, seed=42)
     want = sorted(
         r["doc_id"] for r in dedup_by_components(docs, pairs, "doc_id").collect()
     )

@@ -9,7 +9,6 @@ from pyspark.sql import Row
 from openetlagent_spark.functions.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    ngram_jaccard_pairs,
     simhash_pairs,
     substring_run_pairs,
 )
@@ -50,7 +49,9 @@ def test_exact_dedup_keeps_min_id(spark):
 def test_minhash_finds_near_and_exact_dups(corpus):
     pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in minhash_lsh_pairs(corpus, "doc_id", "text", threshold=0.5).collect()
+        for r in minhash_lsh_pairs(
+            corpus, "doc_id", "text", threshold=0.5, bands=16, rows_per_band=4, seed=42
+        ).collect()
     }
     assert (1, 4) in pairs and pairs[(1, 4)] == 1.0  # exact dup
     assert (1, 2) in pairs and pairs[(1, 2)] > 0.5  # near dup
@@ -70,7 +71,7 @@ def test_simhash_hamming(corpus):
 def test_ngram_jaccard_pairs(corpus):
     pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(corpus, "doc_id", "text", threshold=0.8).collect()
+        for r in minhash_lsh_pairs(corpus, "doc_id", "text", threshold=0.8).collect()
     }
     assert pairs[(1, 4)] == 1.0
     assert (1, 2) in pairs
@@ -97,22 +98,22 @@ def test_substring_run_pairs_min_shared_filters(corpus):
 
 
 def test_minhash_udf_matches_expression(spark):
-    """The vectorized numpy signature (minhash_udf) is value-identical
-    to the JVM expression form (minhash_from_hashes) — the speedup must
-    not change a single hash."""
+    """The vectorized numpy signature (minhash_udf, one row per band)
+    is value-identical to the JVM expression form (minhash_from_hashes)
+    — the speedup must not change a single hash."""
     from pyspark.sql import functions as F
 
     from openetlagent_spark.functions.dedup import (
         minhash_from_hashes,
         minhash_udf,
-        shingle_hashes,
+        word_ngram_codes,
     )
 
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(100)
-    h = df.select("doc_id", shingle_hashes(F.col("text"), 3).alias("h"))
+    h = df.select("doc_id", word_ngram_codes(F.col("text"), 3).alias("h"))
     both = h.select(
         minhash_from_hashes(F.col("h"), 16).alias("expr_sig"),
-        minhash_udf(16)(F.col("h")).alias("udf_sig"),
+        minhash_udf(16, 1, 42)(F.col("h")).alias("udf_sig"),
     )
     assert both.filter("expr_sig IS DISTINCT FROM udf_sig").count() == 0
 
@@ -184,7 +185,7 @@ def test_embedding_rademacher_matches_generated_oracle(spark):
     sf = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     out = embedding_neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.3, rademacher=True, seed=11
+        emb, "vec_id", "embedding", threshold=0.3, seed=11
     )
     got = sorted((r.id_a, r.id_b, r.cosine) for r in out.collect())
 
@@ -229,7 +230,6 @@ def test_embedding_rademacher_finds_parallel_vectors(vectors):
 
     out = embedding_neardup_pairs(
         vectors, "vec_id", "embedding", threshold=0.9, n_planes=4, n_tables=2,
-        rademacher=True,
     )
     pairs = {(r.id_a, r.id_b): r.cosine for r in out.collect()}
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99

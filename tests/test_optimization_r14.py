@@ -206,12 +206,12 @@ def test_embedding_pairs_unroll_gate(spark):
         "vec_id bigint, embedding array<double>",
     )
     small = D.embedding_neardup_pairs(
-        df, "vec_id", "embedding", n_planes=4, rademacher=True, dim=4,
+        df, "vec_id", "embedding", n_planes=4, dim=4,
         corpus_count=40,
     )
     plan_small = small._jdf.queryExecution().optimizedPlan().toString()
     big = D.embedding_neardup_pairs(
-        df, "vec_id", "embedding", n_planes=4, rademacher=True, dim=4,
+        df, "vec_id", "embedding", n_planes=4, dim=4,
         corpus_count=D._UNROLL_MIN_CORPUS,
     )
     plan_big = big._jdf.queryExecution().optimizedPlan().toString()

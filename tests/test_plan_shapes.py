@@ -187,9 +187,7 @@ def test_neardup_verify_joins_never_broadcast_unproven(spark):
     from openetlagent_spark.plans.harness_queries import _ts
 
     emb = _ts(spark, SF_DIR, "embeddings")
-    unproven = embedding_neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.3, rademacher=True
-    )
+    unproven = embedding_neardup_pairs(emb, "vec_id", "embedding", threshold=0.3)
     physical = unproven._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" not in physical
     assert "SortMergeJoin" in physical

@@ -70,11 +70,10 @@ def test_inverted_index_max_df_nulls_hot_terms(corpus):
     assert rows["durian"].postings == "3:1"
 
 
-@pytest.mark.parametrize("cache", [True, False])
-def test_cache_knob_results_identical(corpus, cache):
-    """cache=False (the 100 TB storage-vs-CPU knob) must produce the
-    identical result set as the cached default."""
-    topk = keyword_search_topk(corpus, ["cherry"], k=4, cache=cache).collect()
+def test_materialized_search_and_index_results(corpus):
+    """Both operators read their materialized intermediate from two
+    consumers; the results are the ones the lazy plans gave."""
+    topk = keyword_search_topk(corpus, ["cherry"], k=4).collect()
     assert [r.doc_id for r in topk][0] == 3
-    idx = {r.term: r.postings for r in inverted_index(corpus, max_df=1, cache=cache).collect()}
+    idx = {r.term: r.postings for r in inverted_index(corpus, max_df=1).collect()}
     assert idx["apple"] == "1:2" and idx["banana"] is None

@@ -69,14 +69,9 @@ def test_lsh_topk_shuffle_mode_identical(emb):
     broadcast plan's rows — the join strategy is a physical choice, not
     a semantic one."""
     qs = emb.filter("vec_id < 30")
-    bcast = {
-        tuple(r) for r in lsh_topk(emb, qs, k=10, rademacher=True).collect()
-    }
+    bcast = {tuple(r) for r in lsh_topk(emb, qs, k=10).collect()}
     shuf = {
-        tuple(r)
-        for r in lsh_topk(
-            emb, qs, k=10, rademacher=True, broadcast_queries=False
-        ).collect()
+        tuple(r) for r in lsh_topk(emb, qs, k=10, broadcast_queries=False).collect()
     }
     assert bcast == shuf and len(bcast) > 0
 
@@ -156,7 +151,7 @@ def test_center_embeddings_spreads_lsh_buckets(spark):
     def n_buckets(frame, col):
         sigs = frame.select(
             F.element_at(
-                multi_table_signatures(F.col(col), 8, 1, 42, 8, rademacher=True), 1
+                multi_table_signatures(F.col(col), 8, 1, 42, 8), 1
             ).alias("sig")
         )
         return sigs.distinct().count()
