@@ -429,51 +429,7 @@ SELECT id_a, id_b, hamming FROM cand WHERE hamming <= {max_hamming}
 """
 
 
-# --- character n-gram Jaccard ---------------------------------------------
-
-
-def char_ngrams(text_col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of the lowercased text.  The
-    normalized string is bound once (see bind_once)."""
-
-    def build(norm: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - F.lit(n - 1), F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: F.substring(norm, i, n)))
-
-    return bind_once(F.lower(text_col), build)
-
-
-def char_ngram_codes(text_col: Column, n: int = 3) -> Column:
-    """Distinct char-n-gram CODES of the lowercased text — a set-math
-    form of char_ngrams.
-
-    For n <= 3 each gram packs exactly into one long (21 bits per
-    codepoint — Unicode tops out below 2^21), a COLLISION-FREE encoding
-    with no per-gram string allocation and no O(position) UTF-8 seeks
-    (``substring(s, i, n)`` re-scans from the string start per call,
-    making the naive formulation quadratic per document; measured 2× on
-    the documents table).  Missing positions (docs shorter than n) code
-    as 0, bijective with the short grams the substring form yields.
-    n > 3 falls back to substring grams hashed with xxhash64."""
-    if n > 3:
-        return F.transform(char_ngrams(text_col, n), lambda g: F.xxhash64(g))
-
-    def build(codes: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.size(codes) - F.lit(n - 1), F.lit(1)))
-
-        def code_at(i: Column) -> Column:
-            return F.coalesce(F.try_element_at(codes, i).cast("long"), F.lit(0))
-
-        def gram(i: Column) -> Column:
-            g = code_at(i)
-            for j in range(1, n):
-                g = g * F.lit(1 << 21) + code_at(i + F.lit(j))
-            return g
-
-        return F.array_distinct(F.transform(idx, gram))
-
-    codes = F.transform(F.split(F.lower(text_col), ""), lambda c: F.ascii(c))
-    return bind_once(codes, build)
+# --- word n-gram Jaccard --------------------------------------------------
 
 
 def word_ngram_codes(text_col: Column, n: int = 3) -> Column:

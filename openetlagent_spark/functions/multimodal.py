@@ -2720,43 +2720,6 @@ def synthesize_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def image_features_oracle_sql(
-    doc_pred: str = "TRUE", dim: int = 16, table: str = "documents"
-) -> str:
-    """DuckDB mirror of synthesize_media → extract_image_features
-    (decoder='fake') as a parenthesized subquery yielding
-    (media_id, mime, n_bytes, feature REAL[]).
-
-    Valid for ASCII corpora (the driver's test tables are — verified),
-    where the utf-8 byte stream equals the per-char code points, so
-    the fake decoder's byte histogram is a per-char conditional count:
-    bin b = |{ch : ascii(ch) // (256/dim) = b}| / len, rounded to
-    float32 exactly as numpy's astype.  The Spark side stays byte-true
-    for any input; this oracle mirrors it on the data it is checked
-    against."""
-    width = 256 // dim
-    bins = ", ".join(
-        f"SUM(CASE WHEN ascii(ch) // {width} = {b} THEN 1 ELSE 0 END) AS c{b}"
-        for b in range(dim)
-    )
-    feature = "[" + ", ".join(
-        f"CASE WHEN d.len > 0 THEN CAST(CAST(COALESCE(c.c{b}, 0) AS DOUBLE) "
-        f"/ CAST(d.len AS DOUBLE) AS REAL) ELSE CAST(0.0 AS REAL) END"
-        for b in range(dim)
-    ) + "]"
-    return (
-        f"(WITH d AS (SELECT CAST(doc_id AS BIGINT) AS media_id, "
-        f"CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END AS mime, "
-        f"COALESCE(length(text), 0) AS len, text FROM {table} WHERE {doc_pred}), "
-        f"chars AS (SELECT media_id, unnest(string_split_regex(text, '')) AS ch "
-        f"FROM d WHERE len > 0), "
-        f"cnt AS (SELECT media_id, {bins} FROM chars GROUP BY media_id) "
-        f"SELECT d.media_id, d.mime, CAST(d.len AS BIGINT) AS n_bytes, "
-        f"CAST(d.len AS BIGINT) AS n_pixels, "
-        f"{feature} AS feature FROM d LEFT JOIN cnt c USING (media_id))"
-    )
-
-
 def synthesize_media_bmp(
     df: DataFrame,
     text_col: str = "text",

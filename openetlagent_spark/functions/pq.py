@@ -4,7 +4,7 @@ memory-budget serving path for similarity at 100 TB.
 FAISS's IVF-PQ re-expressed as a lakehouse layout: the corpus vector is
 split into ``m`` subspaces, each subspace gets its own ``k_codes``-entry
 codebook (fit by the SAME deterministic hash-sample + integer-grid
-Lloyd's as the IVF coarse quantizer — fit_ivf_centroids_exact's three
+Lloyd's as the IVF coarse quantizer — fit_ivf_centroids' three
 determinism moves, applied per subspace), and every corpus vector is
 stored in its inverted list as ``m`` small integer codes instead of
 ``dim`` doubles.  Serving scores candidates by ADC (asymmetric distance
@@ -35,13 +35,23 @@ FAISS train-on-sample trade); nothing else ever collects.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_df, run_concurrent_writes
 from .similarity import (
     _array_literal,
+    _check_centroids,
+    _probe_lists,
+    _rank_by_cosine,
+    _read_ann_store_header,
+    _read_store_layer,
+    _read_store_lists,
+    _store_header_writers,
+    _top_per_query,
     _write_cid_partitioned,
+    assign_lists,
+    cosine_expr,
     infer_dim,
     nearest_centroid_ids,
     norm_expr,
@@ -68,7 +78,7 @@ def fit_pq_codebooks(
     pairs whose IEEE division produced each float — the oracle
     generator embeds the rationals so both engines start from
     bit-identical constants.  The Lloyd loop IS
-    fit_ivf_centroids_exact's (the shared similarity._lloyd), run on
+    fit_ivf_centroids' (the shared similarity._lloyd), run on
     each subspace slice of the SAME sample rows.  ``sample``
     optionally supplies a pre-collected hash sample (build_pq_store
     collects once for both the coarse and PQ fits)."""
@@ -172,15 +182,7 @@ def build_pq_store(
     # vector to one bogus cid / code 0
     def _check_shapes() -> None:
         if centroids is not None:
-            if len(centroids) != n_centroids:
-                raise ValueError(
-                    f"build_pq_store: {len(centroids)} centroids passed but "
-                    f"n_centroids={n_centroids}"
-                )
-            if any(len(c) != dim for c in centroids):
-                raise ValueError(
-                    f"build_pq_store: every centroid must have {dim} coordinates"
-                )
+            _check_centroids("build_pq_store", centroids, n_centroids, dim)
         if codebooks is not None:
             if len(codebooks) != m or any(len(book) != k_codes for book in codebooks):
                 raise ValueError(
@@ -210,47 +212,23 @@ def build_pq_store(
         )
     _check_shapes()  # fitted constants obey the same contract
     spark = corpus.sparkSession
-    # local_df, not createDataFrame().coalesce(1): the default local
-    # parallelization splits 16 rows into 32 Python-RDD slices and
-    # coalesce computes them sequentially in one task — ~7s per tiny
-    # layer, ×3 layers per build (the r09 "index-build job storm")
-    cents_lit = _array_literal(centroids)
     # ONE corpus pass: write the refine layer (id, cv, cid) first, then
     # derive the codes layer FROM it — the second pass reads the
     # already-partitioned store (narrow, no corpus rescan) and
     # re-quantizes cv, which is exact (cv is the original doubles, so
     # _quantize(cv) == the first pass's xq bit-for-bit)
-    base = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-            _quantize(F.col(vec_col), scale_bits).alias("xq"),
-        )
-        .withColumn("cid", nearest_centroid_ids(F.col("xq"), cents_lit, 1)[0])
-        .drop("xq")
-    )
-    # The three tiny metadata layers and the refine layer are mutually
-    # independent writes to disjoint paths — submit them concurrently
-    # (guide §2.6: actions are only sequential because driver code
-    # calls them sequentially) so the three ~0.4s tiny-layer jobs ride
-    # along with the corpus pass instead of serializing ~1.3s of
-    # commit overhead per store build.  Only the codes layer below
-    # depends on refine.
-    def _w_centroids() -> None:
-        local_df(
-            spark,
-            [(i, list(c)) for i, c in enumerate(centroids)],
-            "cid int, cen array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
+    base = assign_lists(corpus, id_col, vec_col, centroids, scale_bits)
+    meta = {
+        "scale_bits": scale_bits, "n_centroids": n_centroids, "m": m, "k_codes": k_codes,
+    }
 
-    def _w_meta() -> None:
-        local_df(
-            spark,
-            [(int(scale_bits), int(n_centroids), int(m), int(k_codes))],
-            "scale_bits int, n_centroids int, m int, k_codes int",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-
+    # local_df, not createDataFrame().coalesce(1): the default local
+    # parallelization splits 16 rows into 32 Python-RDD slices and
+    # coalesce computes them sequentially in one task — ~7s per tiny
+    # layer, ×3 layers per build (the r09 "index-build job storm").
+    # The three tiny layers and the refine layer are independent
+    # writes to disjoint paths, run concurrently; only the codes layer
+    # below depends on refine.
     def _w_codebooks() -> None:
         local_df(
             spark,
@@ -262,14 +240,15 @@ def build_pq_store(
             "sub int, code int, cw array<double>",
         ).write.mode("overwrite").parquet(f"{path}/codebooks")
 
-    def _w_refine() -> None:
-        _write_cid_partitioned(base, f"{path}/refine", "overwrite")
-
-    run_concurrent_writes([_w_centroids, _w_meta, _w_codebooks, _w_refine])
+    run_concurrent_writes([
+        *_store_header_writers(spark, path, centroids, meta),
+        _w_codebooks,
+        lambda: _write_cid_partitioned(base, f"{path}/refine", "overwrite"),
+    ])
     # explicit schema: an all-NULL-vector corpus writes zero data
     # files, and a schema-less read would fail with an unrelated
     # inference error instead of building an (empty) store
-    refine = spark.read.schema(base.schema).parquet(f"{path}/refine")
+    refine = _read_store_lists(spark, path, "refine", schema=base.schema)
     _write_cid_partitioned(
         refine.select(
             "neighbor_id",
@@ -303,14 +282,6 @@ def ann_pq_from_store(
     rank, cosine) — the exact cosine of every emitted neighbor, so the
     approximation shows up only as which candidates reached the
     re-rank, never as a wrong score."""
-    from .clustering import _quantize
-    from .similarity import (
-        _probe_lists,
-        _read_ann_store_header,
-        _read_store_layer,
-        cosine_expr,
-    )
-
     store_bits, n_cent, cents, meta = _read_ann_store_header(
         spark, store_path, expect_scale_bits=scale_bits
     )
@@ -330,20 +301,10 @@ def ann_pq_from_store(
     codebooks = [
         [by_key[(s, c)] for c in range(k_codes)] for s in range(m)
     ]
-    cents_lit = _array_literal(cents)
     q, probed = _probe_lists(
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-            _quantize(F.col(vec_col), scale_bits).alias("xq"),
-        )
-        .withColumn(
-            "cid", F.explode(nearest_centroid_ids(F.col("xq"), cents_lit, nprobe))
-        )
-        .drop("xq")
+        assign_lists(queries, id_col, vec_col, cents, scale_bits, nprobe)
     )
-    lists = spark.read.parquet(f"{store_path}/lists").where(F.col("cid").isin(probed))
+    lists = _read_store_lists(spark, store_path, probed=probed)
     cand = lists.join(F.broadcast(q), "cid").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -370,28 +331,14 @@ def ann_pq_from_store(
     )
     code_words = [F.col(f"_x_cw{s}") for s in range(m)]
     scored = cand.withColumn("adc", _adc_expr(F.col("qv"), code_words, codebooks))
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc_nulls_last(), F.col("neighbor_id").asc()
+    sel = _top_per_query(scored, "adc", k * refine_factor, "arn").select(
+        "query_id", "neighbor_id", "cid", "qv"
     )
-    sel = (
-        scored.withColumn("arn", F.row_number().over(w_adc))
-        .filter(F.col("arn") <= k * refine_factor)
-        .select("query_id", "neighbor_id", "cid", "qv")
-    )
-    refine = spark.read.parquet(f"{store_path}/refine").where(
-        F.col("cid").isin(probed)
-    ).select("neighbor_id", "cv", "cid")
+    refine = _read_store_lists(spark, store_path, "refine", probed)
     reranked = sel.join(refine, ["cid", "neighbor_id"]).withColumn(
         "cosine", cosine_expr(F.col("qv"), F.col("cv"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_by_cosine(reranked, k)
 
 
 # --- oracle generation -------------------------------------------------

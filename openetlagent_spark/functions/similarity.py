@@ -9,10 +9,14 @@
   equi-join (shuffle on bucket), not a cross join; recall < 1, tunable
   via n_tables/n_planes.  Every projection is exact, so the whole
   query checks against a generated DuckDB oracle (lsh_topk_oracle_sql).
-- ivf_topk: inverted-file index — k-means-style centroids fitted on a
-  driver-side sample (deterministic numpy), corpus assigned to nearest
-  centroid (broadcast centroid array, JVM expressions), queries probe
-  the ``nprobe`` nearest centroid partitions only.
+- ivf_topk: inverted-file index — centroids fitted by integer-grid
+  Lloyd's over a hash-chosen sample (fit_ivf_centroids), corpus
+  assigned to its nearest centroid and queries to their ``nprobe``
+  nearest (assign_lists), then candidates in the probed lists ranked
+  by exact cosine.  The persisted ANN store (build_ann_store /
+  ann_from_store) runs the same assignment and the same probe-and-rank
+  over its stored lists, so the whole family checks against one
+  generated oracle (ivf_topk_oracle_sql).
 
 All cosines are computed in double with a fixed left-to-right fold
 order, so results are deterministic and engine-comparable.
@@ -98,6 +102,46 @@ def cosine_prenorm_expr(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.try_divide(dot_expr(a, b), na * nb)
 
 
+def _score_pairs(c: DataFrame, q: DataFrame, on: str | None = None) -> DataFrame:
+    """Corpus rows ``(neighbor_id, cv, …)`` against the broadcast query
+    rows ``(query_id, qv, …)`` — equi-joined on ``on``, or every pair
+    when it is None — self-matches out, plus the exact ``cosine``.
+    Each side's norm is computed once per ROW before the join
+    (cosine_prenorm_expr), so the per-pair expression is the dot fold
+    alone."""
+    c = c.withColumn("_x_ncv", norm_expr(F.col("cv")))
+    q = q.withColumn("_x_nqv", norm_expr(F.col("qv")))
+    return (
+        c.join(F.broadcast(q), on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn(
+            "cosine",
+            cosine_prenorm_expr(
+                F.col("qv"), F.col("cv"), F.col("_x_nqv"), F.col("_x_ncv")
+            ),
+        )
+    )
+
+
+def _top_per_query(df: DataFrame, score: str, n: int, rank: str) -> DataFrame:
+    """The one per-query cut every similarity path uses: ``rank`` =
+    row_number over (``score`` DESC NULLS LAST, neighbor_id ASC) per
+    query_id, keeping ranks ≤ ``n`` — a total order, so ties resolve
+    the same in every engine and under any partitioning."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _rank_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine): the top ``k`` of scored
+    candidate pairs by exact cosine."""
+    return _top_per_query(scored, "cosine", k, "rank").select(
+        "query_id", "neighbor_id", "rank", "cosine"
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -111,22 +155,11 @@ def cosine_topk(
     nested loop scanning the corpus once."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    ).withColumn("_x_ncv", norm_expr(F.col("cv")))
+    )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).withColumn("_x_nqv", norm_expr(F.col("qv")))
-    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).withColumn(
-        "cosine",
-        cosine_prenorm_expr(F.col("qv"), F.col("cv"), F.col("_x_nqv"), F.col("_x_ncv")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_by_cosine(_score_pairs(c, q), k).drop("cosine")
 
 
 def _sq8_dq_col(v_j: Column, m_j: Column, x_j: Column) -> Column:
@@ -252,22 +285,10 @@ def sq8_topk(
             F.sqrt(F.col("_x_nq")) * F.sqrt(F.col("_x_nd")),
         ),
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc_nulls_last(), F.col("neighbor_id").asc()
+    sel = _top_per_query(scored, "adc", k * refine_factor, "arn").withColumn(
+        "cosine", cosine_expr(F.col("qv"), F.col("cv"))
     )
-    sel = (
-        scored.withColumn("arn", F.row_number().over(w_adc))
-        .filter(F.col("arn") <= k * refine_factor)
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sel.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_by_cosine(sel, k)
 
 
 def sq8_topk_oracle_sql(
@@ -508,12 +529,7 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("cosine", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_by_cosine(cand, k)
 
 
 # --- generated SQL oracle fragments ----------------------------------------
@@ -614,11 +630,11 @@ def lsh_topk_oracle_sql(
 def nearest_centroid_ids(vec: Column, cents_lit: Column, n: int) -> Column:
     """Array of the n nearest centroid ids for a vector — THE one
     nearest-centroid expression (fold-order squared distance,
-    array_sort with lower-cid tie-break).  Shared by the exact IVF
-    query path, the ANN store build, and store serving: the store's
-    correctness claim is bit-identity with the direct computation, so
-    an independent copy here would be the drift vector classifier.py's
-    _bucket_expr docstring warns about.
+    array_sort with lower-cid tie-break).  Its callers are
+    assign_lists (every IVF list assignment, direct or stored) and the
+    PQ encoder: the store's correctness claim is bit-identity with the
+    direct computation, so an independent copy here would be the drift
+    vector classifier.py's _bucket_expr docstring warns about.
 
     ``vec`` is hoisted through a single-element ``transform(array(vec),
     x -> …)`` wrapper so it is evaluated ONCE per row.  Without the
@@ -648,7 +664,7 @@ def nearest_centroid_ids(vec: Column, cents_lit: Column, n: int) -> Column:
     return F.transform(F.array(vec), body)[0]
 
 
-def fit_ivf_centroids_exact(
+def fit_ivf_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -658,12 +674,8 @@ def fit_ivf_centroids_exact(
     scale_bits: int = 20,
 ) -> list[list[float]]:
     """Engine-exact IVF coarse-quantizer fit: Lloyd's iterations over a
-    DETERMINISTIC bounded sample, in integer arithmetic.
-
-    Unlike the numpy ``method='sample'`` fit (whose ``limit().collect()``
-    sample depends on partition/scan order, so two runs of the same job
-    can build different centroids), every step here is a pure function
-    of the data:
+    DETERMINISTIC bounded sample, in integer arithmetic.  Every step is
+    a pure function of the data, never of scan or partition order:
 
     - sample = the ``sample_size`` rows with the smallest
       ``(md5(id), id)`` — the engine's seedless hash draw, identical in
@@ -680,7 +692,13 @@ def fit_ivf_centroids_exact(
     ivf_topk_oracle_sql's unrolled CTEs compute, which is what makes
     the full IVF query hash-checkable.  Driver state is bounded:
     sample_size × dim ints, Lloyd's runs driver-side on the sample
-    (the standard FAISS-style train-on-sample trade)."""
+    (the standard FAISS-style train-on-sample trade).
+
+    Two named errors: fewer than ``n_centroids`` non-NULL vectors
+    (``n_centroids=16 exceeds the N sampled vectors``), and a NaN,
+    infinite or off-grid coordinate in the sample (``quantization
+    overflow``, clustering._quantize) — NULL vectors are skipped, other
+    bad rows are never dropped silently."""
     sample = _hash_sample(corpus, id_col, vec_col, sample_size, scale_bits)
     cents, _rats = _lloyd(sample, n_centroids, iters, label="n_centroids")
     return cents
@@ -734,7 +752,7 @@ def _lloyd(
     iters: int,
     label: str = "k",
 ) -> tuple[list[list[float]], list[list[tuple[int, int]]]]:
-    """THE integer-grid Lloyd loop (fit_ivf_centroids_exact's
+    """THE integer-grid Lloyd loop (fit_ivf_centroids'
     determinism moves: init = first k sample rows, strict-< assignment
     with lower-id ties, integer sums, empty clusters keep their
     previous centroid) — single implementation so the IVF and PQ fits
@@ -850,6 +868,36 @@ def _lloyd_reference(
     return cents, rats
 
 
+def assign_lists(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cents: list[list[float]],
+    scale_bits: int,
+    nprobe: int | None = None,
+) -> DataFrame:
+    """IVF list assignment over the quantized grid — the one step every
+    IVF build, append and serve shares.  Corpus rows (``nprobe`` None)
+    become ``(neighbor_id, cv, cid)`` with their nearest centroid;
+    query rows become ``(query_id, qv, cid)``, one row per each of the
+    ``nprobe`` nearest.  NULL vectors are skipped; ``cv``/``qv`` are
+    the ORIGINAL doubles the exact cosine re-rank reads."""
+    from .clustering import _quantize
+
+    who, vec = ("neighbor_id", "cv") if nprobe is None else ("query_id", "qv")
+    rows = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias(who),
+        F.col(vec_col).cast("array<double>").alias(vec),
+        _quantize(F.col(vec_col), scale_bits).alias("xq"),
+    )
+    cids = nearest_centroid_ids(
+        F.col("xq"), _array_literal(cents), 1 if nprobe is None else nprobe
+    )
+    return rows.withColumn(
+        "cid", cids[0] if nprobe is None else F.explode(cids)
+    ).drop("xq")
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -858,173 +906,31 @@ def ivf_topk(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 4,
-    sample_size: int = 10_000,
-    seed: int = 42,
-    iters: int = 10,
-    method: str = "sample",
+    sample_size: int = 2048,
+    iters: int = 2,
     scale_bits: int = 20,
 ) -> DataFrame:
-    """IVF approximate top-k: fit centroids on a bounded driver-side
-    sample (deterministic Lloyd's iterations in numpy), assign corpus
-    rows to their nearest centroid (broadcast literals, JVM exprs), then
-    each query scans only its ``nprobe`` closest centroid lists.
-
-    ``method='exact'`` swaps the numpy fit for
-    fit_ivf_centroids_exact's hash-sampled integer Lloyd's and runs
-    assignment/probing over the quantized grid — bit-deterministic
-    under any partitioning and hash-checkable against
-    ivf_topk_oracle_sql (the numpy path's sample follows
-    ``limit().collect()`` scan order, so its exact candidate set is
-    reproducible only within one layout of the data)."""
-    if method == "exact":
-        return _ivf_topk_exact(
-            corpus, queries, k, id_col, vec_col, n_centroids, nprobe,
-            sample_size, iters, scale_bits,
-        )
-    if method != "sample":
-        raise ValueError(f"ivf_topk: unknown method {method!r} (sample|exact)")
-    # sample only rows with a full-dimension, all-finite vector — NULL
-    # embeddings or ragged lengths would make the numpy sample
-    # inhomogeneous, and NaN/Inf coordinates would poison the centroid
-    # means into unparseable literals (brute/LSH variants skip such
-    # rows too)
-    dim = infer_dim(corpus, vec_col)
-    bad = F.exists(
-        F.col("v"), lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
-    )
-    sample = np.asarray(
-        [
-            r[0]
-            for r in corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
-            .filter(F.col("v").isNotNull() & (F.size("v") == dim) & ~bad)
-            .limit(sample_size)
-            .collect()
-        ]
-    )
-    if len(sample) == 0:
-        raise ValueError(f"ivf_topk: no non-null {dim}-element vectors in {vec_col!r}")
-    rng = np.random.RandomState(seed)
-    centroids = sample[rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)]
-    for _ in range(iters):
-        d = ((sample[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for ci in range(len(centroids)):
-            members = sample[assign == ci]
-            if len(members):
-                centroids[ci] = members.mean(axis=0)
-
-    cents_lit = _array_literal(centroids)
-
-    def nearest_expr(vec: Column, n: int) -> Column:
-        """Array of the n nearest centroid ids for a vector — one
-        transform over the centroid literal (py4j-cheap, JVM-evaluated)
-        instead of a per-centroid literal array."""
-        dists = F.transform(
-            cents_lit,
-            lambda c, i: F.struct(
-                F.aggregate(
-                    F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("d"),
-                i.alias("cid"),
-            ),
-        )
-        return F.slice(F.transform(F.array_sort(dists), lambda s: s["cid"]), 1, n)
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    ).withColumn("cid", nearest_expr(F.col("cv"), 1)[0])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).withColumn("cid", F.explode(nearest_expr(F.col("qv"), nprobe)))
-
-    cand = (
-        c.join(F.broadcast(q), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def _ivf_topk_exact(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int,
-    nprobe: int,
-    sample_size: int,
-    iters: int,
-    scale_bits: int,
-) -> DataFrame:
-    """ivf_topk(method='exact') body: centroids from
-    fit_ivf_centroids_exact, assignment and probing over the quantized
-    grid with fold-order distances and lower-cid tie-breaks, exact
-    fold-order cosine re-rank over the ORIGINAL doubles.  Same scale
-    shape as the sample path — centroid literals broadcast inside the
-    expression, one (cid) equi-join shuffle, per-query top-k window."""
-    from .clustering import _quantize
-
-    cents = fit_ivf_centroids_exact(
+    """IVF approximate top-k: centroids from fit_ivf_centroids (the
+    hash-sampled integer Lloyd's), the corpus assigned to its lists in
+    memory, then each query probes its ``nprobe`` nearest lists and
+    the candidates rank by exact cosine over the ORIGINAL doubles.
+    Bit-deterministic under any partitioning and hash-checkable
+    against ivf_topk_oracle_sql; ann_from_store is the same probe and
+    rank over a persisted store's lists.  Scale shape: centroid
+    literals broadcast inside the expression, one (cid) equi-join
+    shuffle, a per-query top-k window."""
+    cents = fit_ivf_centroids(
         corpus, id_col, vec_col, n_centroids, iters, sample_size, scale_bits
     )
-    cents_lit = _array_literal(cents)
-
-    def nearest_q(xq: Column, n: int) -> Column:
-        return nearest_centroid_ids(xq, cents_lit, n)
-
-    base_c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        _quantize(F.col(vec_col), scale_bits).alias("xq"),
-    )
-    # norms precomputed per ROW (corpus / broadcast query), not per
-    # candidate pair — cosine_prenorm_expr keeps the doubles identical
-    c = (
-        base_c.withColumn("cid", nearest_q(F.col("xq"), 1)[0])
-        .drop("xq")
-        .withColumn("_x_ncv", norm_expr(F.col("cv")))
-    )
-    base_q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        _quantize(F.col(vec_col), scale_bits).alias("xq"),
-    )
-    q = (
-        base_q.withColumn("cid", F.explode(nearest_q(F.col("xq"), nprobe)))
-        .drop("xq")
-        .withColumn("_x_nqv", norm_expr(F.col("qv")))
-    )
-
-    cand = (
-        c.join(F.broadcast(q), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            cosine_prenorm_expr(
-                F.col("qv"), F.col("cv"), F.col("_x_nqv"), F.col("_x_ncv")
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    lists = assign_lists(corpus, id_col, vec_col, cents, scale_bits)
+    q = assign_lists(queries, id_col, vec_col, cents, scale_bits, nprobe)
+    return _rank_by_cosine(_score_pairs(lists, q, "cid"), k)
 
 
 def _sql_qdist(b: str, c: str, dim: int) -> str:
     """Unrolled ((0.0 + d1*d1) + d2*d2)... quantized-grid distance —
-    matches the zip_with/aggregate fold in _ivf_topk_exact and the
-    float(x)-c loop in fit_ivf_centroids_exact."""
+    matches the zip_with/aggregate fold in nearest_centroid_ids and the
+    float(x)-c loop in _lloyd."""
     acc = "0.0"
     for j in range(1, dim + 1):
         d = f"(CAST({b}.xq[{j}] AS DOUBLE) - {c}.cen[{j}])"
@@ -1098,7 +1004,7 @@ def ivf_topk_oracle_sql(
     dim: int = 64,
     query_pred: str = "b.vid < 20",
 ) -> str:
-    """DuckDB oracle for ivf_topk(method='exact'): the hash-smallest
+    """DuckDB oracle for ivf_topk: the hash-smallest
     sample, ``iters`` unrolled Lloyd CTEs with integer centroid sums
     (the kmeans_oracle_sql pattern), corpus assignment and ``nprobe``
     probing as (dist, cid) row_number windows over the centroid cross
@@ -1372,6 +1278,69 @@ def _write_cid_partitioned(df: DataFrame, path: str, mode: str, salts: int = 8) 
         .parquet(path)
     )
 
+
+def _check_centroids(
+    who: str, centroids: list[list[float]], n_centroids: int, dim: int
+) -> None:
+    """Shape gate on a coarse quantizer passed to a store build: exactly
+    ``n_centroids`` centroids of ``dim`` coordinates each — a wrong
+    width would NULL-pad the assignment zip_with and send every vector
+    to one bogus cid."""
+    if len(centroids) != n_centroids:
+        raise ValueError(
+            f"{who}: {len(centroids)} centroids passed but n_centroids={n_centroids}"
+        )
+    if any(len(c) != dim for c in centroids):
+        raise ValueError(
+            f"{who}: every centroid must have {dim} coordinates (a wrong "
+            "width would NULL-pad the assignment zip_with and send every "
+            "vector to one bogus cid)"
+        )
+
+
+def _store_header_writers(
+    spark, path: str, cents: list[list[float]], meta: dict[str, int]
+) -> list:
+    """Writers of the two small layers every ANN store carries, to run
+    alongside its list writes (session.run_concurrent_writes —
+    independent writes to disjoint paths): ``centroids`` as
+    ``(cid, cen)`` rows, and the one ``meta`` row of int build
+    parameters the serve side must agree on (quantizing queries on a
+    different grid than the build silently breaks bit-identity).
+    local_df, not createDataFrame().coalesce(1) — the tiny-layer
+    sequential-slice storm, see session.local_df."""
+
+    def _w_centroids() -> None:
+        local_df(
+            spark,
+            [(i, list(map(float, c))) for i, c in enumerate(cents)],
+            "cid int, cen array<double>",
+        ).write.mode("overwrite").parquet(f"{path}/centroids")
+
+    def _w_meta() -> None:
+        local_df(
+            spark,
+            [tuple(int(v) for v in meta.values())],
+            ", ".join(f"{name} int" for name in meta),
+        ).write.mode("overwrite").parquet(f"{path}/meta")
+
+    return [_w_centroids, _w_meta]
+
+
+def _read_store_lists(
+    spark, store_path: str, layer: str = "lists", probed: list[int] | None = None,
+    schema=None,
+) -> DataFrame:
+    """A store's cid-partitioned layer (``lists``, or IVF-PQ's
+    ``refine``) as a Spark frame.  ``probed`` filters it by a LITERAL
+    cid ``isin``, which partition pruning turns into reading only
+    those directories; ``schema`` reads with a known schema, which
+    keeps a layer with no data files readable."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(f"{store_path}/{layer}")
+    return df if probed is None else df.where(F.col("cid").isin(probed))
+
+
 def build_ann_store(
     corpus: DataFrame,
     path: str,
@@ -1390,7 +1359,7 @@ def build_ann_store(
     layout):
 
     - ``{path}/centroids``: the coarse quantizer, ``(cid, cen)`` —
-      n_centroids rows from :func:`fit_ivf_centroids_exact` (the
+      n_centroids rows from :func:`fit_ivf_centroids` (the
       hash-sampled integer Lloyd's, so rebuilding from the same corpus
       reproduces the same index bit-for-bit);
     - ``{path}/lists``: the inverted lists, ``(neighbor_id, cv)``
@@ -1400,7 +1369,7 @@ def build_ann_store(
       lists never leave disk).
 
     Serving (:func:`ann_from_store`) is bit-identical to
-    ``ivf_topk(method='exact')`` over the same corpus — the store
+    :func:`ivf_topk` over the same corpus — the store
     round trip is lossless by construction (doubles are binary-exact
     through parquet), which the ann_store oracle row hash-checks
     against the direct computation's oracle.
@@ -1411,64 +1380,29 @@ def build_ann_store(
     byte-the-same list contents as ``build(A ∪ B, centroids=C)``
     (assignment is per-vector against fixed centroids; which batch a
     vector arrived in cannot matter)."""
-    from .clustering import _quantize
-
-    if centroids is not None:
-        if len(centroids) != n_centroids:
-            raise ValueError(
-                f"build_ann_store: {len(centroids)} centroids passed but "
-                f"n_centroids={n_centroids}"
-            )
-        dim = infer_dim(corpus, vec_col)
-        if any(len(c) != dim for c in centroids):
-            raise ValueError(
-                f"build_ann_store: every centroid must have {dim} coordinates "
-                "(a wrong width would NULL-pad the assignment zip_with and "
-                "send every vector to one bogus cid)"
-            )
-        cents = [list(map(float, c)) for c in centroids]
-    else:
-        cents = fit_ivf_centroids_exact(
+    if centroids is None:
+        centroids = fit_ivf_centroids(
             corpus, id_col, vec_col, n_centroids, iters, sample_size, scale_bits
         )
-    spark = corpus.sparkSession
-    cents_lit = _array_literal(cents)
+    else:
+        _check_centroids(
+            "build_ann_store", centroids, n_centroids, infer_dim(corpus, vec_col)
+        )
+    meta = {"scale_bits": scale_bits, "n_centroids": n_centroids}
 
-    # local_df, not createDataFrame().coalesce(1) — the tiny-layer
-    # sequential-slice storm, see session.local_df.  All three layers
-    # are independent writes to disjoint paths: run them concurrently
-    # (session.run_concurrent_writes, guide §2.6) so the two tiny
-    # metadata jobs ride along with the corpus-pass lists write.
-    def _w_centroids() -> None:
-        local_df(
-            spark,
-            [(i, list(c)) for i, c in enumerate(cents)],
-            "cid int, cen array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
-
-    # build parameters the serve side must agree on: quantizing queries
-    # on a different grid than the build silently breaks bit-identity
-    def _w_meta() -> None:
-        local_df(
-            spark,
-            [(int(scale_bits), int(n_centroids))],
-            "scale_bits int, n_centroids int",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-
+    # the lists frame is built inside its writer: building it costs
+    # ~0.2 s of driver-side analysis, which then overlaps the two small
+    # header writes instead of running before them
     def _w_lists() -> None:
         _write_cid_partitioned(
-            corpus.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("cv"),
-                nearest_centroid_ids(
-                    _quantize(F.col(vec_col), scale_bits), cents_lit, 1
-                )[0].alias("cid"),
-            ),
+            assign_lists(corpus, id_col, vec_col, centroids, scale_bits),
             f"{path}/lists",
             "overwrite",
         )
 
-    run_concurrent_writes([_w_centroids, _w_meta, _w_lists])
+    run_concurrent_writes([
+        *_store_header_writers(corpus.sparkSession, path, centroids, meta), _w_lists
+    ])
 
 
 def ann_store_is_pq(meta: dict, store_path: str) -> bool:
@@ -1625,25 +1559,15 @@ def append_to_ann_store(
     one narrow write of the batch, partitioned on cid; the store's
     existing lists are never read or rewritten, so append cost is
     O(|batch|) regardless of index size."""
-    from .clustering import _quantize
-
-    spark = batch.sparkSession
     # forbid_pq: an IVF-PQ store (functions/pq.py) shares the
     # meta/centroids layout but its lists hold CODES, not vectors —
     # appending (id, cv) rows there would silently corrupt it (NULL
     # codes at serve time); the shared header gate refuses it
     scale_bits, _n_cent, cents, _meta = _read_ann_store_header(
-        spark, store_path, forbid_pq="append_to_ann_store"
+        batch.sparkSession, store_path, forbid_pq="append_to_ann_store"
     )
-    cents_lit = _array_literal(cents)
     _write_cid_partitioned(
-        batch.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-            nearest_centroid_ids(
-                _quantize(F.col(vec_col), scale_bits), cents_lit, 1
-            )[0].alias("cid"),
-        ),
+        assign_lists(batch, id_col, vec_col, cents, scale_bits),
         f"{store_path}/lists",
         "append",
     )
@@ -1664,56 +1588,22 @@ def ann_from_store(
     ANN store — the raw corpus is never touched, and only the probed
     inverted-list DIRECTORIES are read (the probed-cid filter reaches
     the scan as a PartitionFilter; ≤ n_centroids values, bounded).
-    Math is bit-identical to ``ivf_topk(method='exact')``: quantized
-    fold-order centroid distances with lower-cid tie-breaks, exact
-    fold-order cosine re-rank over the ORIGINAL doubles."""
-    from .clustering import _quantize
-
+    The probe and rank of :func:`ivf_topk` over the stored lists, so
+    the result is bit-identical to it."""
     _bits, _n_cent, cents, _meta = _read_ann_store_header(
         spark, store_path, expect_scale_bits=scale_bits,
         forbid_pq="ann_from_store",
     )
-    cents_lit = _array_literal(cents)
     # materialized: q feeds both the probed-cid set and the broadcast
     # join — without the boundary a nondeterministic query frame could
     # probe one cid set and join another, silently dropping neighbors
     # (and the centroid-distance pass would run twice even when
     # deterministic)
     q, probed = _probe_lists(
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-            _quantize(F.col(vec_col), scale_bits).alias("xq"),
-        )
-        .withColumn(
-            "cid", F.explode(nearest_centroid_ids(F.col("xq"), cents_lit, nprobe))
-        )
-        .drop("xq")
+        assign_lists(queries, id_col, vec_col, cents, scale_bits, nprobe)
     )
-    lists = (
-        spark.read.parquet(f"{store_path}/lists")
-        .where(F.col("cid").isin(probed))
-        .withColumn("_x_ncv", norm_expr(F.col("cv")))
-    )
-    cand = (
-        lists.join(F.broadcast(q.withColumn("_x_nqv", norm_expr(F.col("qv")))), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            cosine_prenorm_expr(
-                F.col("qv"), F.col("cv"), F.col("_x_nqv"), F.col("_x_ncv")
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    lists = _read_store_lists(spark, store_path, probed=probed)
+    return _rank_by_cosine(_score_pairs(lists, q, "cid"), k)
 
 
 def knn_label(

@@ -541,6 +541,13 @@ class DedupOperation(Operation):
                 )
         elif not self.id_column or not self.text_column:
             raise SpecError(f"dedup strategy={self.strategy!r} requires id_column and text_column")
+        if self.strategy == "minhash" and (
+            self.num_perm <= 0 or self.bands <= 0 or self.num_perm % self.bands
+        ):
+            raise SpecError(
+                "dedup num_perm must be a positive multiple of bands, "
+                f"got num_perm={self.num_perm!r} bands={self.bands!r}"
+            )
 
 
 @dataclass
@@ -548,7 +555,15 @@ class SimilarityOperation(Operation):
     """ANN top-k as a flow op: the CURRENT frame is the corpus, the
     query side resolves like bind's right side (named input key or file
     path).  method ∈ brute (exact broadcast baseline) / lsh / ivf
-    (approximate scale paths — functions/similarity.py)."""
+    (approximate scale paths — functions/similarity.py).  Both
+    approximate paths run the code their generated oracles check:
+    ``lsh`` hashes with ±1.0 planes drawn from ``seed`` (n_planes,
+    n_tables); ``ivf`` fits ``n_centroids`` centroids by integer-grid
+    Lloyd's over a hash-chosen sample and probes ``nprobe`` lists.
+    ``seed`` applies to lsh only.  ivf raises two named errors: a
+    corpus with fewer non-NULL vectors than n_centroids
+    (``n_centroids=16 exceeds the N sampled vectors``), and a NaN or
+    infinite coordinate (``quantization overflow``)."""
 
     method: Literal["brute", "lsh", "ivf"] = "brute"
     queries_path: Required[str] = ""  # named input or file path

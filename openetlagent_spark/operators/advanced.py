@@ -269,8 +269,7 @@ def apply_similarity(
             seed=op.seed, **kwargs,
         )
     return S.ivf_topk(
-        df, queries_df, n_centroids=op.n_centroids, nprobe=op.nprobe,
-        seed=op.seed, **kwargs,
+        df, queries_df, n_centroids=op.n_centroids, nprobe=op.nprobe, **kwargs
     )
 
 
@@ -1073,8 +1072,10 @@ def _ann_store_manifest(spark: SparkSession, store_path: str) -> DataFrame:
     manifest both write-side ANN flow ops return: a column-pruned
     count-per-partition scan (parquet answers it from row-group
     metadata), ordered by cid so the sink is deterministic."""
+    from ..functions.similarity import _read_store_lists
+
     return (
-        spark.read.parquet(f"{store_path}/lists")
+        _read_store_lists(spark, store_path)
         .groupBy(F.col("cid").cast("int").alias("cid"))
         .agg(F.count(F.lit(1)).alias("n_vectors"))
         .orderBy("cid")

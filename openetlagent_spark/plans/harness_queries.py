@@ -1128,7 +1128,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate cosine top-k: centroids fit on the hash-smallest
-    2048 vectors (deterministic integer Lloyd's — method='exact'),
+    2048 vectors (deterministic integer Lloyd's),
     corpus partitioned into inverted lists, queries probe only the 4
     nearest lists.  Approximate relative to brute force (recall floors
     in tests/test_similarity_recall.py) but engine-exact: the unrolled
@@ -1138,9 +1138,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _ts(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    return ivf_topk(
-        emb, queries, k=10, method="exact", sample_size=2048, iters=2
-    )
+    return ivf_topk(emb, queries, k=10, sample_size=2048, iters=2)
 
 
 def q_ann_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1151,7 +1149,7 @@ def q_ann_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the query batch served FROM the store — only the probed list
     directories are read (the probed-cid literal filter reaches the
     scan as a PartitionFilter; plan-pinned), the raw corpus never.
-    Serving math is bit-identical to ivf_topk(method='exact'), so
+    Serving math is bit-identical to ivf_topk, so
     this hash-matches the SAME unrolled-CTE oracle as ann_ivf_topk —
     equality IS the proof the index round trip is lossless."""
     from ..functions.similarity import ann_from_store, build_ann_store
@@ -1181,12 +1179,12 @@ def q_ann_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann_from_store,
         append_to_ann_store,
         build_ann_store,
-        fit_ivf_centroids_exact,
+        fit_ivf_centroids,
     )
 
     emb = _ts(spark, sf_dir, "embeddings")
     store = _scratch_dir("ela_ann_append", sf_dir)
-    cents = fit_ivf_centroids_exact(
+    cents = fit_ivf_centroids(
         emb, "vec_id", "embedding", n_centroids=16, iters=2, sample_size=2048
     )
     build_ann_store(

@@ -118,22 +118,22 @@ def test_minhash_udf_matches_expression(spark):
     assert both.filter("expr_sig IS DISTINCT FROM udf_sig").count() == 0
 
 
-def test_char_ngram_codes_bijective(spark):
-    """char_ngram_codes (the packed exact char-gram form) yields the
-    same distinct-set sizes as the substring grams it encodes — the
-    bijection that makes code-array Jaccard equal string-gram Jaccard."""
-    from pyspark.sql import functions as F
+def test_minhash_dedup_strategy_validation():
+    from openetlagent_spark.model import SpecError, parse_operation
 
-    from openetlagent_spark.functions.dedup import char_ngram_codes, char_ngrams
+    def spec(num_perm, bands):
+        return {
+            "operation_type": "dedup", "strategy": "minhash", "mode": "pairs",
+            "id_column": "doc_id", "text_column": "text",
+            "num_perm": num_perm, "bands": bands,
+        }
 
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, "ab"), (3, ""), (4, "héllo wörld")], ["i", "t"]
-    )
-    rows = df.select(
-        F.size(char_ngrams(F.col("t"), 3)).alias("n_str"),
-        F.size(char_ngram_codes(F.col("t"), 3)).alias("n_code"),
-    ).collect()
-    assert all(r.n_str == r.n_code for r in rows)
+    for num_perm in (8, 65):
+        with pytest.raises(
+            SpecError, match="num_perm must be a positive multiple of bands"
+        ):
+            parse_operation(spec(num_perm, 16))
+    assert parse_operation(spec(64, 16)).num_perm == 64
 
 
 @pytest.fixture(scope="module")

@@ -1,8 +1,8 @@
 """Flow ops run the code the generated DuckDB oracles check.
 
 Each near-duplicate family (``dedup`` minhash / ngram / simhash /
-embedding) and ``similarity`` ``method: lsh`` runs through
-``apply_operations`` from a parsed spec and is compared, row for row,
+embedding) and ``similarity`` ``method: lsh`` and ``method: ivf`` runs
+through ``apply_operations`` from a parsed spec and is compared, row for row,
 with its generated oracle over the same data and the same parameters,
 using scripts/check_oracle.py's exact (type-sensitive, full-precision)
 normalizer.  The text corpus is the sf0.001 documents plus one
@@ -32,7 +32,10 @@ from openetlagent_spark.functions.dedup import (
     ngram_pairs_oracle_sql,
     simhash_pairs_oracle_sql,
 )
-from openetlagent_spark.functions.similarity import lsh_topk_oracle_sql
+from openetlagent_spark.functions.similarity import (
+    ivf_topk_oracle_sql,
+    lsh_topk_oracle_sql,
+)
 from openetlagent_spark.model import parse_operation
 from openetlagent_spark.runner import apply_operations
 
@@ -170,20 +173,42 @@ def test_embedding_dedup_flow_matches_oracle(spark, con, emb):
     assert _assert_matches(_dedup(emb, spark, **EMB_SPEC), con, EMB_SQL) > 0
 
 
-def _lsh(corpus, queries, spark):
+def _similarity(method, corpus, queries, spark):
     op = parse_operation(
-        {"operation_type": "similarity", "method": "lsh", "queries_path": "queries", "k": 10}
+        {"operation_type": "similarity", "method": method, "queries_path": "queries", "k": 10}
     )
     return apply_operations(corpus, [op], spark, {"queries": queries})
 
 
+def _lsh(corpus, queries, spark):
+    return _similarity("lsh", corpus, queries, spark)
+
+
 # the op's defaults: 4 planes, 8 tables, seed 42
 LSH_SQL = lsh_topk_oracle_sql(k=10, n_planes=4, n_tables=8, seed=42, dim=64, query_pred="vid < 20")
+# the op's defaults (16 centroids, 4 probes) and ivf_topk's fit defaults
+IVF_SQL = ivf_topk_oracle_sql(
+    k=10, n_centroids=16, nprobe=4, sample_size=2048, iters=2, scale_bits=20, dim=64,
+    query_pred="b.vid < 20",
+)
 
 
 def test_lsh_similarity_flow_matches_oracle(spark, con, emb):
     out = _lsh(emb, emb.filter(F.col("vec_id") < 20), spark)
     assert _assert_matches(out, con, LSH_SQL) > 0
+
+
+def test_ivf_similarity_flow_matches_oracle(spark, con, emb):
+    out = _similarity("ivf", emb, emb.filter(F.col("vec_id") < 20), spark)
+    assert _assert_matches(out, con, IVF_SQL) > 0
+
+
+def test_ivf_similarity_flow_refuses_fewer_vectors_than_centroids(spark, emb):
+    """A corpus smaller than n_centroids is a named error, never a
+    silently smaller index."""
+    few = emb.orderBy("vec_id").limit(5)
+    with pytest.raises(ValueError, match="n_centroids=16 exceeds the 5 sampled vectors"):
+        _similarity("ivf", few, few, spark).collect()
 
 
 def test_vector_flows_single_row_match_oracle(spark, emb):

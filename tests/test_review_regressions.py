@@ -260,9 +260,10 @@ def test_kmeans_quantization_overflow_is_clear(spark):
 
 
 def test_ivf_sampling_skips_null_and_nonfinite_vectors(spark):
-    """IVF centroid fitting must survive NULL / NaN / ragged vectors in
-    the corpus (they are excluded from the sample and never poison the
-    centroid literals)."""
+    """IVF centroid fitting skips NULL vectors (they are excluded from
+    the sample and never poison the centroid literals), and a NaN
+    vector fails with the named quantization error instead of being
+    dropped silently."""
     from pyspark.sql import Row
 
     from openetlagent_spark.functions.similarity import ivf_topk
@@ -275,6 +276,10 @@ def test_ivf_sampling_skips_null_and_nonfinite_vectors(spark):
         Row(vec_id=4, embedding=[-1.0] * 4),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = ivf_topk(df, df.limit(2), id_col="vec_id", vec_col="embedding",
+    finite = df.filter("vec_id != 3")
+    out = ivf_topk(finite, finite.limit(2), id_col="vec_id", vec_col="embedding",
                    k=2, n_centroids=2, nprobe=1)
     assert out.count() > 0
+    with pytest.raises(Exception, match="quantization overflow"):
+        ivf_topk(df, df.limit(2), id_col="vec_id", vec_col="embedding",
+                 k=2, n_centroids=2, nprobe=1).collect()

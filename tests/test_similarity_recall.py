@@ -93,14 +93,14 @@ def test_lsh_topk_corpus_as_queries_shuffle(emb):
 
 
 def test_ivf_exact_deterministic_and_recall(emb, brute):
-    """method='exact' (hash-sampled integer Lloyd fit) is bit-stable
-    across repartitionings of the corpus — the property the numpy
-    sample fit cannot guarantee — and holds the same recall floor."""
+    """The hash-sampled integer Lloyd fit is bit-stable across
+    repartitionings of the corpus — its sample never depends on scan
+    order — and holds the same recall floor."""
     qs = emb.filter("vec_id < 30")
     a = {
         tuple(r)
         for r in ivf_topk(
-            emb, qs, k=10, n_centroids=8, nprobe=4, method="exact",
+            emb, qs, k=10, n_centroids=8, nprobe=4,
             sample_size=512, iters=2,
         ).collect()
     }
@@ -108,7 +108,7 @@ def test_ivf_exact_deterministic_and_recall(emb, brute):
         tuple(r)
         for r in ivf_topk(
             emb.repartition(7), qs, k=10, n_centroids=8, nprobe=4,
-            method="exact", sample_size=512, iters=2,
+            sample_size=512, iters=2,
         ).collect()
     }
     assert a == b
@@ -279,7 +279,7 @@ def test_quantize_zero_and_null_vectors(spark):
 
 
 def test_ann_store_equals_direct_exact_ivf(spark, tmp_path):
-    """Serving from the persisted index == ivf_topk(method='exact')
+    """Serving from the persisted index == ivf_topk
     over the same corpus, row for row — the store round trip is
     lossless (the ann_store oracle row's claim, locally)."""
     from openetlagent_spark.functions.similarity import (
@@ -294,7 +294,7 @@ def test_ann_store_equals_direct_exact_ivf(spark, tmp_path):
     build_ann_store(emb, store, "vec_id", "embedding",
                     n_centroids=8, iters=2, sample_size=256)
     served = ann_from_store(spark, store, queries, k=5, nprobe=2)
-    direct = ivf_topk(emb, queries, k=5, method="exact",
+    direct = ivf_topk(emb, queries, k=5,
                       n_centroids=8, nprobe=2, sample_size=256, iters=2)
     assert sorted(map(tuple, served.collect())) == sorted(map(tuple, direct.collect()))
 
@@ -307,12 +307,12 @@ def test_ann_store_append_equals_full_build(spark, tmp_path):
         ann_from_store,
         append_to_ann_store,
         build_ann_store,
-        fit_ivf_centroids_exact,
+        fit_ivf_centroids,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter("vec_id < 8")
-    cents = fit_ivf_centroids_exact(
+    cents = fit_ivf_centroids(
         emb, "vec_id", "embedding", n_centroids=8, iters=2, sample_size=256
     )
     full = str(tmp_path / "ann_full")
@@ -336,7 +336,7 @@ def test_ann_store_append_equals_full_build(spark, tmp_path):
 def test_ann_from_store_recall_floor(spark, emb, brute, tmp_path):
     """Recall@10 of the persisted-store serving path against the brute
     baseline — the same floor the direct IVF path holds (serving is
-    bit-identical to ivf_topk(method='exact'), so this pins the
+    bit-identical to ivf_topk, so this pins the
     composed store path end-to-end, not just the equality)."""
     from openetlagent_spark.functions.similarity import (
         ann_from_store,
