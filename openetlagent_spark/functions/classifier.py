@@ -11,8 +11,7 @@ expressions, a broadcast weight literal, no UDF, one scan — while the
 default WEIGHTS are a deterministic seeded stub (exact binary
 fractions on the 2^-20 grid), clearly marked: swap in a trained
 weight list (`weights=`) for production scoring; every line of Spark
-plumbing is identical either way.  This is the same stub-the-model,
-prove-the-plumbing contract as the multimodal fake decoder.
+plumbing is identical either way.
 
 Engine-exactness: the token→bucket hash is the engine's md5-prefix
 integer (dedup.word_ngram_codes' code), grid weights make every

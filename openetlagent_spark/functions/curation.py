@@ -367,12 +367,11 @@ def pack_sequences(
     parts = (
         base.repartitionByRange(F.col("__oid__"))
         .withColumn("__pid__", F.spark_partition_id())
-        .transform(materialize, True, True)  # consumed by the phase-1
-        # sums AND the phase-2 window — require_truncation: both phases
-        # MUST see the SAME range partitioning (the driver collects the
-        # per-pid base offsets, so a re-run of the sampled exchange
-        # with different range bounds would silently mis-join them);
-        # persist mode keeps lineage re-runnable and is refused here
+        .transform(materialize)  # consumed by the phase-1
+        # sums AND the phase-2 window: both phases MUST see the SAME
+        # range partitioning (the driver collects the per-pid base
+        # offsets, so a re-run of the sampled exchange with different
+        # range bounds would silently mis-join them)
     )
     # Phase 1: one row per partition → exclusive prefix of partition sums.
     psums = (
@@ -857,9 +856,9 @@ def _two_phase_global_rank(
     parts = (
         df.repartitionByRange(*sort_cols)
         .withColumn("_x_pid", F.spark_partition_id())
-        # require_truncation: phase 2 joins the driver-collected per-pid
-        # bases — the sampled range exchange must never re-run
-        .transform(materialize, True, True)
+        # phase 2 joins the driver-collected per-pid bases — the
+        # sampled range exchange must never re-run
+        .transform(materialize)
     )
     psums = parts.groupBy("_x_pid").agg(F.count(F.lit(1)).alias("n")).collect()
     bases: dict[int, int] = {}
@@ -911,7 +910,7 @@ def two_phase_group_rank(
 
     Range bounds come from sampling and may vary run to run — ranks do
     NOT (offsets fold actual counts).  The repartitioned frame is
-    eagerly localCheckpoint-ed with require_truncation: phase 3 joins
+    eagerly localCheckpoint-ed: phase 3 joins
     driver-collected bases, so the sampled exchange must never re-run.
     NULL group values take the '' map key (groups whose string forms
     collide would share ranks — callers with NULLable groups must
@@ -924,7 +923,7 @@ def two_phase_group_rank(
         df.repartitionByRange(*gcols, *sort_cols)
         .withColumn("_x_pid", F.spark_partition_id())
         .withColumn("_x_gkey", gkey)
-        .transform(materialize, True, True)
+        .transform(materialize)
     )
     psums = (
         parts.groupBy("_x_pid", "_x_gkey").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -1627,9 +1626,9 @@ def token_budget_sample(
         .withColumn("_x_t", toks)
         .repartitionByRange(F.col(group_col), F.col("_x_h"), F.col(id_col))
         .withColumn("_x_pid", F.spark_partition_id())
-        # require_truncation: phase 2 joins bases keyed by this exact
+        # phase 2 joins bases keyed by this exact
         # sampled range split — it must never re-run differently
-        .transform(materialize, True, True)
+        .transform(materialize)
     )
     agg = parts.groupBy("_x_pid", group_col).agg(F.sum("_x_t").alias("_x_s"))
     wb = (
@@ -1829,7 +1828,7 @@ def two_phase_prefix_sums(
     parts = (
         df.repartitionByRange(*sort_cols)
         .withColumn("_x_pid", F.spark_partition_id())
-        .transform(materialize, True, True)
+        .transform(materialize)
     )
     psums = (
         parts.groupBy("_x_pid")

@@ -94,7 +94,7 @@ def connected_components(
     # per-round join volume — hence opt-in, not automatic.
     if not edges_deduped:
         sym = sym.distinct()
-    sym = sym.transform(materialize, False, True)
+    sym = sym.transform(materialize, False)
     # Init + round 1 FUSED (r13 optimization): the old identity init
     # (distinct node list, component = node) followed by the first
     # push round computes min(node, min(neighbors)) — but with
@@ -119,7 +119,7 @@ def connected_components(
         sym.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("component"))
         .select(F.col("a").alias("node"), "component")
-        .transform(materialize, False, True)
+        .transform(materialize, False)
     )
     # Convergence probe: propagation only ever DECREASES labels, so the
     # fixpoint is reached exactly when the label sum stops changing —
@@ -194,7 +194,7 @@ def connected_components(
     i = 0
     while not converged and remaining >= step_len(i):
         k = step_len(i)
-        new_labels = push_n(labels, k).transform(materialize, False, True)
+        new_labels = push_n(labels, k).transform(materialize, False)
         new_sum = label_sum(new_labels)
         labels = new_labels
         remaining -= k
@@ -205,7 +205,7 @@ def connected_components(
     if not converged and remaining:
         # remainder pushes in one final lazy query land exactly on the
         # max_iter-push state the oracle unrolls
-        new_labels = push_n(labels, remaining).transform(materialize, False, True)
+        new_labels = push_n(labels, remaining).transform(materialize, False)
         # label_sum is the action that materializes the lazy
         # checkpoint; its value is not needed after the final push
         label_sum(new_labels)
@@ -634,8 +634,7 @@ def label_propagation(
         )
         labels = materialize(
             labels.join(mode, "node", "left")
-            .select("node", F.coalesce("new_lab", "lab").alias("lab")),
-            require_truncation=True,
+            .select("node", F.coalesce("new_lab", "lab").alias("lab"))
         )
     from pyspark.sql import Window
 
@@ -735,10 +734,7 @@ def kcore(
         deg = e_alive.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).cast("long").alias("degree")
         )
-        alive = materialize(
-            deg.filter(F.col("degree") >= k).select("node"),
-            require_truncation=True,
-        )
+        alive = materialize(deg.filter(F.col("degree") >= k).select("node"))
     # final within-core degrees over the converged alive set
     e_final = sym.join(
         alive.withColumnRenamed("node", "src"), "src", "left_semi"
@@ -922,8 +918,7 @@ def bfs_hops(
         dist = materialize(
             dist.unionByName(step)
             .groupBy("node")
-            .agg(F.min("hops").alias("hops")),
-            require_truncation=True,
+            .agg(F.min("hops").alias("hops"))
         )
     return dist
 

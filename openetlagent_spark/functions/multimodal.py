@@ -1,22 +1,15 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` payloads
 with typed metadata, processed by Arrow-batched ``mapInPandas`` stages.
 
-The DECODE step comes in two flavors (clearly marked):
-- ``decoder="fake"``: a deterministic pure-numpy stand-in — byte
-  histograms / byte statistics — so the full Spark plumbing (schema,
-  batching, partitioning, UDF signatures) can be exercised without any
-  pixel semantics.
-- ``decoder="real"`` (the production path): REAL pixel decode.  The
-  built-in pure-Python codecs handle BMP (24/32-bit BI_RGB), PNM (P5
-  grayscale / P6 RGB), and PNG (8-bit non-interlaced, all color types
-  and row filters, via stdlib zlib) — no dependency at all; payloads
-  in any other format (JPEG, …) fall back to Pillow when it is
-  importable.  Decode is TOTAL either way:
-  corrupt, truncated, or unsupported-without-Pillow payloads yield the
-  zero feature vector instead of failing the task — at 100 TB one bad
-  crawl byte must never abort the job.  VIDEO frame sampling is real
-  too: Y4M (the standard uncompressed container) parses built-in;
-  compressed containers fall back to PyAV when importable.
+There is one DECODE path, the built-in pure-Python codecs, with no
+dependency: BMP (24/32-bit BI_RGB), PNM (P5 grayscale / P6 RGB), PNG
+(8-bit non-interlaced, all color types and row filters, via stdlib
+zlib), JPEG (baseline and progressive), WAV (RIFF PCM 8/16-bit) and
+Y4M video.  Decode is TOTAL: corrupt, truncated or unsupported
+payloads (any other format) yield the zero feature vector, or zero
+frame rows, instead of failing the task — at 100 TB one bad crawl
+byte must never abort the job.  ``strict=True`` turns an undecodable
+non-empty payload into a loud task error instead.
 
 Everything else — the media struct schema, batch iteration, partition
 sizing, feature schemas — is the production shape: at 100 TB these run
@@ -33,7 +26,6 @@ from typing import Literal
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Typed metadata accompanying an opaque payload.
@@ -65,17 +57,6 @@ FRAME_SAMPLE_SCHEMA = T.StructType(
         T.StructField("frame_payload", T.BinaryType()),
     ]
 )
-
-
-def _optional_pil():
-    """Import Pillow if present, else None — the real decode path uses
-    it only as the fallback for compressed formats the built-in codecs
-    don't cover."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-    except ImportError:
-        return None
-    return Image
 
 
 # --- built-in pure-Python codecs (uncompressed formats) ---------------
@@ -281,7 +262,7 @@ def _decode_png(payload: bytes) -> np.ndarray | None:
     depth, non-interlaced, color types 0 (gray), 2 (RGB), 3 (palette),
     4 (gray+alpha), 6 (RGBA), ALL five row filters (None/Sub/Up/
     Average/Paeth).  16-bit depth and Adam7 interlacing return None
-    (Pillow fallback when importable).  Color converts through the
+    (undecodable).  Color converts through the
     same ITU-R 601-2 integer luma as the BMP/PNM codecs; alpha is
     ignored (features describe the raster, not compositing).  Sub/
     Average/Paeth rows unfilter sequentially per byte — inherent to
@@ -402,7 +383,7 @@ def _decode_png(payload: bytes) -> np.ndarray | None:
 # multi-scan decoder (_decode_jpeg_progressive: full Annex G spectral
 # selection + successive approximation, EOBn run lengths, refinement
 # scans, restarts).  Arithmetic-coded, 12-bit, lossless, and
-# hierarchical files return None (Pillow fallback when importable).
+# hierarchical files return None (undecodable).
 # Totality contract as the other codecs: hostile/truncated bytes →
 # None, never a raised task error.
 #
@@ -1985,7 +1966,7 @@ def encode_gray_jpeg_flat(blocks: np.ndarray) -> bytes:
 def decode_image_builtin(payload: bytes | None) -> np.ndarray | None:
     """Dependency-free image decode: BMP, PNM, PNG, or JPEG (baseline
     AND progressive) by magic bytes → (h, w) uint8 grayscale; None for
-    anything else (other formats go to the Pillow fallback)."""
+    anything else (undecodable)."""
     if not payload:
         return None
     if payload[:2] == b"BM":
@@ -1999,54 +1980,18 @@ def decode_image_builtin(payload: bytes | None) -> np.ndarray | None:
     return None
 
 
-def _decode_gray(payload: bytes | None, Image) -> np.ndarray | None:
-    """Full real-decode dispatch: built-in codecs first (deterministic,
-    no dependency), then Pillow (when importable) for compressed
-    formats.  None = undecodable."""
-    arr = decode_image_builtin(payload)
-    if arr is not None:
-        return arr
-    if Image is None or not payload:
-        return None
-    import io
-
-    try:
-        img = Image.open(io.BytesIO(payload)).convert("L")
-        return np.asarray(img, dtype=np.uint8)
-    except Exception:
-        return None
-
-
-def _decode_features(payload: bytes | None, dim: int, Image) -> tuple[int, np.ndarray]:
-    """THE real featurization: image bytes → (n_pixels, L1-normalized
+def _decode_features(payload: bytes | None, dim: int) -> tuple[int, np.ndarray]:
+    """THE image featurization: image bytes → (n_pixels, L1-normalized
     grayscale intensity histogram) — deterministic given the payload.
-    TOTAL like the fake decoder: corrupt/truncated/undecodable
-    payloads yield (0, zero vector) instead of failing the task
-    (filter n_pixels == 0 downstream).  Single implementation shared
-    by the mapInPandas stage and _real_decode_features so the bin
-    range / zero contract cannot drift."""
-    arr = _decode_gray(payload, Image)
+    TOTAL: corrupt/truncated/undecodable payloads yield (0, zero
+    vector) instead of failing the task (filter n_pixels == 0
+    downstream)."""
+    arr = decode_image_builtin(payload)
     if arr is None or arr.size == 0:
         return 0, np.zeros(dim, dtype=np.float32)
     flat = arr.ravel()
     hist, _ = np.histogram(flat, bins=dim, range=(0, 256))
     return flat.size, (hist / flat.size).astype(np.float32)
-
-
-def _real_decode_features(Image, payload: bytes, dim: int) -> np.ndarray:
-    """Feature-only view of :func:`_decode_features` (kept for direct
-    callers and the corrupt-payload contract tests)."""
-    return _decode_features(payload, dim, Image)[1]
-
-
-def _fake_decode_features(payload: bytes, dim: int = 16) -> np.ndarray:
-    """STUB decode: deterministic byte-histogram 'feature' — stands in
-    for a real decode+embed (see module docstring)."""
-    if payload is None or len(payload) == 0:
-        return np.zeros(dim, dtype=np.float32)
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-    return (hist / max(len(arr), 1)).astype(np.float32)
 
 
 # --- audio: WAV (RIFF PCM) --------------------------------------------
@@ -2155,26 +2100,18 @@ def extract_audio_features(
     id_col: str = "media_id",
     mime_col: str = "mime",
     dim: int = 16,
-    decoder: Literal["fake", "real"] = "fake",
     strict: bool = False,
 ) -> DataFrame:
     """Binary audio payload → fixed-dim amplitude histogram, one
     mapInPandas stage — the audio sibling of extract_image_features.
 
-    ``decoder='real'`` parses WAV (RIFF PCM 8/16-bit, any channel
-    count — channel 0 is featurized; the histogram describes the
-    waveform, not the mix), yielding ``n_samples`` per-channel frames,
-    ``duration_ms = n_samples·1000 // rate`` (integer), and an
-    L1-normalized ``dim``-bin amplitude histogram (float32).
-    Undecodable payloads: zero vector, n_samples = 0, duration 0 —
-    total, or ``strict=True`` raises.  ``decoder='fake'`` histograms
-    raw payload bytes (n_samples = byte count, duration 0) so the
-    plumbing is testable without any container."""
-    if strict and decoder != "real":
-        raise ValueError(
-            "extract_audio_features: strict=True requires decoder='real' "
-            "(the fake byte-histogram path never decodes)"
-        )
+    Parses WAV (RIFF PCM 8/16-bit, any channel count — channel 0 is
+    featurized; the histogram describes the waveform, not the mix),
+    yielding ``n_samples`` per-channel frames, ``duration_ms =
+    n_samples·1000 // rate`` (integer), and an L1-normalized
+    ``dim``-bin amplitude histogram (float32).  Undecodable payloads:
+    zero vector, n_samples = 0, duration 0 — total, or ``strict=True``
+    raises."""
     if dim <= 0 or 256 % dim != 0:
         raise ValueError(
             f"extract_audio_features: dim must divide 256, got {dim}"
@@ -2182,7 +2119,7 @@ def extract_audio_features(
     bin_div = 256 // dim
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def real(b):
+        def decode(b):
             dec = _decode_wav(bytes(b)) if b else None
             if dec is None:
                 if strict and b:
@@ -2201,14 +2138,6 @@ def extract_audio_features(
                 (hist / len(wave)).astype(np.float32),
             )
 
-        def fake(b):
-            if not b:
-                return 0, 0, np.zeros(dim, dtype=np.float32)
-            arr = np.frombuffer(bytes(b), dtype=np.uint8)
-            hist = np.bincount(arr // bin_div, minlength=dim).astype(np.float64)
-            return len(arr), 0, (hist / len(arr)).astype(np.float32)
-
-        decode = real if decoder == "real" else fake
         for pdf in it:
             payloads = pdf[payload_col]
             decoded = payloads.map(decode)
@@ -2291,53 +2220,33 @@ def extract_image_features(
     id_col: str = "media_id",
     mime_col: str = "mime",
     dim: int = 16,
-    decoder: Literal["fake", "real"] = "fake",
     strict: bool = False,
 ) -> DataFrame:
     """Binary payload → fixed-dim feature vector, one mapInPandas stage.
 
-    Batches stream through Arrow; nothing is collected.  The 'real'
-    decoder runs the built-in BMP/PNM/PNG/baseline-JPEG codecs (pure Python, always
-    available) with Pillow as the optional fallback for other
-    compressed formats (JPEG, …); it shares every line of Spark plumbing with the fake one.
-    ``n_pixels`` is the decoded pixel count (real) or the payload byte
-    count (fake — each byte IS the 'pixel' the stub histograms); 0 for
-    undecodable payloads, so ``feature != zeros ⇔ n_pixels > 0``.
+    Batches stream through Arrow; nothing is collected.  Decode runs
+    the built-in BMP/PNM/PNG/JPEG codecs (pure Python, always
+    available).  ``n_pixels`` is the decoded pixel count; 0 for
+    undecodable payloads (any other format included), whose feature is
+    the zero vector, so ``feature != zeros ⇔ n_pixels > 0``.
 
     ``strict=True`` turns an undecodable NON-EMPTY payload into a loud
     task error instead of a zero vector — the per-payload totality
-    default is right for dirty crawl data, but it also masks a
-    whole-environment misconfiguration (a JPEG corpus in a container
-    whose executors lack Pillow would silently featurize to 100%
-    zeros); pipelines over trusted formats should run strict."""
-    if strict and decoder != "real":
-        raise ValueError(
-            "extract_image_features: strict=True requires decoder='real' "
-            "(the fake byte-histogram path never decodes, so it cannot "
-            "detect undecodable payloads)"
-        )
+    default is right for dirty crawl data, but it also masks a corpus
+    in a format the codecs do not cover (it would silently featurize
+    to 100% zeros); pipelines over trusted formats should run strict."""
+
+    def decode(b):
+        n, feat = _decode_features(b, dim)
+        if strict and n == 0 and b:
+            raise ValueError(
+                f"extract_image_features(strict=True): undecodable "
+                f"{len(b)}-byte payload (magic {b[:4]!r}); built-in "
+                "codecs cover BMP/PNM/PNG/baseline+progressive JPEG"
+            )
+        return n, feat.tolist()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if decoder == "real":
-            Image = _optional_pil()
-
-            def decode(b):
-                n, feat = _decode_features(b, dim, Image)
-                if strict and n == 0 and b:
-                    raise ValueError(
-                        f"extract_image_features(strict=True): undecodable "
-                        f"{len(b)}-byte payload (magic {b[:4]!r}); built-in "
-                        "codecs cover BMP/PNM/PNG/baseline-JPEG, Pillow "
-                        + ("is importable" if Image else "is NOT importable")
-                        + " on this executor"
-                    )
-                return n, feat.tolist()
-
-        else:
-
-            def decode(b):
-                return (0 if b is None else len(b)), _fake_decode_features(b, dim).tolist()
-
         for pdf in it:
             payloads = pdf[payload_col]
             decoded = payloads.map(decode)
@@ -2352,82 +2261,6 @@ def extract_image_features(
             )
 
     return df.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
-
-
-def resize_images(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    mime_col: str = "mime",
-    target_width: int = 64,
-    target_height: int = 64,
-    decoder: Literal["fake", "real"] = "fake",
-    strict: bool = False,
-) -> DataFrame:
-    """Resize stage: passes metadata through and rewrites width/height.
-    fake: truncate/pad bytes deterministically to w*h (stands in for
-    decode→resize→re-encode); real: decode (built-in BMP/PNM codecs,
-    Pillow fallback for compressed formats) → floor-index
-    nearest-neighbour resize (src = dst·size_src // size_dst,
-    deterministic in pure integer math) → 24-bit BMP re-encode.  The
-    real path rewrites ``mime_col`` (when present) to ``image/bmp``
-    for resized rows — the payload's format changed, so its typed
-    metadata must follow — and to '' for undecodable rows whose
-    payload became empty.  ``strict=True``: undecodable non-empty
-    payloads raise instead of passing through empty (the
-    extract_image_features strict contract)."""
-    if strict and decoder != "real":
-        raise ValueError(
-            "resize_images: strict=True requires decoder='real' (the fake "
-            "truncate/pad path never decodes)"
-        )
-    out_schema = df.schema
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = target_width * target_height
-        if decoder == "real":
-            Image = _optional_pil()
-            col_idx = np.arange(target_width, dtype=np.int64)
-            row_idx = np.arange(target_height, dtype=np.int64)
-
-            def transform(b: bytes | None) -> bytes:
-                # total: undecodable payloads pass through as empty
-                # bytes instead of failing the task (see
-                # _decode_features rationale)
-                arr = _decode_gray(b, Image)
-                if arr is None or arr.size == 0:
-                    if strict and b:
-                        raise ValueError(
-                            f"resize_images(strict=True): undecodable "
-                            f"{len(b)}-byte payload (magic {b[:4]!r})"
-                        )
-                    return b""
-                h, w = arr.shape
-                resized = arr[(row_idx * h) // target_height][
-                    :, (col_idx * w) // target_width
-                ]
-                return encode_gray_bmp(resized)
-
-        else:
-
-            def transform(b: bytes | None) -> bytes:
-                return (b or b"")[:n].ljust(n, b"\0")
-
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf[payload_col] = pdf[payload_col].map(transform)
-            if decoder == "real" and mime_col in pdf.columns:
-                # re-encoded payloads ARE BMPs now; empty = no media
-                pdf[mime_col] = pdf[payload_col].map(
-                    lambda b: "image/bmp" if b else ""
-                )
-            if "width" in pdf.columns:
-                pdf["width"] = np.int32(target_width)
-            if "height" in pdf.columns:
-                pdf["height"] = np.int32(target_height)
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
 
 
 _Y4M_SIG = b"YUV4MPEG2 "
@@ -2505,17 +2338,6 @@ def _parse_y4m(payload: bytes) -> tuple[int, int, int, list[int]] | None:
         return None
 
 
-def _optional_av():
-    """Import PyAV if present, else None — the real frame-sampling path
-    uses it only for COMPRESSED containers (mp4/webm/mkv); Y4M decodes
-    built-in."""
-    try:
-        import av  # noqa: PLC0415
-    except ImportError:
-        return None
-    return av
-
-
 def _sample_indices(total: int, n_frames: int) -> list[int]:
     """Deterministic even sampling: k = min(n_frames, total) source
     indices ⌊j·total/k⌋ — strictly increasing (total/k ≥ 1), always
@@ -2525,113 +2347,57 @@ def _sample_indices(total: int, n_frames: int) -> list[int]:
     return [(j * total) // k for j in range(k)]
 
 
-def _real_av_frames(av, payload: bytes, n_frames: int) -> list[tuple[int, bytes]]:
-    """PyAV path for compressed containers: two decode passes (count,
-    then pick) so memory stays one frame, never the clip.  Returns
-    (source_index, gray PNG payload) pairs."""
-    import io
-
-    with av.open(io.BytesIO(payload)) as container:
-        total = sum(1 for _ in container.decode(video=0))
-    if total == 0:
-        return []
-    want = set(_sample_indices(total, n_frames))
-    out: list[tuple[int, bytes]] = []
-    with av.open(io.BytesIO(payload)) as container:
-        for idx, frame in enumerate(container.decode(video=0)):
-            if idx in want:
-                arr = frame.to_ndarray(format="gray")
-                out.append((idx, encode_gray_png(arr.astype(np.uint8))))
-    return out
-
-
 def sample_frames(
     df: DataFrame,
     *,
     payload_col: str = "payload",
     id_col: str = "media_id",
     n_frames: int = 4,
-    decoder: Literal["fake", "real"] = "fake",
     strict: bool = False,
 ) -> DataFrame:
     """Video → frame rows (one output row per sampled frame): the
     row-expanding mapInPandas shape.
 
-    ``decoder='real'`` REALLY decodes: Y4M (YUV4MPEG2 — the standard
-    uncompressed container, ``ffmpeg -f yuv4mpegpipe`` output) parses
-    built-in with zero dependencies (header + fixed-size frames; the
-    luma plane leads each frame for every colorspace, so grayscale
-    extraction is a slice), and compressed containers (mp4/webm/…)
-    fall back to PyAV when importable.  Each sampled frame is emitted
-    as a standalone grayscale PNG payload (encode_gray_png), so the
-    frame rows compose directly with extract_image_features /
-    resize_images / image near-dup — video becomes images after ONE
-    stage.  Sampling is deterministic integer math: k = min(n_frames,
-    total) source indices ⌊j·total/k⌋; ``frame_index`` is the SOURCE
-    index.  Undecodable payloads yield zero rows (total, the crawl
-    default) unless ``strict=True`` raises.
-
-    ``decoder='fake'`` keeps the payload-chunking stand-in (n equal
-    byte slices, frame_index = ordinal) for plumbing tests.
+    Decodes Y4M (YUV4MPEG2 — the standard uncompressed container,
+    ``ffmpeg -f yuv4mpegpipe`` output) built-in with zero dependencies
+    (header + fixed-size frames; the luma plane leads each frame for
+    every colorspace, so grayscale extraction is a slice).  Each
+    sampled frame is emitted as a standalone grayscale PNG payload
+    (encode_gray_png), so the frame rows compose directly with
+    extract_image_features / image near-dup — video becomes images
+    after ONE stage.  Sampling is deterministic integer math: k =
+    min(n_frames, total) source indices ⌊j·total/k⌋; ``frame_index``
+    is the SOURCE index.  Undecodable payloads (compressed containers
+    included) yield zero rows (total, the crawl default) unless
+    ``strict=True`` raises.
 
     Scale: embarrassingly parallel mapInPandas, no shuffle; memory per
-    task is one frame (Y4M slices by offset; the PyAV path decodes in
-    two passes — count, then pick — never holding the clip)."""
-    if decoder not in ("fake", "real"):
-        raise ValueError(f"sample_frames: unknown decoder {decoder!r} (fake|real)")
+    task is one frame (Y4M slices by offset)."""
     if n_frames < 1:
         raise ValueError(f"sample_frames: n_frames must be >= 1, got {n_frames}")
-    if strict and decoder != "real":
-        raise ValueError(
-            "sample_frames: strict=True requires decoder='real' (the fake "
-            "chunking path never decodes, so it cannot detect undecodable "
-            "payloads)"
-        )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        av = _optional_av() if decoder == "real" else None
         for pdf in it:
             out_ids, out_idx, out_payload = [], [], []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 payload = bytes(payload) if payload else b""
-                if decoder == "real":
-                    parsed = _parse_y4m(payload)
-                    if parsed is not None:
-                        w, h, luma, offs = parsed
-                        for idx in _sample_indices(len(offs), n_frames):
-                            arr = np.frombuffer(
-                                payload, np.uint8, count=luma, offset=offs[idx]
-                            ).reshape(h, w)
-                            out_ids.append(mid)
-                            out_idx.append(idx)
-                            out_payload.append(encode_gray_png(arr))
-                        continue
-                    if av is not None and payload:
-                        try:
-                            frames = _real_av_frames(av, payload, n_frames)
-                        except Exception:
-                            frames = []
-                        if frames:
-                            for idx, fp in frames:
-                                out_ids.append(mid)
-                                out_idx.append(idx)
-                                out_payload.append(fp)
-                            continue
+                parsed = _parse_y4m(payload)
+                if parsed is None:
                     if strict and payload:
                         raise ValueError(
                             f"sample_frames(strict=True): undecodable "
                             f"{len(payload)}-byte payload (magic "
-                            f"{payload[:10]!r}); built-in decode covers Y4M, "
-                            "PyAV "
-                            + ("is importable" if av else "is NOT importable")
-                            + " on this executor"
+                            f"{payload[:10]!r}); built-in decode covers Y4M"
                         )
                     continue  # total: zero rows for undecodable video
-                step = max(len(payload) // n_frames, 1)
-                for i in range(n_frames):
+                w, h, luma, offs = parsed
+                for idx in _sample_indices(len(offs), n_frames):
+                    arr = np.frombuffer(
+                        payload, np.uint8, count=luma, offset=offs[idx]
+                    ).reshape(h, w)
                     out_ids.append(mid)
-                    out_idx.append(i)
-                    out_payload.append(payload[i * step : (i + 1) * step])
+                    out_idx.append(idx)
+                    out_payload.append(encode_gray_png(arr))
             yield pd.DataFrame(
                 {
                     "media_id": pd.Series(out_ids, dtype="int64"),
@@ -2704,22 +2470,6 @@ def synthesize_media_y4m(
     return df.select(id_col, text_col).mapInPandas(batches, out_schema)
 
 
-def synthesize_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Build a deterministic media table from any text table (test/demo
-    helper): payload = utf-8 bytes, mime by id modulo.  Lets the media
-    pipeline run against the driver's documents table."""
-    return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
-        F.when(F.col(id_col) % 2 == 0, F.lit("image/png"))
-        .otherwise(F.lit("audio/wav"))
-        .alias("mime"),
-        F.lit(64).cast("int").alias("width"),
-        F.lit(64).cast("int").alias("height"),
-        (F.length(F.col(text_col)) * 10).cast("long").alias("duration_ms"),
-    )
-
-
 def synthesize_media_bmp(
     df: DataFrame,
     text_col: str = "text",
@@ -2731,7 +2481,7 @@ def synthesize_media_bmp(
     utf-8 bytes become the grayscale raster of a 24-bit BMP (or an
     8-bit grayscale PNG), ``width`` pixels per row, final row
     zero-padded.  decode(encode(text)) is an exact round-trip through
-    the built-in codecs, so real-decoder pipelines get pixel-true
+    the built-in codecs, so feature pipelines get pixel-true
     payloads with byte-derivable oracles (the pixel stream IS
     text-bytes + pad zeros; the PNG encoder's stored-block zlib keeps
     even its byte LENGTH closed-form).  ``codec='alternate'`` encodes
@@ -2898,9 +2648,8 @@ def image_features_jpeg_oracle_sql(
     table: str = "documents",
     width_blocks: int = 4,
 ) -> str:
-    """DuckDB mirror of ``synthesize_media_jpeg → extract_image_features
-    (decoder='real')`` as a parenthesized subquery yielding
-    (media_id, mime, n_pixels, feature REAL[]).
+    """DuckDB mirror of ``synthesize_media_jpeg → extract_image_features`` as a
+    parenthesized subquery yielding (media_id, mime, n_pixels, feature REAL[]).
 
     Valid for ASCII corpora (the driver's test tables are): the decoded
     raster is each text byte repeated as a flat 8×8 block, so bin b
@@ -2956,9 +2705,8 @@ def image_features_bmp_oracle_sql(
     width: int = 32,
     codec: Literal["bmp", "png", "alternate"] = "bmp",
 ) -> str:
-    """DuckDB mirror of ``synthesize_media_bmp → extract_image_features
-    (decoder='real')`` as a parenthesized subquery yielding
-    (media_id, mime, n_bytes, n_pixels, feature REAL[]).
+    """DuckDB mirror of ``synthesize_media_bmp → extract_image_features`` as a
+    parenthesized subquery yielding (media_id, mime, n_bytes, n_pixels, feature REAL[]).
 
     Valid for ASCII corpora (the driver's test tables are — verified):
     the BMP raster is exactly text-bytes plus ``rows·width − len`` pad

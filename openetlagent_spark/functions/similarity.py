@@ -1055,7 +1055,7 @@ def center_embeddings(
     """Append ``out_col`` = vector minus the corpus mean — the standard
     pre-conditioning before sign-LSH: hyperplanes through the origin
     split a CENTERED cloud into balanced buckets, where a tight
-    off-origin cluster (e.g. byte-histogram features, which are all
+    off-origin cluster (e.g. intensity-histogram features, which are all
     nearly parallel) collapses every sign pattern to one bucket.
 
     Determinism: the mean uses the floor-quantized integer-sum trick

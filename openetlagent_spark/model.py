@@ -571,10 +571,10 @@ class SimilarityOperation(Operation):
     id_column: Reads[str] = "vec_id"
     vector_column: Reads[str] = "embedding"
     k: Positive[int] = 10
-    n_planes: int = 4
-    n_tables: int = 8
-    n_centroids: int = 16
-    nprobe: int = 4
+    n_planes: Positive[int] = 4
+    n_tables: Positive[int] = 8
+    n_centroids: Positive[int] = 16
+    nprobe: Positive[int] = 4
     seed: int = 42
     operation_type: str = "similarity"
 
@@ -1823,29 +1823,18 @@ class MediaFeaturesOperation(Operation):
     ``binary``-format input (sources/io.py binaryFile scan) to run a
     directory-of-media-files corpus through the YAML surface.
 
-    ``decoder='real'`` runs the built-in BMP/PNM/PNG/baseline-JPEG
-    codecs (audio: RIFF/WAVE PCM), Pillow/PyAV only as gated
-    fallbacks; ``'fake'`` is the deterministic byte-histogram stub for
-    plumbing tests.  ``strict=True`` (real only) fails loudly on an
-    undecodable NON-EMPTY payload instead of emitting the zero vector
-    — the trusted-format-corpus setting."""
+    Decode runs the built-in BMP/PNM/PNG/JPEG codecs (audio: RIFF/WAVE
+    PCM); a payload in any other format is undecodable and yields the
+    zero vector.  ``strict=True`` fails loudly on an undecodable
+    NON-EMPTY payload instead — the trusted-format-corpus setting."""
 
     modality: Literal["image", "audio"] = "image"
     payload_column: Required[Reads[str]] = "payload"
     id_column: Required[Reads[str]] = "media_id"
     mime_column: Required[Reads[str]] = "mime"
     dim: AtLeastOne[int] = 16
-    decoder: Literal["fake", "real"] = "fake"
     strict: bool = False
     operation_type: str = "media_features"
-
-    def check(self) -> None:
-        if self.strict and self.decoder != "real":
-            raise SpecError(
-                "media_features strict=true requires decoder='real' (the fake "
-                "byte-histogram path never decodes, so it cannot detect "
-                "undecodable payloads)"
-            )
 
 
 @dataclass

@@ -1062,7 +1062,6 @@ def apply_media_features(df: DataFrame, op) -> DataFrame:
         id_col=op.id_column,
         mime_col=op.mime_column,
         dim=op.dim,
-        decoder=op.decoder,
         strict=op.strict,
     )
 

@@ -1597,16 +1597,15 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing end-to-end: documents → synthetic media table
-    (payload = utf-8 bytes, typed metadata) → extract_image_features
-    (Arrow-batched mapInPandas with the stub byte-histogram decode).
-    The histogram itself isn't SQL-expressible, but its deterministic
-    invariants are: n_bytes is the utf-8 byte length, and the 16 bins
-    sum to exactly 1 for any non-empty payload — so the mapInPandas
-    stage still gets a full hash-checked oracle."""
-    from ..functions.multimodal import extract_image_features, synthesize_media
+    """Multimodal plumbing end-to-end: documents → PNG media table
+    (synthesize_media_bmp(codec='png'): each doc's utf-8 bytes become an
+    8-bit grayscale raster) → extract_image_features (Arrow-batched
+    mapInPandas, built-in PNG decode).  Per row: the typed metadata,
+    n_bytes (the stored-block PNG's closed-form size) and the sum of
+    the 16 bins (1 for any decoded payload, 0 for empty text)."""
+    from ..functions.multimodal import extract_image_features, synthesize_media_bmp
 
-    media = synthesize_media(_ts(spark, sf_dir, "documents"))
+    media = synthesize_media_bmp(_ts(spark, sf_dir, "documents"), codec="png")
     feats = extract_image_features(media, dim=16)
     return feats.select(
         "media_id",
@@ -1623,22 +1622,22 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIXED-FORMAT media (synthesize_media_bmp(codec='alternate') — each
     doc's utf-8 bytes become a real raster, even ids as 24-bit BMP,
     odd ids as zlib-compressed 8-bit PNG) →
-    extract_image_features(decoder='real'), which decodes the pixels
+    extract_image_features, which decodes the pixels
     back through the built-in pure-Python BMP/PNG codecs (stdlib zlib
-    inflate for PNG — no Pillow anywhere) and histograms the decoded
+    inflate for PNG) and histograms the decoded
     intensities.  The output
     re-integerizes the per-bin mass (round(f_b · n_pixels) — exact for
     float32 at these magnitudes) so the driver hash checks the actual
     pixel counts: n_bytes is the ENCODED size (54-byte header +
     4-byte-aligned rows), n_pixels the DECODED raster size, and hist
     the per-bin pixel counts including the final row's zero padding —
-    none of which the payload-free fake path could produce."""
+    none of which a histogram of the compressed bytes could produce."""
     from ..functions.multimodal import extract_image_features, synthesize_media_bmp
 
     media = synthesize_media_bmp(
         _ts(spark, sf_dir, "documents"), codec="alternate"
     )
-    feats = extract_image_features(media, dim=16, decoder="real")
+    feats = extract_image_features(media, dim=16)
     return feats.select(
         "media_id",
         "mime",
@@ -1658,7 +1657,7 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents → flat-block grayscale JFIF (each doc's utf-8 bytes
     become constant 8×8 pixel blocks — DC-only coefficients, all-ones
     quant table, Annex-K huffman tables) → extract_image_features
-    (decoder='real') runs the GENERAL baseline decoder (huffman entropy
+    runs the GENERAL baseline decoder (huffman entropy
     decode, dequantize, inverse zigzag, float64 iDCT, level shift) and
     histograms the decoded intensities.  Flat blocks make the lossy
     format's round-trip exact, so the hist is byte-derivable: every
@@ -1670,7 +1669,7 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import extract_image_features, synthesize_media_jpeg
 
     media = synthesize_media_jpeg(_ts(spark, sf_dir, "documents"))
-    feats = extract_image_features(media, dim=16, decoder="real")
+    feats = extract_image_features(media, dim=16)
     return feats.select(
         "media_id",
         "mime",
@@ -1702,7 +1701,7 @@ def q_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = synthesize_media_jpeg(
         _ts(spark, sf_dir, "documents"), codec="progressive"
     )
-    feats = extract_image_features(media, dim=16, decoder="real")
+    feats = extract_image_features(media, dim=16)
     return feats.select(
         "media_id",
         "mime",
@@ -1720,14 +1719,13 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/multimodal.py sample_frames + synthesize_media_y4m):
     documents → Y4M clips (each doc's utf-8 bytes become consecutive
     4×16 luma frames of a real YUV4MPEG2 container — the format
-    ``ffmpeg -f yuv4mpegpipe`` emits) → sample_frames(decoder='real')
+    ``ffmpeg -f yuv4mpegpipe`` emits) → sample_frames
     parses the container built-in, picks k = min(4, t) evenly-spaced
     source frames (⌊j·t/k⌋ — deterministic integer math), and emits
     each as a standalone grayscale PNG → extract_image_features
-    (decoder='real') decodes those PNGs back and histograms the
+    decodes those PNGs back and histograms the
     intensities.  Video → frames → image features: the full
-    multimodal composition over two mapInPandas stages, zero shuffles,
-    nothing fake anywhere.  The frame_uid pack/unpack (media_id·16 +
+    multimodal composition over two mapInPandas stages, zero shuffles.  The frame_uid pack/unpack (media_id·16 +
     source index) threads the frame identity through the fixed
     image-feature schema."""
     from ..functions.multimodal import (
@@ -1738,7 +1736,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _ts(spark, sf_dir, "documents")
     media = synthesize_media_y4m(docs, width=16, height=4)
-    frames = sample_frames(media, n_frames=4, decoder="real")
+    frames = sample_frames(media, n_frames=4)
     fr = frames.select(
         # pack multiplier 16 (frame_index < n_frames=4), NOT 2^32: the
         # sf10 key-shifted ids reach ~1e10 and media_id*2^32 overflows
@@ -1749,7 +1747,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("frame_payload").alias("payload"),
         F.lit("image/png").alias("mime"),
     )
-    feats = extract_image_features(fr, id_col="frame_uid", dim=16, decoder="real")
+    feats = extract_image_features(fr, id_col="frame_uid", dim=16)
     return feats.select(
         F.expr("media_id DIV 16").alias("media_id"),
         F.expr("CAST(media_id % 16 AS INT)").alias("frame_index"),
@@ -1779,7 +1777,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import extract_audio_features, synthesize_media_wav
 
     media = synthesize_media_wav(_ts(spark, sf_dir, "documents"))
-    feats = extract_audio_features(media, dim=16, decoder="real")
+    feats = extract_audio_features(media, dim=16)
     return feats.select(
         "media_id",
         "mime",
@@ -3107,7 +3105,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic_dedup: BMP media payloads (synthesize_media_bmp: each
     doc's bytes as a real 24-bit raster) → Arrow-batched REAL pixel
     decode through the built-in pure-Python BMP codec
-    (extract_image_features, decoder='real': grayscale intensity
+    (extract_image_features: grayscale intensity
     histograms over decoded pixels) → corpus-mean centering
     (center_embeddings — intensity-histogram clouds are tightly
     clustered, so sign-LSH NEEDS the centering to spread buckets) →
@@ -3142,7 +3140,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = docs.count()
     n_planes = auto_n_planes(n)
     media = synthesize_media_bmp(docs)
-    feats = extract_image_features(media, dim=16, decoder="real").transform(
+    feats = extract_image_features(media, dim=16).transform(
         materialize
     )  # one mapInPandas pass feeds the mean agg, pair mining, and keep-best
     centered = center_embeddings(feats, "feature", "centered", dim=16)
@@ -4075,15 +4073,6 @@ HARNESS_ORACLES: dict[str, str] = {
         "FROM events WHERE user_id <= 7 AND value >= 100.0 AND value <= 150.0 "
         "GROUP BY user_id"
     ),
-    "multimodal_features": (
-        # Deterministic invariants of the stub byte-histogram decode:
-        # n_bytes = utf-8 length, bins sum to 1 for non-empty payloads.
-        "SELECT CAST(doc_id AS BIGINT) AS media_id, "
-        "CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END AS mime, "
-        "CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n_bytes, "
-        "CASE WHEN COALESCE(octet_length(encode(text)), 0) > 0 THEN 1.0 ELSE 0.0 END AS f_sum "
-        "FROM documents"
-    ),
     "json_extract": (
         "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS prop_k FROM events"
     ),
@@ -4760,6 +4749,13 @@ _IMG_DECODE_HIST = " || ',' || ".join(
         j=j + 1
     )
     for j in range(16)
+)
+# multimodal_features: the PNG corpus's metadata, closed-form size and
+# bin-mass sum, from the same generated per-row features
+HARNESS_ORACLES["multimodal_features"] = (
+    "SELECT media_id, mime, n_bytes, "
+    "ROUND(list_sum(list_transform(feature, x -> CAST(x AS DOUBLE))), 4) AS f_sum "
+    f"FROM {_image_features_bmp_oracle_sql('TRUE', dim=16, codec='png')} sq"
 )
 HARNESS_ORACLES["image_decode"] = (
     f"SELECT media_id, mime, n_bytes, n_pixels, {_IMG_DECODE_HIST} AS hist "

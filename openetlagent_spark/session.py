@@ -363,7 +363,7 @@ def _quiet_bounded_window_warning(spark: SparkSession) -> None:
         pass
 
 
-def materialize(df, eager: bool = True, require_truncation: bool = False):
+def materialize(df, eager: bool = True):
     """The engine's shared materialization boundary — every operator
     that re-reads an intermediate (dedup banding bases, CC labels,
     prefix-scan inputs, …) goes through here instead of calling
@@ -383,11 +383,12 @@ def materialize(df, eager: bool = True, require_truncation: bool = False):
       dir (``sparkContext.setCheckpointDir`` — HDFS/S3 on a cluster).
       Survives executor loss; costs a write+read of the intermediate.
       The production fallback the localCheckpoint caveat points at.
-    - ``persist``: storage-level cache — keeps lineage, so executor
-      loss recomputes; but lineage is NOT truncated, so iterative
-      algorithms whose plans double per round (connected components)
-      refuse it (``require_truncation=True`` raises) — use
-      ``checkpoint`` there.
+
+    Both truncate lineage: callers rely on it, both for iterative
+    plans that would double per round (connected components) and for
+    boundaries whose consumers must never see a re-run (a sampled range
+    split whose driver-collected offsets are joined back, a store that
+    grows right after the boundary).
     """
     spark = df.sparkSession
     mode = spark.conf.get("spark.openetlagent.materialize", "localCheckpoint")
@@ -395,20 +396,9 @@ def materialize(df, eager: bool = True, require_truncation: bool = False):
         return df.localCheckpoint(eager=eager)
     if mode == "checkpoint":
         return df.checkpoint(eager=eager)
-    if mode == "persist":
-        if require_truncation:
-            raise ValueError(
-                "spark.openetlagent.materialize=persist cannot serve an "
-                "iterative lineage-truncation boundary (plan size doubles "
-                "per round); set localCheckpoint or checkpoint"
-            )
-        out = df.persist()
-        if eager:
-            out.count()
-        return out
     raise ValueError(
         f"spark.openetlagent.materialize={mode!r}: expected "
-        "localCheckpoint | checkpoint | persist"
+        "localCheckpoint | checkpoint"
     )
 
 

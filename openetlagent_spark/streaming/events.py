@@ -823,7 +823,6 @@ def media_feature_stream(
     *,
     kind: str = "image",
     dim: int = 16,
-    decoder: str = "real",
     drop_undecodable: bool = True,
 ) -> DataFrame:
     """Streaming MULTIMODAL featurizer — the continuous form of
@@ -842,10 +841,10 @@ def media_feature_stream(
     from ..functions.multimodal import extract_audio_features, extract_image_features
 
     if kind == "image":
-        feats = extract_image_features(media, dim=dim, decoder=decoder)
+        feats = extract_image_features(media, dim=dim)
         gate = F.col("n_pixels") > 0
     elif kind == "audio":
-        feats = extract_audio_features(media, dim=dim, decoder=decoder)
+        feats = extract_audio_features(media, dim=dim)
         gate = F.col("n_samples") > 0
     else:
         raise ValueError(f"media_feature_stream: kind must be image/audio, got {kind!r}")
@@ -933,10 +932,10 @@ def admit_stream_with_store(
             # one deterministic materialization feeds both the sink
             # write and the store append (a second action would re-run
             # the gate against the GROWN store)
-            # require_truncation: the store grows right after this
-            # boundary, so a lineage re-run would re-gate the batch
-            # against its OWN fingerprints and silently drop rows
-            admitted = admitted.transform(materialize, True, True)
+            # the store grows right after this boundary, so a lineage
+            # re-run would re-gate the batch against its OWN
+            # fingerprints and silently drop rows
+            admitted = admitted.transform(materialize)
             admitted.write.mode("overwrite").parquet(landing)
         if strategy == "exact":
             build_fingerprint_store(admitted, store_path, text_col, mode="append")

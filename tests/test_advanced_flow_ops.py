@@ -762,6 +762,9 @@ def test_unknown_spec_fields_fail_loudly():
     # gopher_rules reads no id column, so it declares none
     with pytest.raises(SpecError, match=r"Unknown field\(s\) \['id_column'\]"):
         parse_operation({"operation_type": "gopher_rules", "id_column": "doc_id"})
+    # media decode has one path: the former fake/real switch is unknown
+    with pytest.raises(SpecError, match=r"Unknown field\(s\) \['decoder'\]"):
+        parse_operation({"operation_type": "media_features", "decoder": "real"})
     # the full Gopher threshold battery is now spec-reachable
     op = parse_operation({
         "operation_type": "gopher_rules", "min_mean_word_len": 4.4,
@@ -1280,9 +1283,9 @@ def test_experiment_stats_flow_ops(spark):
 
 
 def test_media_features_flow_op(spark):
-    """media_features reaches YAML flows: real decode of built-in
-    payloads (image BMP + audio WAV), the id/mime plumbing, and the
-    spec guards."""
+    """media_features reaches YAML flows: decode of built-in payloads
+    (image BMP + audio WAV) with no decoder field, the id/mime
+    plumbing, and the spec guards."""
     import numpy as np
     from pyspark.sql import Row
 
@@ -1299,8 +1302,7 @@ def test_media_features_flow_op(spark):
         ]
     )
     op = parse_operation({
-        "operation_type": "media_features", "modality": "image",
-        "decoder": "real", "dim": 16,
+        "operation_type": "media_features", "modality": "image", "dim": 16,
     })
     rows = {r.media_id: r for r in apply_operations(media, [op], spark).collect()}
     assert rows[1].n_pixels == 8
@@ -1313,15 +1315,14 @@ def test_media_features_flow_op(spark):
     )
     aop = parse_operation({
         "operation_type": "media_features", "modality": "audio",
-        "decoder": "real",
     })
     [arow] = apply_operations(audio, [aop], spark).collect()
     assert arow.n_samples == 100 and arow.feature[200 // 16] == 1.0
 
     with pytest.raises(SpecError, match="modality"):
         parse_operation({"operation_type": "media_features", "modality": "video"})
-    with pytest.raises(SpecError, match="strict"):
-        parse_operation({"operation_type": "media_features", "strict": True})
+    # strict needs no other field: there is one decode path
+    assert parse_operation({"operation_type": "media_features", "strict": True}).strict
 
 
 def test_ann_store_flow_ops(spark, tmp_path):

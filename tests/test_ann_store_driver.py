@@ -178,7 +178,7 @@ def test_array_literal_refuses_non_finite():
 # --- probed cids through an Observation --------------------------------------
 
 
-@pytest.mark.parametrize("mode", ["localCheckpoint", "checkpoint", "persist"])
+@pytest.mark.parametrize("mode", ["localCheckpoint", "checkpoint"])
 def test_observed_probed_set_matches_distinct(spark, tmp_path, mode):
     key = "spark.openetlagent.materialize"
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
@@ -197,7 +197,7 @@ def test_observed_probed_set_matches_distinct(spark, tmp_path, mode):
     assert len(want) == 28
 
 
-@pytest.mark.parametrize("mode", ["checkpoint", "persist"])
+@pytest.mark.parametrize("mode", ["checkpoint"])
 def test_ann_from_store_same_in_every_materialize_mode(spark, tmp_path, mode):
     emb = spark.read.parquet(f"{SF_DIRS[0]}/embeddings.parquet")
     store = str(tmp_path / "store")

@@ -82,8 +82,8 @@ def test_free_local_checkpoints_spares_user_persists(spark):
 
 def test_materialize_knob_modes(spark, tmp_path):
     """materialize() honors spark.openetlagent.materialize: default
-    localCheckpoint; persist keeps lineage (and refuses truncation
-    boundaries); checkpoint writes to the reliable dir; unknown -> error."""
+    localCheckpoint; checkpoint writes to the reliable dir; anything
+    else (the former ``persist`` included) -> error naming both."""
     import pytest
 
     from openetlagent_spark.session import materialize
@@ -99,21 +99,17 @@ def test_materialize_knob_modes(spark, tmp_path):
         # what the release helper frees
         assert free_local_checkpoints(spark) >= 1
 
-        spark.conf.set(key, "persist")
-        out = materialize(spark.range(50))
-        assert out.count() == 50
-        with pytest.raises(ValueError, match="truncation"):
-            materialize(spark.range(5), require_truncation=True)
-        out.unpersist()
-
         spark.conf.set(key, "checkpoint")
         spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        out = materialize(spark.range(25), require_truncation=True)
+        out = materialize(spark.range(25))
         assert out.count() == 25
 
-        spark.conf.set(key, "bogus")
-        with pytest.raises(ValueError, match="bogus"):
-            materialize(spark.range(5))
+        for mode in ("bogus", "persist"):
+            spark.conf.set(key, mode)
+            with pytest.raises(
+                ValueError, match=rf"'{mode}': expected localCheckpoint \| checkpoint$"
+            ):
+                materialize(spark.range(5))
     finally:
         spark.conf.unset(key)
 

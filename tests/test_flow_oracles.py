@@ -1,7 +1,8 @@
 """Flow ops run the code the generated DuckDB oracles check.
 
 Each near-duplicate family (``dedup`` minhash / ngram / simhash /
-embedding) and ``similarity`` ``method: lsh`` and ``method: ivf`` runs
+embedding), ``similarity`` ``method: lsh`` and ``method: ivf``, and
+``media_features`` over a mixed BMP/PNG corpus run
 through ``apply_operations`` from a parsed spec and is compared, row for row,
 with its generated oracle over the same data and the same parameters,
 using scripts/check_oracle.py's exact (type-sensitive, full-precision)
@@ -35,6 +36,10 @@ from openetlagent_spark.functions.dedup import (
 from openetlagent_spark.functions.similarity import (
     ivf_topk_oracle_sql,
     lsh_topk_oracle_sql,
+)
+from openetlagent_spark.functions.multimodal import (
+    image_features_bmp_oracle_sql,
+    synthesize_media_bmp,
 )
 from openetlagent_spark.model import parse_operation
 from openetlagent_spark.runner import apply_operations
@@ -218,6 +223,19 @@ def test_vector_flows_single_row_match_oracle(spark, emb):
     df = spark.createDataFrame(one)
     _assert_matches(_dedup(df, spark, **EMB_SPEC), c, EMB_SQL)
     _assert_matches(_lsh(df, df, spark), c, LSH_SQL)
+
+
+def test_media_features_flow_default_matches_oracle(spark, docs):
+    """A media_features image flow parsed with no decoder field decodes
+    the sf0.001 documents as alternating BMP/PNG payloads to exactly the
+    generated oracle's rows: metadata, encoded size, pixel count and
+    every histogram bin."""
+    c = duckdb.connect()
+    c.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF}/documents.parquet')")
+    op = parse_operation({"operation_type": "media_features", "modality": "image"})
+    out = apply_operations(synthesize_media_bmp(docs, codec="alternate"), [op], spark)
+    sql = f"SELECT * FROM {image_features_bmp_oracle_sql(dim=16, codec='alternate')} sq"
+    assert _assert_matches(out, c, sql) > 0
 
 
 # --- NULL text never pairs ---------------------------------------------------

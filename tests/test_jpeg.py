@@ -320,7 +320,7 @@ def test_synthesize_media_jpeg_pipeline(spark):
         ]
     )
     media = synthesize_media_jpeg(docs)
-    feats = extract_image_features(media, dim=16, decoder="real").collect()
+    feats = extract_image_features(media, dim=16).collect()
     by_id = {r["media_id"]: r for r in feats}
     r1 = by_id[1]
     assert r1["n_pixels"] == 2 * 4 * 64  # 2 rows x 4 blocks x 64 px

@@ -1,5 +1,6 @@
-"""Tests for multimodal column plumbing (stubbed decode, real Spark
-pipeline) and the structured-streaming surface."""
+"""Tests for multimodal column plumbing (built-in codecs over real
+BMP/PNG/Y4M/WAV payloads, real Spark pipeline) and the
+structured-streaming surface."""
 
 from __future__ import annotations
 
@@ -9,9 +10,8 @@ from pyspark.sql import functions as F
 
 from openetlagent_spark.functions.multimodal import (
     extract_image_features,
-    resize_images,
     sample_frames,
-    synthesize_media,
+    synthesize_media_bmp,
 )
 from openetlagent_spark.streaming import windowed_event_counts
 
@@ -21,7 +21,8 @@ def media(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=1, text="hello media world"), Row(doc_id=2, text="x" * 100)]
     )
-    return synthesize_media(docs)
+    # even ids encode as BMP, odd ids as PNG
+    return synthesize_media_bmp(docs, width=32, codec="alternate")
 
 
 def test_media_schema(media):
@@ -33,9 +34,12 @@ def test_extract_features_deterministic(media):
     a = {r.media_id: r.feature for r in extract_image_features(media, dim=8).collect()}
     b = {r.media_id: r.feature for r in extract_image_features(media, dim=8).collect()}
     assert a == b
-    assert all(len(v) == 8 for v in a.values())
+    assert all(len(v) == 8 and abs(sum(v) - 1.0) < 1e-6 for v in a.values())
+    # n_bytes is the encoded payload size: id 1 is a one-row PNG
+    # (stored-block closed form 63 + 5 + 33), id 2 a four-row BMP
+    # (54-byte header + 4 rows of stride 96)
     n = {r.media_id: r.n_bytes for r in extract_image_features(media).collect()}
-    assert n[1] == len("hello media world") and n[2] == 100
+    assert n[1] == 63 + 5 + 33 and n[2] == 54 + 4 * 96
 
 
 def _gray_bmp(w=8, h=8, value=128):
@@ -68,27 +72,16 @@ def _handbuilt_png(gray: int = 128) -> bytes:
 
 
 def test_real_decode_corrupt_bytes_yield_zero_vector():
-    """The real decoder's totality contract — corrupt/truncated/empty
-    payloads produce the zero vector, never a task failure — must hold
-    even in this codec-less container: drive _real_decode_features with
-    a stand-in Image module whose open() raises (exactly what Pillow
-    does on bad bytes), and with empty/None payloads that short-circuit
-    before any decode."""
+    """The decoder's totality contract — corrupt/truncated/empty
+    payloads produce (0 pixels, zero vector), never a task failure;
+    empty/None payloads short-circuit before any decode."""
     import numpy as np
 
-    from openetlagent_spark.functions.multimodal import _real_decode_features
+    from openetlagent_spark.functions.multimodal import _decode_features
 
-    class _RaisingImage:
-        @staticmethod
-        def open(_buf):
-            raise OSError("cannot identify image file")
-
-    for payload in (b"\x00\x01not-a-png", _handbuilt_png()[:12]):
-        out = _real_decode_features(_RaisingImage, payload, 16)
-        assert out.dtype == np.float32 and out.shape == (16,)
-        assert not out.any()
-    for payload in (b"", None):
-        out = _real_decode_features(_RaisingImage, payload, 16)
+    for payload in (b"\x00\x01not-a-png", _handbuilt_png()[:12], b"", None):
+        n, out = _decode_features(payload, 16)
+        assert n == 0 and out.dtype == np.float32 and out.shape == (16,)
         assert not out.any()
 
 
@@ -158,7 +151,7 @@ def test_real_decoder_features_builtin(spark):
         [Row(media_id=1, payload=_gray_bmp(value=128), mime="image/bmp",
              width=8, height=8, duration_ms=0)]
     )
-    rows = extract_image_features(media, decoder="real", dim=16).collect()
+    rows = extract_image_features(media, dim=16).collect()
     feat = rows[0].feature
     # uniform gray 128 → all mass in bin 128//16 = 8
     assert abs(feat[8] - 1.0) < 1e-6 and abs(sum(feat) - 1.0) < 1e-6
@@ -166,9 +159,9 @@ def test_real_decoder_features_builtin(spark):
 
 
 def test_real_decode_undecodable_yields_zero_vector_spark(spark):
-    """The totality contract through the full Spark stage: PNG bytes
-    with no Pillow present (or hopeless garbage with it) must yield the
-    zero vector and n_pixels=0, never a task failure."""
+    """The totality contract through the full Spark stage: bytes no
+    built-in codec decodes, and empty payloads, yield the zero vector
+    and n_pixels=0, never a task failure."""
     media = spark.createDataFrame(
         [
             Row(media_id=1, payload=b"\x00\x01not-an-image", mime="application/octet-stream",
@@ -176,68 +169,8 @@ def test_real_decode_undecodable_yields_zero_vector_spark(spark):
             Row(media_id=2, payload=b"", mime="image/png", width=0, height=0, duration_ms=0),
         ]
     )
-    rows = {r.media_id: r for r in extract_image_features(media, decoder="real", dim=16).collect()}
+    rows = {r.media_id: r for r in extract_image_features(media, dim=16).collect()}
     assert all(not any(r.feature) and r.n_pixels == 0 for r in rows.values())
-
-
-def test_pillow_fallback_dispatch():
-    """Non-builtin payloads route to the Image module when one is
-    supplied — proven with a stand-in so the dispatch is covered even
-    without Pillow installed."""
-    import numpy as np
-
-    from openetlagent_spark.functions.multimodal import _decode_gray
-
-    class _FakeImg:
-        def convert(self, mode):
-            assert mode == "L"
-            return np.full((2, 2), 9, dtype=np.uint8)
-
-    class _FakeImage:
-        @staticmethod
-        def open(buf):
-            assert buf.read(4) == b"\x89PNG"
-            return _FakeImg()
-
-    out = _decode_gray(b"\x89PNGrest", _FakeImage)
-    assert np.array_equal(out, np.full((2, 2), 9, dtype=np.uint8))
-    # builtin formats never reach the fallback
-    bmp = _gray_bmp(w=2, h=2, value=5)
-
-    class _Explodes:
-        @staticmethod
-        def open(_buf):
-            raise AssertionError("builtin format must not hit Pillow")
-
-    assert _decode_gray(bmp, _Explodes)[0, 0] == 5
-
-
-def test_real_resize_builtin(spark):
-    from openetlagent_spark.functions.multimodal import _decode_bmp
-
-    media = spark.createDataFrame(
-        [Row(media_id=1, payload=_gray_bmp(w=8, h=8, value=77), mime="image/bmp",
-             width=8, height=8, duration_ms=0)]
-    )
-    out = resize_images(media, target_width=4, target_height=4, decoder="real").collect()
-    arr = _decode_bmp(out[0].payload)
-    assert arr.shape == (4, 4) and (arr == 77).all()
-    assert out[0].width == 4 and out[0].height == 4
-
-
-def test_real_resize_nearest_neighbour_indexing(spark):
-    """Floor-index NN: downsizing 4→2 keeps rows/cols 0 and 2."""
-    import numpy as np
-
-    from openetlagent_spark.functions.multimodal import _decode_bmp, encode_gray_bmp
-
-    src = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    media = spark.createDataFrame(
-        [Row(media_id=1, payload=encode_gray_bmp(src), mime="image/bmp",
-             width=4, height=4, duration_ms=0)]
-    )
-    out = resize_images(media, target_width=2, target_height=2, decoder="real").collect()
-    assert np.array_equal(_decode_bmp(out[0].payload), src[[0, 2]][:, [0, 2]])
 
 
 def test_synthesize_media_bmp_roundtrip(spark):
@@ -263,7 +196,7 @@ def test_synthesize_media_bmp_roundtrip(spark):
     feats = {
         r.media_id: r
         for r in extract_image_features(
-            synthesize_media_bmp(docs, width=32), decoder="real", dim=16
+            synthesize_media_bmp(docs, width=32), dim=16
         ).collect()
     }
     assert feats[1].n_pixels == 32 and feats[3].n_pixels == 64
@@ -272,16 +205,17 @@ def test_synthesize_media_bmp_roundtrip(spark):
     assert feats[1].n_bytes == 54 + 96 and feats[3].n_bytes == 54 + 192
 
 
-def test_resize_rewrites_dims_and_payload(media):
-    out = resize_images(media, target_width=4, target_height=4)
-    rows = {r.media_id: r for r in out.collect()}
-    assert all(len(r.payload) == 16 for r in rows.values())
-    assert all(r.width == 4 and r.height == 4 for r in rows.values())
+def test_sample_frames_expands_rows(spark):
+    """One output row per sampled frame: clips of 4 and 3 frames at
+    n_frames=3 give 3 rows each, a 1-frame clip gives 1."""
+    from openetlagent_spark.functions.multimodal import synthesize_media_y4m
 
-
-def test_sample_frames_expands_rows(media):
-    out = sample_frames(media, n_frames=3)
-    assert out.count() == 2 * 3
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="x" * 200), Row(doc_id=2, text="y" * 130),
+         Row(doc_id=3, text="z")]
+    )
+    out = sample_frames(synthesize_media_y4m(docs), n_frames=3)
+    assert out.count() == 3 + 3 + 1
     idx = sorted(r.frame_index for r in out.filter("media_id = 1").collect())
     assert idx == [0, 1, 2]
 
@@ -1002,33 +936,14 @@ def test_extract_features_strict_raises_on_undecodable(spark):
              width=0, height=0, duration_ms=0)]
     )
     with pytest.raises(Exception, match="undecodable"):
-        extract_image_features(media, decoder="real", strict=True).collect()
+        extract_image_features(media, strict=True).collect()
     # empty payloads stay quiet even under strict (no media != bad media)
     empty = spark.createDataFrame(
         [Row(media_id=1, payload=b"", mime="image/png",
              width=0, height=0, duration_ms=0)]
     )
-    rows = extract_image_features(empty, decoder="real", strict=True).collect()
+    rows = extract_image_features(empty, strict=True).collect()
     assert rows[0].n_pixels == 0
-
-
-def test_resize_real_rewrites_mime_truthfully(spark):
-    """Re-encoded payloads ARE BMPs: the mime metadata must follow the
-    payload format (image/bmp for resized rows, '' for undecodable)."""
-    media = spark.createDataFrame(
-        [Row(media_id=1, payload=_gray_bmp(w=4, h=4, value=9), mime="image/bmp",
-             width=4, height=4, duration_ms=0),
-         Row(media_id=2, payload=b"\x89PNG-undecodable-here", mime="image/png",
-             width=4, height=4, duration_ms=0)]
-    )
-    out = {r.media_id: r for r in
-           resize_images(media, target_width=2, target_height=2,
-                         decoder="real").collect()}
-    assert out[1].mime == "image/bmp" and out[1].payload[:2] == b"BM"
-    assert out[2].mime == "" and out[2].payload == b""
-    with pytest.raises(Exception, match="undecodable"):
-        resize_images(media, target_width=2, target_height=2,
-                      decoder="real", strict=True).collect()
 
 
 def test_pnm_rescale_clamps_out_of_range_samples():
@@ -1038,16 +953,6 @@ def test_pnm_rescale_clamps_out_of_range_samples():
 
     assert _decode_pnm(b"P5\n1 1\n15\n" + bytes([255]))[0, 0] == 255
     assert _decode_pnm(b"P5\n1 1\n15\n" + bytes([16]))[0, 0] == 255
-
-
-def test_strict_requires_real_decoder(spark):
-    media = spark.createDataFrame(
-        [Row(media_id=1, payload=b"x", mime="t", width=0, height=0, duration_ms=0)]
-    )
-    with pytest.raises(ValueError, match="requires decoder='real'"):
-        extract_image_features(media, strict=True)
-    with pytest.raises(ValueError, match="requires decoder='real'"):
-        resize_images(media, strict=True)
 
 
 # --- PNG codec (round 10) ----------------------------------------------------
@@ -1205,7 +1110,7 @@ def test_png_rejects_unsupported_and_corrupt():
     )
 
     sig = b"\x89PNG\r\n\x1a\n"
-    # 16-bit depth → None (Pillow fallback territory)
+    # 16-bit depth → None (undecodable)
     png16 = (
         sig
         + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 16, 0, 0, 0, 0))
@@ -1295,7 +1200,7 @@ def test_y4m_roundtrip_and_chroma_sizes():
 
 
 def test_sample_frames_real_y4m(spark):
-    """decoder='real' parses Y4M built-in and emits per-frame PNGs with
+    """sample_frames parses Y4M built-in and emits per-frame PNGs with
     SOURCE frame indices; undecodable payloads yield zero rows."""
     import numpy as np
 
@@ -1314,7 +1219,7 @@ def test_sample_frames_real_y4m(spark):
             Row(media_id=3, payload=bytearray(b"")),
         ]
     )
-    rows = sample_frames(media, n_frames=4, decoder="real").collect()
+    rows = sample_frames(media, n_frames=4).collect()
     by_id = {}
     for r in rows:
         by_id.setdefault(r.media_id, []).append(r)
@@ -1326,23 +1231,22 @@ def test_sample_frames_real_y4m(spark):
         assert (arr == clip[r.frame_index]).all()
 
 
-def test_sample_frames_strict_and_fake_unchanged(spark):
-    import pytest as _pytest
+def test_sample_frames_strict_vs_total(spark):
+    """Undecodable bytes: strict raises, the default emits zero rows
+    for them and still samples the decodable clip beside them."""
+    import numpy as np
 
-    from openetlagent_spark.functions.multimodal import sample_frames
+    from openetlagent_spark.functions.multimodal import encode_y4m_gray, sample_frames
 
-    media = spark.createDataFrame([Row(media_id=9, payload=bytearray(b"junkpayload"))])
-    with _pytest.raises(Exception, match="undecodable"):
-        sample_frames(media, n_frames=2, decoder="real", strict=True).collect()
-    with _pytest.raises(ValueError, match="strict=True requires"):
-        sample_frames(media, decoder="fake", strict=True)
-    # the fake chunking stand-in is unchanged: ordinal indices, byte slices
-    rows = sorted(
-        sample_frames(media, n_frames=2, decoder="fake").collect(),
-        key=lambda r: r.frame_index,
+    clip = encode_y4m_gray(np.zeros((2, 2, 2), dtype=np.uint8))
+    media = spark.createDataFrame(
+        [Row(media_id=9, payload=bytearray(b"junkpayload")),
+         Row(media_id=10, payload=bytearray(clip))]
     )
-    assert [r.frame_index for r in rows] == [0, 1]
-    assert bytes(rows[0].frame_payload) == b"junkp"
+    with pytest.raises(Exception, match="undecodable"):
+        sample_frames(media, n_frames=2, strict=True).collect()
+    rows = sample_frames(media, n_frames=2).collect()
+    assert sorted((r.media_id, r.frame_index) for r in rows) == [(10, 0), (10, 1)]
 
 
 def test_synthesize_media_y4m_roundtrip(spark):
@@ -1394,7 +1298,7 @@ def test_sample_frames_rejects_nonpositive_n_frames(spark):
         "CAST(1 AS BIGINT) AS media_id", "CAST(payload AS BINARY) AS payload"
     )
     with _pytest.raises(ValueError, match="n_frames"):
-        sample_frames(media, n_frames=0, decoder="real")
+        sample_frames(media, n_frames=0)
 
 
 # --- real audio: WAV / RIFF PCM (round 10) -------------------------------------
@@ -1451,7 +1355,7 @@ def test_extract_audio_features_real_and_strict(spark):
     )
     media = synthesize_media_wav(docs)
     rows = {r.media_id: r for r in
-            extract_audio_features(media, dim=16, decoder="real").collect()}
+            extract_audio_features(media, dim=16).collect()}
     t = "audio sample text!"
     assert rows[1].n_bytes == 44 + len(t)
     assert rows[1].n_samples == len(t)
@@ -1466,9 +1370,9 @@ def test_extract_audio_features_real_and_strict(spark):
     bad = spark.createDataFrame([Row(media_id=9, payload=bytearray(b"OggSxxxx"),
                                      mime="audio/ogg")])
     with pytest.raises(Exception, match="undecodable"):
-        extract_audio_features(bad, decoder="real", strict=True).collect()
+        extract_audio_features(bad, strict=True).collect()
     # total by default: zero row, not a task failure
-    r = extract_audio_features(bad, decoder="real").collect()[0]
+    r = extract_audio_features(bad).collect()[0]
     assert r.n_samples == 0 and r.n_bytes == 8
 
 

@@ -314,6 +314,11 @@ def test_contract_table_covers_every_declared_field():
     assert sum(not accepted for *_, accepted in CONTRACT) >= 250
     for op_type, field in [("limit", "n"), ("concatenation", "separator")]:
         assert (op_type, field) not in declared  # undeclared fields stay open
+    # an index geometry of 0 (nprobe: 0 would probe no list and return
+    # nothing) is refused at parse time, the field named
+    for field in ("n_planes", "n_tables", "n_centroids", "nprobe"):
+        assert ("similarity", field, 0, False) in CONTRACT
+        assert ("similarity", field, 1, True) in CONTRACT
 
 
 @pytest.mark.parametrize(
