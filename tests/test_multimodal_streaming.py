@@ -85,6 +85,94 @@ def test_real_decode_corrupt_bytes_yield_zero_vector():
         assert not out.any()
 
 
+def _gif_1x1() -> bytes:
+    """A well-formed 1×1 GIF89a (two-colour table, one LZW-coded pixel)."""
+    return (
+        b"GIF89a\x01\x00\x01\x00\x80\x00\x00\x00\x00\x00\xff\xff\xff"
+        b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02D\x01\x00;"
+    )
+
+
+def _tiff_1x1(gray: int = 128) -> bytes:
+    """A well-formed little-endian 1×1 8-bit grayscale uncompressed TIFF."""
+    import struct
+
+    tags = [  # (tag, type SHORT=3/LONG=4, count, value)
+        (256, 3, 1, 1), (257, 3, 1, 1), (258, 3, 1, 8), (259, 3, 1, 1),
+        (262, 3, 1, 1), (273, 4, 1, 0), (277, 3, 1, 1), (278, 3, 1, 1),
+        (279, 4, 1, 1),
+    ]
+    ifd_len = 2 + 12 * len(tags) + 4
+    strip_off = 8 + ifd_len
+    ifd = struct.pack("<H", len(tags))
+    for tag, typ, count, value in tags:
+        value = strip_off if tag == 273 else value
+        ifd += struct.pack("<HHI", tag, typ, count)
+        ifd += struct.pack("<HH", value, 0) if typ == 3 else struct.pack("<I", value)
+    return b"II*\x00" + struct.pack("<I", 8) + ifd + struct.pack("<I", 0) + bytes([gray])
+
+
+def _webp_header() -> bytes:
+    """A RIFF/WEBP container with a lossless (VP8L) chunk header."""
+    import struct
+
+    body = b"\x2f\x00\x00\x00\x00\x07\x10\x11\x11\x88\x88\xfe\x07"
+    chunk = b"VP8L" + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) % 2)
+    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+
+
+@pytest.mark.parametrize(
+    "payload", [_gif_1x1(), _tiff_1x1(), _webp_header()], ids=["gif", "tiff", "webp"]
+)
+def test_formats_outside_builtin_codecs_decode_to_zero_vector(payload):
+    """Image formats the built-in codecs do not cover take the
+    undecodable path: no codec claims them, and the feature is
+    (0 pixels, zero vector)."""
+    import numpy as np
+
+    from openetlagent_spark.functions.multimodal import (
+        _decode_features,
+        decode_image_builtin,
+    )
+
+    assert decode_image_builtin(payload) is None
+    n, out = _decode_features(payload, 16)
+    assert n == 0 and out.shape == (16,) and not out.any()
+    assert out.dtype == np.float32
+
+
+def test_unsupported_formats_total_and_strict_through_spark(spark):
+    """Through the Spark stages, a GIF image and an MP4 clip beside
+    decodable payloads: by default the GIF row keeps its byte count
+    with a zero vector and the MP4 clip yields no frame rows; under
+    strict both stages fail and name the payload as undecodable."""
+    import numpy as np
+
+    from openetlagent_spark.functions.multimodal import encode_y4m_gray
+
+    gif = _gif_1x1()
+    images = spark.createDataFrame(
+        [Row(media_id=1, payload=bytearray(gif), mime="image/gif"),
+         Row(media_id=2, payload=bytearray(_gray_bmp(value=200)), mime="image/bmp")]
+    )
+    rows = {r.media_id: r for r in extract_image_features(images, dim=16).collect()}
+    assert rows[1].n_bytes == len(gif) and rows[1].n_pixels == 0
+    assert not any(rows[1].feature)
+    assert rows[2].n_pixels == 64 and abs(rows[2].feature[200 // 16] - 1.0) < 1e-6
+    with pytest.raises(Exception, match="undecodable"):
+        extract_image_features(images, strict=True).collect()
+
+    mp4 = b"\x00\x00\x00\x18ftypisom\x00\x00\x02\x00isomiso2" + b"\x00\x00\x00\x08free"
+    clip = encode_y4m_gray(np.full((3, 2, 2), 7, dtype=np.uint8))
+    videos = spark.createDataFrame(
+        [Row(media_id=5, payload=bytearray(mp4)), Row(media_id=6, payload=bytearray(clip))]
+    )
+    frames = sample_frames(videos, n_frames=2).collect()
+    assert sorted((r.media_id, r.frame_index) for r in frames) == [(6, 0), (6, 1)]
+    with pytest.raises(Exception, match="undecodable"):
+        sample_frames(videos, n_frames=2, strict=True).collect()
+
+
 def test_builtin_codec_roundtrips():
     """decode(encode(x)) == x for the pure-Python BMP/PGM codecs over
     random rasters, including widths whose 24-bit rows need stride
