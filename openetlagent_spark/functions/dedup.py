@@ -599,14 +599,6 @@ def auto_n_planes(
     return tiers[-1]
 
 
-_UNROLL_MIN_CORPUS = 50_000  # corpus gate for the unrolled verify
-# cosine (r14, the r13 recipe): the flat element-chain dot/norm wins
-# 2–4× per compiled stage only past ~10⁶ candidate pairs — measured
-# sf10 candidate volumes are 3.4M (image tier-14) and 6.2M
-# (embeddings) at 100k/200k corpora, while every ≤sf1 corpus stays
-# below both gates and keeps the cheap-to-plan HOF folds (the r13
-# query-level A/B showed the unroll LOSES there on planning+codegen).
-
 _VEC_BROADCAST_MAX_BYTES = 64 << 20  # raw vector payload cap for the
 # count-gated broadcast verify (r14, guide §3.1): 64 MiB of doubles is
 # ~2× that framed as a HashedRelation — comfortable against the 8 GiB /
@@ -647,11 +639,9 @@ def embedding_neardup_pairs(
     estimate.  It gates the verify join-backs: ``corpus_count · dim · 8``
     bytes at or under ``_VEC_BROADCAST_MAX_BYTES`` broadcasts the vector
     table, so an undercount can broadcast a table larger than the
-    driver and executors can hold.  It also gates the unrolled cosine
-    chains (``_UNROLL_MIN_CORPUS`` rows and up), which changes plan
-    cost, not values.
+    driver and executors can hold.
     ``None`` (the default) treats the corpus as unbounded: sort-merge
-    join-backs and no unrolling."""
+    join-backs."""
     from .similarity import cosine_expr, infer_dim, multi_table_signatures
 
     if dim is None:
@@ -738,24 +728,13 @@ def embedding_neardup_pairs(
     else:
         vecs = base.select("__id__", "__v__").hint("merge")
         candidates = candidates.hint("merge")
-    # verify cosine: unrolled element chains once the corpus is big
-    # enough that the candidate stage amortizes their plan/codegen
-    # cost (see _UNROLL_MIN_CORPUS); bit-identical either way — the
-    # unrolled form guards per row and falls back to these exact HOF
-    # folds for NULL/ragged inputs
-    if corpus_count is not None and corpus_count >= _UNROLL_MIN_CORPUS:
-        from .similarity import cosine_expr_unrolled
-
-        cos = cosine_expr_unrolled(F.col("v_a"), F.col("v_b"), dim)
-    else:
-        cos = cosine_expr(F.col("v_a"), F.col("v_b"))
     return (
         candidates
         .join(
             vecs.select(F.col("__id__").alias("id_a"), F.col("__v__").alias("v_a")), "id_a"
         )
         .join(vecs.select(F.col("__id__").alias("id_b"), F.col("__v__").alias("v_b")), "id_b")
-        .withColumn("cosine", cos)
+        .withColumn("cosine", cosine_expr(F.col("v_a"), F.col("v_b")))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

@@ -37,8 +37,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    edges_deduped: bool = False,
-    steps_per_cycle: int | str = "auto",
 ) -> DataFrame:
     """Label every node that appears in ``edges`` with its component id
     (= the minimum node id in its component).  Returns (node, component).
@@ -58,21 +56,19 @@ def connected_components(
     the fixpoint.  The r13 init+round-1 fusion initially violated this
     (26 pushes vs the oracle's 25; caught by the sf1 oracle re-check,
     OPTIMIZATION_r13.md) — the fused init now consumes push #1 of the
-    budget.  Pinned by test_optimization_r13.py's truncated-path-graph
-    oracle comparison."""
+    budget.  Pinned by test_graph.py's truncated-path-graph oracle
+    comparison at several budgets.
+
+    The edge list may hold duplicate edges in either orientation: every
+    consumer of the symmetric edge table takes a MIN, so a duplicate
+    changes no label, only the per-round join volume (the LSH miners
+    feeding this already emit distinct ``src < dst`` pairs)."""
     if max_iter < 1:
         # the fused init below IS push #1, so a 0-push budget cannot
         # be honored by this shape (r14, ADVICE: the old identity-init
         # code returned untouched labels at 0; no caller ever passes
         # <1 — fail loudly rather than silently spend 2 pushes)
         raise ValueError(f"connected_components: max_iter must be >= 1, got {max_iter}")
-    if steps_per_cycle != "auto" and int(steps_per_cycle) < 1:
-        # a 0-push cycle leaves the label sum unchanged, which the loop
-        # below would read as convergence after the fused first push
-        raise ValueError(
-            "connected_components: steps_per_cycle must be >= 1 or 'auto', "
-            f"got {steps_per_cycle!r}"
-        )
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # localCheckpoint (not persist): each round references the previous
     # labels TWICE (union + join), so the un-truncated logical plan
@@ -82,19 +78,11 @@ def connected_components(
     # algorithm (GraphX, MLlib) does; on a cluster with a checkpoint
     # dir configured, swap for reliable checkpoint() for fault
     # tolerance beyond executor storage.
-    sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # ``edges_deduped``: callers whose pair lists are distinct with
-    # src < dst by construction (the LSH miners end in
-    # dropDuplicates(id_a, id_b) over b > a expansions) may skip the
-    # symmetric-table distinct — the union of the two orientations
-    # cannot collide, so distinct() is a pure pass-through there, and
-    # dropping it removes CC's only wide setup op (a full exchange +
-    # hash-dedup of the edge table; r14, guide §2.4).  Duplicate edges
-    # would not change any label (every consumer is a MIN), only the
-    # per-round join volume — hence opt-in, not automatic.
-    if not edges_deduped:
-        sym = sym.distinct()
-    sym = sym.transform(materialize, False)
+    # no distinct(): a duplicate edge changes no MIN, and skipping it
+    # removes a full exchange + hash-dedup of the edge table
+    sym = und.union(
+        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).transform(materialize, False)
     # Init + round 1 FUSED (r13 optimization): the old identity init
     # (distinct node list, component = node) followed by the first
     # push round computes min(node, min(neighbors)) — but with
@@ -172,21 +160,17 @@ def connected_components(
     # on the sf1 truncated embedding graph (25-push budget): k=2
     # 5.37s, k=3 4.60s, k=4 4.04s, k=6 5.97s (deeper plans stop
     # paying) — and k=4 LOSES ~0.2s on shallow toy graphs that exit in
-    # 1–2 cycles (deeper no-op cycles).  The "auto" schedule takes the
-    # best of both: the first two cycles run 2 pushes (a shallow
+    # 1–2 cycles (deeper no-op cycles).  The schedule takes the best
+    # of both: the first two cycles run 2 pushes (a shallow
     # near-dup graph exits IDENTICALLY to the old fixed-2 code), then
     # 4 pushes per cycle for graphs that are still moving — the
     # diameter-25 budget goes 12 → 7 cycles.  Composition is exact for
     # ANY schedule (label state after N pushes is f^N wherever the
     # materialization boundaries sit), and the budget arithmetic below
     # lands on exactly ``max_iter`` pushes when truncated; pinned by
-    # the truncated-path oracle tests at several budgets and depths.
-    if steps_per_cycle == "auto":
-        def step_len(i: int) -> int:
-            return 2 if i < 2 else 4
-    else:
-        def step_len(i: int) -> int:
-            return int(steps_per_cycle)
+    # the truncated-path oracle tests at several budgets.
+    def step_len(i: int) -> int:
+        return 2 if i < 2 else 4
 
     prev_sum = label_sum(labels)
     remaining = max_iter - 1
@@ -219,14 +203,13 @@ def dedup_by_components(
     id_col: str,
     src: str = "id_a",
     dst: str = "id_b",
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """Keep exactly one row (the minimum id) per duplicate cluster:
     connected components over the near-dup pairs, then an anti-join
     dropping every node that is NOT its component's minimum.  Rows
     never involved in any pair survive untouched (they are absent from
     the component table — singleton clusters by definition)."""
-    comps = connected_components(pairs, src=src, dst=dst, edges_deduped=edges_deduped)
+    comps = connected_components(pairs, src=src, dst=dst)
     losers = comps.filter(F.col("component") != F.col("node")).select(
         F.col("node").alias(id_col)
     )
@@ -287,7 +270,6 @@ def dedup_keep_best(
     score_col: str,
     src: str = "id_a",
     dst: str = "id_b",
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """Keep the BEST-scoring row per duplicate cluster (highest
     ``score_col``, minimum id on ties) — the production dedup policy:
@@ -303,7 +285,7 @@ def dedup_keep_best(
     never shuffled wide."""
     from pyspark.sql import Window
 
-    comps = connected_components(pairs, src=src, dst=dst, edges_deduped=edges_deduped)
+    comps = connected_components(pairs, src=src, dst=dst)
     scored = comps.join(
         df.select(F.col(id_col).alias("node"), F.col(score_col)), "node"
     )

@@ -6,9 +6,10 @@
 - lsh_topk: sign-LSH bucketed approximate top-k — candidates share a
   ±1.0 (Rademacher) hyperplane sign pattern in ≥1 table, exact cosine
   re-ranks.  The scale path: candidate generation is a bucket
-  equi-join (shuffle on bucket), not a cross join; recall < 1, tunable
-  via n_tables/n_planes.  Every projection is exact, so the whole
-  query checks against a generated DuckDB oracle (lsh_topk_oracle_sql).
+  equi-join against the broadcast query buckets, not a cross join;
+  recall < 1, tunable via n_tables/n_planes.  Every projection is
+  exact, so the whole query checks against a generated DuckDB oracle
+  (lsh_topk_oracle_sql).
 - ivf_topk: inverted-file index — centroids fitted by integer-grid
   Lloyd's over a hash-chosen sample (fit_ivf_centroids), corpus
   assigned to its nearest centroid and queries to their ``nprobe``
@@ -49,46 +50,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
     # filtered out) instead of raising under ANSI mode — the driver's
     # session runs Spark 4's ANSI default.
     return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
-
-
-def cosine_expr_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """cosine_expr with the three interpreted HOF folds UNROLLED into
-    flat element chains for fixed-``dim`` vectors — the r13-measured
-    recipe (2–4× per compiled stage past ~10⁶ rows; SLOWER below, where
-    planning + Janino compile of the ~4·dim-node tree dominates — so
-    callers must volume-gate, see dedup._UNROLL_MIN_CORPUS).
-
-    Bit-identical to :func:`cosine_expr` on every input by
-    construction: valid fixed-dim rows evaluate the identical
-    left-associated ``((0.0 + a0·b0) + a1·b1) + …`` chains (same IEEE
-    op sequence as the zip_with/aggregate folds), and rows the unroll
-    cannot represent (NULL or ragged arrays) take the HOF branch
-    itself via the WHEN guard.  NULL elements inside a valid-length
-    array null the accumulator in both forms; zero norms hit the same
-    try_divide.  Pinned element-for-element in
-    tests/test_optimization_r14.py."""
-    def dot_u(x: Column, y: Column) -> Column:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + F.get(x, i) * F.get(y, i)
-        return acc
-
-    def norm_u(x: Column) -> Column:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            v = F.get(x, i)
-            acc = acc + v * v
-        return F.sqrt(acc)
-
-    valid = (
-        a.isNotNull()
-        & b.isNotNull()
-        & (F.size(a) == F.lit(dim))
-        & (F.size(b) == F.lit(dim))
-    )
-    return F.when(valid, F.try_divide(dot_u(a, b), norm_u(a) * norm_u(b))).otherwise(
-        cosine_expr(a, b)
-    )
 
 
 def cosine_prenorm_expr(a: Column, b: Column, na: Column, nb: Column) -> Column:
@@ -468,13 +429,19 @@ def lsh_topk(
     n_planes: int = 4,
     n_tables: int = 8,
     seed: int = 42,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates share a bucket in ≥1 sign-LSH
     table over ±1.0 planes, exact cosine re-ranks.  Each side is ONE
     scan: the per-table signatures come out of multi_table_signatures
     as an array and posexplode to (tbl, bucket) rows — no n_tables-way
-    union, and the only shuffle is on (tbl, bucket).
+    union.  The exploded query signatures are broadcast (a bounded
+    query set: the corpus is never shuffled for the bucket join; each
+    corpus partition map-side-joins the broadcast buckets).
+
+    Candidate pairs are deduplicated on their ids alone; only then do
+    the vectors join back, each with its norm computed once per row
+    (cosine_prenorm_expr, as _score_pairs does), so no aggregate carries
+    a vector.
 
     Knobs: fewer planes → coarser buckets → more candidates and higher
     recall; more tables → more chances to collide → higher recall.  The
@@ -486,50 +453,43 @@ def lsh_topk(
 
     Every projection is an exact-float add/subtract chain, so the WHOLE
     query (bucketing, candidate set, cosine, rank) hash-checks against
-    lsh_topk_oracle_sql.
-
-    ``broadcast_queries``: True (default) broadcasts the exploded query
-    signatures — right for the bounded-query-set case (the corpus is
-    never shuffled; each corpus partition map-side-joins the broadcast
-    buckets).  Set False when the query side is itself corpus-sized
-    (corpus×corpus ANN): both sides then shuffle on (tbl, bucket) into
-    a hash/sort-merge join, which scales with the data instead of
-    requiring the query signatures to fit in every executor.  The
-    crossover is roughly when the exploded query side (rows ×
-    n_tables) stops fitting comfortably in the broadcast threshold —
-    beyond ~10M signature rows, shuffle."""
+    lsh_topk_oracle_sql."""
     # filter BEFORE the dim probe: infer_dim reads the first scanned
     # row, which may be exactly the NULL row the filters exist to drop
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     queries = queries.filter(F.col(vec_col).isNotNull())
     dim = infer_dim(corpus, vec_col)
-    c_all = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        F.posexplode(
-            multi_table_signatures(
-                F.col(vec_col).cast("array<double>"), n_planes, n_tables, seed, dim
-            )
-        ).alias("tbl", "bucket"),
-    )
-    q_all = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        F.posexplode(
-            multi_table_signatures(
-                F.col(vec_col).cast("array<double>"), n_planes, n_tables, seed, dim
-            )
-        ).alias("tbl", "bucket"),
-    )
 
-    q_side = F.broadcast(q_all) if broadcast_queries else q_all
+    def side(df: DataFrame, id_name: str, vec_name: str) -> tuple[DataFrame, DataFrame]:
+        v = F.col(vec_col).cast("array<double>")
+        banded = df.select(
+            F.col(id_col).alias(id_name),
+            F.posexplode(
+                multi_table_signatures(v, n_planes, n_tables, seed, dim)
+            ).alias("tbl", "bucket"),
+        )
+        vecs = df.select(F.col(id_col).alias(id_name), v.alias(vec_name))
+        return banded, vecs.withColumn(f"_x_n{vec_name}", norm_expr(F.col(vec_name)))
+
+    c_banded, c_vecs = side(corpus, "neighbor_id", "cv")
+    q_banded, q_vecs = side(queries, "query_id", "qv")
     cand = (
-        c_all.join(q_side, ["tbl", "bucket"])
+        c_banded.join(F.broadcast(q_banded), ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("cv")))
+        .select("query_id", "neighbor_id")
+        .distinct()
     )
-    return _rank_by_cosine(cand, k)
+    scored = (
+        cand.join(F.broadcast(q_vecs), "query_id")
+        .join(c_vecs, "neighbor_id")
+        .withColumn(
+            "cosine",
+            cosine_prenorm_expr(
+                F.col("qv"), F.col("cv"), F.col("_x_nqv"), F.col("_x_ncv")
+            ),
+        )
+    )
+    return _rank_by_cosine(scored, k)
 
 
 # --- generated SQL oracle fragments ----------------------------------------

@@ -576,7 +576,7 @@ def _ewma_arrow_fold(a: float):
     element the operation sequence is exactly the JVM HOF fold's —
     ``acc <- a*x + (1-a)*acc`` with the same two float64 multiplies and
     one add in the same order — so results are bit-identical (pinned by
-    test_optimization_r14.py against the JVM branch).  Zero-length
+    test_timeseries_bloom.py against the JVM branch).  Zero-length
     windows (impossible after _series_base, defensive) yield NULL like
     the JVM path's empty-slice aggregate."""
     one_minus_a = 1.0 - a
@@ -623,7 +623,6 @@ def ewma_smooth(
     alpha_num: int = 1,
     alpha_den: int = 4,
     lookback: int = 64,
-    engine: str = "auto",
 ) -> DataFrame:
     """Per-key exponentially-weighted moving average with a BOUNDED
     lookback: for every observation, fold the last ``lookback`` values
@@ -647,32 +646,27 @@ def ewma_smooth(
     NULL keys / timestamps / ids / values are excluded up front (see
     :func:`_series_base`).
 
+    The per-row fold runs in the JVM, or — once the input's plan-size
+    estimate reaches ``_ARROW_FOLD_MIN_BYTES`` — as one vectorized
+    numpy pass per Arrow batch (:func:`_ewma_arrow_fold`); both give
+    bit-identical values.
+
     Returns (key, ``id_col``, value, ewma) ordered (key, ts, id).
     """
     _check_ewma_params(alpha_num, alpha_den, lookback)
-    if engine not in ("auto", "jvm", "arrow"):
-        raise ValueError(f"ewma engine must be auto|jvm|arrow, got {engine!r}")
     a = alpha_num / alpha_den  # exact for binary dens; fixed either way
     base = _series_base(df, key_col, ts_col, id_col, value_col)
-    if engine == "auto":
-        size = _plan_size_bytes(base)
-        # sources without real statistics (parallelized local data,
-        # post-join unknowns) report spark.sql.defaultSizeInBytes
-        # (Long.MaxValue) — "unknown" is not "proven large", so only a
-        # CREDIBLE estimate below that sentinel may select the Arrow
-        # path; everything else keeps the all-JVM fold
-        unknown = int(
-            df.sparkSession.conf.get(
-                "spark.sql.defaultSizeInBytes", str(1 << 62)
-            )
-        )
-        engine = (
-            "arrow"
-            if _ARROW_FOLD_MIN_BYTES <= size < unknown
-            else "jvm"
-        )
+    size = _plan_size_bytes(base)
+    # sources without real statistics (parallelized local data,
+    # post-join unknowns) report spark.sql.defaultSizeInBytes
+    # (Long.MaxValue) — "unknown" is not "proven large", so only a
+    # CREDIBLE estimate below that sentinel may select the Arrow
+    # path; everything else keeps the all-JVM fold
+    unknown = int(
+        df.sparkSession.conf.get("spark.sql.defaultSizeInBytes", str(1 << 62))
+    )
     arr = F.collect_list("v").over(_series_window(ts_col, id_col, lookback))
-    if engine == "arrow":
+    if _ARROW_FOLD_MIN_BYTES <= size < unknown:
         # volume path (r14, guide §4.2): the window stage is unchanged
         # (same shuffle, same collect_list arrays); only the per-row
         # fold moves into one vectorized numpy pass per Arrow batch.

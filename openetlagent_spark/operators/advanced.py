@@ -227,22 +227,20 @@ def apply_dedup(df: DataFrame, op: DedupOperation) -> DataFrame:
 
         # every pair strategy above ends dedup-by-construction
         # (dropDuplicates / groupBy(id_a, id_b) over id_a < id_b)
-        return connected_components(pairs, edges_deduped=True)
+        return connected_components(pairs)
     if op.mode == "keep_best":
         # transitive: keep each cluster's best-scoring row (min id on
         # ties) — the production "keep the longest/highest-quality
         # representative" policy
         from ..functions.graph import dedup_keep_best
 
-        return dedup_keep_best(
-            df, pairs, op.id_column, op.score_column, edges_deduped=True
-        )
+        return dedup_keep_best(df, pairs, op.id_column, op.score_column)
     if op.mode == "cluster_drop":
         # transitive: exactly one survivor (the min id) per duplicate
         # cluster, via distributed connected components
         from ..functions.graph import dedup_by_components
 
-        return dedup_by_components(df, pairs, op.id_column, edges_deduped=True)
+        return dedup_by_components(df, pairs, op.id_column)
     # drop: single-hop min-id clustering — any row with a lower-id
     # partner goes (longer chains are the transitive modes' job)
     losers = pairs.select(F.col("id_b").alias(op.id_column)).distinct()

@@ -846,9 +846,8 @@ def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user lifetime counters (streaming/events.py running_totals,
     batch form): the real-time feature-store pattern whose streaming
-    path runs on Spark 4's transformWithStateInPandas arbitrary-stateful
-    v2 API with TTL value state — batch-parity pinned in
-    tests/test_multimodal_streaming.py."""
+    path runs on applyInPandasWithState with a TTL timeout —
+    batch-parity pinned in tests/test_multimodal_streaming.py."""
     from ..streaming import read_event_table, running_totals
 
     ev = read_event_table(spark, f"{sf_dir}/events.parquet")
@@ -1852,9 +1851,9 @@ def q_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ts(spark, sf_dir, "documents").select("doc_id", "text")
     meta = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     pairs = fuzzy_pairs(docs, "doc_id", "text", max_dist=8)
-    return dedup_keep_best(
-        meta, pairs, "doc_id", "n_chars", edges_deduped=True
-    ).select("doc_id", "source", "n_chars")
+    return dedup_keep_best(meta, pairs, "doc_id", "n_chars").select(
+        "doc_id", "source", "n_chars"
+    )
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2960,7 +2959,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = _ts(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = minhash_lsh_pairs(df, "doc_id", "text")
-    return connected_components(pairs, edges_deduped=True).select(
+    return connected_components(pairs).select(
         F.col("node").alias("doc_id"), "component"
     )
 
@@ -3062,9 +3061,9 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _ts(spark, sf_dir, "documents").select("doc_id", "text", "source", "n_chars")
     pairs = minhash_lsh_pairs(docs, "doc_id", "text")
-    return dedup_keep_best(
-        docs, pairs, "doc_id", "n_chars", edges_deduped=True
-    ).select("doc_id", "source", "n_chars")
+    return dedup_keep_best(docs, pairs, "doc_id", "n_chars").select(
+        "doc_id", "source", "n_chars"
+    )
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3095,9 +3094,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "vec_id", "embedding", threshold=0.3,
         n_planes=auto_n_planes(n), corpus_count=n,
     )
-    return dedup_keep_best(
-        docs, pairs, "doc_id", "n_chars", edges_deduped=True
-    ).select("doc_id", "source", "n_chars")
+    return dedup_keep_best(docs, pairs, "doc_id", "n_chars").select(
+        "doc_id", "source", "n_chars"
+    )
 
 
 def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3149,9 +3148,9 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.995, n_planes=n_planes, n_tables=2,
         dim=16, corpus_count=n,
     )
-    return dedup_keep_best(
-        feats, pairs, "media_id", "n_bytes", edges_deduped=True
-    ).select("media_id", "mime", "n_bytes")
+    return dedup_keep_best(feats, pairs, "media_id", "n_bytes").select(
+        "media_id", "mime", "n_bytes"
+    )
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,9 @@ from pyspark.sql import SparkSession
 # set once, when get_spark launches the JVM (one JVM per process).
 _archive_skip_reason = "the driver JVM was not launched by get_spark"
 
+# the directory this package was imported from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "openetlagent-spark", master: str | None = None) -> SparkSession:
     """Build or reuse the session.  When this process has no driver JVM
@@ -73,6 +76,13 @@ def get_spark(app_name: str = "openetlagent-spark", master: str | None = None) -
         # console progress bars interleave \r-terminated fragments into
         # harness stdout and corrupt line-oriented log parsing
         .config("spark.ui.showConsoleProgress", "false")
+        # Python workers import this package from where the driver did:
+        # the daemon starts with ``-m``, which puts its working
+        # directory first on sys.path, so another checkout there would
+        # shadow the driver's.  PYTHONSAFEPATH drops that entry, and the
+        # package root leads the workers' PYTHONPATH.
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         spark = builder.getOrCreate()  # the running JVM is reused as it is

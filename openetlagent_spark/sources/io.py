@@ -578,7 +578,6 @@ def write_sized(
     fmt: str = "parquet",
     target_mb: float = 128.0,
     sample_rows: int = 2000,
-    representative: bool = False,
 ) -> int:
     """Small-file compaction: rewrite a table into files sized near
     ``target_mb`` — the maintenance pass every long-lived 100 TB table
@@ -597,11 +596,8 @@ def write_sized(
     a zero-byte probe raises instead of silently degenerating the
     sizing).  Returns the file count.
 
-    ``representative=False`` (default) probes the table HEAD
-    (``limit``) — bounded cost, but biased when row size correlates
-    with position; ``representative=True`` draws a seeded Bernoulli
-    sample instead — unbiased, at the cost of one full input scan for
-    the probe.  Pick by how much you trust the head.
+    The probe is the table HEAD (the first ``sample_rows`` rows) —
+    bounded cost, but biased when row size correlates with position.
 
     Sibling of :func:`write_compacted` (the AQE ``rebalance`` sink,
     which targets the session's advisory partition size from runtime
@@ -626,15 +622,8 @@ def write_sized(
     if total == 0:
         _save(df.write.mode("overwrite"), fmt, path)
         return 0
-    if representative:
-        frac = min(1.0, sample_rows / total)
-        probe = df.sample(withReplacement=False, fraction=frac, seed=42)
-        n_probe = probe.count()  # Bernoulli draw: size not known a priori
-        if n_probe == 0:
-            probe, n_probe = df.limit(min(sample_rows, total)), min(sample_rows, total)
-    else:
-        n_probe = min(sample_rows, total)
-        probe = df.limit(n_probe)
+    n_probe = min(sample_rows, total)
+    probe = df.limit(n_probe)
 
     spark = df.sparkSession
     scratch = f"{tempfile.gettempdir()}/ela_sized_probe_{uuid.uuid4().hex[:12]}"

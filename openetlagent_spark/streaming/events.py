@@ -559,8 +559,8 @@ def _accumulate_totals(prev, pdfs) -> tuple[int, int, int]:
     batch-boundary-independence argument of running_totals lives here:
     integer micro-unit sums are associative, so ANY split of a user's
     rows into micro-batches folds to the same state.  Exercised
-    directly by the batch-parity test (the protobuf-gated
-    transformWithStateInPandas worker is only transport around this)."""
+    directly by the batch-parity test (the applyInPandasWithState
+    worker is only transport around this)."""
     n, micros, n_vals = prev if prev is not None else (0, 0, 0)
     for pdf in pdfs:
         vals = pdf["value"].dropna()
@@ -587,34 +587,17 @@ def running_totals(
     events: DataFrame,
     *,
     ttl_ms: int | None = None,
-    stateful_api: str = "auto",
 ) -> DataFrame:
     """Per-user lifetime counters (event count + value sum) — the
     real-time feature-store pattern: every micro-batch emits each
     touched user's UPDATED totals.
 
-    Streaming path — two interchangeable stateful transports around
-    the SAME pure fold (``_accumulate_totals``), selected by
-    ``stateful_api``:
-
-    - ``"v2"``: Spark 4's ``transformWithStateInPandas`` (the
-      arbitrary-stateful v2 API; its Python worker needs a working
-      ``google.protobuf``, and the operator needs the RocksDB state
-      store — configured below) with one ``ValueState`` per user —
-      optionally TTL-expired (``ttl_ms``) so abandoned keys age out of
-      the store instead of growing it forever (TTL forces
-      ``timeMode='ProcessingTime'``; without it the operator runs
-      time-mode-free).
-    - ``"v1"``: ``applyInPandasWithState`` (FlatMapGroupsWithState) —
-      the Arrow-worker API with no protobuf dependency; TTL maps to a
-      processing-time timeout that silently drops the expired key's
-      state (the v2 TTL behaves identically: the next read simply
-      misses).
-    - ``"auto"`` (default): v2 when ``google.protobuf`` imports, else
-      v1 — so the stateful leg EXECUTES on every environment and
-      parity tests never gate on the optional dependency.
-
-    State size is O(live users) on both transports.
+    Streaming path: ``applyInPandasWithState`` (FlatMapGroupsWithState)
+    around the pure fold ``_accumulate_totals``, one state row per
+    user.  ``ttl_ms`` sets a processing-time timeout that drops an
+    idle key's state without emitting, so abandoned keys age out of
+    the store instead of growing it forever.  State size is O(live
+    users).
 
     Stream/batch parity is exact by construction: values accumulate as
     integer micro-units produced by the SAME rounding the batch leg's
@@ -627,10 +610,6 @@ def running_totals(
 
     Batch path (non-streaming input): the same totals as one groupBy —
     used by tests (stream-parity) and the SQL oracle."""
-    if stateful_api not in ("auto", "v1", "v2"):
-        raise ValueError(
-            f"running_totals stateful_api must be auto|v1|v2, got {stateful_api!r}"
-        )
     if not events.isStreaming:
         return (
             events.groupBy("user_id")
@@ -641,90 +620,34 @@ def running_totals(
             .select("user_id", "n_events", "sum_value")
         )
 
-    if stateful_api == "auto":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-            stateful_api = "v2"
-        except ImportError:
-            stateful_api = "v1"
+    def update(
+        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        (user_id,) = key
+        if state.hasTimedOut:
+            # TTL expiry: drop the key's totals without emitting
+            if state.exists:
+                state.remove()
+            return
+        prev = tuple(int(x) for x in state.get) if state.exists else None
+        st = _accumulate_totals(prev, pdfs)
+        state.update(st)
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
+        yield _totals_output_row(user_id, st)
 
-    if stateful_api == "v1":
-        from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-        def update(
-            key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-        ) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            if state.hasTimedOut:
-                # TTL expiry: drop the key's totals without emitting —
-                # exactly what the v2 ValueState TTL does (the next
-                # read misses)
-                if state.exists:
-                    state.remove()
-                return
-            prev = tuple(int(x) for x in state.get) if state.exists else None
-            st = _accumulate_totals(prev, pdfs)
-            state.update(st)
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
-            yield _totals_output_row(user_id, st)
-
-        return events.groupBy("user_id").applyInPandasWithState(
-            update,
-            outputStructType=RUNNING_TOTALS_SCHEMA,
-            stateStructType="n BIGINT, micros BIGINT, n_vals BIGINT",
-            outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if ttl_ms is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # transformWithStateInPandas creates named column families, which
-    # the default HDFS-backed state store rejects — the RocksDB
-    # provider is a hard requirement of the operator.  Streaming confs
-    # are captured per-query at start, so setting it here makes the
-    # returned stream runnable as-is.
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # integer micro-units keep the accumulation exact and
-            # batch-boundary-independent (double += per batch would
-            # make totals depend on micro-batch splits); n_vals tracks
-            # non-NULL values so an all-NULL user reports NULL like
-            # SQL SUM
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, micros BIGINT, n_vals BIGINT", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = None
-            if self._totals.exists():
-                p = self._totals.get()
-                prev = (int(p[0]), int(p[1]), int(p[2]))
-            state = _accumulate_totals(prev, rows)
-            self._totals.update(state)
-            yield _totals_output_row(key[0], state)
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _RunningTotals(),
+    return events.groupBy("user_id").applyInPandasWithState(
+        update,
         outputStructType=RUNNING_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
+        stateStructType="n BIGINT, micros BIGINT, n_vals BIGINT",
+        outputMode="update",
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if ttl_ms is not None
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 
 

@@ -225,6 +225,22 @@ def test_vector_flows_single_row_match_oracle(spark, emb):
     _assert_matches(_lsh(df, df, spark), c, LSH_SQL)
 
 
+def test_lsh_similarity_flow_duplicate_ids_match_oracle(spark, emb):
+    """Candidates are deduplicated on their ids and the vectors join
+    back afterwards, as in the oracle: a corpus id carried by two rows
+    with different vectors scores both, on the query and corpus side."""
+    head = emb.orderBy("vec_id").limit(60).toPandas()
+    head["embedding"] = head["embedding"].map(lambda v: [float(x) for x in v])
+    again = head[head["vec_id"] < 8].copy()
+    again["embedding"] = again["embedding"].map(lambda v: v[::-1])
+    both = pd.concat([head, again], ignore_index=True)
+    c = duckdb.connect()
+    c.register("embeddings", both)
+    df = spark.createDataFrame(both)
+    out = _lsh(df, df.filter(F.col("vec_id") < 20), spark)
+    assert _assert_matches(out, c, LSH_SQL) > 0
+
+
 def test_media_features_flow_default_matches_oracle(spark, docs):
     """A media_features image flow parsed with no decoder field decodes
     the sf0.001 documents as alternating BMP/PNG payloads to exactly the

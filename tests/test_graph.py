@@ -38,12 +38,90 @@ def test_deep_chain_converges(spark):
     assert len(got) == 21
 
 
-@pytest.mark.parametrize("steps", [0, -2])
-def test_components_refuse_empty_cycles(spark, steps):
-    # a cycle of 0 pushes leaves the label sum unchanged, which would
-    # read as convergence after the first push
-    with pytest.raises(ValueError, match=f"steps_per_cycle must be >= 1 or 'auto', got {steps}"):
-        connected_components(_edges(spark, [(1, 2), (2, 3)]), steps_per_cycle=steps)
+def test_cc_zero_budget_raises(spark):
+    with pytest.raises(ValueError, match="max_iter must be >= 1"):
+        connected_components(_edges(spark, [(1, 2)]), max_iter=0)
+
+
+# --- step budget against the oracle, under both materialize modes ----------
+#
+# connected_components chains a SCHEDULE of pushes per materialize+probe
+# cycle (2, 2, then 4s).  The step-budget contract: the result is the
+# label state after EXACTLY max_iter pushes on truncated graphs, so every
+# budget must match the unrolled oracle push for push — whichever
+# materialization boundary (spark.openetlagent.materialize) the loop uses.
+
+
+@pytest.fixture(params=["localCheckpoint", "checkpoint"])
+def materialize_mode(request, spark, tmp_path):
+    key = "spark.openetlagent.materialize"
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    spark.conf.set(key, request.param)
+    try:
+        yield request.param, ckpt
+    finally:
+        spark.conf.unset(key)
+
+
+def _cc_vs_oracle(spark, edges_rows, max_iter):
+    import duckdb
+
+    from openetlagent_spark.functions.graph import components_oracle_sql
+
+    got = sorted(
+        (r["node"], r["component"])
+        for r in connected_components(
+            _edges(spark, edges_rows), max_iter=max_iter
+        ).collect()
+    )
+    con = duckdb.connect()
+    vals = ", ".join(f"({a}, {b})" for a, b in edges_rows)
+    pairs_sql = f"SELECT * FROM (VALUES {vals}) AS t(id_a, id_b)"
+    sql = components_oracle_sql(pairs_sql, rounds=max_iter)
+    want = sorted((int(r[0]), int(r[1])) for r in con.execute(sql).fetchall())
+    assert got == want
+
+
+def _assert_mode_used(mode, ckpt):
+    # reliable checkpoints leave their files under the checkpoint dir;
+    # local checkpoints write nothing there
+    written = ckpt.exists() and any(p.is_file() for p in ckpt.rglob("*"))
+    assert written == (mode == "checkpoint")
+
+
+def test_cc_budgets_match_oracle_truncated(spark, materialize_mode):
+    # 40-node path: diameter 39 >> every budget, so each budget
+    # exercises the truncated state, including remainder pushes (budget
+    # 7 = init + 2 + 2 + remainder 2; budget 12 = init + 2 + 2 + 4 +
+    # remainder 3)
+    path = [(i, i + 1) for i in range(40)]
+    for budget in (1, 2, 3, 6, 7, 9, 12):
+        _cc_vs_oracle(spark, path, budget)
+    _assert_mode_used(*materialize_mode)
+
+
+def test_cc_matches_oracle_converged(spark, materialize_mode):
+    # shallow multi-component graph: the early exit must land on the
+    # same fixpoint the oracle converges to
+    edges = (
+        [(i, i + 1) for i in range(4)]
+        + [(100, 101), (101, 102), (100, 102)]
+    )
+    _cc_vs_oracle(spark, edges, 25)
+    _assert_mode_used(*materialize_mode)
+
+
+def test_cc_duplicate_edges_change_no_label(spark):
+    # the symmetric edge table keeps duplicates (both orientations,
+    # repeats): every consumer takes a MIN, so labels equal the
+    # deduplicated list's at every budget
+    edges = [(i, i + 1) for i in range(12)]
+    dup = edges + [(b, a) for a, b in edges] + edges[:5]
+    for budget in (1, 4, 25):
+        a = sorted(connected_components(_edges(spark, edges), max_iter=budget).collect())
+        b = sorted(connected_components(_edges(spark, dup), max_iter=budget).collect())
+        assert a == b
 
 
 def test_components_partitioning_independent(spark):

@@ -86,3 +86,47 @@ def test_ivf_topk_has_one_body():
     (fn,) = [fn for module, name, fn in _functions() if name == "ivf_topk"]
     params = {a.arg for a in fn.args.args + fn.args.kwonlyargs}
     assert not params & {"method", "seed"}
+
+
+# --- _lloyd: the numpy fast path defers to the reference loop --------------
+
+
+def test_lloyd_float_sample_defers_to_reference():
+    # asarray(dtype=int64) would TRUNCATE 1.5 -> 1 silently; the fast
+    # path must defer non-integral dtypes to the reference loop, whose
+    # float(v) init and exact rationals define the semantics
+    from openetlagent_spark.functions.similarity import _lloyd, _lloyd_reference
+
+    sample = [[1.5, 2.0], [3.0, 4.5], [0.5, 0.5], [2.5, 2.5]]
+    cents_fast, rats_fast = _lloyd(sample, 2, 2)
+    cents_ref, rats_ref = _lloyd_reference(sample, 2, 2)
+    assert cents_fast == cents_ref
+    assert rats_fast == rats_ref
+
+
+def test_lloyd_sum_overflow_bound_falls_back():
+    # per-element values just under the 2^52 grid bound, but enough
+    # rows that a cluster SUM would cross 2^53: np.add.at would wrap
+    # or the float64 cast would round — must take the reference loop,
+    # whose big-int s/cnt stays correctly rounded
+    from openetlagent_spark.functions.similarity import _lloyd, _lloyd_reference
+
+    v = (1 << 52) - 1
+    sample = [[v, v]] * 8 + [[0, 0], [1, 1]]
+    cents_fast, rats_fast = _lloyd(sample, 2, 3)
+    cents_ref, rats_ref = _lloyd_reference(sample, 2, 3)
+    assert cents_fast == cents_ref
+    assert rats_fast == rats_ref
+
+
+def test_lloyd_int64_min_edge_falls_back():
+    # np.abs(-2^63) wraps to -2^63 in int64; the bound check must not
+    # be fooled by it (int() of the scalar is arbitrary-precision)
+    from openetlagent_spark.functions.similarity import _lloyd, _lloyd_reference
+
+    lo = -(1 << 63)
+    sample = [[lo, 0], [0, 1], [5, 5], [6, 6]]
+    cents_fast, rats_fast = _lloyd(sample, 2, 2)
+    cents_ref, rats_ref = _lloyd_reference(sample, 2, 2)
+    assert cents_fast == cents_ref
+    assert rats_fast == rats_ref

@@ -279,16 +279,23 @@ def test_ewma_drops_null_rows_and_validates(spark):
                     lookback=0)
 
 
-def test_ewma_engines_agree_on_schema_and_rows(spark):
-    from openetlagent_spark.functions.timeseries import ewma_smooth
+def test_ewma_folds_agree_on_schema_and_rows(spark, tmp_path, monkeypatch):
+    # the Arrow fold runs once the input's size estimate reaches the
+    # gate; a parquet-backed frame carries a credible estimate, and a
+    # zero gate sends it there
+    from openetlagent_spark.functions import timeseries as T
 
     rows = [
         Row(k="ab"[i % 2], ts=_t(i), eid=i, v=float(i % 5))
         for i in range(12)
     ]
-    df = spark.createDataFrame(rows)
-    jvm = ewma_smooth(df, "k", "ts", "eid", "v", engine="jvm", lookback=4)
-    arrow = ewma_smooth(df, "k", "ts", "eid", "v", engine="arrow", lookback=4)
+    spark.createDataFrame(rows).write.parquet(str(tmp_path / "series"))
+    df = spark.read.parquet(str(tmp_path / "series"))
+    jvm = T.ewma_smooth(df, "k", "ts", "eid", "v", lookback=4)
+    monkeypatch.setattr(T, "_ARROW_FOLD_MIN_BYTES", 0)
+    arrow = T.ewma_smooth(df, "k", "ts", "eid", "v", lookback=4)
+    assert "MapInArrow" in arrow._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in jvm._jdf.queryExecution().executedPlan().toString()
     assert arrow.schema == jvm.schema
     assert arrow.schema["ewma"].nullable
     assert arrow.collect() == jvm.collect()

@@ -534,12 +534,7 @@ def test_running_totals_stream_matches_batch(spark, tmp_path):
     """Stateful streaming totals: lifetime per-user totals accumulated
     across TWO file batches must equal the one-shot batch aggregate —
     the integer micro-unit state makes the sum independent of
-    micro-batch boundaries.
-
-    Runs on stateful_api='auto': transformWithStateInPandas (v2) where
-    google.protobuf exists, applyInPandasWithState (v1) otherwise — so
-    the stateful leg EXECUTES here instead of skipping; both transports
-    wrap the same _accumulate_totals fold."""
+    micro-batch boundaries."""
     from openetlagent_spark.streaming import running_totals
 
     rows1 = [
@@ -567,7 +562,7 @@ def test_running_totals_stream_matches_batch(spark, tmp_path):
     stream = spark.readStream.schema(all_events.schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)
-    # no TTL here: on the v1 transport a processing-time timeout keeps
+    # no TTL here: a processing-time timeout keeps
     # an availableNow query alive past the data batches (see the
     # sessionize test); TTL behavior has its own poll-based test below
     q = (
@@ -604,8 +599,8 @@ def test_running_totals_batch_form(spark):
     assert got == {0: (2, 0.5 + 2.5), 1: (2, 1.5 + 3.5)}
 
 
-def test_running_totals_v1_ttl_emits_then_keeps_query_alive(spark, tmp_path):
-    """TTL on the v1 transport: totals still emit per batch; the query
+def test_running_totals_ttl_emits_then_keeps_query_alive(spark, tmp_path):
+    """TTL: totals still emit per batch; the query
     stays alive on processing-time timers, so the test polls the sink
     and stops the query (the documented availableNow + timeout
     caveat)."""
@@ -628,7 +623,7 @@ def test_running_totals_v1_ttl_emits_then_keeps_query_alive(spark, tmp_path):
 
     stream = spark.readStream.schema(batch.schema).parquet(src)
     q = (
-        running_totals(stream, ttl_ms=3_600_000, stateful_api="v1")
+        running_totals(stream, ttl_ms=3_600_000)
         .writeStream.format("memory")
         .queryName("run_totals_ttl")
         .outputMode("update")
@@ -648,14 +643,6 @@ def test_running_totals_v1_ttl_emits_then_keeps_query_alive(spark, tmp_path):
         time.sleep(1)
     q.stop()
     assert got == expected
-
-
-def test_running_totals_rejects_unknown_api(spark):
-    from openetlagent_spark.streaming import running_totals
-
-    df = spark.createDataFrame([Row(user_id=1, value=1.0)])
-    with pytest.raises(ValueError, match="stateful_api"):
-        running_totals(df, stateful_api="v3")
 
 
 def test_streaming_sliding_window_counts_match_batch(spark, tmp_path):
@@ -821,13 +808,12 @@ def test_stream_store_admission_replay_is_lossless(spark, tmp_path):
 
 def test_running_totals_state_logic_matches_batch(spark):
     """Batch-parity for the stateful-processor LOGIC without the
-    protobuf worker (VERDICT r05 item 7): fold the real events table's
+    streaming worker (VERDICT r05 item 7): fold the real events table's
     per-user rows through _accumulate_totals under several different
     micro-batch splits and require the emitted row to equal the batch
     groupBy leg exactly — float-for-float, including the all-NULL→NULL
-    sum rule.  transformWithStateInPandas is only transport around
-    this fold; the gated test above covers the transport when the
-    wheel exists."""
+    sum rule.  applyInPandasWithState is only transport around this
+    fold; the streaming test above covers the transport."""
     import pandas as pd
 
     from openetlagent_spark.streaming import running_totals

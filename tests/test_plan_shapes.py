@@ -481,30 +481,16 @@ def test_round6_no_cartesians_or_global_windows(spark):
         assert "Exchange SinglePartition" not in plan.split("== Physical Plan ==")[-1], name
 
 
-def test_lsh_shuffle_mode_scales_past_broadcast(spark):
-    """broadcast_queries=False stops FORCING the broadcast: Catalyst
-    may still pick one while the query side fits its size threshold
-    (fine — that's the point of deferring to the optimizer), but when
-    the side is too big to broadcast (emulated by zeroing the
-    threshold) the plan must degrade to a shuffle join on (tbl,
-    bucket) instead of an unplannable forced broadcast.  The forced
-    mode, by contrast, broadcasts regardless of the threshold."""
-    from openetlagent_spark.functions.similarity import lsh_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        df = lsh_topk(emb, emb, k=3, n_planes=2, n_tables=2, broadcast_queries=False)
-        physical = df._jdf.queryExecution().toString().split("== Physical Plan ==")[-1]
-        assert "BroadcastHashJoin" not in physical
-        assert re.search(r"(SortMergeJoin|ShuffledHashJoin)", physical)
-        forced = lsh_topk(emb, emb, k=3, n_planes=2, n_tables=2)
-        fplan = forced._jdf.queryExecution().toString().split("== Physical Plan ==")[-1]
-        assert "BroadcastHashJoin" in fplan
-    finally:
-        spark.conf.set(key, prev)
+def test_lsh_candidates_dedup_ids_not_vectors(spark):
+    """ann_lsh_topk deduplicates its (query_id, neighbor_id) candidates
+    before the vectors join back: no aggregate in the optimized plan
+    carries the 64-double corpus or query vector."""
+    df = HARNESS_QUERIES["ann_lsh_topk"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    aggs = [l for l in plan.splitlines() if re.search(r"\bAggregate \[", l)]
+    assert aggs, plan
+    for line in aggs:
+        assert not re.search(r"\b[cq]v#", line), line
 
 
 def test_classifier_score_is_single_scan_no_shuffle(spark):

@@ -63,3 +63,49 @@ def test_local_df_refuses_values_the_schema_cannot_hold(spark, row):
 def test_local_df_row_width_checked(spark):
     with pytest.raises(ValueError, match="2 values"):
         local_df(spark, [(1,)], "bucket int, weight double")
+
+
+WORKER_IMPORT_CHILD = """
+import os, sys
+import pandas as pd
+import openetlagent_spark
+from openetlagent_spark.session import get_spark
+
+def where(batches):
+    import openetlagent_spark as pkg
+    for _ in batches:
+        yield pd.DataFrame({"f": [pkg.__file__]})
+
+spark = get_spark("worker-import-test")
+worker = spark.range(1, numPartitions=1).mapInPandas(where, "f string").first()["f"]
+print("driver=" + openetlagent_spark.__file__, flush=True)
+print("worker=" + worker, flush=True)
+os._exit(0)  # skip a class-archive recording's build at exit
+"""
+
+
+def test_workers_import_the_drivers_package_not_the_working_directorys(tmp_path):
+    """A driver that imports the package from ``PYTHONPATH`` while its
+    working directory holds another ``openetlagent_spark/`` must still
+    run its Python-worker code from the package it imported."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    work = tmp_path / "work"
+    (work / "openetlagent_spark").mkdir(parents=True)
+    (work / "openetlagent_spark" / "__init__.py").write_text("# decoy\n")
+    script = tmp_path / "driver.py"
+    script.write_text(WORKER_IMPORT_CHILD)
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYSPARK_SUBMIT_ARGS", "SPARK_CONF_DIR", "JAVA_TOOL_OPTIONS")}
+    env.update(PYTHONPATH=root, XDG_CACHE_HOME=str(tmp_path / "xdg"),
+               SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="1")
+    out = subprocess.run([sys.executable, str(script)], cwd=work, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    files = dict(line.split("=", 1) for line in out.stdout.splitlines() if "=" in line)
+    pkg = os.path.join(root, "openetlagent_spark") + os.sep
+    assert files["driver"].startswith(pkg), files
+    assert files["worker"].startswith(pkg), files

@@ -63,26 +63,30 @@ def test_embedding_centroids_match_numpy(spark):
             assert abs(c - want[pos]) < 1e-12
 
 
-def test_lsh_topk_shuffle_mode_identical(emb):
-    """broadcast_queries=False (the corpus-as-queries scale fallback:
-    both sides shuffle on (tbl, bucket)) must return exactly the
-    broadcast plan's rows — the join strategy is a physical choice, not
-    a semantic one."""
+def test_lsh_topk_scores_equal_cosine_expr(spark, emb):
+    """lsh_topk scores each candidate with norms computed once per row
+    (cosine_prenorm_expr); every emitted cosine must equal cosine_expr
+    on the same two vectors, bit for bit."""
+    from pyspark.sql import functions as F
+
+    from openetlagent_spark.functions.similarity import cosine_expr
+
     qs = emb.filter("vec_id < 30")
-    bcast = {tuple(r) for r in lsh_topk(emb, qs, k=10).collect()}
-    shuf = {
-        tuple(r) for r in lsh_topk(emb, qs, k=10, broadcast_queries=False).collect()
-    }
-    assert bcast == shuf and len(bcast) > 0
+    out = lsh_topk(emb, qs, k=10)
+    vec = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    rows = (
+        out.join(vec.withColumnRenamed("vec_id", "query_id").withColumnRenamed("v", "qv"), "query_id")
+        .join(vec.withColumnRenamed("vec_id", "neighbor_id").withColumnRenamed("v", "cv"), "neighbor_id")
+        .select("cosine", cosine_expr(F.col("qv"), F.col("cv")).alias("want"))
+        .collect()
+    )
+    assert rows and all(r.cosine == r.want for r in rows)
 
 
-def test_lsh_topk_corpus_as_queries_shuffle(emb):
-    """Full corpus×corpus ANN through the shuffle path: every vector is
-    its own query; each gets k neighbors (buckets permitting) and never
-    itself."""
-    out = lsh_topk(
-        emb, emb, k=3, n_planes=2, n_tables=4, broadcast_queries=False
-    ).collect()
+def test_lsh_topk_corpus_as_queries(emb):
+    """Full corpus×corpus ANN: every vector is its own query; each gets
+    k neighbors (buckets permitting) and never itself."""
+    out = lsh_topk(emb, emb, k=3, n_planes=2, n_tables=4).collect()
     assert len(out) > 0
     assert all(r.query_id != r.neighbor_id for r in out)
     per_q = {}

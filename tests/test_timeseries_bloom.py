@@ -426,3 +426,67 @@ def test_interarrival_stats_known_gaps(spark):
     assert got["b"].n_gaps == 2 and got["b"].mean_gap_s == 20.0
     assert got["b"].p50_gap_s == 20.0 and got["b"].max_gap_s == 30
     assert got["a"].n_gaps == 1 and got["a"].mean_gap_s == 60.0
+
+
+# --- ewma: the size-gated Arrow fold ---------------------------------------
+#
+# ewma_smooth folds in the JVM below _ARROW_FOLD_MIN_BYTES of estimated
+# input and in one vectorized numpy pass per Arrow batch above it.  A
+# parquet-backed frame carries a credible size estimate (parallelized
+# local data reports "unknown", which never selects the Arrow fold), so
+# a zero gate sends it through the Arrow fold.
+
+
+def test_ewma_arrow_fold_bit_identical(spark, tmp_path, monkeypatch):
+    # the Arrow kernel replays the JVM HOF fold's exact per-element op
+    # sequence (a*x + (1-a)*acc, float64), so full results must be
+    # BIT-identical — including ragged early windows (< lookback rows)
+    # and alpha values that are not exact binary fractions
+    from openetlagent_spark.functions import timeseries as T
+
+    rows = [
+        ("k%d" % (i % 7), i, i * 31 % 101, float(i % 13) / 7.0)
+        for i in range(2000)
+    ]
+    spark.createDataFrame(
+        rows, "key string, ts bigint, event_id bigint, value double"
+    ).write.parquet(str(tmp_path / "series"))
+    df = spark.read.parquet(str(tmp_path / "series"))
+    kwargs = dict(alpha_num=3, alpha_den=7, lookback=5)
+    jvm_df = T.ewma_smooth(df, "key", "ts", "event_id", "value", **kwargs)
+    monkeypatch.setattr(T, "_ARROW_FOLD_MIN_BYTES", 0)
+    arrow_df = T.ewma_smooth(df, "key", "ts", "event_id", "value", **kwargs)
+    assert "MapInArrow" in arrow_df._jdf.queryExecution().executedPlan().toString()
+    jvm, arrow = jvm_df.collect(), arrow_df.collect()
+    assert len(jvm) == len(arrow) == 2000
+    for r_j, r_a in zip(jvm, arrow):
+        assert r_j == r_a  # == on float is exact equality
+
+
+def test_ewma_gate_uses_jvm_below_threshold(spark):
+    # a tiny frame must stay all-JVM: no ArrowEvalPython / MapInArrow
+    # node below the volume gate (Python only off the hot path at toy
+    # scale)
+    from openetlagent_spark.functions.timeseries import ewma_smooth
+
+    df = spark.createDataFrame(
+        [("a", 1, 1, 1.0), ("a", 2, 2, 2.0)],
+        "key string, ts bigint, event_id bigint, value double",
+    )
+    plan = ewma_smooth(df, "key", "ts", "event_id", "value")._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan and "ArrowEval" not in plan and "BatchEval" not in plan
+
+
+def test_ewma_unknown_size_never_takes_arrow_fold(spark, monkeypatch):
+    # parallelized local data reports spark.sql.defaultSizeInBytes, which
+    # is "unknown", not "large": even a zero gate keeps the JVM fold
+    from openetlagent_spark.functions import timeseries as T
+
+    monkeypatch.setattr(T, "_ARROW_FOLD_MIN_BYTES", 0)
+    df = spark.createDataFrame(
+        [("a", 1, 1, 1.0), ("a", 2, 2, 2.0)],
+        "key string, ts bigint, event_id bigint, value double",
+    )
+    out = T.ewma_smooth(df, "key", "ts", "event_id", "value")
+    assert "MapInArrow" not in out._jdf.queryExecution().executedPlan().toString()
+    assert [r.ewma for r in out.collect()] == [1.0, 1.25]
